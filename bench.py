@@ -59,9 +59,9 @@ HEADLINE = [
     "rel_window_topk_per_group",
     "rel_cube_agg",
     "llm_dedup_exact",
-    # md5-keyed MinHash-LSH twin: identical plan shape to the xxhash64
-    # production variant but fully oracle-backed, so the headline number
-    # is a verified computation (round-2 verdict prescription)
+    # md5-keyed MinHash-LSH, the engine's one MinHash implementation:
+    # fully oracle-backed, so the headline number is a verified
+    # computation (round-2 verdict prescription)
     "llm_dedup_minhash_det",
     "llm_text_quality",
     "llm_knn_bruteforce",

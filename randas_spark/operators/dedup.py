@@ -7,7 +7,7 @@ cost and fuzziness:
 2. ngram-jaccard— exact k-shingle set Jaccard via shingle equi-join
 3. minhash+LSH  — banded MinHash signatures; candidate pairs from band
                   buckets, verified with exact Jaccard
-4. simhash      — 64-bit sign-of-weighted-sum fingerprint, hamming-banded
+4. simhash      — sign-of-sum fingerprint, hamming-banded
 5. embedding    — cosine threshold over vector pairs (LSH-bucketed at scale)
 
 Scale notes per operator sit on each function. The pair-generating
@@ -15,21 +15,20 @@ operators never materialize the O(n²) pair matrix: candidates come from
 equi-joins on shingles / bands / buckets, which is the whole point of
 MinHash-LSH banding (probability of sharing a band ≈ 1-(1-j^r)^b).
 
-MinHash here is built from built-in xxhash64 (seeded per permutation via
-string suffixing) rather than MLlib's MinHashLSH — same math, but keeps
-the signature a plain array column that composes with the rest of the
-engine and carries no ML-pipeline fitting step.
+MinHash and SimHash each have ONE implementation, built from md5 and
+integer arithmetic only (minhash_lsh_pairs_portable,
+simhash_portable_pairs): the signatures are plain columns that compose
+with the rest of the engine, carry no ML-pipeline fitting step, and are
+bit-identical on any engine with md5() — so the DuckDB oracle replays
+the exact pipeline the engine runs.
 """
 
 from __future__ import annotations
 
-import hashlib
 import logging
-import struct
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, Window
+from pyspark.sql.types import ArrayType, StringType
 from pyspark.sql import functions as F
 
 from randas_spark.functions.text import fingerprint, shingles, tokens
@@ -55,6 +54,42 @@ def fan_out(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
+
+
+def overlap(side, main):
+    """Run ``side()`` on a second driver thread while ``main()`` runs on
+    this one; return ``(side_result, main_result)``.
+
+    For two independent eager legs (each materializes its own jobs):
+    Spark's FIFO scheduler back-fills the idle tail of one leg's jobs
+    with the other's tasks — same jobs, no longer serialized. Always
+    waits for BOTH legs. If either raises, the first failure to happen
+    is re-raised; a failure of the other leg is attached to it as a note,
+    never dropped."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    failures: list[Exception] = []  # in the order the legs failed
+
+    def recorded(fn):
+        try:
+            return fn()
+        except Exception as exc:
+            failures.append(exc)
+            raise
+
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        side_fut = pool.submit(recorded, side)
+        try:
+            main_result = recorded(main)
+        except Exception:
+            main_result = None  # recorded in ``failures``
+    # leaving the pool joined the side thread: both legs are done here
+    if failures:
+        first, *others = failures
+        for other in others:
+            first.add_note(f"the overlapped leg also failed: {other!r}")
+        raise first
+    return side_fut.result(), main_result
 
 
 # --------------------------------------------------------------------------
@@ -249,6 +284,22 @@ def _cap_hot_keys(df, key_cols, max_freq):
     )
 
 
+def _check_shingle_arrays(sh: DataFrame) -> DataFrame:
+    """Fail fast on a malformed caller-supplied ``shingle_arrays`` frame:
+    it must carry ``doc_id`` and an ``sh`` column of array<string>. An
+    ``sh`` of another element type would still explode and hash, into
+    signatures and sizes that silently disagree with the text. Reads the
+    schema only — no Spark job."""
+    fields = {f.name: f.dataType for f in sh.schema.fields}
+    if "doc_id" not in fields:
+        raise ValueError(f"shingle_arrays lacks a doc_id column: {sorted(fields)}")
+    dt = fields.get("sh")
+    if not (isinstance(dt, ArrayType) and isinstance(dt.elementType, StringType)):
+        got = dt.simpleString() if dt is not None else "no sh column"
+        raise ValueError(f"shingle_arrays.sh must be array<string>, got {got}")
+    return sh
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -282,16 +333,20 @@ def ngram_jaccard_pairs(
     — callers composing several shingle consumers over the same corpus
     (llm_minhash_recall_audit: exact pairs + LSH pairs) pass one shared
     checkpoint so the shingle construction scan runs once, not once per
-    operator (guide §2.4).
+    operator (guide §2.4). A frame without ``doc_id`` or with an ``sh``
+    that is not array<string> raises ValueError.
     """
     # MATERIALIZED once: the self-join's a/b sides plus the two size
     # legs all derive from sh, and Spark reuses nothing across the four
     # references — shingle construction (slice + concat_ws per position,
     # the dominant cost) would run up to 4x. Downstream derivations
     # (explode, size) are cheap over the checkpointed arrays.
-    sh = shingle_arrays if shingle_arrays is not None else fan_out(df).select(
-        F.col(id_col).alias("doc_id"), shingles(F.col(text_col), k).alias("sh")
-    ).localCheckpoint()
+    if shingle_arrays is not None:
+        sh = _check_shingle_arrays(shingle_arrays)
+    else:
+        sh = fan_out(df).select(
+            F.col(id_col).alias("doc_id"), shingles(F.col(text_col), k).alias("sh")
+        ).localCheckpoint()
     sizes = sh.select("doc_id", F.size("sh").alias("n_sh"))
     exploded = sh.select("doc_id", F.explode("sh").alias("s"))
     if max_shingle_freq is not None:
@@ -539,285 +594,10 @@ def containment_pairs(
 
 
 # --------------------------------------------------------------------------
-# 3. MinHash + LSH
+# 3-4. MinHash-LSH and SimHash: one engine-portable implementation each
+# (md5-derived hashes, integer arithmetic), defined further down —
+# minhash_lsh_pairs_portable and simhash_portable_pairs.
 # --------------------------------------------------------------------------
-
-
-def _perm_constants(i: int) -> tuple[int, int]:
-    """Deterministic odd multiplier + offset for permutation i (md5-derived,
-    identical everywhere — no RNG state)."""
-    d = hashlib.md5(f"minhash-perm:{i}".encode()).digest()
-    a = struct.unpack("<Q", d[:8])[0] | 1  # odd → bijective mod 2^64
-    b = struct.unpack("<Q", d[8:16])[0]
-    # into signed-64 range for Spark long literals
-    to_i64 = lambda v: v - (1 << 64) if v >= (1 << 63) else v  # noqa: E731
-    return to_i64(a), to_i64(b)
-
-
-def minhash_signature(base_hashes: str, num_perm: int = 64):
-    """num_perm-wide MinHash signature as array<bigint> from a column
-    (named by ``base_hashes``) of per-shingle base hashes (array<bigint>).
-
-    Universal hashing: permutation i is the affine map h → a_i·h + b_i
-    over Z/2^64 (Java long wraparound; a_i odd → bijection), so the corpus
-    pays ONE string hash per shingle and 64 two-op integer maps — ~50×
-    cheaper than hashing the shingle text per permutation.
-    """
-    # Built as ONE SQL expression string instead of num_perm separate
-    # Column-object lambda builds: identical Catalyst plan, but a single
-    # py4j round trip — measured ~2.5s less driver-side plan construction
-    # at num_perm=64.
-    parts = []
-    for i in range(num_perm):
-        a, b = _perm_constants(i)
-        parts.append(
-            f"array_min(transform({base_hashes}, h -> h * {a}L + {b}L))"
-        )
-    return F.expr("array(" + ", ".join(parts) + ")")
-
-
-def minhash_lsh_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_perm: int = 64,
-    bands: int = 16,
-    k: int = 5,
-    threshold: float = 0.6,
-    max_bucket_size: int | None = None,
-    log_dropped: bool = False,
-) -> DataFrame:
-    """Near-dup pairs via banded MinHash-LSH, verified with exact Jaccard.
-
-    bands=16, rows=4 → pair-candidate probability 1-(1-j⁴)¹⁶: ~0.97 at
-    j=0.6, ~0.04 at j=0.2 — the classic S-curve. Candidates come from a
-    groupBy on (band_id, band_hash): only docs sharing a band bucket ever
-    meet, so no O(n²) stage exists. Verification joins signatures back and
-    estimates Jaccard as matching-minhash fraction, then exact-checks with
-    the shingle sets of the candidate pairs only.
-
-    Scale: signature build is a pure map; the band shuffle carries
-    n·bands rows; bucket sizes are the skew knob. ``max_bucket_size``
-    caps them: any (band_id, band_hash) bucket larger than the cap —
-    boilerplate text hashing identically across millions of docs, whose
-    self-join would fan out |bucket|² pairs on ONE join key — is dropped
-    before pairing. Recall cost is bounded: docs in a dropped bucket still
-    meet through any of their other bands-1 buckets (true near-dups agree
-    on many bands, boilerplate-only collisions on few), which is why
-    capping, not salting, is what production MinHash dedup does. The
-    bucket count uses a window partitioned on the join key itself, so the
-    one band shuffle is shared with the self-join. ``log_dropped=True``
-    adds one count job logging the dropped-bucket count.
-    """
-    rows_per_band = num_perm // bands
-    if rows_per_band == 0 or rows_per_band * bands != num_perm:
-        raise ValueError(
-            f"bands ({bands}) must evenly divide num_perm ({num_perm}); "
-            f"a remainder would silently drop permutations and change the S-curve"
-        )
-    # No .cache() here: the base plan is consumed by banding and both
-    # verification sides, but all are map-only recomputes of a parquet
-    # scan — re-reading beats pinning corpus-sized arrays in executor
-    # storage for the life of the session (a cache would never be
-    # unpersistable from inside a plan-returning function). Everything
-    # downstream works on HASHED shingles (array<long>): set-identical to
-    # the strings for intersect/union (xxhash64 collisions are ~n²/2⁶⁴),
-    # ~5-10× lighter to shuffle and compare.
-    base = fan_out(df).select(
-        F.col(id_col).alias("doc_id"),
-        F.array_distinct(
-            F.transform(shingles(F.col(text_col), k), lambda s: F.xxhash64(s))
-        ).alias("hh"),
-    )
-    sig = base.withColumn("sig", minhash_signature("hh", num_perm)).drop("hh")
-
-    band_structs = ", ".join(
-        "named_struct('band_id', {b}, 'band_hash', xxhash64(concat_ws(',', {elems})))".format(
-            b=b,
-            elems=", ".join(
-                f"cast(sig[{b * rows_per_band + r}] as string)"
-                for r in range(rows_per_band)
-            ),
-        )
-        for b in range(bands)
-    )
-    banded = sig.select(
-        "doc_id", F.explode(F.expr(f"array({band_structs})")).alias("band")
-    ).select("doc_id", "band.band_id", "band.band_hash")
-    if max_bucket_size is not None:
-        banded = _cap_hot_keys(banded, ["band_id", "band_hash"], max_bucket_size)
-        if log_dropped:
-            n_hot = (
-                sig.select(
-                    "doc_id", F.explode(F.expr(f"array({band_structs})")).alias("band")
-                )
-                .groupBy("band.band_id", "band.band_hash")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .filter(F.col("n") > max_bucket_size)
-                .count()
-            )
-            _LOG.info(
-                "minhash_lsh_pairs: dropped %d band buckets larger than %d",
-                n_hot,
-                max_bucket_size,
-            )
-
-    # No banded checkpoint, by measurement: the band self-join's two
-    # sides exchange on the identical (band_id, band_hash) key, so
-    # Spark's exchange reuse already serves both from one signature
-    # build (A/B: 2.25 s plain vs 2.3-2.7 s checkpointed at sf0.1) —
-    # unlike the shingle-pair generators, whose SIZE legs exchange on a
-    # different key and genuinely recompute.
-    cand = (
-        banded.alias("a")
-        .join(
-            banded.alias("b"),
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .distinct()
-    )
-
-    # Exact-Jaccard verification, pruned BEFORE any wide shuffle: the
-    # candidate id set (output-sized — orders of magnitude below the
-    # corpus) broadcasts into a semi-join against the shingle-hash scan,
-    # so only candidate docs' arrays ever leave the map side. Without
-    # this, both join sides shuffle the whole corpus's shingle arrays —
-    # measured 16x super-linear on a 5x scale-up; with it the query
-    # scales with candidates, not corpus.
-    cand = cand.localCheckpoint()  # computed once, reused for ids + join
-    ids = cand.select(
-        F.explode(F.array("id_a", "id_b")).alias("doc_id")
-    ).distinct()
-    # ONE pruned scan serves both join sides; it is candidate-sized, so
-    # checkpointing it is output-bounded storage, not corpus-bounded.
-    sv = base.join(F.broadcast(ids), "doc_id", "left_semi").localCheckpoint()
-    sa = sv.select(F.col("doc_id").alias("id_a"), F.col("hh").alias("hh_a"))
-    sb = sv.select(F.col("doc_id").alias("id_b"), F.col("hh").alias("hh_b"))
-    return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("hh_a", "hh_b")).cast("double")
-            / F.size(F.array_union("hh_a", "hh_b")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-
-
-# --------------------------------------------------------------------------
-# 4. SimHash
-# --------------------------------------------------------------------------
-
-_SIMHASH_BITS = 64
-
-
-def _simhash64(text: str) -> int:
-    """Deterministic 64-bit SimHash of whitespace tokens (md5-derived token
-    hashes — stable across processes, unlike Python's salted hash())."""
-    acc = [0] * _SIMHASH_BITS
-    for tok in text.lower().split():
-        h = struct.unpack("<Q", hashlib.md5(tok.encode()).digest()[:8])[0]
-        for bit in range(_SIMHASH_BITS):
-            acc[bit] += 1 if (h >> bit) & 1 else -1
-    out = 0
-    for bit in range(_SIMHASH_BITS):
-        if acc[bit] > 0:
-            out |= 1 << bit
-    # two's-complement into signed int64: only values with bit 63 set
-    # wrap negative (an unconditional `- (1 << 63)` would FLIP bit 63 of
-    # every fingerprint — internally consistent but not the SimHash any
-    # external implementation computes)
-    return out - (1 << 64) if out >= (1 << 63) else out
-
-
-def simhash_column(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, simhash) via a vectorized Pandas UDF (Arrow-batched).
-
-    SimHash needs a per-token 64-lane weighted vote — awkward as built-in
-    expressions; this is the documented applyInPandas/pandas_udf slow path
-    (SURVEY.md §7.3), still linear and shuffle-free.
-    """
-
-    @F.pandas_udf("long")
-    def simhash_udf(s: pd.Series) -> pd.Series:
-        return s.map(_simhash64)
-
-    return df.select(
-        F.col(id_col).alias("doc_id"), simhash_udf(F.col(text_col)).alias("simhash")
-    )
-
-
-def simhash_near_pairs(
-    df: DataFrame, id_col: str, text_col: str, max_hamming: int = 3
-) -> DataFrame:
-    """Near-dup pairs with hamming(simhash_a, simhash_b) <= max_hamming.
-
-    Banding trick: split 64 bits into (max_hamming+1) bands — any pair
-    within the radius matches exactly on >= 1 band (pigeonhole), so
-    candidates come from band equi-joins, never an n² scan. Hamming
-    distance verified with bit_count(xor).
-    """
-    if max_hamming < 0:
-        raise ValueError(f"max_hamming must be >= 0, got {max_hamming}")
-    n_bands = max_hamming + 1
-    band_bits = _SIMHASH_BITS // n_bands
-    # MATERIALIZED once: the band self-join below consumes sh from both
-    # sides with no subplan reuse — the pandas_udf simhash (the costly
-    # Python boundary) would run twice over the corpus.
-    sh = simhash_column(df, id_col, text_col).localCheckpoint()
-
-    banded = sh.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        (
-                            # band_bits=64 (max_hamming=0): the full
-                            # fingerprint IS the band; the (1<<64)-1 mask
-                            # would overflow a long literal
-                            F.col("simhash")
-                            if band_bits >= _SIMHASH_BITS
-                            else F.shiftrightunsigned(F.col("simhash"), b * band_bits)
-                            .bitwiseAND(F.lit((1 << band_bits) - 1))
-                        ).alias("band_val"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "simhash", "band.band_id", "band.band_val")
-
-    cand = (
-        banded.alias("a")
-        .join(
-            banded.alias("b"),
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("id_a"),
-            F.col("b.doc_id").alias("id_b"),
-            F.col("a.simhash").alias("h_a"),
-            F.col("b.simhash").alias("h_b"),
-        )
-        .distinct()
-    )
-    return (
-        cand.withColumn(
-            "hamming", F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b"))).cast("long")
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
 
 
 # --------------------------------------------------------------------------
@@ -1027,95 +807,23 @@ def levenshtein_near_pairs(
 # --------------------------------------------------------------------------
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iter: int = 20,
-    stats: dict | None = None,
-) -> DataFrame:
-    """(node, component) — component = min node id reachable via edges.
-
-    Pairwise near-dup output (§2-§6 above) is not yet a dedup decision:
-    similarity is not transitive, so keep-one-per-group needs the
-    transitive closure. This is iterative min-label propagation — each
-    round every node adopts the smallest label among itself and its
-    neighbours; converges in O(diameter) rounds (near-dup clusters are
-    shallow — a handful of rounds in practice).
-
-    Scale: each round is one join edges⋈labels + one min-aggregation,
-    both shuffling on the node id — the same partitioning every round, so
-    AQE reuses exchanges. The loop is DRIVER-side control flow over fully
-    distributed steps (no collect of node data; convergence is checked
-    with a count of changed labels). For web-scale graphs swap in the
-    large-star/small-star variant; label propagation is the right shape
-    for dedup clusters, whose diameter is tiny. localCheckpoint() per
-    round truncates the growing lineage so round N's plan doesn't replay
-    rounds 1..N-1.
-    """
-    # one upstream scan: every round re-reads sym, so materialize the
-    # edge list once instead of replaying the (possibly expensive)
-    # producing plan — kNN graph, minhash bands — once per round
-    both = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).localCheckpoint()
-    sym = both.union(both.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    labels = (
-        sym.select("u").union(sym.select(F.col("v").alias("u")))
-        .distinct()
-        .select(F.col("u").alias("node"), F.col("u").alias("comp"))
-    )
-    rounds = 0
-    for _ in range(max_iter):
-        rounds += 1
-        neighbour_min = (
-            sym.join(labels, sym.v == labels.node)
-            .groupBy(F.col("u").alias("node"))
-            .agg(F.min("comp").alias("n_comp"))
-        )
-        updated = (
-            labels.join(neighbour_min, "node", "left")
-            .select(
-                "node",
-                F.least(F.col("comp"), F.coalesce("n_comp", F.col("comp"))).alias(
-                    "new_comp"
-                ),
-                "comp",
-            )
-        ).localCheckpoint()
-        changed = updated.filter(F.col("new_comp") < F.col("comp")).count()
-        labels = updated.select("node", F.col("new_comp").alias("comp"))
-        if changed == 0:
-            break
-    else:
-        changed = 1
-    if changed != 0:
-        _LOG.warning(
-            "connected_components: max_iter=%d exhausted before convergence "
-            "(diameter exceeds the round budget) — returned labels may SPLIT "
-            "true components; raise max_iter or use connected_components_star",
-            max_iter,
-        )
-    if stats is not None:
-        stats["rounds"] = rounds
-        stats["converged"] = changed == 0
-    return labels
-
-
 def connected_components_star(
     edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 30,
     stats: dict | None = None,
-    label_all_nodes: bool = True,
 ) -> DataFrame:
-    """(node, component) via alternating large-star / small-star.
+    """(node, component) via alternating large-star / small-star —
+    component = min node id reachable via edges.
 
-    The Kiveris et al. (MapReduce "Connected Components in MapReduce and
-    Beyond") algorithm: min-label propagation (connected_components above)
-    needs O(diameter) rounds — fine for shallow near-dup clusters, hopeless
-    for high-diameter graphs (a 1M-node chain = 1M rounds). Star rounds
-    contract paths aggressively and converge in O(log² n) rounds on ANY
-    topology:
+    Pairwise near-dup output (§2-§6 above) is not yet a dedup decision:
+    similarity is not transitive, so keep-one-per-group needs the
+    transitive closure. This is the Kiveris et al. (MapReduce
+    "Connected Components in MapReduce and Beyond") algorithm. Min-label
+    propagation needs O(diameter) rounds — hopeless for high-diameter
+    graphs (a 1M-node chain = 1M rounds); star rounds contract paths
+    aggressively and converge in O(log² n) rounds on ANY topology:
 
     - large-star: for each node u, every strictly-LARGER neighbor v
       re-attaches to u's current minimum m(u) — emit (v, m(u)).
@@ -1124,61 +832,30 @@ def connected_components_star(
     Each round is one groupBy-min + one join-shaped regroup on the node —
     the same shuffle key every round. Driver loop carries only the
     convergence check (edge-set stability via count), never node data;
-    localCheckpoint truncates lineage per round.
+    localCheckpoint truncates lineage per round. Property-tested equal
+    to a driver-side union-find on random graphs; round-count bound
+    proven on a chain graph.
 
-    Opt-in: near-dup edge sets are shallow, so label propagation's
-    cheaper rounds usually win; switch here when cluster diameter is
-    unknown or adversarial (web graphs, citation chains, transitive
-    record-linkage). Property-tested equal to label propagation on random
-    graphs; round-count advantage proven on a chain graph.
-
-    ``label_all_nodes=False`` (r13, guide §2.4 "remove shuffles
-    outright"): return labels ONLY for nodes the converged star forest
-    touches, skipping the node-universe derivation and its left join.
-    For any node the default mode labels, the label is identical; nodes
-    ABSENT from the result are exactly those the default mode labels to
-    themselves (singletons whose edges were all self-loops, or nodes
-    never in any edge). Every query-side caller left-joins these labels
-    onto the full id universe and coalesce(comp, node) — which
-    reconstructs precisely that self-label — so the operator-internal
-    all_nodes distinct (exchange+agg) and left join were pure cost in
-    those compositions. It also makes the raw edge list single-consumer,
-    so its materialization barrier disappears: the contraction
-    checkpoint materializes the upstream pair generators directly, one
-    sequential job fewer per CC query. Equality with the default mode
-    (after the coalesce) is pinned by a pytest.
+    Labels ONLY the nodes the converged star forest touches: a node
+    whose edges are all self-loops is absent, and so is any node outside
+    the edge list. Callers own the node universe —
+    :func:`dedup_cluster_assignments` left-joins the labels onto it and
+    labels absent nodes to themselves — so no node-universe distinct
+    (exchange + agg) or left join runs in here, and the raw edge list is
+    single-consumer: the contraction checkpoint below materializes the
+    upstream pair generators directly.
     """
     def sym(e: DataFrame) -> DataFrame:
         return e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
 
-    raw = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    if label_all_nodes:
-        # Checkpoint the RAW edge list ONCE — it is the only thing that
-        # scans the (possibly expensive) upstream plan. Deriving both
-        # the oriented edge set and the node universe from it lazily
-        # costs one cheap rescan of the materialized edges each, where
-        # checkpointing each derivation separately re-ran the whole
-        # upstream (e.g. the kNN graph build under semantic dedup) once
-        # PER derivation. (With label_all_nodes=False the oriented edge
-        # set is the ONLY consumer, so the barrier would be pure cost —
-        # the contraction checkpoint below already materializes the
-        # upstream exactly once.)
-        raw = raw.localCheckpoint()
     # canonical orientation: every edge points downhill (larger → smaller)
     e = (
-        raw.filter(F.col("u") != F.col("v"))
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        .filter(F.col("u") != F.col("v"))
         .select(
             F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
         )
         .distinct()
-    )
-    # node universe from the RAW endpoints (before self-loop removal): a
-    # node appearing only in self-loop edges is still a node and must
-    # label itself — matching connected_components' singleton semantics
-    all_nodes = (
-        raw.select("u").union(raw.select(F.col("v").alias("u"))).distinct()
-        if label_all_nodes
-        else None
     )
 
     # LOCAL CONTRACTION pre-pass (the standard distributed-CC opening
@@ -1233,8 +910,6 @@ def connected_components_star(
     # Checkpointed so the pre-loop convergence check below doesn't force
     # a second contraction pass; contracted size <= node count.
     e = e.mapInPandas(_local_cc, schema=e.schema).localCheckpoint()
-
-    from pyspark.sql import Window
 
     def converged(g: DataFrame) -> bool:
         # SOUND star-forest certificate — BOTH conditions, in one job:
@@ -1337,18 +1012,11 @@ def connected_components_star(
         stats["round_edges"] = round_edges
 
     comp = sym(e).groupBy("u").agg(F.min("v").alias("comp"))
-    if not label_all_nodes:
-        # star ROOTS appear in sym(e) with min(children) > root, so the
-        # least() below is what labels them to themselves — the same
-        # expression the default mode applies after its left join
-        return comp.select(
-            F.col("u").alias("node"),
-            F.least(F.col("comp"), F.col("u")).alias("comp"),
-        )
-    # isolated star roots label themselves
-    return all_nodes.join(comp, "u", "left").select(
+    # star ROOTS appear in sym(e) with min(children) > root, so the
+    # least() is what labels them to themselves
+    return comp.select(
         F.col("u").alias("node"),
-        F.least(F.coalesce("comp", F.col("u")), F.col("u")).alias("comp"),
+        F.least(F.col("comp"), F.col("u")).alias("comp"),
     )
 
 
@@ -1356,12 +1024,13 @@ def dedup_cluster_assignments(
     df: DataFrame,
     pairs: DataFrame,
     id_col: str,
-    max_iter: int = 20,
 ) -> DataFrame:
     """(id, cluster, keep): every document labeled with its near-dup
-    cluster (singletons cluster to themselves) and a keep flag on the
-    cluster's minimum id — the final emit of a dedup pipeline."""
-    comp = connected_components(pairs, max_iter=max_iter)
+    cluster and a keep flag on the cluster's minimum id — the final emit
+    of a dedup pipeline. ``pairs`` (id_a, id_b) closes under star CC;
+    ``df``'s ids are the node universe, so singletons (docs in no edge,
+    or only in self-loops) cluster to themselves."""
+    comp = connected_components_star(pairs)
     ids = df.select(F.col(id_col).alias("node"))
     full = ids.join(comp, "node", "left").select(
         F.col("node").alias(id_col),
@@ -1488,12 +1157,16 @@ def portable_banded_signatures(
     ``shingle_arrays`` (optional): a precomputed (doc_id, sh array)
     frame equal to ``shingles(text_col, k)`` per doc — the signature
     explode then reads it instead of re-running the shingle
-    construction scan (guide §2.4; see ngram_jaccard_pairs)."""
+    construction scan (guide §2.4; see ngram_jaccard_pairs). A frame
+    without ``doc_id`` or with an ``sh`` that is not array<string>
+    raises ValueError."""
     rows_per_band = num_perm // bands
     if rows_per_band * bands != num_perm:
         raise ValueError(f"bands={bands} must divide num_perm={num_perm}")
     if shingle_arrays is not None:
-        sh = shingle_arrays.select("doc_id", F.explode("sh").alias("s"))
+        sh = _check_shingle_arrays(shingle_arrays).select(
+            "doc_id", F.explode("sh").alias("s")
+        )
     else:
         sh = fan_out(df).select(
             F.col(id_col).alias("doc_id"),
@@ -1581,15 +1254,11 @@ def incremental_near_dedup(
     # reads the batch, one the ledger; both depend only on the already-
     # checkpointed cand) — materialize the ledger side on a second
     # driver thread so its scan+explode runs WHILE the batch side's job
-    # executes (guide §2.6 overlap; the llm_dedup_hybrid pattern).
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        sh_l_fut = pool.submit(
-            lambda: cand_shingles(ledger_docs, "id_led").localCheckpoint()
-        )
-        sh_b = cand_shingles(batch, "id_batch").localCheckpoint()
-        sh_l = sh_l_fut.result()
+    # executes (guide §2.6 overlap).
+    sh_l, sh_b = overlap(
+        lambda: cand_shingles(ledger_docs, "id_led").localCheckpoint(),
+        lambda: cand_shingles(batch, "id_batch").localCheckpoint(),
+    )
     sizes_b = sh_b.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_b"))
     sizes_l = sh_l.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_l"))
     inter = (
@@ -1637,26 +1306,36 @@ def minhash_lsh_pairs_portable(
     k: int = 5,
     threshold: float = 0.6,
     shingle_arrays: DataFrame | None = None,
+    max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Banded MinHash-LSH near-dup pairs with ENGINE-PORTABLE hashing:
     each shingle is hashed ONCE (first 8 hex digits of md5 → 32-bit int)
     and permutation p is the integer family (a_p·h + b_p) mod P — every
     op replayable on any engine with md5() and 64-bit integers (Spark,
     DuckDB, Python), so the signatures, candidate set, and final verified
-    pairs are bit-identical cross-engine. This is the auditable twin of
-    :func:`minhash_lsh_pairs` (whose xxhash64 seeds are JVM-specific): a
-    100 TB dedup run can be spot-audited per-shard by ANY engine
-    recomputing the same pairs.
+    pairs are bit-identical cross-engine: a 100 TB dedup run can be
+    spot-audited per-shard by ANY engine recomputing the same pairs.
 
-    Same S-curve as the xxhash variant (bands × rows split of num_perm).
-    Candidates come only from band-bucket equi-joins — no O(n²) stage;
-    verification joins shingle sets for candidate docs only (semi-join
-    pruning before the pair join).
+    bands × rows split of num_perm sets the S-curve: pair-candidate
+    probability 1-(1-j^rows)^bands. Candidates come only from
+    band-bucket equi-joins — no O(n²) stage; verification joins shingle
+    sets for candidate docs only (semi-join pruning before the pair
+    join).
 
     Cost note: one md5 + num_perm multiply-adds per shingle (the md5
     amortizes across all permutations), BIGINT signature mins instead of
-    hex-string mins — the audit variant now prices within ~1.5× of
-    xxhash64 instead of the 3-4× the per-permutation-md5 design paid.
+    hex-string mins.
+
+    ``max_bucket_size`` is the hot-bucket guard: any (band_id, bk)
+    bucket larger than the cap — boilerplate text hashing identically
+    across millions of docs, whose self-join would fan out |bucket|²
+    pairs on ONE join key — is dropped before pairing. Recall cost is
+    bounded: docs in a dropped bucket still meet through any of their
+    other bands-1 buckets (true near-dups agree on many bands,
+    boilerplate-only collisions on few), which is why capping, not
+    salting, is what production MinHash dedup does. The count is a
+    window partitioned on the join key itself, so the one band shuffle
+    is shared with the self-join. Default None: no cap, no window.
 
     ``shingle_arrays`` (optional): a caller-materialized (doc_id, sh
     array) frame equal to ``shingles(text_col, k)`` per doc. Both the
@@ -1664,13 +1343,16 @@ def minhash_lsh_pairs_portable(
     it instead of re-running the shingle construction scan — the
     recall-audit composition (exact pairs + LSH pairs over ONE corpus)
     shares a single shingle checkpoint across both operators
-    (guide §2.4)."""
-    # No banded checkpoint — same measured rationale as
-    # minhash_lsh_pairs: the band self-join exchanges both sides on the
-    # identical key, so exchange reuse serves them from one build.
+    (guide §2.4). A frame without ``doc_id`` or with an ``sh`` that is
+    not array<string> raises ValueError."""
+    # No banded checkpoint, by measurement: the band self-join exchanges
+    # both sides on the identical (band_id, bk) key, so exchange reuse
+    # already serves both from one signature build.
     banded = portable_banded_signatures(
         df, id_col, text_col, num_perm, bands, k, shingle_arrays=shingle_arrays
     )
+    if max_bucket_size is not None:
+        banded = _cap_hot_keys(banded, ["band_id", "bk"], max_bucket_size)
     a, b = banded.alias("a"), banded.alias("b")
     cand = (
         a.join(b, ["band_id", "bk"])
@@ -1681,8 +1363,8 @@ def minhash_lsh_pairs_portable(
         # EAGER local checkpoint pins the LSH-bounded pair set (a sliver
         # of the corpus) so the signature pipeline — full-corpus md5 +
         # banded self-join — executes exactly once instead of once per
-        # reference (eager, matching minhash_lsh_pairs:316 — lazy
-        # checkpoints re-materialize under AQE stage re-execution)
+        # reference (eager: lazy checkpoints re-materialize under AQE
+        # stage re-execution)
         .localCheckpoint()
     )
     cand_ids = cand.select(F.col("id_a").alias("doc_id")).union(

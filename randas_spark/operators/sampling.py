@@ -163,17 +163,8 @@ def leakage_safe_split(
     labels — cost is entirely the pair generation + CC the dedup
     pipeline already runs; reuse those labels when both are needed.
     """
-    from randas_spark.operators.dedup import connected_components_star
+    from randas_spark.operators.dedup import dedup_cluster_assignments
 
-    comp = connected_components_star(pairs, label_all_nodes=False)
-    full = (
-        df.select(F.col(id_col).alias("node"))
-        .join(comp, "node", "left")
-        .select(
-            F.col("node").alias(id_col),
-            F.coalesce("comp", F.col("node")).alias("cluster"),
-        )
-    )
     if not fractions:
         raise ValueError("fractions must name at least one split")
     cums = [cum for _, cum in fractions]
@@ -181,6 +172,7 @@ def leakage_safe_split(
         raise ValueError(
             f"fractions are CUMULATIVE upper bounds and must strictly increase, got {cums}"
         )
+    full = dedup_cluster_assignments(df, pairs, id_col).drop("keep")
     split = None
     for name, cum in fractions:
         cond = _hash_below(F.col("cluster"), cum)

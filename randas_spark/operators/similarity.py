@@ -178,109 +178,6 @@ def knn_lsh(
     )
 
 
-def knn_ivf(
-    queries: DataFrame,
-    corpus: DataFrame,
-    query_id: str,
-    corpus_id: str,
-    vec_col: str,
-    n_cells: int = 16,
-    n_probe: int = 4,
-    top_k: int = 10,
-    seed: int = 42,
-    train_fraction: float = 1.0,
-) -> DataFrame:
-    """IVF (inverted-file) approximate top-k — the other classic ANN scale
-    path next to hyperplane LSH (knn_lsh):
-
-    1. TRAIN  — k-means coarse quantizer on (a sample of) the corpus
-       (MLlib KMeans; at 100 TB train on `train_fraction`≪1 — centroid
-       quality needs thousands of points per cell, not the full corpus).
-    2. ASSIGN — every corpus vector to its nearest centroid (pure map;
-       the cell id would be a parquet partition column in a persisted
-       index, so probes prune directories).
-    3. PROBE  — each query scores the `n_probe` nearest cells only: the
-       candidate set shrinks ~n_cells/n_probe-fold vs brute force.
-
-    n_probe=n_cells degrades to exact search (recall 1.0) — the knob is a
-    smooth recall/throughput dial, unlike LSH's discrete plane count.
-    Scoring stays the codegen cosine; the only Python is the driver-side
-    KMeans fit over sampled vectors.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    spark = corpus.sparkSession
-    vec_d = F.col(vec_col).cast("array<double>")
-    train = corpus.select(array_to_vector(vec_d).alias("features"))
-    if train_fraction < 1.0:
-        train = train.sample(fraction=train_fraction, seed=seed)
-    km = KMeans(k=n_cells, seed=seed, maxIter=20).fit(train)
-
-    centers = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(km.clusterCenters())],
-        "cell int, center array<double>",
-    )
-
-    # assign: nearest centroid per corpus row (broadcast centers, argmin)
-    c = corpus.select(
-        F.col(corpus_id).alias("cid"),
-        F.col(vec_col).alias("cv"),
-        norm(F.col(vec_col)).alias("cn"),
-    )
-    c_dist = (
-        c.crossJoin(F.broadcast(centers))
-        .withColumn("d", _sq_euclid(F.col("cv").cast("array<double>"), F.col("center")))
-    )
-    wc = Window.partitionBy("cid").orderBy(F.col("d").asc(), F.col("cell"))
-    assigned = (
-        c_dist.withColumn("rk", F.row_number().over(wc))
-        .filter(F.col("rk") == 1)
-        .select("cid", "cv", "cn", "cell")
-    )
-
-    # probe: n_probe nearest cells per query
-    q = queries.select(
-        F.col(query_id).alias("qid"),
-        F.col(vec_col).alias("qv"),
-        norm(F.col(vec_col)).alias("qn"),
-    )
-    q_dist = (
-        q.crossJoin(F.broadcast(centers))
-        .withColumn("d", _sq_euclid(F.col("qv").cast("array<double>"), F.col("center")))
-    )
-    wq = Window.partitionBy("qid").orderBy(F.col("d").asc(), F.col("cell"))
-    probes = (
-        q_dist.withColumn("rk", F.row_number().over(wq))
-        .filter(F.col("rk") <= n_probe)
-        .select("qid", "qv", "qn", "cell")
-    )
-
-    # staged norms — see knn_bruteforce; bit-identical scores
-    scored = (
-        assigned.join(F.broadcast(probes), "cell")
-        .filter(F.col("qid") != F.col("cid"))
-        .withColumn(
-            "cos", dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))
-        )
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("cid"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= top_k)
-        .select("qid", "cid", "cos", "rk")
-    )
-
-
-def _sq_euclid(a: Column, b: Column) -> Column:
-    """Squared euclidean distance as a zip_with/aggregate expression."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 def quantize_int8(vec: Column) -> tuple[Column, Column]:
     """(q, scale): symmetric int8 quantization of a float vector —
     scale = max|x|/127, elements round-half-up into [-127, 127] with the
@@ -366,15 +263,22 @@ def knn_ivf_det(
     vectors chosen by md5(id) order (a reproducible uniform sample —
     k-means seeding without the Lloyd iterations), so the whole index —
     cells, assignments, probes, ranking — is a pure function of the
-    data and carries a cross-engine oracle, unlike the MLlib-KMeans
-    variant (knn_ivf) whose centroids are fit-dependent.
+    data and carries a cross-engine oracle (a k-means fit's centroids
+    would depend on the fit).
 
-    Same three stages as knn_ivf: seed centroids (TakeOrdered on the
-    md5 order — no global sort), assign every corpus vector to its
-    max-cosine cell, probe the n_probe nearest cells per query, score
-    candidates only. Lloyd refinement improves cell balance, never
-    correctness — the deterministic index is what a resumable/auditable
-    100 TB build ships, re-clustering offline when drift warrants.
+    Three stages: seed centroids (TakeOrdered on the md5 order — no
+    global sort), assign every corpus vector to its max-cosine cell,
+    probe the n_probe nearest cells per query, score candidates only.
+    n_probe == n_cells degrades to exact search. Lloyd refinement
+    improves cell balance, never correctness — the deterministic index
+    is what a resumable/auditable 100 TB build ships, re-clustering
+    offline when drift warrants.
+
+    EAGER: building the plan runs one job — the n_cells centroid rows
+    are collect()ed to the driver (one TakeOrdered job, shared by the
+    assignment and probe kernel calls), so the centroid panel must fit
+    in driver memory (n_cells × dim doubles) and the call costs that
+    job even if the returned frame is never executed.
 
     Since r14 both rankings run through the shared assign_topk_cells
     Arrow kernel (bit-exact with the crossJoin + row_number form they

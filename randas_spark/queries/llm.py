@@ -3,9 +3,11 @@ multimodal — over the documents/embeddings tables (FIXTURES.md §B).
 
 Oracle policy: deterministic built-in-math operators (exact dedup, ngram
 Jaccard, cosine knn, text metrics) carry full DuckDB oracles built from
-the sql_* twins in randas_spark.functions. Hash-seeded operators
-(MinHash-LSH, SimHash, hyperplane LSH) have no cross-engine oracle —
-pytest verifies them against the exact variants (recall / subset bounds).
+the sql_* twins in randas_spark.functions. The hashed operators
+(MinHash-LSH, SimHash, hyperplane LSH, IVF) derive every hash and
+centroid from md5 and integer arithmetic, so their oracles replay them
+exactly too; pytest additionally bounds them against the exact variants
+(recall / subset bounds).
 """
 
 from __future__ import annotations
@@ -302,37 +304,6 @@ def llm_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def llm_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Banded MinHash-LSH near-dup pairs, exact-Jaccard verified
-    (operators/dedup.minhash_lsh_pairs; 64 perms × 16 bands). NOT in the
-    driver registry: xxhash64 seeds are engine-specific, so no DuckDB
-    oracle can replay it — the md5 twin llm_dedup_minhash_det carries the
-    full value-hash oracle for this family, and pytest checks this
-    variant's recall against llm_dedup_ngram_jaccard. Runs with the
-    at-scale posture: max_bucket_size=1000 caps boilerplate band buckets
-    (a no-op on this corpus — every bucket is far smaller — but the
-    config a 100 TB run must ship with; pytest
-    test_minhash_bucket_cap_bounds_candidates proves the cap bites on a
-    hot-key corpus)."""
-    from randas_spark.operators.dedup import minhash_lsh_pairs
-
-    return minhash_lsh_pairs(
-        t(spark, sf_dir, "documents"), "doc_id", "text",
-        num_perm=64, bands=16, threshold=0.6, max_bucket_size=1000,
-    )
-
-
-def llm_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs (hamming <= 3) via pigeonhole banding
-    (operators/dedup.simhash_near_pairs). NOT in the driver registry:
-    the pandas-UDF fingerprint hash is engine-specific, so the portable
-    twin llm_dedup_simhash_det carries the full oracle; pytest
-    property-checks hamming symmetry and self-distance here."""
-    from randas_spark.operators.dedup import simhash_near_pairs
-
-    return simhash_near_pairs(t(spark, sf_dir, "documents"), "doc_id", "text", max_hamming=3)
-
-
 @register(
     "llm_dedup_embedding",
     oracle=f"""
@@ -437,22 +408,6 @@ def llm_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
     return knn_lsh(queries, emb, "vec_id", "vec_id", "embedding", dim=64, top_k=10, n_planes=4)
-
-
-def llm_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate top-10 via an IVF index: k-means coarse quantizer (16
-    cells), 4-cell probe (operators/similarity.knn_ivf). NOT in the
-    driver registry: k-means fit state is not SQL-replayable, so the
-    deterministic-seed twin llm_knn_ivf_det carries the full oracle;
-    pytest asserts exactness at n_probe=n_cells and subset-score vs
-    brute force below it."""
-    from randas_spark.operators.similarity import knn_ivf
-
-    emb = t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5)
-    return knn_ivf(
-        queries, emb, "vec_id", "vec_id", "embedding", n_cells=16, n_probe=4, top_k=10
-    )
 
 
 # --------------------------------------------------------------------------
@@ -1263,8 +1218,9 @@ def llm_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     first so the expensive pair stage sees a smaller corpus.
 
     The near-dup stage here uses the exact shingle join so the whole
-    pipeline is oracle-checkable; at scale swap in minhash_lsh_pairs —
-    identical pair semantics (verified candidates), banded candidates.
+    pipeline is oracle-checkable; at scale swap in
+    minhash_lsh_pairs_portable — identical pair semantics (verified
+    candidates), banded candidates.
     """
     from randas_spark.operators.dedup import exact_dedup, ngram_jaccard_pairs
 
@@ -1559,10 +1515,10 @@ def llm_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def llm_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transitive dedup clusters: n-gram Jaccard pair edges (>= 0.3)
-    closed under connectivity via iterative min-label propagation
-    (operators/dedup.connected_components), every doc assigned a cluster
-    and a keep flag on the cluster minimum. The Spark iteration is
-    driver-side control flow over distributed join+min-agg rounds
+    closed under connectivity via star CC
+    (operators/dedup.dedup_cluster_assignments), every doc assigned a
+    cluster and a keep flag on the cluster minimum. The Spark iteration
+    is driver-side control flow over distributed star rounds
     (SURVEY.md §2.12 'iterative algorithms'); the oracle expresses the
     same fixpoint as a DuckDB RECURSIVE CTE (reachability closure →
     min reachable label), so the full clustering carries a value-hash
@@ -1580,25 +1536,13 @@ from randas_spark.queries import REGISTRY as _REGISTRY
 
 @register("llm_dedup_clusters_star", oracle=_REGISTRY["llm_dedup_clusters"].oracle)
 def llm_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same transitive closure via alternating large-star/small-star
-    (operators/dedup.connected_components_star, Kiveris et al.) — the
-    O(log² n)-round variant for high-diameter / adversarial graphs where
-    min-label propagation's O(diameter) rounds don't hold. Star CC
-    converges to min-label rooted stars, so the SAME recursive-CTE
-    oracle as llm_dedup_clusters value-hash-checks it; pytest
-    additionally proves equality with label propagation and union-find
-    plus the round-count advantage on a chain graph."""
-    from randas_spark.operators.dedup import connected_components_star, ngram_jaccard_pairs
-
-    d = t(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(d, "doc_id", "text", k=5, threshold=0.3)
-    comp = connected_components_star(pairs, label_all_nodes=False)
-    ids = d.select(F.col("doc_id").alias("node"))
-    full = ids.join(comp, "node", "left").select(
-        F.col("node").alias("doc_id"),
-        F.coalesce("comp", F.col("node")).alias("cluster"),
-    )
-    return full.withColumn("keep", F.col("doc_id") == F.col("cluster"))
+    """Same transitive closure as llm_dedup_clusters, running the
+    identical code: alternating large-star/small-star connected
+    components (Kiveris et al.), O(log² n) rounds on high-diameter /
+    adversarial graphs. Both names stay registered with the same
+    recursive-CTE oracle; pytest proves equality with a union-find plus
+    the round-count bound on a chain graph."""
+    return llm_dedup_clusters(spark, sf_dir)
 
 
 _BM25_RANKED_CTE = f"""
@@ -2764,8 +2708,7 @@ def llm_dedup_minhash_det(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Engine-portable MinHash-LSH near-dup pairs (operators/dedup.
     minhash_lsh_pairs_portable; 32 md5-derived perms × 8 bands,
     exact-Jaccard >= 0.6 verified): bit-identical signatures on any
-    engine with md5(), so — unlike the xxhash64 production variant
-    llm_dedup_minhash_lsh — the FULL pipeline (signatures → candidate
+    engine with md5(), so the FULL pipeline (signatures → candidate
     buckets → verified pairs) carries a value-hash DuckDB oracle. The
     audit shard of a 100 TB dedup run."""
     from randas_spark.operators.dedup import minhash_lsh_pairs_portable
@@ -3069,9 +3012,8 @@ def llm_dedup_simhash_det(spark: SparkSession, sf_dir: str) -> DataFrame:
     simhash_portable_pairs): 32-bit md5-digit fingerprints, pigeonhole
     banding (4 bands of 8 bits → hamming <= 3 pairs must share a band),
     exact bit_count(xor) verification — integer arithmetic end-to-end,
-    so unlike the 64-bit pandas_udf variant (llm_dedup_simhash) the
-    whole pipeline carries a cross-engine value-hash oracle. Runs on
-    the even-doc_id half of the corpus: the portability proof needs
+    so the whole pipeline carries a cross-engine value-hash oracle. Runs
+    on the even-doc_id half of the corpus: the portability proof needs
     every stage exercised, not every row — SimHash pair volume on this
     topically-clustered synthetic corpus grows ~n², and the driver's
     sweep shares a time budget across ~150 queries."""
@@ -3133,9 +3075,7 @@ def llm_knn_ivf_det(spark: SparkSession, sf_dir: str) -> DataFrame:
     16 md5-sampled centroid cells, 4-cell probe): the reproducible,
     cross-engine-auditable IVF index — every stage (seeding, cell
     assignment, probing, ranking) is a pure function of the data, so
-    the FULL approximate pipeline carries a value-hash oracle, unlike
-    the KMeans variant llm_knn_ivf (fit-dependent centroids,
-    rows-only)."""
+    the FULL approximate pipeline carries a value-hash oracle."""
     from randas_spark.operators.similarity import knn_ivf_det
 
     emb = t(spark, sf_dir, "embeddings")
@@ -3478,18 +3418,17 @@ def llm_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-shaped semantic deduplication: edges are kNN-graph
     neighbors with cosine >= 0.35 (the near-orthogonal synthetic corpus'
     near-dup band, as llm_dedup_embedding), closed transitively via
-    min-label-propagation connected components; every vector gets
-    (cluster, keep-on-minimum). The composition that matters at 100 TB:
-    the candidate edge set comes from the LINEAR adaptive-cell IVF graph
-    (never all pairs), and the closure runs in O(diameter) distributed
-    rounds with only convergence counts on the driver. Closure uses
-    large/small-star CC, not min-label propagation: the kNN-graph edge
+    connected components; every vector gets (cluster, keep-on-minimum).
+    The composition that matters at 100 TB: the candidate edge set comes
+    from the LINEAR adaptive-cell IVF graph (never all pairs), and the
+    closure runs in distributed rounds with only convergence counts on
+    the driver. Closure uses large/small-star CC: the kNN-graph edge
     set forms long sparse chains through embedding space (measured
     diameter > 20 already at sf0.1), exactly the high-diameter topology
-    where O(diameter) label rounds stall and O(log² n) star rounds
-    don't. Oracle replays the full chain — graph CTEs + recursive
+    where O(diameter) label-propagation rounds stall and O(log² n) star
+    rounds don't. Oracle replays the full chain — graph CTEs + recursive
     reachability closure."""
-    from randas_spark.operators.dedup import connected_components_star
+    from randas_spark.operators.dedup import dedup_cluster_assignments
     from randas_spark.operators.similarity import knn_graph_ivf
 
     emb = t(spark, sf_dir, "embeddings")
@@ -3502,13 +3441,7 @@ def llm_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb, "vec_id", "embedding", n_cells=n_cells, n_probe=4, top_k=5, min_cos=0.35
     )
     edges = graph.select(F.col("qid").alias("id_a"), F.col("cid").alias("id_b"))
-    comp = connected_components_star(edges, label_all_nodes=False)
-    ids = emb.select(F.col("vec_id").alias("node"))
-    full = ids.join(comp, "node", "left").select(
-        F.col("node").alias("vec_id"),
-        F.coalesce("comp", F.col("node")).alias("cluster"),
-    )
-    return full.withColumn("keep", F.col("vec_id") == F.col("cluster"))
+    return dedup_cluster_assignments(emb, edges, "vec_id")
 
 
 @register(
@@ -4590,9 +4523,10 @@ def llm_dedup_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     union feeds star-CC (local-contraction opening, O(log² n) rounds).
     Embeddings map 1:1 to documents by id (TESTDATA.md)."""
     from randas_spark.operators.dedup import (
-        connected_components_star,
+        dedup_cluster_assignments,
         embedding_near_pairs,
         minhash_lsh_pairs_portable,
+        overlap,
     )
     from randas_spark.operators.similarity import adaptive_plane_count
 
@@ -4607,39 +4541,27 @@ def llm_dedup_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     # back-fills the idle tail of each job with the other leg's tasks).
     # Same jobs either way — the union previously computed the emb leg
     # inside its own materialization anyway — just no longer serialized.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        emb_fut = pool.submit(
-            lambda: embedding_near_pairs(
-                e, "vec_id", "embedding", threshold=0.35,
-                # footer-metadata N (see llm_dedup_embedding_lsh): drops
-                # the count job from every hybrid invocation; identical
-                # N, oracle replay unchanged.
-                n_planes=adaptive_plane_count(
-                    table_num_rows(sf_dir, "embeddings")
-                ),
-                dim=64, bucket_cap=4096,
-            )
-            .select("id_a", "id_b")
-            .localCheckpoint()
+    emb_pairs, text_pairs = overlap(
+        lambda: embedding_near_pairs(
+            e, "vec_id", "embedding", threshold=0.35,
+            # footer-metadata N (see llm_dedup_embedding_lsh): drops
+            # the count job from every hybrid invocation; identical
+            # N, oracle replay unchanged.
+            n_planes=adaptive_plane_count(
+                table_num_rows(sf_dir, "embeddings")
+            ),
+            dim=64, bucket_cap=4096,
         )
-        text_pairs = minhash_lsh_pairs_portable(
+        .select("id_a", "id_b")
+        .localCheckpoint(),
+        lambda: minhash_lsh_pairs_portable(
             d, "doc_id", "text", num_perm=32, bands=8, k=5, threshold=0.6
-        ).select("id_a", "id_b")
-        emb_pairs = emb_fut.result()
-    # No .distinct() on the union: connected_components_star orients and
-    # distincts its edge input anyway (and the node universe is a
-    # distinct of the raw endpoints), so the extra exchange+agg here was
-    # pure cost — identical component labeling on the same edge SET.
-    pairs = text_pairs.union(emb_pairs)
-    comp = connected_components_star(pairs, label_all_nodes=False)
-    ids = d.select(F.col("doc_id").alias("node"))
-    full = ids.join(comp, "node", "left").select(
-        F.col("node").alias("doc_id"),
-        F.coalesce("comp", F.col("node")).alias("cluster"),
+        ).select("id_a", "id_b"),
     )
-    return full.withColumn("keep", F.col("doc_id") == F.col("cluster"))
+    # No .distinct() on the union: connected_components_star orients and
+    # distincts its edge input anyway, so the extra exchange+agg here was
+    # pure cost — identical component labeling on the same edge SET.
+    return dedup_cluster_assignments(d, text_pairs.union(emb_pairs), "doc_id")
 
 
 @register(
@@ -4672,7 +4594,7 @@ def llm_dedup_minhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     The whole chain — signatures, bands, verification, closure — is
     engine-portable, so the full clustering value-hash-checks."""
     from randas_spark.operators.dedup import (
-        connected_components_star,
+        dedup_cluster_assignments,
         minhash_lsh_pairs_portable,
     )
 
@@ -4680,13 +4602,7 @@ def llm_dedup_minhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = minhash_lsh_pairs_portable(
         d, "doc_id", "text", num_perm=32, bands=8, k=5, threshold=0.6
     ).select("id_a", "id_b")
-    comp = connected_components_star(pairs, label_all_nodes=False)
-    ids = d.select(F.col("doc_id").alias("node"))
-    full = ids.join(comp, "node", "left").select(
-        F.col("node").alias("doc_id"),
-        F.coalesce("comp", F.col("node")).alias("cluster"),
-    )
-    return full.withColumn("keep", F.col("doc_id") == F.col("cluster"))
+    return dedup_cluster_assignments(d, pairs, "doc_id")
 
 
 @register(

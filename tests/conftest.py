@@ -12,6 +12,10 @@ SF_DIR = "/root/testdata/sf0.001"
 def spark():
     from randas_spark.session import get_spark
 
+    # The session default (48g) lets the heap outgrow a 15 GB host over a
+    # full suite run when GC falls behind; the sf0.001 fixtures need far
+    # less. An explicit SPARK_GRAFT_DRIVER_MEM still wins.
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
     spark = get_spark("pytest", cpus=8)
     yield spark
 

@@ -1,9 +1,8 @@
-"""Property / recall tests for the LLM-pipeline operators whose hash
-seeds make a cross-engine SQL oracle impossible (queries/llm.py oracle
-policy): MinHash-LSH is checked against the exact n-gram-Jaccard ground
-truth, SimHash against its mathematical invariants, hyperplane-LSH kNN
-against brute force, and the multimodal mapInPandas stage against its
-declared schema/shape contract.
+"""Property / recall tests for the LLM-pipeline operators, beyond the
+registry's value-hash oracles: MinHash-LSH is checked against the exact
+n-gram-Jaccard ground truth, hyperplane-LSH and IVF kNN against brute
+force, connected components against a driver-side union-find, and the
+multimodal mapInPandas stage against its declared schema/shape contract.
 """
 
 from __future__ import annotations
@@ -33,7 +32,10 @@ def emb(spark):
 
 
 def test_minhash_lsh_recall_and_precision(docs):
-    from randas_spark.operators.dedup import minhash_lsh_pairs, ngram_jaccard_pairs
+    from randas_spark.operators.dedup import (
+        minhash_lsh_pairs_portable,
+        ngram_jaccard_pairs,
+    )
 
     exact = {
         (r.id_a, r.id_b): r.jaccard
@@ -41,7 +43,7 @@ def test_minhash_lsh_recall_and_precision(docs):
     }
     mh = {
         (r.id_a, r.id_b): r.jaccard
-        for r in minhash_lsh_pairs(
+        for r in minhash_lsh_pairs_portable(
             docs, "doc_id", "text", num_perm=64, bands=16, threshold=0.6
         ).collect()
     }
@@ -94,12 +96,14 @@ def boilerplate_corpus(spark):
 
 
 def test_minhash_bucket_cap_bounds_candidates(boilerplate_corpus):
-    from randas_spark.operators.dedup import minhash_lsh_pairs
+    from randas_spark.operators.dedup import minhash_lsh_pairs_portable
 
     kw = dict(num_perm=64, bands=16, threshold=0.6)
-    uncapped = minhash_lsh_pairs(boilerplate_corpus, "doc_id", "text", **kw).count()
-    capped_df = minhash_lsh_pairs(
-        boilerplate_corpus, "doc_id", "text", max_bucket_size=10, log_dropped=True, **kw
+    uncapped = minhash_lsh_pairs_portable(
+        boilerplate_corpus, "doc_id", "text", **kw
+    ).count()
+    capped_df = minhash_lsh_pairs_portable(
+        boilerplate_corpus, "doc_id", "text", max_bucket_size=10, **kw
     )
     capped = capped_df.collect()
     # uncapped: the 40 identical docs alone contribute C(40,2)=780 pairs
@@ -110,6 +114,81 @@ def test_minhash_bucket_cap_bounds_candidates(boilerplate_corpus):
     assert len(capped) <= 3
     assert capped_ids <= {100, 101, 102}
     assert (100, 101) in {(r.id_a, r.id_b) for r in capped}
+
+
+def test_malformed_shingle_arrays_fail_fast_without_a_job(spark, docs):
+    """Every operator accepting a caller-supplied shingle_arrays frame
+    raises ValueError when it lacks doc_id or when its sh column is not
+    array<string> — from the schema alone, before any Spark job."""
+    from randas_spark.operators.dedup import (
+        minhash_lsh_pairs_portable,
+        ngram_jaccard_pairs,
+        portable_banded_signatures,
+    )
+
+    bad = [
+        (spark.createDataFrame([(1, ["a b c"])], "id long, sh array<string>"), "doc_id"),
+        (spark.createDataFrame([(1, [7])], "doc_id long, sh array<bigint>"), "array<bigint>"),
+        (spark.createDataFrame([(1, "a b c")], "doc_id long, text string"), "no sh column"),
+    ]
+    sc = spark.sparkContext
+    sc.setJobGroup("shingle-arrays-check", "malformed shingle_arrays")
+    try:
+        for fn in (ngram_jaccard_pairs, portable_banded_signatures, minhash_lsh_pairs_portable):
+            for frame, msg in bad:
+                with pytest.raises(ValueError, match=msg):
+                    fn(docs, "doc_id", "text", shingle_arrays=frame)
+        assert sc.statusTracker().getJobIdsForGroup("shingle-arrays-check") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_overlap_surfaces_each_legs_failure():
+    """overlap() waits for both legs and never drops a failure: a
+    failing side leg raises although the main leg succeeded, a failing
+    main leg raises only after the side leg finished, and when both fail
+    the first failure is raised with the other attached as a note."""
+    import threading
+    import time
+
+    from randas_spark.operators.dedup import overlap
+
+    assert overlap(lambda: 1, lambda: 2) == (1, 2)
+
+    def fail(exc):
+        def leg():
+            raise exc
+        return leg
+
+    with pytest.raises(RuntimeError, match="side leg"):
+        overlap(fail(RuntimeError("side leg")), lambda: 2)
+
+    side_done = threading.Event()
+
+    def slow_side():
+        time.sleep(0.2)
+        side_done.set()
+        return 1
+
+    with pytest.raises(RuntimeError, match="main leg"):
+        overlap(slow_side, fail(RuntimeError("main leg")))
+    assert side_done.is_set()
+
+    side_failed = threading.Event()
+
+    def side_first():
+        side_failed.set()
+        raise ValueError("side first")
+
+    def main_second():
+        side_failed.wait(5)
+        time.sleep(0.1)
+        raise RuntimeError("main second")
+
+    with pytest.raises(ValueError, match="side first") as info:
+        overlap(side_first, main_second)
+    assert any("main second" in n for n in info.value.__notes__)
 
 
 def test_jaccard_shingle_cap_bounds_candidates(boilerplate_corpus, docs):
@@ -322,47 +401,48 @@ def test_incremental_near_dedup_consistent_with_full_corpus_pairs(spark, docs):
 # -- SimHash ---------------------------------------------------------------
 
 
-def test_simhash_deterministic_and_symmetric(spark):
-    from randas_spark.operators.dedup import _simhash64, simhash_column
+def test_simhash_deterministic_and_symmetric(spark, docs):
+    """Identical text → identical portable fingerprint, and the
+    distributed shape (simhash_portable_fps) equals the Column form
+    (simhash_portable_fp) bit for bit over the corpus."""
+    from randas_spark.operators.dedup import simhash_portable_fp, simhash_portable_fps
 
     df = spark.createDataFrame(
         [(1, "the quick brown fox"), (2, "the quick brown fox"), (3, "entirely different words here")],
         "doc_id long, text string",
     )
-    rows = {r.doc_id: r.simhash for r in simhash_column(df, "doc_id", "text").collect()}
-    # identical text → identical fingerprint; pure function matches the UDF
-    assert rows[1] == rows[2] == _simhash64("the quick brown fox")
+    rows = {r.doc_id: r.fp for r in simhash_portable_fps(df, "doc_id", "text", 32).collect()}
+    assert rows[1] == rows[2]
     assert rows[3] != rows[1]
-
-
-def test_simhash_near_pairs_invariants(docs):
-    from randas_spark.operators.dedup import simhash_near_pairs
-
-    pairs = simhash_near_pairs(docs, "doc_id", "text", max_hamming=3).collect()
-    for r in pairs:
-        assert r.id_a < r.id_b
-        assert 0 <= r.hamming <= 3
+    col = {
+        r.doc_id: r.fp
+        for r in docs.select(
+            "doc_id", simhash_portable_fp(F.col("text"), 32).alias("fp")
+        ).collect()
+    }
+    dist = {r.doc_id: r.fp for r in simhash_portable_fps(docs, "doc_id", "text", 32).collect()}
+    assert dist == col
 
 
 def test_simhash_banding_is_exhaustive(spark):
     """Pigeonhole guarantee: a pair at hamming <= max_hamming ALWAYS shares
     a band, so the banded join must find a hand-built near-duplicate."""
-    from randas_spark.operators.dedup import simhash_near_pairs
+    from randas_spark.operators.dedup import simhash_portable_fps, simhash_portable_pairs
 
-    from randas_spark.operators.dedup import _simhash64
-
-    words = (
+    base = (
         "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo "
         "lima mike november oscar papa quebec romeo sierra tango uniform victor "
         "whiskey xray yankee zulu one two three four five six seven eight nine "
         "ten eleven twelve thirteen fourteen"
-    ).split()
-    base = " ".join(words * 3)
-    near = base + " suffix"  # measured hamming 2 — within the radius
-    dist = bin(_simhash64(base) ^ _simhash64(near)).count("1")
-    assert 1 <= dist <= 3
+    )
+    near = base + " appendix"  # measured hamming 1 at 32 bits — within the radius
     df = spark.createDataFrame([(1, base), (2, near)], "doc_id long, text string")
-    pairs = simhash_near_pairs(df, "doc_id", "text", max_hamming=3).collect()
+    fp = {r.doc_id: r.fp for r in simhash_portable_fps(df, "doc_id", "text", 32).collect()}
+    dist = bin(fp[1] ^ fp[2]).count("1")
+    assert 1 <= dist <= 3
+    pairs = simhash_portable_pairs(
+        df, "doc_id", "text", n_bits=32, bands=4, max_hamming=3
+    ).collect()
     assert [(r.id_a, r.id_b, r.hamming) for r in pairs] == [(1, 2, dist)]
 
 
@@ -508,46 +588,6 @@ def test_knn_lsh_subset_of_bruteforce_scores(emb):
     top = {(r.qid, r.cid) for r in exact.collect()}
     hit = sum(1 for r in got if (r.qid, r.cid) in top)
     assert hit / len(top) > 0.05
-
-
-def test_knn_ivf_exact_when_probing_all_cells(emb):
-    """IVF with n_probe == n_cells scans every cell → must equal brute
-    force exactly (same scores, same ranking)."""
-    from randas_spark.operators.similarity import knn_bruteforce, knn_ivf
-
-    queries = emb.filter(F.col("vec_id") < 5)
-    exact = knn_bruteforce(queries, emb, "vec_id", "vec_id", "embedding", top_k=10)
-    ivf = knn_ivf(
-        queries, emb, "vec_id", "vec_id", "embedding",
-        n_cells=8, n_probe=8, top_k=10,
-    )
-    want = sorted((r.qid, r.cid, round(r.cos, 9), r.rk) for r in exact.collect())
-    got = sorted((r.qid, r.cid, round(r.cos, 9), r.rk) for r in ivf.collect())
-    assert got == want
-
-
-def test_knn_ivf_partial_probe_subset_scores(emb):
-    """With fewer probes the IVF result is approximate, but every returned
-    score must match the exact cosine and each query returns <= top_k."""
-    from randas_spark.operators.similarity import knn_bruteforce, knn_ivf
-
-    queries = emb.filter(F.col("vec_id") < 5)
-    truth = {
-        (r.qid, r.cid): r.cos
-        for r in knn_bruteforce(
-            queries, emb, "vec_id", "vec_id", "embedding", top_k=10**9
-        ).collect()
-    }
-    got = knn_ivf(
-        queries, emb, "vec_id", "vec_id", "embedding",
-        n_cells=16, n_probe=4, top_k=10,
-    ).collect()
-    assert got
-    per_q = {}
-    for r in got:
-        assert abs(truth[(r.qid, r.cid)] - r.cos) < 1e-9
-        per_q[r.qid] = per_q.get(r.qid, 0) + 1
-    assert all(n <= 10 for n in per_q.values())
 
 
 def test_unigram_viterbi_exact_and_segmentation_reconstructs(spark):
@@ -994,8 +1034,9 @@ def test_bm25_matches_reference_formula(spark, docs):
 
 
 def test_dedup_clusters_match_union_find(spark, docs):
-    """connected_components == driver-side union-find on the same edges;
-    keep flags select exactly one doc (the min) per cluster."""
+    """dedup_cluster_assignments (star CC over the doc universe) ==
+    driver-side union-find on the same edges; keep flags select exactly
+    one doc (the min) per cluster."""
     from randas_spark.operators.dedup import (
         dedup_cluster_assignments,
         ngram_jaccard_pairs,
@@ -1055,45 +1096,51 @@ def _uf_components(edges):
     return {n: find(n) for n in parent}
 
 
-def test_star_cc_matches_label_propagation_random_graphs(spark):
-    """large-star/small-star must produce exactly the same components as
-    min-label propagation AND the union-find ground truth on random
-    graphs (2 seeds × 80 nodes, ~edge density 1.4)."""
+def test_star_cc_matches_union_find_random_graphs(spark):
+    """Star CC and dedup_cluster_assignments must both agree with the
+    union-find ground truth on random graphs (2 seeds x 80 nodes, ~edge
+    density 1.4, self-loops kept) and a chain (multi-round
+    convergence). Star CC labels only nodes with a non-self-loop edge,
+    each with its true component; dedup_cluster_assignments left-joins
+    those labels onto the node universe and labels every other node to
+    itself."""
     import random
 
     from randas_spark.operators.dedup import (
-        connected_components,
         connected_components_star,
+        dedup_cluster_assignments,
     )
 
+    cases = [[(i, i + 1) for i in range(40)]]  # chain
     for seed in (7, 1999):
         rng = random.Random(seed)
-        edges = [
-            (rng.randrange(80), rng.randrange(80)) for _ in range(110)
-        ]
-        edges = [e for e in edges if e[0] != e[1]]
+        cases.append(
+            [(rng.randrange(80), rng.randrange(80)) for _ in range(110)]
+        )
+    for edges in cases:
         df = spark.createDataFrame(edges, "id_a long, id_b long")
-        want = _uf_components(edges)
-        lp = {
-            r.node: r.comp
-            for r in connected_components(df, max_iter=50).collect()
-        }
+        want = _uf_components([e for e in edges if e[0] != e[1]])
+        universe = sorted({n for e in edges for n in e} | {1000})
         star = {
-            r.node: r.comp
-            for r in connected_components_star(df).collect()
+            r.node: r.comp for r in connected_components_star(df).collect()
         }
-        assert lp == want, f"label propagation wrong on seed {seed}"
-        assert star == want, f"star CC wrong on seed {seed}"
+        assert star == want, f"star CC wrong on {edges[:4]}..."
+        ids = spark.createDataFrame([(n,) for n in universe], "doc_id long")
+        got = {
+            r.doc_id: (r.cluster, r.keep)
+            for r in dedup_cluster_assignments(ids, df, "doc_id").collect()
+        }
+        assert got == {
+            n: (want.get(n, n), want.get(n, n) == n) for n in universe
+        }
 
 
 def test_star_cc_fewer_rounds_on_chain(spark):
-    """High-diameter graph (a 64-node chain): label propagation needs
-    O(diameter) rounds; star contraction must finish in O(log² n) — in
-    practice single digits — with identical (correct) components."""
-    from randas_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    """High-diameter graph (a 48-node chain, diameter 47): label
+    propagation would need O(diameter) rounds; star contraction must
+    finish in O(log² n) — in practice single digits — with the correct
+    single component."""
+    from randas_spark.operators.dedup import connected_components_star
 
     n = 48
     chain = [(i, i + 1) for i in range(n - 1)]
@@ -1105,73 +1152,32 @@ def test_star_cc_fewer_rounds_on_chain(spark):
         for r in connected_components_star(df, stats=star_stats).collect()
     }
     assert star == {i: 0 for i in range(n)}
-
-    lp_stats: dict = {}
-    lp = {
-        r.node: r.comp
-        for r in connected_components(df, max_iter=n + 2, stats=lp_stats).collect()
-    }
-    assert lp == star
+    assert star_stats["converged"], star_stats
     assert star_stats["rounds"] <= 8, star_stats
-    assert lp_stats["rounds"] > 2 * star_stats["rounds"], (lp_stats, star_stats)
 
 
 def test_star_cc_keeps_self_loop_only_nodes(spark):
-    """A node that appears ONLY in self-loop edges is still a node: both
-    CC variants must label it as its own singleton component (regression:
-    star CC derived its node universe from the self-loop-filtered edge
-    set and dropped such nodes entirely)."""
+    """A node that appears ONLY in self-loop edges is still a node: the
+    star-CC cluster assignment must label it as its own singleton
+    (regression: star CC derived its node universe from the
+    self-loop-filtered edge set and dropped such nodes entirely). Star
+    CC itself omits such nodes; the doc universe restores them."""
     from randas_spark.operators.dedup import (
-        connected_components,
         connected_components_star,
+        dedup_cluster_assignments,
     )
 
     df = spark.createDataFrame(
         [(1, 2), (5, 5), (9, 9), (2, 3)], "id_a long, id_b long"
     )
-    want = {1: 1, 2: 1, 3: 1, 5: 5, 9: 9}
-    lp = {r.node: r.comp for r in connected_components(df).collect()}
     star = {r.node: r.comp for r in connected_components_star(df).collect()}
-    assert lp == want
-    assert star == want
-
-
-def test_star_cc_label_all_nodes_false_equals_default_after_coalesce(spark):
-    """label_all_nodes=False must label every node it returns identically
-    to the default mode, and the nodes it omits must be exactly the ones
-    the default mode labels to themselves — so the query-side
-    left-join + coalesce(comp, node) reconstructs the default output
-    bit-for-bit. Covers self-loop-only nodes, isolated star roots, a
-    chain (multi-round convergence), and random graphs."""
-    import random
-
-    from randas_spark.operators.dedup import connected_components_star
-
-    cases = [
-        [(1, 2), (5, 5), (9, 9), (2, 3)],  # self-loop-only nodes
-        [(i, i + 1) for i in range(40)],  # chain
-    ]
-    for seed in (7, 1999):
-        rng = random.Random(seed)
-        cases.append(
-            [(rng.randrange(80), rng.randrange(80)) for _ in range(110)]
-        )
-    for edges in cases:
-        df = spark.createDataFrame(edges, "id_a long, id_b long")
-        full = {
-            r.node: r.comp for r in connected_components_star(df).collect()
-        }
-        sparse = {
-            r.node: r.comp
-            for r in connected_components_star(
-                df, label_all_nodes=False
-            ).collect()
-        }
-        # coalesce(comp, node) over the full universe == default mode
-        rebuilt = {n: sparse.get(n, n) for n in full}
-        assert rebuilt == full
-        # and the sparse result never labels a node outside the universe
-        assert set(sparse) <= set(full)
+    assert star == {1: 1, 2: 1, 3: 1}
+    ids = spark.createDataFrame([(n,) for n in (1, 2, 3, 5, 9)], "doc_id long")
+    got = {
+        r.doc_id: r.cluster
+        for r in dedup_cluster_assignments(ids, df, "doc_id").collect()
+    }
+    assert got == {1: 1, 2: 1, 3: 1, 5: 5, 9: 9}
 
 
 def test_duplicated_spans_no_truncated_grams_on_short_docs(spark):

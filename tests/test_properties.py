@@ -90,44 +90,25 @@ def test_fround_matches_duckdb(x, digits):
     assert py == dd or (math.isnan(py) and math.isnan(dd))
 
 
-# -- simhash invariants ------------------------------------------------------
-
-
-@given(st.text(alphabet=st.characters(codec="ascii", exclude_characters="\x00"), max_size=200))
-@settings(max_examples=80, deadline=None)
-def test_simhash_is_int64_and_deterministic(text):
-    from randas_spark.operators.dedup import _simhash64
-
-    h1, h2 = _simhash64(text), _simhash64(text)
-    assert h1 == h2
-    assert -(2**63) <= h1 < 2**63
-
-
-@given(
-    st.lists(st.sampled_from("alpha bravo charlie delta echo".split()), min_size=1, max_size=30)
-)
-@settings(max_examples=50, deadline=None)
-def test_simhash_order_invariant(tokens):
-    """SimHash is a bag-of-tokens fingerprint: token order must not
-    matter (votes are commutative)."""
-    from randas_spark.operators.dedup import _simhash64
-
-    assert _simhash64(" ".join(tokens)) == _simhash64(" ".join(reversed(tokens)))
-
-
 # -- minhash permutation constants -------------------------------------------
 
 
-@given(st.integers(min_value=0, max_value=255))
-def test_perm_constants_are_odd_and_stable(i):
-    """Multipliers must be odd (bijective mod 2^64) and derivation
-    deterministic."""
-    from randas_spark.operators.dedup import _perm_constants
+@given(st.integers(min_value=1, max_value=256))
+def test_perm_constants_are_odd_and_stable(num_perm):
+    """The portable permutation family: multipliers odd, derivation
+    deterministic and prefix-stable, and a·h + b BIGINT-safe for any
+    32-bit shingle hash h — no wraparound on either engine."""
+    from randas_spark.operators.dedup import MINHASH_MOD, minhash_perm_consts
 
-    a, b = _perm_constants(i)
-    assert a % 2 == 1
-    assert (a, b) == _perm_constants(i)
-    assert -(2**63) <= a < 2**63 and -(2**63) <= b < 2**63
+    consts = minhash_perm_consts(num_perm)
+    assert len(consts) == num_perm
+    assert consts == minhash_perm_consts(num_perm)
+    assert consts == minhash_perm_consts(num_perm + 1)[:num_perm]
+    for a, b in consts:
+        assert a % 2 == 1
+        assert 0 < a < 2**30 and 0 <= b < 2**30
+        assert a * (2**32 - 1) + b < 2**63
+    assert MINHASH_MOD < 2**32
 
 
 # -- xlsx codec round trip ---------------------------------------------------

@@ -125,11 +125,13 @@ def main() -> None:
     out["n_edges"] = pairs.count()
     stats: dict = {}
     comp = connected_components_star(pairs, stats=stats)
-    out["n_labeled_nodes"] = comp.count()
+    # star CC labels only nodes with at least one non-self-loop edge:
+    # the docs that share a cluster with another doc
+    out["n_clustered_nodes"] = comp.count()
     out["cc_rounds"] = stats.get("rounds")
     out["t_cc"] = round(time.perf_counter() - t0, 2)
     print(json.dumps({k: out[k] for k in (
-        "n_edges", "n_labeled_nodes", "cc_rounds", "t_cc")}))
+        "n_edges", "n_clustered_nodes", "cc_rounds", "t_cc")}))
     print(json.dumps(out))
 
 

@@ -119,7 +119,9 @@ def main() -> None:
     t0 = time.perf_counter()
     stats: dict = {}
     comp = connected_components_star(edges, stats=stats)
-    out["n_labeled"] = comp.count()
+    # star CC labels only nodes with at least one non-self-loop edge:
+    # the vectors that share a cluster with another vector
+    out["n_clustered_nodes"] = comp.count()
     out["t_cc"] = round(time.perf_counter() - t0, 2)
     out["cc_rounds"] = stats.get("rounds")
     out["cc_round_edges"] = stats.get("round_edges")
