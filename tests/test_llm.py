@@ -1096,14 +1096,39 @@ def _uf_components(edges):
     return {n: find(n) for n in parent}
 
 
-def test_star_cc_matches_union_find_random_graphs(spark):
-    """Star CC and dedup_cluster_assignments must both agree with the
-    union-find ground truth on random graphs (2 seeds x 80 nodes, ~edge
-    density 1.4, self-loops kept) and a chain (multi-round
-    convergence). Star CC labels only nodes with a non-self-loop edge,
-    each with its true component; dedup_cluster_assignments left-joins
-    those labels onto the node universe and labels every other node to
-    itself."""
+def test_star_cc_matches_label_propagation_random_graphs(spark):
+    """Star CC must produce the min-label labelling that label propagation
+    converges to — each node's component minimum id, computed here by
+    the union-find ground truth — on random graphs (2 seeds x 80 nodes,
+    ~edge density 1.4). Star CC labels exactly the nodes with a
+    non-self-loop edge."""
+    import random
+
+    from randas_spark.operators.dedup import connected_components_star
+
+    for seed in (7, 1999):
+        rng = random.Random(seed)
+        edges = [
+            (rng.randrange(80), rng.randrange(80)) for _ in range(110)
+        ]
+        edges = [e for e in edges if e[0] != e[1]]
+        df = spark.createDataFrame(edges, "id_a long, id_b long")
+        want = _uf_components(edges)
+        star = {
+            r.node: r.comp
+            for r in connected_components_star(df).collect()
+        }
+        assert star == want, f"star CC wrong on seed {seed}"
+
+
+def test_star_cc_label_all_nodes_false_equals_default_after_coalesce(spark):
+    """Star CC labels only nodes with a non-self-loop edge; the
+    left-join + coalesce(comp, node) over the node universe, which is
+    dedup_cluster_assignments, must then label every node with its
+    union-find component (nodes in no edge, or only in self-loops, to
+    themselves) and keep exactly each cluster's minimum id. Covers
+    self-loop-only nodes, a node in no edge, a chain (multi-round
+    convergence), and random graphs with self-loops kept."""
     import random
 
     from randas_spark.operators.dedup import (
@@ -1111,7 +1136,10 @@ def test_star_cc_matches_union_find_random_graphs(spark):
         dedup_cluster_assignments,
     )
 
-    cases = [[(i, i + 1) for i in range(40)]]  # chain
+    cases = [
+        [(1, 2), (5, 5), (9, 9), (2, 3)],  # self-loop-only nodes
+        [(i, i + 1) for i in range(40)],  # chain
+    ]
     for seed in (7, 1999):
         rng = random.Random(seed)
         cases.append(
@@ -1121,17 +1149,20 @@ def test_star_cc_matches_union_find_random_graphs(spark):
         df = spark.createDataFrame(edges, "id_a long, id_b long")
         want = _uf_components([e for e in edges if e[0] != e[1]])
         universe = sorted({n for e in edges for n in e} | {1000})
-        star = {
+        sparse = {
             r.node: r.comp for r in connected_components_star(df).collect()
         }
-        assert star == want, f"star CC wrong on {edges[:4]}..."
+        assert sparse == want, f"star CC wrong on {edges[:4]}..."
+        # the sparse result never labels a node outside the universe
+        assert set(sparse) <= set(universe)
         ids = spark.createDataFrame([(n,) for n in universe], "doc_id long")
         got = {
             r.doc_id: (r.cluster, r.keep)
             for r in dedup_cluster_assignments(ids, df, "doc_id").collect()
         }
+        # coalesce(comp, node) over the universe == the full labelling
         assert got == {
-            n: (want.get(n, n), want.get(n, n) == n) for n in universe
+            n: (sparse.get(n, n), sparse.get(n, n) == n) for n in universe
         }
 
 
