@@ -307,7 +307,6 @@ def ngram_jaccard_pairs(
     k: int = 5,
     threshold: float = 0.6,
     max_shingle_freq: int | None = None,
-    log_dropped: bool = False,
     shingle_arrays: DataFrame | None = None,
 ) -> DataFrame:
     """All document pairs with k-shingle-set Jaccard >= threshold.
@@ -324,8 +323,7 @@ def ngram_jaccard_pairs(
     lose only ultra-common shingles (which carry ~no discriminative
     signal, exactly like BM25's max_df), so capped Jaccard is a lower
     bound — pairs can drop below threshold, never falsely rise above it.
-    ``log_dropped=True`` triggers one extra count job and logs how many
-    hot shingles were dropped. Default None preserves exact semantics;
+    Default None preserves exact semantics;
     beyond the cap, MinHash-LSH (below) is the scale path.
 
     ``shingle_arrays`` (optional): an ALREADY-MATERIALIZED
@@ -351,19 +349,6 @@ def ngram_jaccard_pairs(
     exploded = sh.select("doc_id", F.explode("sh").alias("s"))
     if max_shingle_freq is not None:
         exploded = _cap_hot_keys(exploded, "s", max_shingle_freq)
-        if log_dropped:
-            n_hot = (
-                sh.select(F.explode("sh").alias("s"))
-                .groupBy("s")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .filter(F.col("n") > max_shingle_freq)
-                .count()
-            )
-            _LOG.info(
-                "ngram_jaccard_pairs: dropped %d shingles with freq > %d",
-                n_hot,
-                max_shingle_freq,
-            )
     a = exploded.alias("a")
     b = exploded.alias("b")
     inter = (

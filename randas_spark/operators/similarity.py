@@ -249,6 +249,26 @@ def knn_quantized(
     )
 
 
+def _md5_centroids(
+    corpus: DataFrame, id_col: str, vec_col: str, n_cells: int
+) -> DataFrame:
+    """Deterministic IVF coarse centroids: the first ``n_cells`` corpus
+    vectors in md5(id) order (a reproducible uniform sample — k-means
+    seeding without the Lloyd iterations), as (cell, center,
+    center_nrm). One TakeOrdered, no global sort."""
+    from randas_spark.operators.sampling import _md5_hex
+
+    return (
+        corpus.orderBy(_md5_hex(F.col(id_col)), F.col(id_col))
+        .limit(n_cells)
+        .select(
+            F.col(id_col).alias("cell"),
+            F.col(vec_col).alias("center"),
+            norm(F.col(vec_col)).alias("center_nrm"),
+        )
+    )
+
+
 def knn_ivf_det(
     queries: DataFrame,
     corpus: DataFrame,
@@ -280,34 +300,17 @@ def knn_ivf_det(
     in driver memory (n_cells × dim doubles) and the call costs that
     job even if the returned frame is never executed.
 
-    Since r14 both rankings run through the shared assign_topk_cells
-    Arrow kernel (bit-exact with the crossJoin + row_number form they
-    replace — see its docstring; the persisted twin ivf_build_index has
-    assigned through the kernel since r12, and knn_ivf_query is pinned
-    bit-identical to this fused form, so the two paths now share one
-    ranking implementation instead of two equal-by-proof ones). The
-    retired declarative shape materialized |corpus| x n_cells
-    interpreted-fold rows in ONE task just to keep the top cell per
-    vector — with the recall audit's adaptive n_cells = N/32 panel that
-    stage was a single 3.2 s job at sf0.1 and quadratic in N; the
-    kernel scores each Arrow batch against the collected centroid panel
-    with numpy and emits only the survivors (vectors/norms re-attached
-    by one narrow equi-join, the knn_graph_ivf-measured trade).
+    Both rankings run through the shared assign_topk_cells Arrow kernel
+    (bit-exact with a crossJoin + row_number ranking — see its
+    docstring), the same ranking ivf_build_index persists, so
+    knn_ivf_query is bit-identical to this fused form. Vectors and
+    norms are re-attached to the kernel's survivors by one narrow
+    equi-join.
     """
-    from randas_spark.operators.sampling import _md5_hex
-
-    # norms staged everywhere (vectors once, centers once): the inline
-    # cosine re-evaluated both norm folds per candidate pair in the
+    # norms staged everywhere (vectors once, centers once): an inline
+    # cosine would re-evaluate both norm folds per candidate pair in the
     # final scoring. Bit-identical (see knn_graph_ivf).
-    cent = (
-        corpus.orderBy(_md5_hex(F.col(corpus_id)), F.col(corpus_id))
-        .limit(n_cells)
-        .select(
-            F.col(corpus_id).alias("cell"),
-            F.col(vec_col).alias("center"),
-            norm(F.col(vec_col)).alias("center_nrm"),
-        )
-    )
+    cent = _md5_centroids(corpus, corpus_id, vec_col, n_cells)
     # ONE TakeOrdered job serves both kernel calls (assignment + probes)
     cent_rows = cent.collect()
     c = corpus.select(
@@ -418,29 +421,16 @@ def knn_graph_ivf(
     FIRST under cos DESC) — pinned by a zero-vector fixture in
     tests/test_similarity.py.
     """
-    from randas_spark.functions.vectors import norm
-    from randas_spark.operators.sampling import _md5_hex
-
     corpus = corpus.filter(norm(F.col(vec_col)) > F.lit(0.0))
-    cent = (
-        corpus.orderBy(_md5_hex(F.col(id_col)), F.col(id_col))
-        .limit(n_cells)
-        .select(
-            F.col(id_col).alias("cell"),
-            F.col(vec_col).alias("center"),
-            norm(F.col(vec_col)).alias("center_nrm"),
-        )
-    )
+    cent = _md5_centroids(corpus, id_col, vec_col, n_cells)
     vecs = corpus.select(
         F.col(id_col).alias("vid"),
         F.col(vec_col).alias("vv"),
         norm(F.col(vec_col)).alias("vn"),
     )
     # Coarse assignment via the shared assign_topk_cells Arrow kernel
-    # (r12, VERDICT r11 order #2 — see its docstring for the profile
-    # that retired the crossJoin + row_number shape and the
-    # bit-exactness contract); vectors/norms re-attached to the
-    # N*n_probe survivors by one narrow equi-join.
+    # (see its docstring for the bit-exactness contract); vectors/norms
+    # re-attached to the N*n_probe survivors by one narrow equi-join.
     ranked_n = assign_topk_cells(corpus, id_col, vec_col, cent, n_probe)
     ranked = (
         ranked_n.join(vecs, "vid")
@@ -650,6 +640,54 @@ def _pq_train(
     return cents
 
 
+def _pq_encode(v: DataFrame, cents: list[list], sub: int) -> DataFrame:
+    """(cid, code_0..code_{m-1}) for a quantized (vid, qx) frame against
+    the codebooks ``cents`` — the one encode step shared by a fresh fit
+    and a batch encoded against persisted codebooks."""
+    return v.select(
+        F.col("vid").alias("cid"),
+        *[_pq_code_col(j, sub, cj) for j, cj in enumerate(cents)],
+    )
+
+
+def _pq_fit_encode(
+    emb: DataFrame,
+    id_col: str,
+    vec_col: str,
+    dim: int,
+    m: int,
+    k_sub: int,
+    n_iter: int,
+    scale: float,
+) -> tuple[DataFrame, list[list], DataFrame]:
+    """Quantize (checkpointed once), train the joint Lloyd codebooks and
+    encode the corpus: returns ``(v, cents, enc)`` — the quantized
+    (vid, qx) frame, the codebooks and the (cid, code_*) codes."""
+    if dim % m != 0:
+        raise ValueError(f"dim {dim} not divisible by m {m}")
+    sub = dim // m
+    v = _pq_quantize(emb, id_col, vec_col, scale).localCheckpoint()
+    cents = _pq_train(v, m, sub, k_sub, n_iter)
+    return v, cents, _pq_encode(v, cents, sub)
+
+
+def _pq_write_codebooks(spark, out_dir: str, cents: list[list]) -> None:
+    """Persist the codebooks as ``codebooks.parquet`` —
+    (j int, cluster long, carr array<double>), m × k_sub rows."""
+    import os
+
+    cb_rows = [
+        (j, int(c), [float(x) for x in carr])
+        for j, cj in enumerate(cents)
+        for c, carr in cj
+    ]
+    spark.createDataFrame(
+        cb_rows, "j int, cluster long, carr array<double>"
+    ).coalesce(1).write.mode("overwrite").parquet(
+        os.path.join(out_dir, "codebooks.parquet")
+    )
+
+
 def knn_pq_adc(
     emb: DataFrame,
     id_col: str,
@@ -697,21 +735,11 @@ def knn_pq_adc(
     knn_ivf_det's cell assignment feeding this encoder; kept separate so
     each stage carries its own oracle.
     """
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    sub = dim // m
-
-    v = _pq_quantize(emb, id_col, vec_col, scale).localCheckpoint()
-    cents = _pq_train(v, m, sub, k_sub, n_iter)
-    enc = v.select(
-        F.col("vid").alias("cid"),
-        *[_pq_code_col(j, sub, cents[j]) for j in range(m)],
-    )
-
+    v, cents, enc = _pq_fit_encode(emb, id_col, vec_col, dim, m, k_sub, n_iter, scale)
     # queries come from the SAME checkpointed quantized corpus (no
     # second scan, no second copy of the quantize expression to drift)
     q = v.filter(F.col("vid") < n_queries).select(F.col("vid").alias("qid"), "qx")
-    return _pq_score(enc, q, cents, m, sub, top_k)
+    return _pq_score(enc, q, cents, m, dim // m, top_k)
 
 
 def _pq_score(
@@ -802,51 +830,30 @@ def parquet_fingerprint(path: str) -> str:
     return h.hexdigest()[:16]
 
 
-def _write_index_marker(
-    out_dir: str,
-    kind: str,
-    params: dict,
-    fingerprint: str | None,
-    extra: dict | None = None,
-) -> None:
-    """Commit an index dir by writing the ``_INDEX_OK`` marker LAST, as
-    JSON recording what was built (kind + build params) and from what
-    (corpus fingerprint) — write-to-temp + rename so a crash mid-write
-    never leaves a parseable-but-partial marker. ``extra`` carries
-    layout state beyond build provenance (the compaction generation
-    pointer + consumed stream batches); the atomic replace is what makes
-    the marker the index's single commit point."""
+def _write_index_marker(out_dir: str, payload: dict) -> None:
+    """THE commit point of an index dir: write the whole ``_INDEX_OK``
+    marker dict LAST, write-to-temp + rename so a crash mid-write never
+    leaves a parseable-but-partial marker. A build writes
+    ``{"kind", "params", "fingerprint"}``; every rewrite passes
+    ``{**marker, <changed keys>}``, so layout state (the ``assignments_dir``
+    / ``codes_dir`` generation pointers, ``generation``, ``consumed``,
+    ``next_batch_id``) is carried forward by construction."""
     import json
     import os
 
     marker = os.path.join(out_dir, "_INDEX_OK")
     tmp = marker + ".tmp"
-    payload = {"kind": kind, "params": params, "fingerprint": fingerprint}
-    if extra:
-        payload.update(extra)
     with open(tmp, "w") as fh:
         json.dump(payload, fh)
         fh.write("\n")
     os.replace(tmp, marker)
 
 
-def _marker_extra(marker: dict) -> dict:
-    """The layout fields of a marker (everything beyond build
-    provenance) — every marker REWRITE must carry these forward or a
-    fingerprint stamp would silently undo a compaction's generation
-    flip."""
-    return {
-        k: v
-        for k, v in marker.items()
-        if k not in ("kind", "params", "fingerprint")
-    }
-
-
 def read_index_marker(out_dir: str) -> dict | None:
     """The committed marker as a dict, or None when the dir is absent,
-    uncommitted (no marker), or carries a pre-integrity legacy marker
-    (the r9 plain-text ``ok`` — unparseable means unknown provenance,
-    and unknown provenance means rebuild)."""
+    uncommitted (no marker), or carries a legacy plain-text marker
+    (unparseable means unknown provenance, and unknown provenance means
+    rebuild)."""
     import json
     import os
 
@@ -856,6 +863,41 @@ def read_index_marker(out_dir: str) -> dict | None:
     except (OSError, ValueError):
         return None
     return m if isinstance(m, dict) else None
+
+
+def _open_index(
+    index_dir: str,
+    caller: str,
+    kind: str | None = None,
+    params: dict | None = None,
+    fingerprint: str | None = None,
+) -> dict:
+    """Read and validate an index dir's committed marker — the ONE read
+    every index operation makes, so all of a call's layout state comes
+    from one snapshot. Raises ValueError when there is no committed
+    marker (or, with ``kind``, a marker of another kind); when a
+    ``params`` value contradicts a recorded build param (a scale
+    mismatch would otherwise return silently wrong distances); and,
+    when the caller passes the current corpus ``fingerprint``, when the
+    index was built from a different corpus (stale)."""
+    marker = read_index_marker(index_dir)
+    if marker is None or (kind is not None and marker.get("kind") != kind):
+        what = f"{kind.upper()} index" if kind else "index"
+        raise ValueError(f"{caller}: no committed {what} at {index_dir}")
+    built = marker.get("params") or {}
+    for name, want in (params or {}).items():
+        if name in built and built[name] != want:
+            raise ValueError(
+                f"{caller}: param mismatch at {index_dir} — index built "
+                f"with {name}={built[name]}, query passed {name}={want}"
+            )
+    if fingerprint is not None and marker.get("fingerprint") != fingerprint:
+        raise ValueError(
+            f"{caller}: stale index at {index_dir} — built from corpus "
+            f"{marker.get('fingerprint')}, current corpus is {fingerprint}; "
+            f"rebuild with {marker.get('kind')}_build_index"
+        )
+    return marker
 
 
 def index_ready(
@@ -868,7 +910,7 @@ def index_ready(
     committed marker exists AND (when given) the kind, every build
     param, and the corpus fingerprint all match — so a regenerated
     corpus or changed build params read as "no index here", triggering
-    a rebuild instead of silently serving stale codes (VERDICT r9 #2)."""
+    a rebuild instead of silently serving stale codes."""
     m = read_index_marker(out_dir)
     if m is None:
         return False
@@ -913,47 +955,28 @@ def pq_build_index(
     query results are bit-identical to knn_pq_adc's fused fit+query
     (and the same DuckDB oracle that replays the fit still hash-matches
     the persisted path — parquet round-trips doubles and longs exactly).
-    The ``_INDEX_OK`` marker (JSON: kind + build params + the caller's
-    corpus ``fingerprint``) commits the pair for the build-if-absent
-    pattern: readers treat a dir without a valid marker as absent and
-    rebuild, and knn_pq_query validates its own dim/m/scale arguments
-    against the recorded params so a mismatched query fails loudly
-    instead of returning silently wrong distances."""
+    Committed by :func:`_write_index_marker` (kind + build params +
+    the caller's corpus ``fingerprint``); knn_pq_query validates against
+    it through :func:`_open_index`."""
     import os
 
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    sub = dim // m
-    v = _pq_quantize(emb, id_col, vec_col, scale).localCheckpoint()
-    cents = _pq_train(v, m, sub, k_sub, n_iter)
-    enc = v.select(
-        F.col("vid").alias("cid"),
-        *[_pq_code_col(j, sub, cents[j]) for j in range(m)],
-    )
+    _, cents, enc = _pq_fit_encode(emb, id_col, vec_col, dim, m, k_sub, n_iter, scale)
     enc.write.mode("overwrite").parquet(os.path.join(out_dir, "codes.parquet"))
-    spark = emb.sparkSession
-    cb_rows = [
-        (j, int(c), [float(x) for x in carr])
-        for j in range(m)
-        for c, carr in cents[j]
-    ]
-    spark.createDataFrame(
-        cb_rows, "j int, cluster long, carr array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(out_dir, "codebooks.parquet")
-    )
+    _pq_write_codebooks(emb.sparkSession, out_dir, cents)
     _write_index_marker(
         out_dir,
-        "pq",
-        {"dim": dim, "m": m, "k_sub": k_sub, "n_iter": n_iter, "scale": scale},
-        fingerprint,
+        {
+            "kind": "pq",
+            "params": {
+                "dim": dim,
+                "m": m,
+                "k_sub": k_sub,
+                "n_iter": n_iter,
+                "scale": scale,
+            },
+            "fingerprint": fingerprint,
+        },
     )
-
-
-def pq_index_ready(out_dir: str) -> bool:
-    """True when ``out_dir`` holds a committed index (valid JSON marker;
-    r9-era plain-text markers read as NOT ready — unknown provenance)."""
-    return read_index_marker(out_dir) is not None
 
 
 def _pq_load_codebooks(spark, index_dir: str, m: int) -> list[list]:
@@ -995,45 +1018,29 @@ def knn_pq_query(
     top-k window — no corpus scan of raw vectors, no Lloyd iteration,
     no checkpoint.
 
-    Integrity (VERDICT r9 #2): fails fast on an uncommitted dir, raises
-    when the caller's dim/m/scale disagree with the marker's build
-    params (a scale mismatch would return silently wrong distances —
-    codebook-length mismatches raise on their own, scale never would),
-    and — when the caller passes the current corpus ``fingerprint`` —
-    raises when the index was built from a different corpus so the
-    caller rebuilds instead of serving stale codes."""
+    Integrity: :func:`_open_index` with dim/m/scale and
+    ``fingerprint`` — an uncommitted dir, contradicting build params or
+    a stale corpus raise instead of serving wrong distances."""
     import os
 
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m {m}")
-    marker = read_index_marker(index_dir)
-    if marker is None:
-        raise ValueError(f"knn_pq_query: no committed index at {index_dir}")
-    built = marker.get("params") or {}
-    for name, want in (("dim", dim), ("m", m), ("scale", scale)):
-        if name in built and built[name] != want:
-            raise ValueError(
-                f"knn_pq_query: param mismatch at {index_dir} — index built "
-                f"with {name}={built[name]}, query passed {name}={want}"
-            )
-    if fingerprint is not None and marker.get("fingerprint") != fingerprint:
-        raise ValueError(
-            f"knn_pq_query: stale index at {index_dir} — built from corpus "
-            f"{marker.get('fingerprint')}, current corpus is {fingerprint}; "
-            "rebuild with pq_build_index"
-        )
-    sub = dim // m
+    marker = _open_index(
+        index_dir,
+        "knn_pq_query",
+        params={"dim": dim, "m": m, "scale": scale},
+        fingerprint=fingerprint,
+    )
     spark = queries.sparkSession
     cents = _pq_load_codebooks(spark, index_dir, m)
-    # generation pointer (pq_compact_codes flips it atomically); a
-    # pre-compaction index reads the original codes.parquet
+    # generation pointer (pq_compact_codes flips it atomically)
     enc = spark.read.parquet(
         os.path.join(index_dir, marker.get("codes_dir", "codes.parquet"))
     )
     q = _pq_quantize(queries, id_col, vec_col, scale).select(
         F.col("vid").alias("qid"), "qx"
     )
-    return _pq_score(enc, q, cents, m, sub, top_k)
+    return _pq_score(enc, q, cents, m, dim // m, top_k)
 
 
 def assign_topk_cells(
@@ -1081,8 +1088,8 @@ def assign_topk_cells(
         cent_rows = cent.collect()  # n_cells rows: bounded model state
     if not cent_rows:
         # Empty centroid panel (empty corpus): degrade to an empty
-        # typed frame — as the retired crossJoin form did — instead of
-        # np.stack dying on "need at least one array" inside the kernel.
+        # typed frame instead of np.stack dying on "need at least one
+        # array" inside the kernel.
         return rows.sparkSession.createDataFrame(
             [], "vid long, cell long, rn int"
         )
@@ -1148,10 +1155,9 @@ def _ivf_assign(
     """Max-cosine cell assignment — THE shared expression of the IVF
     family (build, batch append, stream ingest), factored so an
     appended or streamed row lands in exactly the cell a full rebuild
-    would put it in: one shared definition, zero drift. Since r12 the
-    ranking runs in the assign_topk_cells Arrow kernel (bit-exact with
-    the crossJoin + row_number form it replaced — see its docstring);
-    the vectors and norms are re-attached by one narrow equi-join."""
+    would put it in. The ranking runs in the assign_topk_cells Arrow
+    kernel (see its docstring); the vectors and norms are re-attached
+    by one narrow equi-join."""
     r = rows.select(
         F.col(id_col).alias("cid"),
         F.col(vec_col).alias("cv"),
@@ -1161,6 +1167,84 @@ def _ivf_assign(
         F.col("vid").alias("cid"), "cell"
     )
     return top1.join(r, "cid").select("cid", "cv", "cn", "cell")
+
+
+def _ivf_probes(
+    queries: DataFrame, id_col: str, vec_col: str, cent: DataFrame, n_probe: int
+) -> DataFrame:
+    """The ``n_probe`` max-cosine cells per query against the broadcast
+    persisted centroid table, as (qid, qv, qn, cell) under the
+    (ccos DESC, cell) tiebreak — the probe step of knn_ivf_query and
+    knn_ivfpq_query. Raw-vector math runs on queries x n_cells only,
+    never on the corpus."""
+    q = queries.select(
+        F.col(id_col).alias("qid"),
+        F.col(vec_col).alias("qv"),
+        norm(F.col(vec_col)).alias("qn"),
+    )
+    wp = Window.partitionBy("qid").orderBy(F.col("ccos").desc(), F.col("cell"))
+    return (
+        q.crossJoin(F.broadcast(cent))
+        .withColumn(
+            "ccos",
+            dot(F.col("qv"), F.col("center")) / (F.col("qn") * F.col("center_nrm")),
+        )
+        .withColumn("rn", F.row_number().over(wp))
+        .filter(F.col("rn") <= n_probe)
+        .select("qid", "qv", "qn", "cell")
+    )
+
+
+def _ivf_generation(marker: dict) -> str:
+    """The assignments generation dir a marker points at (compaction
+    flips the pointer; a never-compacted index has the build's dir)."""
+    return marker.get("assignments_dir", "assignments.parquet")
+
+
+def _ivf_stream_dirs(index_dir: str, marker: dict) -> list[str]:
+    """Committed stream-append batch dirs not listed in ``marker``'s
+    ``consumed`` field, sorted by batch id (see
+    :func:`ivf_committed_stream_dirs`)."""
+    import os
+
+    root = os.path.join(index_dir, "stream_appends")
+    if not os.path.isdir(root):
+        return []
+    consumed = set(marker.get("consumed") or [])
+    return [
+        os.path.join(root, d)
+        for d in sorted(os.listdir(root))
+        if d.startswith("b") and not d.endswith(".__tmp__") and d not in consumed
+    ]
+
+
+def _ivf_served(
+    spark,
+    index_dir: str,
+    marker: dict,
+    cols: tuple[str, ...],
+    stream_dirs: list[str] | None = None,
+) -> DataFrame:
+    """The corpus an IVF index serves as of ONE marker snapshot: the
+    current assignments generation ∪ every committed, unconsumed stream
+    batch (``stream_dirs``, derived from the same ``marker`` when not
+    given), each root projected to ``cols`` + cell (long). Deriving both
+    from one read is what keeps a concurrent compaction's flip from
+    pairing the old generation with the new ``consumed`` list. Every
+    root is separately cell-partitioned (Spark refuses one multi-root
+    partition discovery); a probe-cell filter pushes into every union
+    branch, so each root is still pruned to the probed cells."""
+    import functools
+    import os
+
+    if stream_dirs is None:
+        stream_dirs = _ivf_stream_dirs(index_dir, marker)
+    roots = [os.path.join(index_dir, _ivf_generation(marker))] + stream_dirs
+    parts = [
+        spark.read.parquet(r).select(*cols, F.col("cell").cast("long").alias("cell"))
+        for r in roots
+    ]
+    return functools.reduce(DataFrame.unionByName, parts)
 
 
 def ivf_build_index(
@@ -1186,20 +1270,11 @@ def ivf_build_index(
 
     Same determinism argument as pq_build_index: the persisted frames
     are exactly what knn_ivf_det computes inline (norms included, so
-    query-time math is bit-identical), committed under _INDEX_OK."""
+    query-time math is bit-identical), committed by
+    :func:`_write_index_marker`."""
     import os
 
-    from randas_spark.operators.sampling import _md5_hex
-
-    cent = (
-        corpus.orderBy(_md5_hex(F.col(id_col)), F.col(id_col))
-        .limit(n_cells)
-        .select(
-            F.col(id_col).alias("cell"),
-            F.col(vec_col).alias("center"),
-            norm(F.col(vec_col)).alias("center_nrm"),
-        )
-    )
+    cent = _md5_centroids(corpus, id_col, vec_col, n_cells)
     assign = _ivf_assign(corpus, id_col, vec_col, cent)
     cent.coalesce(1).write.mode("overwrite").parquet(
         os.path.join(out_dir, "centroids.parquet")
@@ -1210,7 +1285,10 @@ def ivf_build_index(
     assign.repartition("cell").write.mode("overwrite").partitionBy("cell").parquet(
         os.path.join(out_dir, "assignments.parquet")
     )
-    _write_index_marker(out_dir, "ivf", {"n_cells": n_cells}, fingerprint)
+    _write_index_marker(
+        out_dir,
+        {"kind": "ivf", "params": {"n_cells": n_cells}, "fingerprint": fingerprint},
+    )
 
 
 def knn_ivf_query(
@@ -1232,60 +1310,17 @@ def knn_ivf_query(
     knn_ivf_det at the same params — the persisted norms guarantee the
     same fold inputs.
 
-    Integrity: fails fast on an uncommitted/legacy dir and, when the
-    caller passes the current corpus ``fingerprint``, raises on a stale
-    index (n_probe/top_k are query-time knobs, valid against any build,
-    so there are no build params to cross-check here)."""
+    Integrity: :func:`_open_index` with ``fingerprint`` (n_probe/top_k
+    are query-time knobs, valid against any build, so there are no
+    build params to cross-check). The served corpus is
+    :func:`_ivf_served` of that one marker read."""
     import os
 
     spark = queries.sparkSession
-    marker = read_index_marker(index_dir)
-    if marker is None:
-        raise ValueError(f"knn_ivf_query: no committed index at {index_dir}")
-    if fingerprint is not None and marker.get("fingerprint") != fingerprint:
-        raise ValueError(
-            f"knn_ivf_query: stale index at {index_dir} — built from corpus "
-            f"{marker.get('fingerprint')}, current corpus is {fingerprint}; "
-            "rebuild with ivf_build_index"
-        )
+    marker = _open_index(index_dir, "knn_ivf_query", fingerprint=fingerprint)
     cent = spark.read.parquet(os.path.join(index_dir, "centroids.parquet"))
-    # the served corpus = the current assignments GENERATION (marker
-    # pointer — compaction flips it atomically) + every rename-COMMITTED,
-    # unconsumed stream batch; all roots share the cell-partition layout,
-    # so the probe join prunes each root to the probed cells
-    roots = [
-        os.path.join(index_dir, marker.get("assignments_dir", "assignments.parquet"))
-    ]
-    roots += ivf_committed_stream_dirs(index_dir)
-    parts = [
-        spark.read.parquet(r).select(
-            "cid", "cv", "cn", F.col("cell").cast("long").alias("cell")
-        )
-        for r in roots
-    ]
-    assign = parts[0]
-    for p in parts[1:]:
-        # each root is separately cell-partitioned (Spark refuses one
-        # multi-root partition discovery); the union preserves per-root
-        # partition pruning because the probe-cell filter pushes into
-        # every union branch
-        assign = assign.unionByName(p)
-    q = queries.select(
-        F.col(id_col).alias("qid"),
-        F.col(vec_col).alias("qv"),
-        norm(F.col(vec_col)).alias("qn"),
-    )
-    wp = Window.partitionBy("qid").orderBy(F.col("ccos").desc(), F.col("cell"))
-    probes = (
-        q.crossJoin(F.broadcast(cent))
-        .withColumn(
-            "ccos",
-            dot(F.col("qv"), F.col("center")) / (F.col("qn") * F.col("center_nrm")),
-        )
-        .withColumn("rn", F.row_number().over(wp))
-        .filter(F.col("rn") <= n_probe)
-        .select("qid", "qv", "qn", "cell")
-    )
+    assign = _ivf_served(spark, index_dir, marker, ("cid", "cv", "cn"))
+    probes = _ivf_probes(queries, id_col, vec_col, cent, n_probe)
     if candidate_filter is not None:
         # FILTERED search (metadata predicate): applied to the candidate
         # rows BEFORE ranking, so it lands on the partition-pruned
@@ -1309,26 +1344,16 @@ def knn_ivf_query(
 
 
 def ivf_assignment_counts(spark, index_dir: str) -> DataFrame:
-    """Per-cell row counts of a committed IVF index (base generation ∪
-    unconsumed stream batches) — the raw table behind the balance
-    report. Pure metadata-scale aggregate: reads only the cell
-    partition column, one map-combinable count."""
-    import os
-
-    marker = read_index_marker(index_dir)
-    if marker is None or marker.get("kind") != "ivf":
-        raise ValueError(f"ivf_assignment_counts: no committed IVF index at {index_dir}")
-    roots = [
-        os.path.join(index_dir, marker.get("assignments_dir", "assignments.parquet"))
-    ] + ivf_committed_stream_dirs(index_dir)
-    parts = [
-        spark.read.parquet(r).select(F.col("cell").cast("long").alias("cell"))
-        for r in roots
-    ]
-    allc = parts[0]
-    for p in parts[1:]:
-        allc = allc.unionByName(p)
-    return allc.groupBy("cell").agg(F.count(F.lit(1)).alias("c"))
+    """Per-cell row counts of a committed IVF index (:func:`_ivf_served`
+    of one marker read) — the raw table behind the balance report. Pure
+    metadata-scale aggregate: reads only the cell partition column, one
+    map-combinable count."""
+    marker = _open_index(index_dir, "ivf_assignment_counts", kind="ivf")
+    return (
+        _ivf_served(spark, index_dir, marker, ())
+        .groupBy("cell")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
 
 
 def ivf_append_batch(
@@ -1339,12 +1364,10 @@ def ivf_append_batch(
     fingerprint: str | None = None,
 ) -> None:
     """Append a NEW ingestion batch to a committed IVF index WITHOUT
-    re-fitting (VERDICT r9 #4 — the missing member of the incremental-
-    ingestion family next to the exact-dedup, near-dup, and packing
-    ledgers): assign the batch against the PERSISTED centroids (the
-    same broadcast max-cosine expression ivf_build_index uses, so an
-    appended row lands in exactly the cell a full rebuild would put it
-    in) and append its rows to the cell-partitioned assignments table.
+    re-fitting: assign the batch against the PERSISTED centroids (the
+    same ``_ivf_assign`` ivf_build_index uses, so an appended row lands
+    in exactly the cell a full rebuild would put it in) and append its
+    rows to the cell-partitioned assignments table.
 
     Lifetime-linear: each batch costs one batch-scan × broadcast
     centroids + one partitioned append — re-fitting per batch would be
@@ -1356,22 +1379,14 @@ def ivf_append_batch(
     clean rebuild instead of serving a half-appended index."""
     import os
 
-    marker = read_index_marker(index_dir)
-    if marker is None or marker.get("kind") != "ivf":
-        raise ValueError(f"ivf_append_batch: no committed IVF index at {index_dir}")
+    marker = _open_index(index_dir, "ivf_append_batch", kind="ivf")
     spark = batch.sparkSession
     cent = spark.read.parquet(os.path.join(index_dir, "centroids.parquet"))
     assign = _ivf_assign(batch, id_col, vec_col, cent)
     assign.write.mode("append").partitionBy("cell").parquet(
-        os.path.join(index_dir, marker.get("assignments_dir", "assignments.parquet"))
+        os.path.join(index_dir, _ivf_generation(marker))
     )
-    _write_index_marker(
-        index_dir,
-        "ivf",
-        marker.get("params") or {},
-        fingerprint,
-        extra=_marker_extra(marker),
-    )
+    _write_index_marker(index_dir, {**marker, "fingerprint": fingerprint})
 
 
 def ivf_commit_stream_batch(
@@ -1403,26 +1418,22 @@ def ivf_commit_stream_batch(
     compacted into assignments.parquet offline when small-file count
     matters (the classic streaming-ingest compaction trade).
 
-    Id-recycling guard (ADVICE r10 #1): the dir name IS the idempotence
-    key, so a NEW stream epoch (fresh checkpoint restarting batch_id at
-    0) that reuses an id already folded into a compacted generation and
-    GC'd would rename-commit a dir ivf_committed_stream_dirs excludes
-    FOREVER — rows silently never served. A commit whose name is still
-    listed in the marker's ``consumed`` field therefore returns False
-    when the dir still exists (redelivery of a consumed-awaiting-GC
-    batch — already served via the compacted generation) and RAISES when
-    the dir is gone (a recycled id cannot be told apart from such a
-    redelivery by name, and writing would be silent data loss): new
-    epochs must offset their ids by :func:`ivf_stream_epoch_base`, the
-    monotone watermark compaction persists in the marker."""
+    Id-recycling guard: the dir name IS the idempotence key, so a NEW
+    stream epoch (fresh checkpoint restarting batch_id at 0) that reuses
+    an id already folded into a compacted generation and GC'd would
+    rename-commit a dir ivf_committed_stream_dirs excludes FOREVER —
+    rows silently never served. A commit whose name is still listed in
+    the marker's ``consumed`` field therefore returns False when the dir
+    still exists (redelivery of a consumed-awaiting-GC batch — already
+    served via the compacted generation) and RAISES when the dir is gone
+    (a recycled id cannot be told apart from such a redelivery by name,
+    and writing would be silent data loss): new epochs must offset their
+    ids by :func:`ivf_stream_epoch_base`, the monotone watermark
+    compaction persists in the marker."""
     import os
     import shutil
 
-    marker = read_index_marker(index_dir)
-    if marker is None or marker.get("kind") != "ivf":
-        raise ValueError(
-            f"ivf_commit_stream_batch: no committed IVF index at {index_dir}"
-        )
+    marker = _open_index(index_dir, "ivf_commit_stream_batch", kind="ivf")
     name = f"b{int(batch_id):06d}"
     target = os.path.join(index_dir, "stream_appends", name)
     if os.path.exists(target):
@@ -1453,28 +1464,18 @@ def ivf_stream_epoch_base(index_dir: str) -> int:
     ``epoch_base + batch_id`` so recycled checkpoint ids can never
     collide with names already consumed by a compacted generation
     (ivf_commit_stream_batch refuses such collisions loudly)."""
-    marker = read_index_marker(index_dir)
-    if marker is None:
-        raise ValueError(f"ivf_stream_epoch_base: no committed index at {index_dir}")
+    marker = _open_index(index_dir, "ivf_stream_epoch_base")
     return int(marker.get("next_batch_id", 0))
 
 
 def ivf_stamp_fingerprint(index_dir: str, fingerprint: str | None) -> None:
     """Seal a build+ingest sequence by rewriting the marker with the
-    served-corpus fingerprint LAST (kind and params preserved). Same
-    crash discipline as ivf_append_batch: until the stamp lands, readers
-    validating against the new corpus fingerprint see the index as stale
-    and rebuild — a torn build/ingest sequence is never served."""
-    marker = read_index_marker(index_dir)
-    if marker is None:
-        raise ValueError(f"ivf_stamp_fingerprint: no committed index at {index_dir}")
-    _write_index_marker(
-        index_dir,
-        marker.get("kind", "ivf"),
-        marker.get("params") or {},
-        fingerprint,
-        extra=_marker_extra(marker),
-    )
+    served-corpus fingerprint LAST (everything else carried forward).
+    Until the stamp lands, readers validating against the new corpus
+    fingerprint see the index as stale and rebuild — a torn
+    build/ingest sequence is never served."""
+    marker = _open_index(index_dir, "ivf_stamp_fingerprint")
+    _write_index_marker(index_dir, {**marker, "fingerprint": fingerprint})
 
 
 def ivf_committed_stream_dirs(index_dir: str) -> list[str]:
@@ -1485,18 +1486,7 @@ def ivf_committed_stream_dirs(index_dir: str) -> list[str]:
     generation, awaiting GC) are excluded so a crash between a
     compaction's marker flip and its directory cleanup can never serve
     a row twice."""
-    import os
-
-    root = os.path.join(index_dir, "stream_appends")
-    if not os.path.isdir(root):
-        return []
-    marker = read_index_marker(index_dir) or {}
-    consumed = set(marker.get("consumed") or [])
-    return [
-        os.path.join(root, d)
-        for d in sorted(os.listdir(root))
-        if d.startswith("b") and not d.endswith(".__tmp__") and d not in consumed
-    ]
+    return _ivf_stream_dirs(index_dir, read_index_marker(index_dir) or {})
 
 
 def ivf_compact_stream_appends(spark, index_dir: str) -> dict:
@@ -1506,56 +1496,43 @@ def ivf_compact_stream_appends(spark, index_dir: str) -> dict:
     continuous ingest is thousands of small files, and small-file count
     is what kills scan throughput at scale).
 
-    Commit protocol (single atomic decision point, same discipline as
-    the rename-commit on the write path): the compacted table (current
-    generation ∪ stream batches) is first written to a NEW generation
-    dir ``assignments_g{K}.parquet`` — invisible to readers, who follow
-    the marker's ``assignments_dir`` pointer; then one atomic marker
-    replace flips ``assignments_dir`` to the new generation AND records
-    the folded batch dirs as ``consumed``; only then are the old
-    generation and consumed dirs deleted. A crash before the flip
-    serves the old layout (orphan generation dir, harmless); a crash
-    after the flip but before cleanup serves the new generation with
-    consumed dirs excluded by ivf_committed_stream_dirs — NEVER a
-    double-served row. Object-store note: the marker replace plays the
-    role a table format's manifest swap plays; the post-flip deletes
-    would become TTL'd garbage collection to respect in-flight readers
-    (single-writer, snapshot-per-query assumed here).
+    Commit protocol (single atomic decision point): the compacted table
+    (:func:`_ivf_served` — current generation ∪ stream batches) is first
+    written to a NEW generation dir ``assignments_g{K}.parquet`` —
+    invisible to readers, who follow the marker's ``assignments_dir``
+    pointer; then one :func:`_write_index_marker` flips
+    ``assignments_dir`` to the new generation AND records the folded
+    batch dirs as ``consumed``; only then are the old generation and
+    consumed dirs deleted. A crash before the flip serves the old layout
+    (orphan generation dir, harmless); a crash after the flip but before
+    cleanup serves the new generation with consumed dirs excluded by
+    ivf_committed_stream_dirs — NEVER a double-served row. Object-store
+    note: the marker replace plays the role a table format's manifest
+    swap plays; the post-flip deletes would become TTL'd garbage
+    collection to respect in-flight readers (single-writer,
+    snapshot-per-query assumed here: each reader takes its generation
+    pointer and ``consumed`` list from one marker read).
 
     Returns a summary dict (generation, n_consumed). No-op when there
     is nothing to fold."""
     import os
     import shutil
 
-    marker = read_index_marker(index_dir)
-    if marker is None or marker.get("kind") != "ivf":
-        raise ValueError(
-            f"ivf_compact_stream_appends: no committed IVF index at {index_dir}"
-        )
-    stream_dirs = ivf_committed_stream_dirs(index_dir)
+    marker = _open_index(index_dir, "ivf_compact_stream_appends", kind="ivf")
+    cur = _ivf_generation(marker)
+    stream_dirs = _ivf_stream_dirs(index_dir, marker)
     if not stream_dirs:
-        return {"generation": marker.get("assignments_dir", "assignments.parquet"),
-                "n_consumed": 0}
-    cur = marker.get("assignments_dir", "assignments.parquet")
+        return {"generation": cur, "n_consumed": 0}
     gen = int(marker.get("generation", 0)) + 1
     new_dir = f"assignments_g{gen}.parquet"
-    roots = [os.path.join(index_dir, cur)] + stream_dirs
-    parts = [
-        spark.read.parquet(r).select(
-            "cid", "cv", "cn", F.col("cell").cast("long").alias("cell")
-        )
-        for r in roots
-    ]
-    merged = parts[0]
-    for p in parts[1:]:
-        merged = merged.unionByName(p)
+    merged = _ivf_served(spark, index_dir, marker, ("cid", "cv", "cn"), stream_dirs)
     merged.write.mode("overwrite").partitionBy("cell").parquet(
         os.path.join(index_dir, new_dir)
     )
     # Prune consumed entries whose dirs an EARLIER compaction already
-    # GC'd (ADVICE r10 #2: without this the list grows for the index's
-    # lifetime, bloating the single commit-point file every query reads
-    # and widening the id-recycling trap). An entry still on disk stays
+    # GC'd (without this the list grows for the index's lifetime,
+    # bloating the single commit-point file every query reads and
+    # widening the id-recycling trap). An entry still on disk stays
     # listed — it is in the flip-to-GC crash window and must remain
     # excluded from serving. The watermark below keeps the recycling
     # guard sound after pruning: a pruned name can only be recommitted
@@ -1576,21 +1553,15 @@ def ivf_compact_stream_appends(spark, index_dir: str) -> dict:
         int(marker.get("next_batch_id", 0)),
         max(int(n.lstrip("b")) for n in folded) + 1,
     )
-    extra = _marker_extra(marker)
-    extra.update(
+    _write_index_marker(
+        index_dir,
         {
+            **marker,
             "assignments_dir": new_dir,
             "generation": gen,
             "consumed": consumed,
             "next_batch_id": next_id,
-        }
-    )
-    _write_index_marker(
-        index_dir,
-        "ivf",
-        marker.get("params") or {},
-        marker.get("fingerprint"),
-        extra=extra,
+        },
     )
     # post-flip GC: anything below is redundant with the new generation
     # (consumed entries carried over from a crashed earlier GC included —
@@ -1611,32 +1582,22 @@ def pq_encode_batch(
     """PQ twin of :func:`ivf_append_batch`: encode a new batch against
     the PERSISTED codebooks (no Lloyd re-fit — the build params come
     from the marker, so the quantization atom and sub-centroids are
-    exactly the build's) and append the code rows to codes.parquet.
-    Same crash discipline: marker re-committed last with the
-    post-append fingerprint, so a torn append reads stale and rebuilds."""
+    exactly the build's) and append the code rows to the current codes
+    generation; the marker is re-committed last with the post-append
+    fingerprint."""
     import os
 
-    marker = read_index_marker(index_dir)
-    if marker is None or marker.get("kind") != "pq":
-        raise ValueError(f"pq_encode_batch: no committed PQ index at {index_dir}")
+    marker = _open_index(index_dir, "pq_encode_batch", kind="pq")
     params = marker.get("params") or {}
     dim = int(params.get("dim", 64))
     m = int(params.get("m", 4))
     scale = float(params.get("scale", 512.0))
-    sub = dim // m
-    spark = batch.sparkSession
-    cents = _pq_load_codebooks(spark, index_dir, m)
-    v = _pq_quantize(batch, id_col, vec_col, scale)
-    enc = v.select(
-        F.col("vid").alias("cid"),
-        *[_pq_code_col(j, sub, cents[j]) for j in range(m)],
-    )
+    cents = _pq_load_codebooks(batch.sparkSession, index_dir, m)
+    enc = _pq_encode(_pq_quantize(batch, id_col, vec_col, scale), cents, dim // m)
     enc.write.mode("append").parquet(
         os.path.join(index_dir, marker.get("codes_dir", "codes.parquet"))
     )
-    _write_index_marker(
-        index_dir, "pq", params, fingerprint, extra=_marker_extra(marker)
-    )
+    _write_index_marker(index_dir, {**marker, "fingerprint": fingerprint})
 
 
 # Per-file row target for compacted PQ codes (~100 MB at production m);
@@ -1658,9 +1619,7 @@ def pq_compact_codes(spark, index_dir: str) -> dict:
     import os
     import shutil
 
-    marker = read_index_marker(index_dir)
-    if marker is None or marker.get("kind") != "pq":
-        raise ValueError(f"pq_compact_codes: no committed PQ index at {index_dir}")
+    marker = _open_index(index_dir, "pq_compact_codes", kind="pq")
     cur = marker.get("codes_dir", "codes.parquet")
     gen = int(marker.get("generation", 0)) + 1
     new_dir = f"codes_g{gen}.parquet"
@@ -1669,8 +1628,8 @@ def pq_compact_codes(spark, index_dir: str) -> dict:
     # ~4M code rows per output file: each row is m longs + id, so this
     # keeps files in the 100 MB class at production m without ever
     # writing the thousands-of-KB-files shape compaction exists to fix.
-    # CEILING division (ADVICE r10 #3): floor would pack e.g. 7.9M rows
-    # into one ~2x-oversized file instead of two at-target files.
+    # CEILING division: floor would pack e.g. 7.9M rows into one
+    # ~2x-oversized file instead of two at-target files.
     # coalesce can only REDUCE partition count (the common many-small-
     # appends case, shuffle-free); when the target exceeds the current
     # partitioning — few but oversized files — a repartition shuffle is
@@ -1682,11 +1641,8 @@ def pq_compact_codes(spark, index_dir: str) -> dict:
         else enc.repartition(n_files)
     )
     sized.write.mode("overwrite").parquet(os.path.join(index_dir, new_dir))
-    extra = _marker_extra(marker)
-    extra.update({"codes_dir": new_dir, "generation": gen})
     _write_index_marker(
-        index_dir, "pq", marker.get("params") or {}, marker.get("fingerprint"),
-        extra=extra,
+        index_dir, {**marker, "codes_dir": new_dir, "generation": gen}
     )
     shutil.rmtree(os.path.join(index_dir, cur), ignore_errors=True)
     return {"generation": new_dir, "n_rows": int(n)}
@@ -1705,15 +1661,14 @@ def ivfpq_build_index(
     scale: float = 512.0,
     fingerprint: str | None = None,
 ) -> None:
-    """BUILD half of the composite IVF+PQ index (VERDICT r10 order #1) —
-    the standard IVFADC layout (Jégou et al., PAMI'11 §V; FAISS
-    IndexIVFPQ): a coarse inverted file prunes WHICH vectors a query
-    scores, product quantization compresses HOW each survivor is
-    scored. This closes the one remaining gap in the ANN ladder: the
-    flat persisted PQ (knn_pq_query) scans the whole 64x-compressed
-    codes table per query panel — linear, but still corpus-sized —
-    while here the codes live PARTITIONED BY coarse cell, so a query
-    probing n_probe of n_cells touches n_probe·N/n_cells code rows.
+    """BUILD half of the composite IVF+PQ index — the standard IVFADC
+    layout (Jégou et al., PAMI'11 §V; FAISS IndexIVFPQ): a coarse
+    inverted file prunes WHICH vectors a query scores, product
+    quantization compresses HOW each survivor is scored. The flat
+    persisted PQ (knn_pq_query) scans the whole 64x-compressed codes
+    table per query panel — linear, but still corpus-sized — while here
+    the codes live PARTITIONED BY coarse cell, so a query probing
+    n_probe of n_cells touches n_probe·N/n_cells code rows.
 
     Variant note: codebooks quantize the RAW vectors, not per-cell
     residuals (FAISS's ``by_residual=false`` mode — a supported
@@ -1734,33 +1689,18 @@ def ivfpq_build_index(
       by coarse cell — the layout that turns probing into partition
       pruning on the ONLY corpus-sized artifact.
 
-    Determinism: md5-seeded coarse centroids (ivf_build_index's
-    seeding), the shared ``_ivf_assign`` cell expression, and the
-    blocked deterministic Lloyd PQ fit — every stage replayable
-    cross-engine, so the composite carries a full value-hash oracle."""
+    Determinism: md5-seeded coarse centroids (``_md5_centroids``), the
+    shared ``_ivf_assign`` cell expression, and the blocked
+    deterministic Lloyd PQ fit (``_pq_fit_encode``) — every stage
+    replayable cross-engine, so the composite carries a full value-hash
+    oracle."""
     import os
 
-    from randas_spark.operators.sampling import _md5_hex
-
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    sub = dim // m
-    cent = (
-        corpus.orderBy(_md5_hex(F.col(id_col)), F.col(id_col))
-        .limit(n_cells)
-        .select(
-            F.col(id_col).alias("cell"),
-            F.col(vec_col).alias("center"),
-            norm(F.col(vec_col)).alias("center_nrm"),
-        )
+    _, cents, enc = _pq_fit_encode(
+        corpus, id_col, vec_col, dim, m, k_sub, n_iter, scale
     )
+    cent = _md5_centroids(corpus, id_col, vec_col, n_cells)
     assign = _ivf_assign(corpus, id_col, vec_col, cent).select("cid", "cell")
-    v = _pq_quantize(corpus, id_col, vec_col, scale).localCheckpoint()
-    cents = _pq_train(v, m, sub, k_sub, n_iter)
-    enc = v.select(
-        F.col("vid").alias("cid"),
-        *[_pq_code_col(j, sub, cents[j]) for j in range(m)],
-    )
     # one equi-join stitches code row to coarse cell; at build time both
     # sides are corpus-sized and co-keyed on the id — a single shuffle,
     # paid once per build, to buy partition pruning on every query after.
@@ -1777,29 +1717,21 @@ def ivfpq_build_index(
     codes.repartition("cell").write.mode("overwrite").partitionBy("cell").parquet(
         os.path.join(out_dir, "codes.parquet")
     )
-    spark = corpus.sparkSession
-    cb_rows = [
-        (j, int(c), [float(x) for x in carr])
-        for j in range(m)
-        for c, carr in cents[j]
-    ]
-    spark.createDataFrame(
-        cb_rows, "j int, cluster long, carr array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(out_dir, "codebooks.parquet")
-    )
+    _pq_write_codebooks(corpus.sparkSession, out_dir, cents)
     _write_index_marker(
         out_dir,
-        "ivfpq",
         {
-            "n_cells": n_cells,
-            "dim": dim,
-            "m": m,
-            "k_sub": k_sub,
-            "n_iter": n_iter,
-            "scale": scale,
+            "kind": "ivfpq",
+            "params": {
+                "n_cells": n_cells,
+                "dim": dim,
+                "m": m,
+                "k_sub": k_sub,
+                "n_iter": n_iter,
+                "scale": scale,
+            },
+            "fingerprint": fingerprint,
         },
-        fingerprint,
     )
 
 
@@ -1818,38 +1750,26 @@ def knn_ivfpq_query(
     """QUERY half of the composite IVF+PQ index: probe the n_probe
     max-cosine coarse cells per query against the broadcast centroid
     table, then ADC-score ONLY the probed cells' code partitions. The
-    plan is the 100 TB ANN steady state this repo was missing: the one
-    corpus-sized scan (codes, already 64x-compressed) is partition-
+    one corpus-sized scan (codes, already 64x-compressed) is partition-
     pruned to n_probe·N/n_cells rows by the broadcast probe join, the
     LUTs are per-query literals, and the fixed-order ADC sum keeps the
     result bit-deterministic. Against the flat persisted PQ this
     removes the full-codes scan; against the persisted IVF it removes
     the raw-vector math on the survivors.
 
-    Integrity (same discipline as knn_pq_query/knn_ivf_query): raises
-    on an uncommitted dir, on caller params that contradict the
-    marker's build params, and on a corpus-fingerprint mismatch."""
+    Integrity: :func:`_open_index` with kind, dim/m/scale and
+    ``fingerprint``."""
     import os
 
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m {m}")
-    marker = read_index_marker(index_dir)
-    if marker is None or marker.get("kind") != "ivfpq":
-        raise ValueError(f"knn_ivfpq_query: no committed IVFPQ index at {index_dir}")
-    built = marker.get("params") or {}
-    for name, want in (("dim", dim), ("m", m), ("scale", scale)):
-        if name in built and built[name] != want:
-            raise ValueError(
-                f"knn_ivfpq_query: param mismatch at {index_dir} — index built "
-                f"with {name}={built[name]}, query passed {name}={want}"
-            )
-    if fingerprint is not None and marker.get("fingerprint") != fingerprint:
-        raise ValueError(
-            f"knn_ivfpq_query: stale index at {index_dir} — built from corpus "
-            f"{marker.get('fingerprint')}, current corpus is {fingerprint}; "
-            "rebuild with ivfpq_build_index"
-        )
-    sub = dim // m
+    _open_index(
+        index_dir,
+        "knn_ivfpq_query",
+        kind="ivfpq",
+        params={"dim": dim, "m": m, "scale": scale},
+        fingerprint=fingerprint,
+    )
     spark = queries.sparkSession
     cent = spark.read.parquet(os.path.join(index_dir, "centroids.parquet"))
     cents = _pq_load_codebooks(spark, index_dir, m)
@@ -1858,25 +1778,7 @@ def knn_ivfpq_query(
         *[f"code_{j}" for j in range(m)],
         F.col("cell").cast("long").alias("cell"),
     )
-    # probe expression shared with knn_ivf_query's (same max-cosine
-    # fold, same (ccos desc, cell) tiebreak) — raw-vector math happens
-    # on queries x n_cells only, never on the corpus
-    q = queries.select(
-        F.col(id_col).alias("qid"),
-        F.col(vec_col).alias("qv"),
-        norm(F.col(vec_col)).alias("qn"),
-    )
-    wp = Window.partitionBy("qid").orderBy(F.col("ccos").desc(), F.col("cell"))
-    probes = (
-        q.crossJoin(F.broadcast(cent))
-        .withColumn(
-            "ccos",
-            dot(F.col("qv"), F.col("center")) / (F.col("qn") * F.col("center_nrm")),
-        )
-        .withColumn("rn", F.row_number().over(wp))
-        .filter(F.col("rn") <= n_probe)
-        .select("qid", "cell")
-    )
+    probes = _ivf_probes(queries, id_col, vec_col, cent, n_probe).select("qid", "cell")
     # broadcast probe join prunes the codes scan to the probed cells
     # (static file pruning per union-free single root); candidates then
     # carry qid, so the shared ADC scorer keys every LUT leg on it
@@ -1884,4 +1786,4 @@ def knn_ivfpq_query(
     ql = _pq_quantize(queries, id_col, vec_col, scale).select(
         F.col("vid").alias("qid"), "qx"
     )
-    return _pq_score(cand, ql, cents, m, sub, top_k)
+    return _pq_score(cand, ql, cents, m, dim // m, top_k)

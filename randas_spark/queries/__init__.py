@@ -126,6 +126,34 @@ def table_num_rows(sf_dir: str, name: str) -> int:
     return parquet_num_rows(os.path.join(sf_dir, f"{name}.parquet"))
 
 
+def _persisted_index(
+    sf_dir: str,
+    family: str,
+    tag: str,
+    kind: str,
+    params: dict,
+    build: Callable[..., None],
+) -> tuple[str, str]:
+    """Build-if-absent persisted ANN index over ``sf_dir``'s embeddings,
+    at ``benchdata/<family>/<sf>_<tag>`` under the repo root. Ready means
+    a committed ``kind`` marker whose build params equal ``params`` and
+    whose corpus fingerprint is the source parquet's current one;
+    otherwise the dir is removed and rebuilt by
+    ``build(index_dir, fp, **params)``, so the checked params and the
+    build arguments are one literal. Returns (index_dir, fp)."""
+    import shutil
+
+    from randas_spark.operators.similarity import index_ready, parquet_fingerprint
+
+    sf_tag = os.path.basename(os.path.normpath(sf_dir))
+    index_dir = os.path.join(_repo_root(), "benchdata", family, f"{sf_tag}_{tag}")
+    fp = parquet_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
+    if not index_ready(index_dir, kind=kind, params=params, fingerprint=fp):
+        shutil.rmtree(index_dir, ignore_errors=True)
+        build(index_dir, fp, **params)
+    return index_dir, fp
+
+
 def fround(col, digits: int):
     """Engine-portable rounding: floor(x*10^d + 0.5)/10^d.
 

@@ -35,6 +35,7 @@ from randas_spark.functions.text import (
 )
 from randas_spark.functions.vectors import cosine, sql_cosine
 from randas_spark.queries import (
+    _persisted_index,
     fround,
     parquet_num_rows,
     register,
@@ -3126,6 +3127,25 @@ def _ivf_adaptive_oracle() -> str:
     """
 
 
+def _ivf_adaptive_index(sf_dir: str, emb: DataFrame) -> tuple:
+    """Build-if-absent persisted IVF index over the whole embeddings
+    table with the adaptive cell count max(16, N // 32) — the one
+    ``adaptive_v2`` index llm_knn_ivf_persisted, llm_knn_filtered and
+    llm_ann_index_stats serve from. Returns (index_dir, fingerprint)."""
+    from randas_spark.operators.similarity import ivf_build_index
+
+    return _persisted_index(
+        sf_dir,
+        "ivf_index",
+        "adaptive_v2",
+        "ivf",
+        {"n_cells": max(16, table_num_rows(sf_dir, "embeddings") // 32)},
+        lambda d, fp, **p: ivf_build_index(
+            emb, "vec_id", "embedding", d, fingerprint=fp, **p
+        ),
+    )
+
+
 @register("llm_knn_ivf_persisted", oracle=_ivf_adaptive_oracle())
 def llm_knn_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted-index IVF ANN — the second half of VERDICT r8 order #2
@@ -3145,37 +3165,14 @@ def llm_knn_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     count job picks the formula; the oracle replays the same formula in
     its LIMIT subquery.
 
-    Integrity (VERDICT r9 #2): index keyed by n_cells + a fingerprint
-    of the source embeddings parquet — regenerated corpus or changed
-    params triggers a rebuild; knn_ivf_query re-validates at query
-    time."""
-    import os
-    import shutil
-
-    from randas_spark.operators.similarity import (
-        index_ready,
-        ivf_build_index,
-        knn_ivf_query,
-        parquet_fingerprint,
-    )
+    Integrity: index keyed by n_cells + a fingerprint of the source
+    embeddings parquet (_ivf_adaptive_index) — regenerated corpus or
+    changed params triggers a rebuild; knn_ivf_query re-validates at
+    query time."""
+    from randas_spark.operators.similarity import knn_ivf_query
 
     emb = t(spark, sf_dir, "embeddings")
-    n_cells = max(16, table_num_rows(sf_dir, "embeddings") // 32)
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    index_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "benchdata",
-        "ivf_index",
-        f"{sf_tag}_adaptive_v2",
-    )
-    fp = parquet_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
-    if not index_ready(
-        index_dir, kind="ivf", params={"n_cells": n_cells}, fingerprint=fp
-    ):
-        shutil.rmtree(index_dir, ignore_errors=True)
-        ivf_build_index(
-            emb, "vec_id", "embedding", index_dir, n_cells=n_cells, fingerprint=fp
-        )
+    index_dir, fp = _ivf_adaptive_index(sf_dir, emb)
     return knn_ivf_query(
         emb.filter(F.col("vec_id") < 5),
         "vec_id",
@@ -3255,37 +3252,30 @@ def llm_knn_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     The marker is only committed with the full-corpus fingerprint AFTER
     the append, so a torn build+append sequence reads not-ready and
     redoes the pair; a regenerated corpus likewise."""
-    import os
-    import shutil
-
     from randas_spark.operators.similarity import (
-        index_ready,
         ivf_append_batch,
         ivf_build_index,
         knn_ivf_query,
-        parquet_fingerprint,
     )
 
     emb = t(spark, sf_dir, "embeddings")
     base = emb.filter(F.col("vec_id") % 10 != 9)
     batch = emb.filter(F.col("vec_id") % 10 == 9)
-    n_cells = max(16, base.count() // 32)
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    index_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "benchdata",
-        "ivf_index",
-        f"{sf_tag}_append_v1",
-    )
-    fp = parquet_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
-    if not index_ready(
-        index_dir, kind="ivf", params={"n_cells": n_cells}, fingerprint=fp
-    ):
-        shutil.rmtree(index_dir, ignore_errors=True)
+
+    def build(index_dir, fp, n_cells):
         # build commits with fingerprint=None (base-only index is not the
         # served corpus); the append's marker rewrite carries fp
         ivf_build_index(base, "vec_id", "embedding", index_dir, n_cells=n_cells)
         ivf_append_batch(batch, "vec_id", "embedding", index_dir, fingerprint=fp)
+
+    index_dir, fp = _persisted_index(
+        sf_dir,
+        "ivf_index",
+        "append_v1",
+        "ivf",
+        {"n_cells": max(16, base.count() // 32)},
+        build,
+    )
     return knn_ivf_query(
         emb.filter(F.col("vec_id") < 5),
         "vec_id",
@@ -4971,6 +4961,28 @@ def llm_knn_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return knn_pq_adc(emb, "vec_id", "embedding")
 
 
+# build params of every persisted PQ-family index (the IVFPQ adds n_cells)
+_PQ_PARAMS = {"dim": 64, "m": 4, "k_sub": 8, "n_iter": 2, "scale": 512.0}
+
+
+def _pq_index(sf_dir: str, emb: DataFrame) -> tuple:
+    """Build-if-absent flat persisted PQ index over the whole embeddings
+    table — the one ``m4k8i2s512_v1`` index llm_knn_pq_persisted and
+    llm_knn_pq_rerank serve from. Returns (index_dir, fingerprint)."""
+    from randas_spark.operators.similarity import pq_build_index
+
+    return _persisted_index(
+        sf_dir,
+        "pq_index",
+        "m4k8i2s512_v1",
+        "pq",
+        _PQ_PARAMS,
+        lambda d, fp, **p: pq_build_index(
+            emb, "vec_id", "embedding", d, fingerprint=fp, **p
+        ),
+    )
+
+
 @register("llm_knn_pq_persisted", oracle=_pq_oracle())
 def llm_knn_pq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted-index PQ ANN: the fit/query SPLIT of llm_knn_pq_adc
@@ -4987,34 +4999,15 @@ def llm_knn_pq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle that replays the fit hash-matches the persisted path — that
     identity IS the proof the persistence layer is lossless.
 
-    Integrity (VERDICT r9 #2): the index is keyed by build params AND a
-    metadata-cheap fingerprint of the source embeddings parquet — if
-    the sf data is regenerated or the params change, index_ready reads
-    False and the index is rebuilt instead of silently serving stale
-    codes; knn_pq_query re-validates both at query time."""
-    import os
-    import shutil
-
-    from randas_spark.operators.similarity import (
-        index_ready,
-        knn_pq_query,
-        parquet_fingerprint,
-        pq_build_index,
-    )
+    Integrity: the index is keyed by build params AND a metadata-cheap
+    fingerprint of the source embeddings parquet (_pq_index) — if the
+    sf data is regenerated or the params change, the index is rebuilt
+    instead of silently serving stale codes; knn_pq_query re-validates
+    both at query time."""
+    from randas_spark.operators.similarity import knn_pq_query
 
     emb = t(spark, sf_dir, "embeddings")
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    index_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "benchdata",
-        "pq_index",
-        f"{sf_tag}_m4k8i2s512_v1",
-    )
-    params = {"dim": 64, "m": 4, "k_sub": 8, "n_iter": 2, "scale": 512.0}
-    fp = parquet_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
-    if not index_ready(index_dir, kind="pq", params=params, fingerprint=fp):
-        shutil.rmtree(index_dir, ignore_errors=True)
-        pq_build_index(emb, "vec_id", "embedding", index_dir, fingerprint=fp)
+    index_dir, fp = _pq_index(sf_dir, emb)
     return knn_pq_query(
         emb.filter(F.col("vec_id") < 5),
         "vec_id",
@@ -5040,13 +5033,8 @@ def llm_knn_pq_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-batch ingestion cost stays ∝ batch size. Marker committed with
     the full-corpus fingerprint only after the append (torn sequence ⇒
     not-ready ⇒ redo)."""
-    import os
-    import shutil
-
     from randas_spark.operators.similarity import (
-        index_ready,
         knn_pq_query,
-        parquet_fingerprint,
         pq_build_index,
         pq_encode_batch,
     )
@@ -5054,19 +5042,14 @@ def llm_knn_pq_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = t(spark, sf_dir, "embeddings")
     base = emb.filter(F.col("vec_id") % 10 != 9)
     batch = emb.filter(F.col("vec_id") % 10 == 9)
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    index_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "benchdata",
-        "pq_index",
-        f"{sf_tag}_append_m4k8i2s512_v1",
-    )
-    params = {"dim": 64, "m": 4, "k_sub": 8, "n_iter": 2, "scale": 512.0}
-    fp = parquet_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
-    if not index_ready(index_dir, kind="pq", params=params, fingerprint=fp):
-        shutil.rmtree(index_dir, ignore_errors=True)
-        pq_build_index(base, "vec_id", "embedding", index_dir)
+
+    def build(index_dir, fp, **params):
+        pq_build_index(base, "vec_id", "embedding", index_dir, **params)
         pq_encode_batch(batch, "vec_id", "embedding", index_dir, fingerprint=fp)
+
+    index_dir, fp = _persisted_index(
+        sf_dir, "pq_index", "append_m4k8i2s512_v1", "pq", _PQ_PARAMS, build
+    )
     return knn_pq_query(
         emb.filter(F.col("vec_id") < 5),
         "vec_id",
@@ -6981,31 +6964,10 @@ def llm_knn_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     (llm_ann_recall_audit) would otherwise charge to the index. The
     oracle replays shortlist AND rerank, so the full two-stage
     composition is value-pinned."""
-    import os
-    import shutil
-
-    from randas_spark.operators.similarity import (
-        dot,
-        index_ready,
-        knn_pq_query,
-        norm,
-        parquet_fingerprint,
-        pq_build_index,
-    )
+    from randas_spark.operators.similarity import dot, knn_pq_query, norm
 
     emb = t(spark, sf_dir, "embeddings")
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    index_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "benchdata",
-        "pq_index",
-        f"{sf_tag}_m4k8i2s512_v1",
-    )
-    params = {"dim": 64, "m": 4, "k_sub": 8, "n_iter": 2, "scale": 512.0}
-    fp = parquet_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
-    if not index_ready(index_dir, kind="pq", params=params, fingerprint=fp):
-        shutil.rmtree(index_dir, ignore_errors=True)
-        pq_build_index(emb, "vec_id", "embedding", index_dir, fingerprint=fp)
+    index_dir, fp = _pq_index(sf_dir, emb)
     shortlist = knn_pq_query(
         emb.filter(F.col("vec_id") < 5),
         "vec_id",
@@ -7282,33 +7244,10 @@ def llm_knn_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit family measures exactly this trade). The oracle replays the
     same post-filter semantics, so the returned-fewer-than-k behavior
     is value-pinned, not papered over."""
-    import os
-    import shutil
-
-    from randas_spark.operators.similarity import (
-        index_ready,
-        ivf_build_index,
-        knn_ivf_query,
-        parquet_fingerprint,
-    )
+    from randas_spark.operators.similarity import knn_ivf_query
 
     emb = t(spark, sf_dir, "embeddings")
-    n_cells = max(16, table_num_rows(sf_dir, "embeddings") // 32)
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    index_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "benchdata",
-        "ivf_index",
-        f"{sf_tag}_adaptive_v2",
-    )
-    fp = parquet_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
-    if not index_ready(
-        index_dir, kind="ivf", params={"n_cells": n_cells}, fingerprint=fp
-    ):
-        shutil.rmtree(index_dir, ignore_errors=True)
-        ivf_build_index(
-            emb, "vec_id", "embedding", index_dir, n_cells=n_cells, fingerprint=fp
-        )
+    index_dir, fp = _ivf_adaptive_index(sf_dir, emb)
     out = knn_ivf_query(
         emb.filter(F.col("vec_id") < 5),
         "vec_id",
@@ -7364,34 +7303,13 @@ def llm_ann_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (map-combinable) + a scalar roll-up; runs against the persisted
     assignments scan, no vector math at all."""
     import os
-    import shutil
 
-    from randas_spark.operators.similarity import (
-        index_ready,
-        ivf_assignment_counts,
-        ivf_build_index,
-        parquet_fingerprint,
-    )
+    from randas_spark.operators.similarity import ivf_assignment_counts
 
     emb = t(spark, sf_dir, "embeddings")
-    n_cells = max(16, table_num_rows(sf_dir, "embeddings") // 32)
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    index_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "benchdata",
-        "ivf_index",
-        f"{sf_tag}_adaptive_v2",
-    )
-    fp = parquet_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
-    if not index_ready(
-        index_dir, kind="ivf", params={"n_cells": n_cells}, fingerprint=fp
-    ):
-        shutil.rmtree(index_dir, ignore_errors=True)
-        ivf_build_index(
-            emb, "vec_id", "embedding", index_dir, n_cells=n_cells, fingerprint=fp
-        )
+    index_dir, _ = _ivf_adaptive_index(sf_dir, emb)
     # Report the PERSISTED centroid count, not the requested formula
-    # literal (ADVICE r10 #4): on a corpus smaller than the cell formula
+    # literal: on a corpus smaller than the cell formula
     # the seeding LIMIT clamps, and the oracle counts the cent CTE —
     # the persisted table is the ground truth both sides agree on.
     n_cells_actual = parquet_num_rows(os.path.join(index_dir, "centroids.parquet"))
@@ -7487,44 +7405,20 @@ def _ivfpq_index(spark: SparkSession, sf_dir: str) -> tuple:
     (file-system-sized partitions at scale: 1B rows -> ~31.6k cells of
     ~31.6k rows) with candidate volume n_probe*sqrt(N), still
     sub-linear. The oracle's pcent LIMIT replays the same formula."""
-    import os
-    import shutil
-
-    from randas_spark.operators.similarity import (
-        index_ready,
-        ivfpq_build_index,
-        parquet_fingerprint,
-    )
+    from randas_spark.operators.similarity import ivfpq_build_index
 
     emb = t(spark, sf_dir, "embeddings")
     n_cells = max(16, math.isqrt(table_num_rows(sf_dir, "embeddings")))
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    index_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "benchdata",
+    return _persisted_index(
+        sf_dir,
         "ivfpq_index",
-        f"{sf_tag}_sqrt_m4k8i2s512_v2",
+        "sqrt_m4k8i2s512_v2",
+        "ivfpq",
+        {"n_cells": n_cells, **_PQ_PARAMS},
+        lambda d, fp, **p: ivfpq_build_index(
+            emb, "vec_id", "embedding", d, fingerprint=fp, **p
+        ),
     )
-    params = {
-        "n_cells": n_cells,
-        "dim": 64,
-        "m": 4,
-        "k_sub": 8,
-        "n_iter": 2,
-        "scale": 512.0,
-    }
-    fp = parquet_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
-    if not index_ready(index_dir, kind="ivfpq", params=params, fingerprint=fp):
-        shutil.rmtree(index_dir, ignore_errors=True)
-        ivfpq_build_index(
-            emb,
-            "vec_id",
-            "embedding",
-            index_dir,
-            n_cells=n_cells,
-            fingerprint=fp,
-        )
-    return index_dir, fp
 
 
 @register("llm_knn_ivfpq", oracle=_pq_oracle(n_probe=4))

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from randas_spark.queries import fround, register, sql_fround, t
+from randas_spark.queries import _persisted_index, fround, register, sql_fround, t
 from randas_spark.streaming.engine import (
     session_agg,
     sliding_counts,
@@ -870,33 +870,17 @@ def stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-fitting. The actual readStream path (file source, one file per
     trigger, checkpoint restart, redelivery no-op) is pinned equal to
     this twin in tests/test_streaming.py."""
-    import os
-    import shutil
-
     from randas_spark.operators.similarity import (
-        index_ready,
         ivf_build_index,
         ivf_commit_stream_batch,
         ivf_stamp_fingerprint,
         knn_ivf_query,
-        parquet_fingerprint,
     )
 
     emb = t(spark, sf_dir, "embeddings")
     base = emb.filter(F.col("vec_id") % 4 != 3)
-    n_cells = max(16, base.count() // 32)
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    index_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "benchdata",
-        "ivf_index",
-        f"{sf_tag}_stream_v1",
-    )
-    fp = parquet_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
-    if not index_ready(
-        index_dir, kind="ivf", params={"n_cells": n_cells}, fingerprint=fp
-    ):
-        shutil.rmtree(index_dir, ignore_errors=True)
+
+    def build(index_dir, fp, n_cells):
         # build commits with fingerprint=None; the stamp lands LAST,
         # after both stream batches, so a torn sequence reads stale
         ivf_build_index(base, "vec_id", "embedding", index_dir, n_cells=n_cells)
@@ -907,6 +891,15 @@ def stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             emb.filter(F.col("vec_id") % 8 == 7), "vec_id", "embedding", index_dir, 1
         )
         ivf_stamp_fingerprint(index_dir, fp)
+
+    index_dir, fp = _persisted_index(
+        sf_dir,
+        "ivf_index",
+        "stream_v1",
+        "ivf",
+        {"n_cells": max(16, base.count() // 32)},
+        build,
+    )
     return knn_ivf_query(
         emb.filter(F.col("vec_id") < 5),
         "vec_id",
@@ -974,34 +967,20 @@ def stream_ann_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     with redelivery idempotency. Completes the ANN lifecycle: build,
     batch append, stream ingest, compaction, batch serve, STREAM serve,
     recall audit, rerank — every stage oracle- or parity-checked."""
-    import os
-    import shutil
-
-    from randas_spark.operators.similarity import (
-        index_ready,
-        ivf_build_index,
-        knn_ivf_query,
-        parquet_fingerprint,
-    )
+    from randas_spark.operators.similarity import ivf_build_index, knn_ivf_query
 
     emb = t(spark, sf_dir, "embeddings")
     corpus = emb.filter(F.col("vec_id") % 2 == 0)
-    n_cells = max(16, corpus.count() // 32)
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    index_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "benchdata",
+    index_dir, fp = _persisted_index(
+        sf_dir,
         "ivf_index",
-        f"{sf_tag}_serve_v1",
+        "serve_v1",
+        "ivf",
+        {"n_cells": max(16, corpus.count() // 32)},
+        lambda d, fp, **p: ivf_build_index(
+            corpus, "vec_id", "embedding", d, fingerprint=fp, **p
+        ),
     )
-    fp = parquet_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
-    if not index_ready(
-        index_dir, kind="ivf", params={"n_cells": n_cells}, fingerprint=fp
-    ):
-        shutil.rmtree(index_dir, ignore_errors=True)
-        ivf_build_index(
-            corpus, "vec_id", "embedding", index_dir, n_cells=n_cells, fingerprint=fp
-        )
     return knn_ivf_query(
         emb.filter(F.col("vec_id") % 2 == 1),
         "vec_id",

@@ -196,7 +196,7 @@ def test_jaccard_shingle_cap_bounds_candidates(boilerplate_corpus, docs):
 
     capped = ngram_jaccard_pairs(
         boilerplate_corpus, "doc_id", "text", k=5, threshold=0.6,
-        max_shingle_freq=10, log_dropped=True,
+        max_shingle_freq=10,
     ).collect()
     # boilerplate shingles (freq 40 > 10) never reach the self-join, so the
     # 780 hot-key pairs are gone; the unique cluster's shingles (freq ≤ 3)
@@ -2722,18 +2722,18 @@ def test_pq_persisted_index_query_matches_fused(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from randas_spark.operators.similarity import (
+        index_ready,
         knn_pq_adc,
         knn_pq_query,
         pq_build_index,
-        pq_index_ready,
     )
     from randas_spark.queries import t
 
     emb = t(spark, SF_DIR, "embeddings")
     idx = str(tmp_path / "pqidx")
-    assert not pq_index_ready(idx)
+    assert not index_ready(idx)
     pq_build_index(emb, "vec_id", "embedding", idx)
-    assert pq_index_ready(idx)
+    assert index_ready(idx)
     fused = sorted(
         tuple(r) for r in knn_pq_adc(emb, "vec_id", "embedding").collect()
     )
@@ -2780,7 +2780,6 @@ def test_index_integrity_marker_and_fingerprint(spark, tmp_path):
         knn_ivf_query,
         knn_pq_query,
         pq_build_index,
-        pq_index_ready,
     )
     from randas_spark.queries import t
 
@@ -2796,7 +2795,7 @@ def test_index_integrity_marker_and_fingerprint(spark, tmp_path):
     legacy = tmp_path / "legacy"
     legacy.mkdir()
     (legacy / "_INDEX_OK").write_text("ok\n")
-    assert not pq_index_ready(str(legacy))
+    assert not index_ready(str(legacy))
 
     pq = str(tmp_path / "pq")
     pq_build_index(emb, "vec_id", "embedding", pq, fingerprint="fp-a")

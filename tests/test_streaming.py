@@ -1713,6 +1713,45 @@ def test_ivf_compaction_generations_and_crash_windows(spark, tmp_path):
     assert ivf_compact_stream_appends(spark, idx)["n_consumed"] == 0
 
 
+def test_ivf_serving_reads_the_marker_once_per_call(spark, tmp_path, monkeypatch):
+    """The generation pointer and the ``consumed`` list a query serves
+    must come from ONE marker snapshot: two reads would let a compaction
+    that flips the marker in between pair the old generation with the
+    new ``consumed`` list, serving the old generation without the
+    streamed batches it had not yet folded."""
+    from pyspark.sql import functions as F
+
+    import randas_spark.operators.similarity as sim
+    from randas_spark.queries import t
+
+    emb = t(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
+    idx = str(tmp_path / "ivf")
+    sim.ivf_build_index(
+        emb.filter(F.col("vec_id") % 4 != 3), "vec_id", "embedding", idx, n_cells=8
+    )
+    sim.ivf_commit_stream_batch(
+        emb.filter(F.col("vec_id") % 4 == 3), "vec_id", "embedding", idx, 0
+    )
+
+    reads = []
+    real = sim.read_index_marker
+
+    def counting(out_dir):
+        reads.append(out_dir)
+        return real(out_dir)
+
+    monkeypatch.setattr(sim, "read_index_marker", counting)
+    queries = emb.filter(F.col("vec_id") < 5)
+    sim.knn_ivf_query(queries, "vec_id", "embedding", idx, n_probe=2, top_k=3)
+    assert len(reads) == 1
+    reads.clear()
+    sim.ivf_assignment_counts(spark, idx)
+    assert len(reads) == 1
+    reads.clear()
+    sim.ivf_compact_stream_appends(spark, idx)
+    assert len(reads) == 1
+
+
 def test_ann_serve_stream_matches_batch_twin(spark, tmp_path):
     """Streamed ANN serving: two query files through readStream ->
     foreachBatch knn_ivf_query with rename-committed result dirs must
