@@ -231,19 +231,31 @@ def sql_fingerprint(text: str) -> str:
     return f"md5(regexp_replace(trim(lower({text})), '\\s+', ' ', 'g'))"
 
 
+def kgrams(toks: Column, k: int) -> Column:
+    """Every run of k consecutive tokens of ``toks``, in order, each joined
+    with ' ' — array<string> of greatest(n-k+1, 1) grams. A document
+    shorter than k tokens is one whole-document gram; NULL ``toks`` gives
+    NULL. Callers with another short-document rule wrap this in
+    ``F.when`` on the token count.
+
+    Cost: k whole-array slices per row — slice j is toks[j+1 .. j+cnt] —
+    zipped element-wise, then a lambda that reads only its own struct, so
+    the work is linear in the token count. The per-position form
+    ``transform(sequence(1, cnt), i -> slice(toks, i, k))`` copies the
+    whole array on every call and is quadratic."""
+    cnt = F.greatest(F.size(toks) - (k - 1), F.lit(1))
+    cols = F.arrays_zip(*[F.slice(toks, j + 1, cnt) for j in range(k)])
+    return F.transform(cols, lambda s: F.concat_ws(" ", *[s[str(j)] for j in range(k)]))
+
+
 def shingles(text: Column, k: int = 5) -> Column:
     """Distinct k-word shingles — array<string>; the unit set for Jaccard
     similarity. Empty-safe: shorter-than-k docs produce the whole doc as
-    one shingle."""
-    toks = tokens(text)
-    n = F.size(toks)
-    count = F.greatest(n - (k - 1), F.lit(1))
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), count),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
-        )
-    )
+    one shingle, and NULL text has no shingles (as ``sql_shingles``).
+    Built by :func:`kgrams`: k whole-array slices per row, linear in the
+    document length."""
+    grams = F.array_distinct(kgrams(tokens(text), k))
+    return F.coalesce(grams, F.array().cast("array<string>"))
 
 
 def sql_shingles(text: str, k: int = 5) -> str:

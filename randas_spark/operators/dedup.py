@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql.types import ArrayType, StringType
 from pyspark.sql import functions as F
 
-from randas_spark.functions.text import fingerprint, shingles, tokens
+from randas_spark.functions.text import fingerprint, kgrams, shingles, tokens
 
 _LOG = logging.getLogger(__name__)
 
@@ -1080,15 +1080,10 @@ def winnowing_fingerprints(
     ``max_fp_freq`` mirrors the hot-shingle caps: drop fingerprints in
     more than that many docs before any pair join on them.
     """
-    toks = F.split(F.lower(F.col(text_col)), " ")
-    gram_idx = F.when(
-        F.size(toks) >= k, F.sequence(F.lit(1), F.size(toks) - (k - 1))
-    )
+    toks = tokens(F.col(text_col))
     grams = fan_out(df).select(
         F.col(id_col).alias("doc_id"),
-        F.posexplode(
-            F.transform(gram_idx, lambda i: F.concat_ws(" ", F.slice(toks, i, k)))
-        ).alias("pos", "g"),
+        F.posexplode(F.when(F.size(toks) >= k, kgrams(toks, k))).alias("pos", "g"),
     )
     h = F.conv(F.substring(F.md5(F.col("g").cast("binary")), 1, 8), 16, 10).cast("long")
     win = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(-(w - 1), 0)
@@ -1157,30 +1152,25 @@ def portable_banded_signatures(
             F.col(id_col).alias("doc_id"),
             F.explode(shingles(F.col(text_col), k)).alias("s"),
         )
-    h32 = F.conv(F.substring(F.md5(F.col("s").cast("binary")), 1, 8), 16, 10).cast("long")
-    shh = sh.withColumn("h", h32)
+    # Hash, permutation mins and band structs are SQL strings: one py4j
+    # call each, where a Column-DSL build pays one per literal and
+    # operator (as similarity.project_buckets).
+    shh = sh.selectExpr(
+        "doc_id", "CAST(conv(substring(md5(CAST(s AS BINARY)), 1, 8), 16, 10) AS BIGINT) AS h"
+    )
     mins = shh.groupBy("doc_id").agg(
         *[
-            F.min((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(MINHASH_MOD)).alias(f"m{p}")
+            F.expr(f"min(({a} * h + {b}) % {MINHASH_MOD}L) AS m{p}")
             for p, (a, b) in enumerate(minhash_perm_consts(num_perm))
         ]
     )
-    return mins.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.concat_ws(
-                            "|", *[F.col(f"m{b * rows_per_band + r}") for r in range(rows_per_band)]
-                        ).alias("bk"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("x"),
-    ).select("doc_id", "x.band_id", "x.bk")
+    structs = ", ".join(
+        f"struct({b} AS band_id, concat_ws('|', "
+        + ", ".join(f"m{b * rows_per_band + r}" for r in range(rows_per_band))
+        + ") AS bk)"
+        for b in range(bands)
+    )
+    return mins.selectExpr("doc_id", f"inline(array({structs}))")
 
 
 def incremental_near_dedup(
@@ -1434,23 +1424,21 @@ def duplicated_spans(
     conservative subset, never a false span. A 100 TB run ships with
     the cap on.
     """
-    toks = F.split(F.lower(F.col(text_col)), " ")
+    toks = tokens(F.col(text_col))
     # docs shorter than k tokens emit NO grams (a truncated gram would
     # match another short doc and report span_len = k — overstating a
     # shared run of fewer than k tokens)
-    gram_idx = F.when(
-        F.size(toks) >= k, F.sequence(F.lit(1), F.size(toks) - (k - 1))
-    ).otherwise(F.array().cast("array<int>"))
+    doc_grams = F.when(F.size(toks) >= k, kgrams(toks, k)).otherwise(
+        F.array().cast("array<string>")
+    )
     grams = fan_out(df).select(
         F.col(id_col).alias("doc_id"),
-        F.posexplode(
-            F.transform(gram_idx, lambda i: F.concat_ws(" ", F.slice(toks, i, k)))
-        ).alias("pos", "g"),
+        F.posexplode(doc_grams).alias("pos", "g"),
     )
     if max_gram_freq is not None:
         grams = _cap_hot_keys(grams, "g", max_gram_freq)
     # MATERIALIZED once: the a/b join sides share zero subplan — gram
-    # construction (slice+concat_ws per position) and the hot-gram
+    # construction (kgrams + posexplode) and the hot-gram
     # window would run twice (same class as the shingle-table fix).
     grams = grams.localCheckpoint()
     a = grams.select(F.col("doc_id").alias("id_a"), F.col("pos").alias("i"), "g")

@@ -2063,17 +2063,13 @@ def llm_ngram_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus trigram frequency table, top 20 — the n-gram statistics
     pass behind contamination checks, LM smoothing tables, and corpus
     drift reports. Multiset trigrams (unlike the distinct shingle sets
-    dedup uses) via a scan-side slice/explode; one count shuffle with
+    dedup uses) via a scan-side kgrams/explode; one count shuffle with
     map-side partial agg; the cut is orderBy().limit() =
     TakeOrderedAndProject, never a global-window sort."""
-    from randas_spark.functions.text import tokens
+    from randas_spark.functions.text import kgrams, tokens
 
     d = t(spark, sf_dir, "documents")
-    tk = tokens(F.col("text"))
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size(tk) - 2, F.lit(1))),
-        lambda i: F.concat_ws(" ", F.slice(tk, i, 3)),
-    )
+    grams = kgrams(tokens(F.col("text")), 3)
     counted = (
         d.select(F.explode(grams).alias("ngram"))
         .filter(F.col("ngram") != "")

@@ -11,6 +11,10 @@ operator can't ship a scale landmine the headline bench never runs:
   the hot-path policy is built-ins or Arrow-batched pandas_udf
   (``ArrowEvalPython`` / ``FlatMapGroupsInPandas`` / ``MapInPandas``,
   which are fine and expected where registered).
+- ``slice(<array>, lambda <var>, <k>)`` — a slice whose start is a bare
+  lambda variable: one whole-array copy per position, O(n²) per row
+  (functions.text.kgrams builds the same grams in linear time). Strided
+  windows (``lambda i * stride + 1``) make ~n/stride slices and pass.
 
 Planning only — no query is executed (operators that checkpoint eagerly
 during *construction*, e.g. iterative connected components, still run
@@ -28,14 +32,58 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-#: plan-node substring -> why it is suspect at 100 TB
+_LAMBDA_VAR = re.compile(r"lambda \w+(#\d+)?")
+
+
+def _top_level_args(plan: str, open_at: int) -> list[str]:
+    """Arguments of the call whose '(' is at ``open_at``, split on the
+    commas at its own parenthesis depth."""
+    args, depth, start = [], 0, open_at + 1
+    for i in range(open_at, len(plan)):
+        c = plan[i]
+        if c == "(":
+            depth += 1
+        elif c == ")":
+            depth -= 1
+            if depth == 0:
+                return args + [plan[start:i].strip()]
+        elif c == "," and depth == 1:
+            args.append(plan[start:i].strip())
+            start = i + 1
+    return args
+
+
+def per_position_slice(plan: str) -> bool:
+    """True if some ``slice(arr, start, len)`` in ``plan`` starts at a
+    bare lambda variable. The start is read as the second-to-last
+    argument, so a raw ',' literal inside the array argument (plans print
+    string literals unquoted) cannot shift it."""
+    for m in re.finditer(r"\bslice\(", plan):
+        args = _top_level_args(plan, m.end() - 1)
+        if len(args) >= 3 and _LAMBDA_VAR.fullmatch(args[-2]):
+            return True
+    return False
+
+
+#: plan pattern -> (matcher over the plan string, why it is suspect at 100 TB)
 PATTERNS = {
-    "CartesianProduct": "unbroadcast cross join (O(n*m) shuffle)",
-    "BatchEvalPython": "row-at-a-time Python UDF (use pandas_udf/built-ins)",
+    "CartesianProduct": (
+        lambda plan: "CartesianProduct" in plan,
+        "unbroadcast cross join (O(n*m) shuffle)",
+    ),
+    "BatchEvalPython": (
+        lambda plan: "BatchEvalPython" in plan,
+        "row-at-a-time Python UDF (use pandas_udf/built-ins)",
+    ),
+    "slice(<array>, lambda <var>, <k>)": (
+        per_position_slice,
+        "per-position slice in a lambda: O(n^2) per row (use functions.text.kgrams)",
+    ),
 }
 
 #: (query, pattern) -> reason this occurrence is by design
@@ -51,8 +99,8 @@ def lint(spark, qs, sf_dir: str, names: list[str]):
         except Exception as ex:  # noqa: BLE001 - lint must visit every query
             errors.append({"query": name, "error": str(ex)[:200]})
             continue
-        for pat, why in PATTERNS.items():
-            if pat in plan:
+        for pat, (matches, why) in PATTERNS.items():
+            if matches(plan):
                 row = {"query": name, "pattern": pat, "why": why}
                 if (name, pat) in ALLOW:
                     row["reason"] = ALLOW[(name, pat)]
