@@ -28,6 +28,8 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from randas_spark.session import read_parquet
+
 
 def merge_upsert(
     target: DataFrame, updates: DataFrame, key: str, order_by: str | None = None
@@ -217,7 +219,7 @@ def scd2_read_dim(spark, dim_dir: str) -> DataFrame:
     import os
 
     m = _scd2_read_marker(dim_dir)
-    return spark.read.parquet(os.path.join(dim_dir, m["dim"]))
+    return read_parquet(spark, os.path.join(dim_dir, m["dim"]))
 
 
 def scd2_commit_stream_batch(
@@ -275,7 +277,7 @@ def scd2_commit_stream_batch(
     if epoch in applied and int(batch_id) <= int(applied[epoch]):
         return False  # redelivered batch — dimension already reflects it
     spark = batch.sparkSession
-    cur = spark.read.parquet(os.path.join(dim_dir, m["dim"]))
+    cur = read_parquet(spark, os.path.join(dim_dir, m["dim"]))
     w = Window.partitionBy(key).orderBy(
         F.col(ts_col).desc(), *[F.col(c).desc() for c in tracked]
     )

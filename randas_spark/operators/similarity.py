@@ -16,6 +16,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from randas_spark.functions.vectors import cosine, dot, norm
+from randas_spark.session import read_parquet
 
 
 def knn_bruteforce(
@@ -1034,8 +1035,8 @@ def knn_pq_query(
     spark = queries.sparkSession
     cents = _pq_load_codebooks(spark, index_dir, m)
     # generation pointer (pq_compact_codes flips it atomically)
-    enc = spark.read.parquet(
-        os.path.join(index_dir, marker.get("codes_dir", "codes.parquet"))
+    enc = read_parquet(
+        spark, os.path.join(index_dir, marker.get("codes_dir", "codes.parquet"))
     )
     q = _pq_quantize(queries, id_col, vec_col, scale).select(
         F.col("vid").alias("qid"), "qx"
@@ -1241,7 +1242,7 @@ def _ivf_served(
         stream_dirs = _ivf_stream_dirs(index_dir, marker)
     roots = [os.path.join(index_dir, _ivf_generation(marker))] + stream_dirs
     parts = [
-        spark.read.parquet(r).select(*cols, F.col("cell").cast("long").alias("cell"))
+        read_parquet(spark, r).select(*cols, F.col("cell").cast("long").alias("cell"))
         for r in roots
     ]
     return functools.reduce(DataFrame.unionByName, parts)
@@ -1318,7 +1319,7 @@ def knn_ivf_query(
 
     spark = queries.sparkSession
     marker = _open_index(index_dir, "knn_ivf_query", fingerprint=fingerprint)
-    cent = spark.read.parquet(os.path.join(index_dir, "centroids.parquet"))
+    cent = read_parquet(spark, os.path.join(index_dir, "centroids.parquet"))
     assign = _ivf_served(spark, index_dir, marker, ("cid", "cv", "cn"))
     probes = _ivf_probes(queries, id_col, vec_col, cent, n_probe)
     if candidate_filter is not None:
@@ -1381,7 +1382,7 @@ def ivf_append_batch(
 
     marker = _open_index(index_dir, "ivf_append_batch", kind="ivf")
     spark = batch.sparkSession
-    cent = spark.read.parquet(os.path.join(index_dir, "centroids.parquet"))
+    cent = read_parquet(spark, os.path.join(index_dir, "centroids.parquet"))
     assign = _ivf_assign(batch, id_col, vec_col, cent)
     assign.write.mode("append").partitionBy("cell").parquet(
         os.path.join(index_dir, _ivf_generation(marker))
@@ -1447,7 +1448,7 @@ def ivf_commit_stream_batch(
             f"{int(marker.get('next_batch_id', 0))}"
         )
     spark = batch.sparkSession
-    cent = spark.read.parquet(os.path.join(index_dir, "centroids.parquet"))
+    cent = read_parquet(spark, os.path.join(index_dir, "centroids.parquet"))
     assign = _ivf_assign(batch, id_col, vec_col, cent)
     tmp = target + ".__tmp__"
     shutil.rmtree(tmp, ignore_errors=True)
@@ -1623,7 +1624,7 @@ def pq_compact_codes(spark, index_dir: str) -> dict:
     cur = marker.get("codes_dir", "codes.parquet")
     gen = int(marker.get("generation", 0)) + 1
     new_dir = f"codes_g{gen}.parquet"
-    enc = spark.read.parquet(os.path.join(index_dir, cur))
+    enc = read_parquet(spark, os.path.join(index_dir, cur))
     n = enc.count()
     # ~4M code rows per output file: each row is m longs + id, so this
     # keeps files in the 100 MB class at production m without ever
@@ -1771,9 +1772,9 @@ def knn_ivfpq_query(
         fingerprint=fingerprint,
     )
     spark = queries.sparkSession
-    cent = spark.read.parquet(os.path.join(index_dir, "centroids.parquet"))
+    cent = read_parquet(spark, os.path.join(index_dir, "centroids.parquet"))
     cents = _pq_load_codebooks(spark, index_dir, m)
-    enc = spark.read.parquet(os.path.join(index_dir, "codes.parquet")).select(
+    enc = read_parquet(spark, os.path.join(index_dir, "codes.parquet")).select(
         "cid",
         *[f"code_{j}" for j in range(m)],
         F.col("cell").cast("long").alias("cell"),

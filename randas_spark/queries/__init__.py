@@ -18,6 +18,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from randas_spark.session import events_ts_is_nanos, load_table
+
 
 @dataclass(frozen=True)
 class QueryDef:
@@ -42,34 +44,16 @@ def register(name: str, oracle: str | None = None, doc: str = ""):
     return wrap
 
 
-import functools
-
-
-@functools.lru_cache(maxsize=64)
-def events_ts_is_nanos(path: str) -> bool:
-    """True when ``events.parquet`` stores ``ts`` as int64 nanos (or parquet
-    TIMESTAMP(NANOS), which Spark only reads via the nanosAsLong legacy
-    conf) rather than a native micro/milli timestamp the reader handles
-    directly. Decided from the parquet footer (pyarrow) so the Spark read
-    never throws on either generation of the testdata. Cached per path —
-    the answer is constant per file and every events query calls this."""
-    import pyarrow.parquet as pq
-
-    if os.path.isdir(path):
-        inner = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
-        if not inner:
-            return False
-        path = os.path.join(path, inner[0])
-    ts_type = str(pq.read_schema(path).field("ts").type)
-    return ts_type in ("int64", "timestamp[ns]")
-
-
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one testdata table as a DataFrame (parquet scan).
+    """Load one testdata table as a DataFrame (parquet scan), through
+    :func:`randas_spark.session.load_table`: the schema is inferred once
+    per file fingerprint, so a repeated read of unchanged files starts no
+    Spark job.
 
     ``events.parquet`` has shipped with two different ``ts`` physical
     types across testdata generations, so the loader branches on the
-    parquet footer:
+    parquet footer (:func:`events_ts_is_nanos`, probed once per file
+    fingerprint):
 
     - int64 / TIMESTAMP(NANOS): read as long (legacy conf) and convert
       with integer div (double division would lose precision past 2^53);
@@ -89,16 +73,14 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # and every unix_* / window bucket must not shift with the host tz.
     spark.conf.set("spark.sql.ansi.enabled", "false")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    if name == "events":
-        path = os.path.join(sf_dir, "events.parquet")
-        if events_ts_is_nanos(path):
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            df = spark.read.parquet(path)
-            return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
-        df = spark.read.parquet(path)
-        return df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    if name != "events":
+        return load_table(spark, sf_dir, name)
+    nanos = events_ts_is_nanos(os.path.join(sf_dir, "events.parquet"))
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true" if nanos else "false")
+    df = load_table(spark, sf_dir, name)
+    if nanos:
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return df.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
 def parquet_num_rows(path: str) -> int:
@@ -108,8 +90,7 @@ def parquet_num_rows(path: str) -> int:
     cell formulas — a full df.count() job is a scan + aggregate whose
     only output is a number the file metadata already carries; the
     footer read is the same number (parquet num_rows is exact) at
-    metadata cost, exactly like the events_ts_is_nanos footer branch
-    above. Not valid after filters or joins — unfiltered reads only."""
+    metadata cost, like the events_ts_is_nanos footer probe. Not valid after filters or joins — unfiltered reads only."""
     import pyarrow.parquet as pq
 
     if os.path.isdir(path):

@@ -755,7 +755,7 @@ def events_stream(spark: SparkSession, sf_dir: str, files_per_trigger: int = 1):
     with the batch loader is exact. The file is staged into a temp dir
     because file sources watch directories.
     """
-    from randas_spark.queries import events_ts_is_nanos
+    from randas_spark.session import events_ts_is_nanos, read_parquet
 
     src = os.path.join(sf_dir, "events.parquet")
     nanos = events_ts_is_nanos(src)
@@ -774,7 +774,7 @@ def events_stream(spark: SparkSession, sf_dir: str, files_per_trigger: int = 1):
                 shutil.copy(os.path.join(src, name), stage)
     else:
         shutil.copy(src, stage)
-    raw_schema = spark.read.parquet(src).schema
+    raw_schema = read_parquet(spark, src).schema
     stream = (
         spark.readStream.schema(raw_schema)
         .option("maxFilesPerTrigger", files_per_trigger)
@@ -878,6 +878,7 @@ def dedup_ingest_stream(
         # skipping the anti-join would re-append previously-ingested
         # fingerprints and break the dedup invariant with no signal.
         if os.path.exists(store_path):
+            # plain inference: the store gains files every batch, and a torn one must fail here
             store = batch_df.sparkSession.read.parquet(store_path)
             fresh = batch.join(store.select("fp"), "fp", "left_anti")
         else:
@@ -1051,6 +1052,7 @@ def idempotent_batch_sink(
         # error here silently disables the redelivery dedup this sink
         # exists for.
         if os.path.exists(store_path):
+            # plain inference, as in dedup_ingest_stream's store read
             existing = (
                 spark.read.parquet(store_path)
                 .filter(F.col("batch_id") == int(batch_id))
