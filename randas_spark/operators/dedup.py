@@ -284,19 +284,25 @@ def _cap_hot_keys(df, key_cols, max_freq):
     )
 
 
-def _check_shingle_arrays(sh: DataFrame) -> DataFrame:
+def _check_shingle_arrays(sh: DataFrame, k: int) -> DataFrame:
     """Fail fast on a malformed caller-supplied ``shingle_arrays`` frame:
-    it must carry ``doc_id`` and an ``sh`` column of array<string>. An
-    ``sh`` of another element type would still explode and hash, into
-    signatures and sizes that silently disagree with the text. Reads the
-    schema only — no Spark job."""
-    fields = {f.name: f.dataType for f in sh.schema.fields}
+    it must carry ``doc_id`` and an ``sh`` column of array<string> whose
+    column metadata records the operator's ``k`` (``{"k": k}``, set by
+    the producer's alias). An ``sh`` of another element type or another
+    k would still explode and hash, into signatures and sizes that
+    silently disagree with the text. Reads the schema only — no Spark
+    job."""
+    fields = {f.name: f for f in sh.schema.fields}
     if "doc_id" not in fields:
         raise ValueError(f"shingle_arrays lacks a doc_id column: {sorted(fields)}")
-    dt = fields.get("sh")
+    dt = fields["sh"].dataType if "sh" in fields else None
     if not (isinstance(dt, ArrayType) and isinstance(dt.elementType, StringType)):
         got = dt.simpleString() if dt is not None else "no sh column"
         raise ValueError(f"shingle_arrays.sh must be array<string>, got {got}")
+    got_k = fields["sh"].metadata.get("k")
+    if got_k != k:
+        got = "no k metadata" if got_k is None else f"k={got_k}"
+        raise ValueError(f"shingle_arrays.sh must be built with k={k}, got {got}")
     return sh
 
 
@@ -331,8 +337,9 @@ def ngram_jaccard_pairs(
     — callers composing several shingle consumers over the same corpus
     (llm_minhash_recall_audit: exact pairs + LSH pairs) pass one shared
     checkpoint so the shingle construction scan runs once, not once per
-    operator (guide §2.4). A frame without ``doc_id`` or with an ``sh``
-    that is not array<string> raises ValueError.
+    operator (guide §2.4). A frame without ``doc_id``, with an ``sh``
+    that is not array<string>, or whose ``sh`` metadata does not record
+    this ``k`` raises ValueError (see _check_shingle_arrays).
     """
     # MATERIALIZED once: the self-join's a/b sides plus the two size
     # legs all derive from sh, and Spark reuses nothing across the four
@@ -340,7 +347,7 @@ def ngram_jaccard_pairs(
     # the dominant cost) would run up to 4x. Downstream derivations
     # (explode, size) are cheap over the checkpointed arrays.
     if shingle_arrays is not None:
-        sh = _check_shingle_arrays(shingle_arrays)
+        sh = _check_shingle_arrays(shingle_arrays, k)
     else:
         sh = fan_out(df).select(
             F.col(id_col).alias("doc_id"), shingles(F.col(text_col), k).alias("sh")
@@ -1138,13 +1145,13 @@ def portable_banded_signatures(
     frame equal to ``shingles(text_col, k)`` per doc — the signature
     explode then reads it instead of re-running the shingle
     construction scan (guide §2.4; see ngram_jaccard_pairs). A frame
-    without ``doc_id`` or with an ``sh`` that is not array<string>
-    raises ValueError."""
+    without ``doc_id``, with an ``sh`` that is not array<string>, or
+    whose ``sh`` metadata does not record this ``k`` raises ValueError."""
     rows_per_band = num_perm // bands
     if rows_per_band * bands != num_perm:
         raise ValueError(f"bands={bands} must divide num_perm={num_perm}")
     if shingle_arrays is not None:
-        sh = _check_shingle_arrays(shingle_arrays).select(
+        sh = _check_shingle_arrays(shingle_arrays, k).select(
             "doc_id", F.explode("sh").alias("s")
         )
     else:
@@ -1318,8 +1325,9 @@ def minhash_lsh_pairs_portable(
     it instead of re-running the shingle construction scan — the
     recall-audit composition (exact pairs + LSH pairs over ONE corpus)
     shares a single shingle checkpoint across both operators
-    (guide §2.4). A frame without ``doc_id`` or with an ``sh`` that is
-    not array<string> raises ValueError."""
+    (guide §2.4). A frame without ``doc_id``, with an ``sh`` that is not
+    array<string>, or whose ``sh`` metadata does not record this ``k``
+    raises ValueError."""
     # No banded checkpoint, by measurement: the band self-join exchanges
     # both sides on the identical (band_id, bk) key, so exchange reuse
     # already serves both from one signature build.

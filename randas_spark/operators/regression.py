@@ -45,6 +45,52 @@ def _scaled(col: str, scale: int) -> Column:
     return F.floor(F.col(col) * scale + F.lit(0.5)).cast("long")
 
 
+def _cramer(n, a1, a2, ay, a11, a12, a22, a1y, a2y) -> tuple[Column, ...]:
+    """(det, b0, b1, b2) of the symmetric 3x3 system
+    [[n,a1,a2],[a1,a11,a12],[a2,a12,a22]] b = [ay,a1y,a2y] by Cramer's
+    rule, over double Columns. :data:`_SQL_CRAMER` spells the same
+    operation order for DuckDB, so both engines get bit-equal doubles."""
+    det = (
+        n * (a11 * a22 - a12 * a12)
+        - a1 * (a1 * a22 - a12 * a2)
+        + a2 * (a1 * a12 - a11 * a2)
+    )
+    b0 = (
+        ay * (a11 * a22 - a12 * a12)
+        - a1 * (a1y * a22 - a12 * a2y)
+        + a2 * (a1y * a12 - a11 * a2y)
+    ) / det
+    b1 = (
+        n * (a1y * a22 - a12 * a2y)
+        - ay * (a1 * a22 - a12 * a2)
+        + a2 * (a1 * a2y - a1y * a2)
+    ) / det
+    b2 = (
+        n * (a11 * a2y - a1y * a12)
+        - a1 * (a1 * a2y - a1y * a2)
+        + ay * (a1 * a12 - a11 * a2)
+    ) / det
+    return det, b0, b1, b2
+
+
+#: DuckDB twin of :func:`_cramer`: (det, b0, b1, b2) over columns named
+#: like its arguments; the coefficients divide by a ``det`` column.
+_SQL_CRAMER = (
+    "(n * (a11 * a22 - a12 * a12)"
+    " - a1 * (a1 * a22 - a12 * a2)"
+    " + a2 * (a1 * a12 - a11 * a2))",
+    "((ay * (a11 * a22 - a12 * a12)"
+    " - a1 * (a1y * a22 - a12 * a2y)"
+    " + a2 * (a1y * a12 - a11 * a2y)) / det)",
+    "((n * (a1y * a22 - a12 * a2y)"
+    " - ay * (a1 * a22 - a12 * a2)"
+    " + a2 * (a1 * a2y - a1y * a2)) / det)",
+    "((n * (a11 * a2y - a1y * a12)"
+    " - a1 * (a1 * a2y - a1y * a2)"
+    " + ay * (a1 * a12 - a11 * a2)) / det)",
+)
+
+
 #: Conservative int64 headroom: guards fire when n * max|cell| could
 #: reach this, which upper-bounds |sum| (margin under 2^63 = 9.22e18).
 _I64_GUARD = 9.0e18
@@ -117,8 +163,8 @@ def grouped_ols(
 
     Determinism: sums run over scaled int64 (exact, order-independent)
     under the loud overflow guard (module docstring); the solve runs on
-    doubles derived from those exact sums with a fixed expression shape
-    mirrored verbatim in :func:`sql_grouped_ols`.
+    doubles derived from those exact sums by :func:`_cramer`, whose
+    operation order :func:`sql_grouped_ols` splices as :data:`_SQL_CRAMER`.
     """
     from randas_spark.queries import fround
 
@@ -148,27 +194,7 @@ def grouped_ols(
     a1y = F.col("s1y") / (kx * ky)
     a2y = F.col("s2y") / (kx * ky)
     ayy = F.col("syy") / (ky * ky)
-    # Cramer's rule on [[n,a1,a2],[a1,a11,a12],[a2,a12,a22]] b = [ay,a1y,a2y]
-    det = (
-        n * (a11 * a22 - a12 * a12)
-        - a1 * (a1 * a22 - a12 * a2)
-        + a2 * (a1 * a12 - a11 * a2)
-    )
-    b0 = (
-        ay * (a11 * a22 - a12 * a12)
-        - a1 * (a1y * a22 - a12 * a2y)
-        + a2 * (a1y * a12 - a11 * a2y)
-    ) / det
-    b1 = (
-        n * (a1y * a22 - a12 * a2y)
-        - ay * (a1 * a22 - a12 * a2)
-        + a2 * (a1 * a2y - a1y * a2)
-    ) / det
-    b2 = (
-        n * (a11 * a2y - a1y * a12)
-        - a1 * (a1 * a2y - a1y * a2)
-        + ay * (a1 * a12 - a11 * a2)
-    ) / det
+    _, b0, b1, b2 = _cramer(n, a1, a2, ay, a11, a12, a22, a1y, a2y)
     sse = ayy - b0 * ay - b1 * a1y - b2 * a2y
     sst = ayy - ay * ay / n
     r2 = F.lit(1.0) - sse / sst
@@ -197,8 +223,8 @@ def sql_grouped_ols(
     digits: int = 4,
 ) -> str:
     """DuckDB twin of :func:`grouped_ols` — same scaled-integer sums,
-    same Cramer expression shape, same fround, so the value hash matches
-    bit-for-bit. (DuckDB sums BIGINT into HUGEINT; the values are the
+    the same Cramer solve (:data:`_SQL_CRAMER`), same fround, so the
+    value hash matches bit-for-bit. (DuckDB sums BIGINT into HUGEINT; the values are the
     same exact integers Spark holds in int64 within the overflow budget,
     and int->double conversion rounds identically from either width.)"""
     from randas_spark.queries import sql_fround
@@ -208,26 +234,7 @@ def sql_grouped_ols(
     sq = f"CAST(floor({x1} * {scale_x} + 0.5) AS BIGINT)"
     sd = f"CAST(floor({x2} * {scale_x} + 0.5) AS BIGINT)"
     sy = f"CAST(floor({y} * {scale_y} + 0.5) AS BIGINT)"
-    det = (
-        "(n * (a11 * a22 - a12 * a12)"
-        " - a1 * (a1 * a22 - a12 * a2)"
-        " + a2 * (a1 * a12 - a11 * a2))"
-    )
-    b0 = (
-        "((ay * (a11 * a22 - a12 * a12)"
-        " - a1 * (a1y * a22 - a12 * a2y)"
-        " + a2 * (a1y * a12 - a11 * a2y)) / det)"
-    )
-    b1 = (
-        "((n * (a1y * a22 - a12 * a2y)"
-        " - ay * (a1 * a22 - a12 * a2)"
-        " + a2 * (a1 * a2y - a1y * a2)) / det)"
-    )
-    b2 = (
-        "((n * (a11 * a2y - a1y * a12)"
-        " - a1 * (a1 * a2y - a1y * a2)"
-        " + ay * (a1 * a12 - a11 * a2)) / det)"
-    )
+    det, b0, b1, b2 = _SQL_CRAMER
     return f"""
     WITH sums AS (
         SELECT {gc},
@@ -349,30 +356,11 @@ def logreg_newton(
             F.lit(b[0]).alias("b0"), F.lit(b[1]).alias("b1"), F.lit(b[2]).alias("b2")
         ).agg(F.count(F.lit(1)).cast("long").alias("__n__"), *gsl.aggs())
         # Cramer solve of H delta = g on the exact int sums (common 1e-6
-        # scale cancels between H and g); same expression tree as the SQL
+        # scale cancels between H and g); same operation order as the SQL
         a00, a01, a02 = (F.col("h00").cast("double"), F.col("h01").cast("double"), F.col("h02").cast("double"))
         a11, a12, a22 = (F.col("h11").cast("double"), F.col("h12").cast("double"), F.col("h22").cast("double"))
         g0, g1, g2 = (F.col("g0").cast("double"), F.col("g1").cast("double"), F.col("g2").cast("double"))
-        det = (
-            a00 * (a11 * a22 - a12 * a12)
-            - a01 * (a01 * a22 - a12 * a02)
-            + a02 * (a01 * a12 - a11 * a02)
-        )
-        d0 = (
-            g0 * (a11 * a22 - a12 * a12)
-            - a01 * (g1 * a22 - a12 * g2)
-            + a02 * (g1 * a12 - a11 * g2)
-        ) / det
-        d1 = (
-            a00 * (g1 * a22 - a12 * g2)
-            - g0 * (a01 * a22 - a12 * a02)
-            + a02 * (a01 * g2 - g1 * a02)
-        ) / det
-        d2 = (
-            a00 * (a11 * g2 - g1 * a12)
-            - a01 * (a01 * g2 - g1 * a02)
-            + g0 * (a01 * a12 - a11 * a02)
-        ) / det
+        det, d0, d1, d2 = _cramer(a00, a01, a02, g0, a11, a12, a22, g1, g2)
         # Singular-Hessian guard (e.g. a constant feature): det == 0
         # would send NaN through every later step; hold the coefficients
         # instead. Mirrored as CASE det = 0 in the SQL twin.
@@ -439,8 +427,9 @@ def sql_logreg_newton(
 ) -> str:
     """DuckDB twin of :func:`logreg_newton`: the Newton loop macro-
     expands into one CTE pair (cells -> solve) per step, each carrying
-    the previous step's coefficients via a 1-row CROSS JOIN — the same
-    Cramer expression tree, the same int64 quantization."""
+    the previous step's coefficients via a 1-row CROSS JOIN — the
+    Cramer operation order of :func:`_cramer` over the Hessian cells,
+    the same int64 quantization."""
     from randas_spark.queries import sql_fround
 
     base = f"""
@@ -590,26 +579,7 @@ def ols_crossval(
     a22 = F.col("s22") / (kx * kx)
     a1y = F.col("s1y") / (kx * ky)
     a2y = F.col("s2y") / (kx * ky)
-    det = (
-        n * (a11 * a22 - a12 * a12)
-        - a1 * (a1 * a22 - a12 * a2)
-        + a2 * (a1 * a12 - a11 * a2)
-    )
-    b0 = (
-        ay * (a11 * a22 - a12 * a12)
-        - a1 * (a1y * a22 - a12 * a2y)
-        + a2 * (a1y * a12 - a11 * a2y)
-    ) / det
-    b1 = (
-        n * (a1y * a22 - a12 * a2y)
-        - ay * (a1 * a22 - a12 * a2)
-        + a2 * (a1 * a2y - a1y * a2)
-    ) / det
-    b2 = (
-        n * (a11 * a2y - a1y * a12)
-        - a1 * (a1 * a2y - a1y * a2)
-        + ay * (a1 * a12 - a11 * a2)
-    ) / det
+    _, b0, b1, b2 = _cramer(n, a1, a2, ay, a11, a12, a22, a1y, a2y)
     models = comp.select(
         "__fold__",
         "n_test",
@@ -655,33 +625,15 @@ def sql_ols_crossval(
     digits: int = 4,
 ) -> str:
     """DuckDB twin of :func:`ols_crossval` (same cells, same complement
-    subtraction, same Cramer tree, same quantized-residual RMSE)."""
+    subtraction, the same Cramer solve (:data:`_SQL_CRAMER`), same
+    quantized-residual RMSE)."""
     from randas_spark.queries import sql_fround
 
     kx, ky = float(scale_x), float(scale_y)
     sq = f"CAST(floor({x1} * {scale_x} + 0.5) AS BIGINT)"
     sd = f"CAST(floor({x2} * {scale_x} + 0.5) AS BIGINT)"
     sy = f"CAST(floor({y} * {scale_y} + 0.5) AS BIGINT)"
-    det = (
-        "(n * (a11 * a22 - a12 * a12)"
-        " - a1 * (a1 * a22 - a12 * a2)"
-        " + a2 * (a1 * a12 - a11 * a2))"
-    )
-    b0 = (
-        "((ay * (a11 * a22 - a12 * a12)"
-        " - a1 * (a1y * a22 - a12 * a2y)"
-        " + a2 * (a1y * a12 - a11 * a2y)) / det)"
-    )
-    b1 = (
-        "((n * (a1y * a22 - a12 * a2y)"
-        " - ay * (a1 * a22 - a12 * a2)"
-        " + a2 * (a1 * a2y - a1y * a2)) / det)"
-    )
-    b2 = (
-        "((n * (a11 * a2y - a1y * a12)"
-        " - a1 * (a1 * a2y - a1y * a2)"
-        " + ay * (a1 * a12 - a11 * a2)) / det)"
-    )
+    det, b0, b1, b2 = _SQL_CRAMER
     return f"""
     WITH data AS (
         SELECT {fold_sql} AS fold, {sq} AS sx1, {sd} AS sx2, {sy} AS sy

@@ -28,6 +28,7 @@ from randas_spark.functions.text import (
     sql_quality_parts,
     sql_repetition_parts,
     sql_quality_score,
+    sql_shingles,
     sql_token_count_bpe_ish,
     sql_tokens,
     token_count_bpe_ish,
@@ -47,6 +48,25 @@ from randas_spark.queries import (
 # --------------------------------------------------------------------------
 # Deduplication
 # --------------------------------------------------------------------------
+
+
+def _sql_jaccard_head(src: str = "documents", pair: str = "<") -> str:
+    """The exact 5-gram Jaccard self-join as three CTEs, for the caller's
+    ``WITH`` (or ``WITH RECURSIVE``): ``sh`` the distinct shingles of each
+    ``src`` doc, ``sizes`` their counts, ``inter`` the shared-shingle count
+    of every pair with ``a.doc_id {pair} b.doc_id`` (``<`` one row per
+    unordered pair, ``<>`` both directions). Each oracle keeps its own
+    tail over ``inter`` and ``sizes``."""
+    return f"""sh AS (
+        SELECT doc_id, unnest({sql_shingles('text', 5)}) AS s
+        FROM {src}
+    ), sizes AS (
+        SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id
+    ), inter AS (
+        SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_inter
+        FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id {pair} b.doc_id
+        GROUP BY 1, 2
+    )"""
 
 
 @register(
@@ -198,19 +218,8 @@ def llm_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_dedup_ngram_jaccard",
-    oracle="""
-    WITH sh AS (
-        SELECT doc_id, unnest(list_distinct(list_transform(
-            generate_series(1, greatest(len(string_split(lower(text), ' ')) - 4, 1)),
-            i -> array_to_string(string_split(lower(text), ' ')[i:i+4], ' ')))) AS s
-        FROM documents
-    ), sizes AS (
-        SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id
-    ), inter AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_inter
-        FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    )
+    oracle=f"""
+    WITH {_sql_jaccard_head()}
     SELECT id_a, id_b,
            CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter) AS jaccard
     FROM inter
@@ -231,19 +240,8 @@ def llm_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_dedup_ppjoin",
-    oracle="""
-    WITH sh AS (
-        SELECT doc_id, unnest(list_distinct(list_transform(
-            generate_series(1, greatest(len(string_split(lower(text), ' ')) - 4, 1)),
-            i -> array_to_string(string_split(lower(text), ' ')[i:i+4], ' ')))) AS s
-        FROM documents
-    ), sizes AS (
-        SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id
-    ), inter AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_inter
-        FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    )
+    oracle=f"""
+    WITH {_sql_jaccard_head()}
     SELECT id_a, id_b,
            CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter) AS jaccard
     FROM inter
@@ -272,21 +270,10 @@ def llm_dedup_ppjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from randas_spark.functions.text import sql_shingles as _sql_sh5
-
-
 @register(
     "llm_dedup_containment",
     oracle=f"""
-    WITH sh AS (
-        SELECT doc_id, unnest({_sql_sh5('text', 5)}) AS s FROM documents
-    ), sizes AS (
-        SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id
-    ), inter AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_inter
-        FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id <> b.doc_id
-        GROUP BY 1, 2
-    )
+    WITH {_sql_jaccard_head(pair="<>")}
     SELECT id_a, id_b, CAST(n_inter AS DOUBLE) / sa.n_sh AS containment
     FROM inter JOIN sizes sa ON sa.doc_id = id_a
     WHERE CAST(n_inter AS DOUBLE) / sa.n_sh >= 0.8
@@ -503,15 +490,97 @@ def llm_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@register(
-    "llm_multimodal_features",
-    oracle=f"""
-    WITH dig AS (
-        SELECT doc_id,
+#: the 8-dim ``feature`` arrays of extract_features / extract_frame_features
+#: and extract_audio_features, by position
+_IMAGE_FEATURES = (
+    "f_width", "f_height", "f_channels", "f_mean", "f_std", "f_min", "f_max", "f_c0"
+)
+_AUDIO_FEATURES = (
+    "f_dur", "f_rms", "f_peak", "f_zcr", "f_mean", "f_meanabs", "f_eratio", "f_centroid"
+)
+
+
+def _feature_columns(out: DataFrame, names: tuple[str, ...], *keys) -> DataFrame:
+    """``keys`` plus ``out``'s ``feature`` array spread into ``names``: the
+    image dimensions (f_width, f_height, f_channels) are exact, every
+    other feature is fround(·, 6) — the Spark side of
+    :func:`_sql_image_features` / :func:`_sql_audio_features`."""
+    f = F.col("feature")
+    return out.select(
+        *keys,
+        *(
+            (f[i] if name in _IMAGE_FEATURES[:3] else fround(f[i], 6)).alias(name)
+            for i, name in enumerate(names)
+        ),
+    )
+
+
+def _sql_digest(cols: str = "doc_id") -> str:
+    """``dig``: the 16 md5(text) digest bytes ``dg`` of every document
+    (plus ``cols``) — the seed every image and audio payload is built
+    from, for the oracles that replay those payloads."""
+    return f"""dig AS (
+        SELECT {cols},
                list_transform(generate_series(0, 15),
                    k -> CAST(('0x' || substr(md5(text), 2*k + 1, 2)) AS INT)) AS dg
         FROM documents
-    ), px AS (
+    )"""
+
+
+def _sql_image_features(side: int, channels: int, keys: str = "doc_id") -> str:
+    """Final SELECT of the image-feature replays: the eight
+    png.pixel_features values of a ``side``×``side``×``channels`` image
+    from the caller's ``stats`` CTE (mean_px, var_px, minp, maxp, c0m —
+    each codec derives its own pixels)."""
+    return f"""SELECT {keys}, 'image' AS modality,
+           CAST({side} AS DOUBLE) AS f_width, CAST({side} AS DOUBLE) AS f_height,
+           CAST({channels} AS DOUBLE) AS f_channels,
+           {sql_fround('mean_px / 255', 6)} AS f_mean,
+           {sql_fround('sqrt(var_px) / 255', 6)} AS f_std,
+           {sql_fround('minp / 255', 6)} AS f_min,
+           {sql_fround('maxp / 255', 6)} AS f_max,
+           {sql_fround('c0m / 255', 6)} AS f_c0
+    FROM stats"""
+
+
+def _sql_audio_features(n: int, n_bytes: int) -> str:
+    """``feat`` CTE and final SELECT of the audio-feature replays: the
+    eight wav.audio_features values of the caller's ``smp`` CTE (doc_id,
+    ``s`` = the ``n`` decoded samples at 8 kHz), as ordered
+    list_reduce sums in Python's accumulation order; ``n_bytes`` is the
+    payload size the container writer must produce."""
+    h = n // 2
+    return f"""feat AS (
+        SELECT doc_id,
+               list_reduce(list_transform(s, x -> x * x), (a, b) -> a + b) AS ss,
+               list_reduce(s, (a, b) -> a + b) AS sm,
+               list_reduce(list_transform(s, x -> abs(x)), (a, b) -> a + b) AS sa,
+               list_max(list_transform(s, x -> abs(x))) AS peak,
+               CAST(len(list_filter(generate_series(2, {n}),
+                        i -> (s[i-1] < 0) <> (s[i] < 0))) AS DOUBLE) / {n - 1} AS zcr,
+               list_reduce(list_transform(s[1:{h}], x -> x * x), (a, b) -> a + b) AS e1r,
+               list_reduce(list_transform(s[{h + 1}:{n}], x -> x * x), (a, b) -> a + b) AS e2r
+        FROM smp
+    )
+    SELECT doc_id, 'audio' AS modality,
+           CAST({n_bytes} AS BIGINT) AS n_bytes,
+           CAST(8000 AS BIGINT) AS sample_rate,
+           {sql_fround(f'CAST({n} AS DOUBLE) / 8000', 6)} AS f_dur,
+           {sql_fround(f'sqrt(ss / {n})', 6)} AS f_rms,
+           {sql_fround('peak', 6)} AS f_peak,
+           {sql_fround('zcr', 6)} AS f_zcr,
+           {sql_fround(f'sm / {n}', 6)} AS f_mean,
+           {sql_fround(f'sa / {n}', 6)} AS f_meanabs,
+           {sql_fround('(CASE WHEN e1r = 0 THEN 1e-30 ELSE e1r END) / '
+                       '(CASE WHEN e2r = 0 THEN 1e-30 ELSE e2r END)', 6)} AS f_eratio,
+           {sql_fround('zcr * 8000 / 2.0', 6)} AS f_centroid
+    FROM feat"""
+
+
+@register(
+    "llm_multimodal_features",
+    oracle=f"""
+    WITH {_sql_digest()}, px AS (
         SELECT doc_id, dg,
                flatten(list_transform(generate_series(1, 12), r -> dg)) AS pixels,
                CAST(list_sum(dg) * 12 AS DOUBLE) / 192 AS mean_px
@@ -527,15 +596,7 @@ def llm_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
                                  k -> dg[((3*k) % 16) + 1])) AS DOUBLE) / 64 AS c0m
         FROM px
     )
-    SELECT doc_id, 'image' AS modality,
-           CAST(8 AS DOUBLE) AS f_width, CAST(8 AS DOUBLE) AS f_height,
-           CAST(3 AS DOUBLE) AS f_channels,
-           {sql_fround('mean_px / 255', 6)} AS f_mean,
-           {sql_fround('sqrt(var_px) / 255', 6)} AS f_std,
-           {sql_fround('minp / 255', 6)} AS f_min,
-           {sql_fround('maxp / 255', 6)} AS f_max,
-           {sql_fround('c0m / 255', 6)} AS f_c0
-    FROM stats
+    {_sql_image_features(8, 3)}
     """,
 )
 def llm_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -552,30 +613,13 @@ def llm_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = t(spark, sf_dir, "documents")
     out = extract_features(attach_png_payload(d, "doc_id", "text"), fake=False)
-    f = F.col("feature")
-    return out.select(
-        "doc_id",
-        "modality",
-        f[0].alias("f_width"),
-        f[1].alias("f_height"),
-        f[2].alias("f_channels"),
-        fround(f[3], 6).alias("f_mean"),
-        fround(f[4], 6).alias("f_std"),
-        fround(f[5], 6).alias("f_min"),
-        fround(f[6], 6).alias("f_max"),
-        fround(f[7], 6).alias("f_c0"),
-    )
+    return _feature_columns(out, _IMAGE_FEATURES, "doc_id", "modality")
 
 
 @register(
     "llm_multimodal_webp",
     oracle=f"""
-    WITH dig AS (
-        SELECT doc_id,
-               list_transform(generate_series(0, 15),
-                   k -> CAST(('0x' || substr(md5(text), 2*k + 1, 2)) AS INT)) AS dg
-        FROM documents
-    ), px AS (
+    WITH {_sql_digest()}, px AS (
         SELECT doc_id, dg,
                flatten(list_transform(generate_series(1, 16), r -> dg)) AS pixels,
                CAST(list_sum(dg) * 16 AS DOUBLE) / 256 AS mean_px
@@ -591,15 +635,7 @@ def llm_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
                                  k -> dg[((4*k) % 16) + 1])) AS DOUBLE) / 64 AS c0m
         FROM px
     )
-    SELECT doc_id, 'image' AS modality,
-           CAST(8 AS DOUBLE) AS f_width, CAST(8 AS DOUBLE) AS f_height,
-           CAST(4 AS DOUBLE) AS f_channels,
-           {sql_fround('mean_px / 255', 6)} AS f_mean,
-           {sql_fround('sqrt(var_px) / 255', 6)} AS f_std,
-           {sql_fround('minp / 255', 6)} AS f_min,
-           {sql_fround('maxp / 255', 6)} AS f_max,
-           {sql_fround('c0m / 255', 6)} AS f_c0
-    FROM stats
+    {_sql_image_features(8, 4)}
     """,
 )
 def llm_multimodal_webp(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -620,30 +656,13 @@ def llm_multimodal_webp(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = t(spark, sf_dir, "documents")
     out = extract_features(attach_webp_payload(d, "doc_id", "text"), fake=False)
-    f = F.col("feature")
-    return out.select(
-        "doc_id",
-        "modality",
-        f[0].alias("f_width"),
-        f[1].alias("f_height"),
-        f[2].alias("f_channels"),
-        fround(f[3], 6).alias("f_mean"),
-        fround(f[4], 6).alias("f_std"),
-        fround(f[5], 6).alias("f_min"),
-        fround(f[6], 6).alias("f_max"),
-        fround(f[7], 6).alias("f_c0"),
-    )
+    return _feature_columns(out, _IMAGE_FEATURES, "doc_id", "modality")
 
 
 @register(
     "llm_multimodal_bmp",
     oracle=f"""
-    WITH dig AS (
-        SELECT doc_id,
-               list_transform(generate_series(0, 15),
-                   k -> CAST(('0x' || substr(md5(text), 2*k + 1, 2)) AS INT)) AS dg
-        FROM documents
-    ), rev AS (
+    WITH {_sql_digest()}, rev AS (
         SELECT doc_id,
                list_transform(generate_series(0, 15), k -> dg[16 - k]) AS dr
         FROM dig
@@ -663,15 +682,7 @@ def llm_multimodal_webp(spark: SparkSession, sf_dir: str) -> DataFrame:
                                  k -> dr[((3*k) % 16) + 1])) AS DOUBLE) / 64 AS c0m
         FROM px
     )
-    SELECT doc_id, 'image' AS modality,
-           CAST(8 AS DOUBLE) AS f_width, CAST(8 AS DOUBLE) AS f_height,
-           CAST(3 AS DOUBLE) AS f_channels,
-           {sql_fround('mean_px / 255', 6)} AS f_mean,
-           {sql_fround('sqrt(var_px) / 255', 6)} AS f_std,
-           {sql_fround('minp / 255', 6)} AS f_min,
-           {sql_fround('maxp / 255', 6)} AS f_max,
-           {sql_fround('c0m / 255', 6)} AS f_c0
-    FROM stats
+    {_sql_image_features(8, 3)}
     """,
 )
 def llm_multimodal_bmp(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -691,19 +702,7 @@ def llm_multimodal_bmp(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = t(spark, sf_dir, "documents")
     out = extract_features(attach_bmp_payload(d, "doc_id", "text"), fake=False)
-    f = F.col("feature")
-    return out.select(
-        "doc_id",
-        "modality",
-        f[0].alias("f_width"),
-        f[1].alias("f_height"),
-        f[2].alias("f_channels"),
-        fround(f[3], 6).alias("f_mean"),
-        fround(f[4], 6).alias("f_std"),
-        fround(f[5], 6).alias("f_min"),
-        fround(f[6], 6).alias("f_max"),
-        fround(f[7], 6).alias("f_c0"),
-    )
+    return _feature_columns(out, _IMAGE_FEATURES, "doc_id", "modality")
 
 
 @register(
@@ -740,12 +739,7 @@ def llm_multimodal_audio_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "llm_multimodal_gif_frames",
     oracle=f"""
-    WITH dig AS (
-        SELECT doc_id,
-               list_transform(generate_series(0, 15),
-                   k -> CAST(('0x' || substr(md5(text), 2*k + 1, 2)) AS INT)) AS dg
-        FROM documents
-    ), fr AS (
+    WITH {_sql_digest()}, fr AS (
         SELECT doc_id, dg, unnest([0, 1]) AS frame_idx FROM dig
     ), px AS (
         SELECT doc_id, frame_idx,
@@ -771,15 +765,7 @@ def llm_multimodal_audio_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
                                  j -> p[3*j + 1])) AS DOUBLE) / 64 AS c0m
         FROM st
     )
-    SELECT doc_id, frame_idx, 'image' AS modality,
-           CAST(8 AS DOUBLE) AS f_width, CAST(8 AS DOUBLE) AS f_height,
-           CAST(3 AS DOUBLE) AS f_channels,
-           {sql_fround('mean_px / 255', 6)} AS f_mean,
-           {sql_fround('sqrt(var_px) / 255', 6)} AS f_std,
-           {sql_fround('minp / 255', 6)} AS f_min,
-           {sql_fround('maxp / 255', 6)} AS f_max,
-           {sql_fround('c0m / 255', 6)} AS f_c0
-    FROM stats
+    {_sql_image_features(8, 3, "doc_id, frame_idx")}
     """,
 )
 def llm_multimodal_gif_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -810,20 +796,7 @@ def llm_multimodal_gif_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
         attach_gif_payload(d, "doc_id", "text", n_frames=4), max_frames=2, fake=False
     )
     out = extract_frame_features(frames, fake=False)
-    f = F.col("feature")
-    return out.select(
-        "doc_id",
-        "frame_idx",
-        "modality",
-        f[0].alias("f_width"),
-        f[1].alias("f_height"),
-        f[2].alias("f_channels"),
-        fround(f[3], 6).alias("f_mean"),
-        fround(f[4], 6).alias("f_std"),
-        fround(f[5], 6).alias("f_min"),
-        fround(f[6], 6).alias("f_max"),
-        fround(f[7], 6).alias("f_c0"),
-    )
+    return _feature_columns(out, _IMAGE_FEATURES, "doc_id", "frame_idx", "modality")
 
 
 def _gif_resize_block_sum_sql() -> str:
@@ -849,12 +822,7 @@ def _gif_resize_block_sum_sql() -> str:
 @register(
     "llm_multimodal_pipeline_real",
     oracle=f"""
-    WITH dig AS (
-        SELECT doc_id,
-               list_transform(generate_series(0, 15),
-                   k -> CAST(('0x' || substr(md5(text), 2*k + 1, 2)) AS INT)) AS dg
-        FROM documents
-    ), fr AS (
+    WITH {_sql_digest()}, fr AS (
         SELECT doc_id, dg, unnest([0, 1]) AS frame_idx FROM dig
     ), rz AS (
         SELECT doc_id, frame_idx,
@@ -876,15 +844,7 @@ def _gif_resize_block_sum_sql() -> str:
                                  j -> px[3*j + 1])) AS DOUBLE) / 16 AS c0m
         FROM st
     )
-    SELECT doc_id, frame_idx, 'image' AS modality,
-           CAST(4 AS DOUBLE) AS f_width, CAST(4 AS DOUBLE) AS f_height,
-           CAST(3 AS DOUBLE) AS f_channels,
-           {sql_fround('mean_px / 255', 6)} AS f_mean,
-           {sql_fround('sqrt(var_px) / 255', 6)} AS f_std,
-           {sql_fround('minp / 255', 6)} AS f_min,
-           {sql_fround('maxp / 255', 6)} AS f_max,
-           {sql_fround('c0m / 255', 6)} AS f_c0
-    FROM stats
+    {_sql_image_features(4, 3, "doc_id, frame_idx")}
     """,
 )
 def llm_multimodal_pipeline_real(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -922,31 +882,19 @@ def llm_multimodal_pipeline_real(spark: SparkSession, sf_dir: str) -> DataFrame:
         "meta",
     )
     out = extract_features(resize_images(keyed, 4, 4, fake=False), fake=False)
-    f = F.col("feature")
-    return out.select(
+    return _feature_columns(
+        out,
+        _IMAGE_FEATURES,
         ((F.col("doc_id") - F.col("doc_id") % 2) / 2).cast("long").alias("doc_id"),
         (F.col("doc_id") % 2).alias("frame_idx"),
         "modality",
-        f[0].alias("f_width"),
-        f[1].alias("f_height"),
-        f[2].alias("f_channels"),
-        fround(f[3], 6).alias("f_mean"),
-        fround(f[4], 6).alias("f_std"),
-        fround(f[5], 6).alias("f_min"),
-        fround(f[6], 6).alias("f_max"),
-        fround(f[7], 6).alias("f_c0"),
     )
 
 
 @register(
     "llm_multimodal_resize",
     oracle=f"""
-    WITH dig AS (
-        SELECT doc_id,
-               list_transform(generate_series(0, 15),
-                   k -> CAST(('0x' || substr(md5(text), 2*k + 1, 2)) AS INT)) AS dg
-        FROM documents
-    ), rz AS (
+    WITH {_sql_digest()}, rz AS (
         SELECT doc_id,
                list_transform(generate_series(0, 47), j ->
                    (  dg[((((j // 12) * 2    ) * 8 + ((j // 3) % 4) * 2    ) * 3 + (j % 3)) % 16 + 1]
@@ -968,15 +916,7 @@ def llm_multimodal_pipeline_real(spark: SparkSession, sf_dir: str) -> DataFrame:
                                  k -> px[3*k + 1])) AS DOUBLE) / 16 AS c0m
         FROM st
     )
-    SELECT doc_id, 'image' AS modality,
-           CAST(4 AS DOUBLE) AS f_width, CAST(4 AS DOUBLE) AS f_height,
-           CAST(3 AS DOUBLE) AS f_channels,
-           {sql_fround('mean_px / 255', 6)} AS f_mean,
-           {sql_fround('sqrt(var_px) / 255', 6)} AS f_std,
-           {sql_fround('minp / 255', 6)} AS f_min,
-           {sql_fround('maxp / 255', 6)} AS f_max,
-           {sql_fround('c0m / 255', 6)} AS f_c0
-    FROM stats
+    {_sql_image_features(4, 3)}
     """,
 )
 def llm_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1002,19 +942,7 @@ def llm_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t(spark, sf_dir, "documents")
     resized = resize_images(attach_png_payload(d, "doc_id", "text"), 4, 4, fake=False)
     out = extract_features(resized, fake=False)
-    f = F.col("feature")
-    return out.select(
-        "doc_id",
-        "modality",
-        f[0].alias("f_width"),
-        f[1].alias("f_height"),
-        f[2].alias("f_channels"),
-        fround(f[3], 6).alias("f_mean"),
-        fround(f[4], 6).alias("f_std"),
-        fround(f[5], 6).alias("f_min"),
-        fround(f[6], 6).alias("f_max"),
-        fround(f[7], 6).alias("f_c0"),
-    )
+    return _feature_columns(out, _IMAGE_FEATURES, "doc_id", "modality")
 
 
 @register(
@@ -1190,18 +1118,7 @@ def llm_corpus_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT doc_id, {sql_fingerprint('text')} AS fp FROM documents
     ), exact_survivors AS (
         SELECT min(doc_id) AS doc_id FROM fps GROUP BY fp
-    ), sh AS (
-        SELECT doc_id, unnest(list_distinct(list_transform(
-            generate_series(1, greatest(len(string_split(lower(text), ' ')) - 4, 1)),
-            i -> array_to_string(string_split(lower(text), ' ')[i:i+4], ' ')))) AS s
-        FROM documents WHERE doc_id IN (SELECT doc_id FROM exact_survivors)
-    ), sizes AS (
-        SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id
-    ), inter AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_inter
-        FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ), near_drop AS (
+    ), {_sql_jaccard_head("documents WHERE doc_id IN (SELECT doc_id FROM exact_survivors)")}, near_drop AS (
         SELECT DISTINCT id_b AS doc_id
         FROM inter
         JOIN sizes sa ON sa.doc_id = id_a
@@ -1483,19 +1400,8 @@ def llm_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_dedup_clusters",
-    oracle="""
-    WITH RECURSIVE sh AS (
-        SELECT doc_id, unnest(list_distinct(list_transform(
-            generate_series(1, greatest(len(string_split(lower(text), ' ')) - 4, 1)),
-            i -> array_to_string(string_split(lower(text), ' ')[i:i+4], ' ')))) AS s
-        FROM documents
-    ), sizes AS (
-        SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id
-    ), inter AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_inter
-        FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ), edges AS (
+    oracle=f"""
+    WITH RECURSIVE {_sql_jaccard_head()}, edges AS (
         SELECT id_a, id_b
         FROM inter
         JOIN sizes sa ON sa.doc_id = id_a
@@ -2081,14 +1987,11 @@ def llm_ngram_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
     return top.withColumn("rk", F.row_number().over(w))
 
 
-from randas_spark.functions.text import sql_shingles as _sql_shingles
-
-
 @register(
     "llm_decontaminate",
     oracle=f"""
     WITH sh AS (
-        SELECT doc_id, unnest({_sql_shingles('text', 8)}) AS s
+        SELECT doc_id, unnest({sql_shingles('text', 8)}) AS s
         FROM documents
     ),
     bench AS (
@@ -2417,7 +2320,7 @@ def llm_vocab_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     "llm_boilerplate_coverage",
     oracle=f"""
     WITH sh AS (
-        SELECT doc_id, unnest({_sql_shingles('text', 5)}) AS s FROM documents
+        SELECT doc_id, unnest({sql_shingles('text', 5)}) AS s FROM documents
     ),
     frequent AS (
         SELECT s FROM sh GROUP BY s HAVING count(*) >= 2
@@ -2428,12 +2331,12 @@ def llm_vocab_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY doc_id
     )
     SELECT d.doc_id,
-           CAST(len({_sql_shingles('d.text', 5)}) AS BIGINT) AS n_shingles,
+           CAST(len({sql_shingles('d.text', 5)}) AS BIGINT) AS n_shingles,
            COALESCE(b.n_boiler, 0) AS n_boiler,
            CAST(COALESCE(b.n_boiler, 0) AS DOUBLE)
-               / len({_sql_shingles('d.text', 5)}) AS coverage,
+               / len({sql_shingles('d.text', 5)}) AS coverage,
            CAST(COALESCE(b.n_boiler, 0) AS DOUBLE)
-               / len({_sql_shingles('d.text', 5)}) >= 0.5 AS drop
+               / len({sql_shingles('d.text', 5)}) >= 0.5 AS drop
     FROM documents d LEFT JOIN boiler b USING (doc_id)
     """,
 )
@@ -2478,19 +2381,12 @@ def llm_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_minhash_lsh(
-    num_perm: int = 32,
-    bands: int = 8,
-    k: int = 5,
-    threshold: float = 0.6,
-    final: str | None = None,
-    recursive: bool = False,
-) -> str:
-    """DuckDB twin of operators/dedup.minhash_lsh_pairs_portable: the
-    same shared md5→32-bit shingle hash and (a_p·h + b_p) mod P integer
-    permutation family (constants imported from the SAME generator), band
-    keys, candidate join, and exact-Jaccard verification — so the two
-    engines can't drift."""
+def _sql_minhash_banded(num_perm: int, bands: int, k: int) -> str:
+    """``sh``/``shh``/``mins``/``banded`` CTEs of the DuckDB MinHash-LSH
+    twins: every document's distinct ``k``-shingles, their shared
+    md5→32-bit hash, the ``num_perm`` (a_p·h + b_p) mod P permutation
+    minima (constants imported from the SAME generator as
+    operators/dedup) and one (doc_id, band_id, bk) row per band."""
     from randas_spark.operators.dedup import (
         MINHASH_MOD,
         minhash_perm_consts,
@@ -2509,9 +2405,8 @@ def _sql_minhash_lsh(
         )
         for b in range(bands)
     )
-    return f"""
-    WITH {'RECURSIVE ' if recursive else ''}sh AS (
-        SELECT doc_id, unnest({_sql_shingles('text', k)}) AS s FROM documents
+    return f"""sh AS (
+        SELECT doc_id, unnest({sql_shingles('text', k)}) AS s FROM documents
     ),
     shh AS (
         SELECT doc_id, s, {sql_minhash_h32('s')} AS h FROM sh
@@ -2523,7 +2418,23 @@ def _sql_minhash_lsh(
     ),
     banded AS (
         {band_selects}
-    ),
+    )"""
+
+
+def _sql_minhash_lsh(
+    num_perm: int = 32,
+    bands: int = 8,
+    k: int = 5,
+    threshold: float = 0.6,
+    final: str | None = None,
+    recursive: bool = False,
+) -> str:
+    """DuckDB twin of operators/dedup.minhash_lsh_pairs_portable: the
+    same shingle hash, permutation family and band keys
+    (:func:`_sql_minhash_banded`), candidate join, and exact-Jaccard
+    verification — so the two engines can't drift."""
+    return f"""
+    WITH {'RECURSIVE ' if recursive else ''}{_sql_minhash_banded(num_perm, bands, k)},
     cand AS (
         SELECT a.doc_id AS id_a, b.doc_id AS id_b
         FROM banded a JOIN banded b
@@ -2555,39 +2466,8 @@ def _sql_incremental_near(
     Signatures are per-doc, so computing them over ALL documents and
     splitting sides at the candidate join equals the Spark side's
     separate subset pipelines exactly."""
-    from randas_spark.operators.dedup import (
-        MINHASH_MOD,
-        minhash_perm_consts,
-        sql_minhash_h32,
-    )
-
-    rpb = num_perm // bands
-    min_cols = ",\n               ".join(
-        f"min(({a} * h + {b}) % {MINHASH_MOD}) AS m{p}"
-        for p, (a, b) in enumerate(minhash_perm_consts(num_perm))
-    )
-    band_selects = "\n        UNION ALL ".join(
-        "SELECT doc_id, {b} AS band_id, {key} AS bk FROM mins".format(
-            b=b,
-            key=" || '|' || ".join(f"m{b * rpb + r}" for r in range(rpb)),
-        )
-        for b in range(bands)
-    )
     return f"""
-    WITH sh AS (
-        SELECT doc_id, unnest({_sql_shingles('text', k)}) AS s FROM documents
-    ),
-    shh AS (
-        SELECT doc_id, s, {sql_minhash_h32('s')} AS h FROM sh
-    ),
-    mins AS (
-        SELECT doc_id,
-               {min_cols}
-        FROM shh GROUP BY doc_id
-    ),
-    banded AS (
-        {band_selects}
-    ),
+    WITH {_sql_minhash_banded(num_perm, bands, k)},
     cand AS (
         SELECT a.doc_id AS id_batch, b.doc_id AS id_led
         FROM banded a JOIN banded b
@@ -3020,53 +2900,111 @@ def llm_dedup_simhash_det(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash_portable_pairs(d, "doc_id", "text", n_bits=32, bands=4, max_hamming=3)
 
 
-def _ivf_det_oracle() -> str:
-    """Full deterministic-IVF replay (seed -> assign -> probe -> score);
-    shared verbatim by llm_knn_ivf_det (fused) and llm_knn_ivf_persisted
-    (parquet index) — the persisted path hash-matching the SAME fit
-    replay is the proof the index layer is lossless."""
-    return f"""
-    WITH cent AS (
+#: md5-seeded centroid counts of the IVF family, as SQL over the fit table
+_CELLS_N32 = "greatest(16, count(*) // 32)"  # the persisted serving index
+_CELLS_SQRT = "greatest(16, CAST(floor(sqrt(count(*))) AS BIGINT))"  # bitext, IVFPQ
+_CELLS_SQRT_4N = "greatest(64, CAST(floor(sqrt(4 * count(*))) AS BIGINT))"  # kNN graph
+
+
+def _sql_ivf_cent(
+    cells: int | str, src: str = "embeddings", name: str = "cent", materialized: bool = False
+) -> str:
+    """The deterministic IVF seeding CTE: the first ``cells`` rows of
+    ``src`` in md5(vec_id) order become the centroids (``cell``,
+    ``center``). ``cells`` is a literal count or one of the ``_CELLS_*``
+    formulas, evaluated over ``src``."""
+    limit = cells if isinstance(cells, int) else f"(SELECT {cells} FROM {src})"
+    return f"""{name} AS{' MATERIALIZED' if materialized else ''} (
         SELECT vec_id AS cell, embedding AS center
-        FROM embeddings
-        ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 16
-    ),
-    assign AS (
-        SELECT cid, cv, cell FROM (
-            SELECT c.vec_id AS cid, c.embedding AS cv, ct.cell,
+        FROM {src}
+        ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {limit}
+    )"""
+
+
+def _sql_nearest_cells(
+    name: str,
+    a: str,
+    n: int,
+    src: str = "embeddings",
+    where: str = "",
+    vec: bool = True,
+    cent: str = "cent",
+    materialized: bool = False,
+) -> str:
+    """One "nearest-n cells by cosine" CTE: every ``src`` row (alias
+    ``a``, optionally filtered by ``where``) with its ``n`` nearest
+    ``cent`` centroids, ties to the lower cell, as (``{a}id``[, ``{a}v``
+    when ``vec``], ``cell``). n=1 is the corpus assignment, n=n_probe
+    the query probes; bitext's right/left sides use it the same way."""
+    cols = f"{a}id, {a}v, cell" if vec else f"{a}id, cell"
+    carry = f"{a}.vec_id AS {a}id, {a}.embedding AS {a}v" if vec else f"{a}.vec_id AS {a}id"
+    filt = f"\n            WHERE {where}" if where else ""
+    return f"""{name} AS{' MATERIALIZED' if materialized else ''} (
+        SELECT {cols} FROM (
+            SELECT {carry}, ct.cell,
                    row_number() OVER (
-                       PARTITION BY c.vec_id
-                       ORDER BY {sql_cosine('c.embedding', 'ct.center')} DESC, ct.cell
+                       PARTITION BY {a}.vec_id
+                       ORDER BY {sql_cosine(f'{a}.embedding', 'ct.center')} DESC, ct.cell
                    ) AS rn
-            FROM embeddings c CROSS JOIN cent ct
-        ) WHERE rn = 1
-    ),
-    probes AS (
-        SELECT qid, qv, cell FROM (
-            SELECT q.vec_id AS qid, q.embedding AS qv, ct.cell,
-                   row_number() OVER (
-                       PARTITION BY q.vec_id
-                       ORDER BY {sql_cosine('q.embedding', 'ct.center')} DESC, ct.cell
-                   ) AS rn
-            FROM embeddings q CROSS JOIN cent ct
-            WHERE q.vec_id < 5
-        ) WHERE rn <= 4
-    )
-    SELECT qid, cid, cos, rk FROM (
-        SELECT p.qid, a.cid, {sql_cosine('p.qv', 'a.cv')} AS cos,
+            FROM {src} {a} CROSS JOIN {cent} ct{filt}
+        ) WHERE {'rn = 1' if n == 1 else f'rn <= {n}'}
+    )"""
+
+
+def _sql_ivf_chain(
+    cells: int | str,
+    queries: str = "",
+    fit: str = "embeddings",
+    corpus: str = "embeddings",
+) -> str:
+    """``cent``, ``assign`` and ``probes`` CTEs of the deterministic IVF
+    replay: centroids seeded from ``fit``, every ``corpus`` row assigned
+    to its top-1 cell (with its vector), and the query rows (``q.``
+    predicate ``queries``; all of embeddings when empty) probing their
+    top-4 cells."""
+    return f"""{_sql_ivf_cent(cells, fit)},
+    {_sql_nearest_cells("assign", "c", 1, corpus)},
+    {_sql_nearest_cells("probes", "q", 4, where=queries)}"""
+
+
+def _sql_ivf_topk(top_k: int, cols: str = "qid, cid, cos, rk", cand: str = "") -> str:
+    """Score every probed (query, candidate) pair by cosine and keep each
+    query's ``top_k`` (cos DESC, cid ASC), self-matches excluded; ``cand``
+    is an optional predicate on the candidate row ``a``."""
+    cos = sql_cosine("p.qv", "a.cv")
+    return f"""SELECT {cols} FROM (
+        SELECT p.qid, a.cid, {cos} AS cos,
                row_number() OVER (
                    PARTITION BY p.qid
-                   ORDER BY {sql_cosine('p.qv', 'a.cv')} DESC, a.cid) AS rk
+                   ORDER BY {cos} DESC, a.cid) AS rk
         FROM probes p JOIN assign a USING (cell)
-        WHERE p.qid <> a.cid
-    ) WHERE rk <= 10
+        WHERE p.qid <> a.cid{f' AND {cand}' if cand else ''}
+    ) WHERE rk <= {top_k}"""
+
+
+def _ivf_knn_oracle(
+    cells: int | str,
+    queries: str,
+    top_k: int = 10,
+    fit: str = "embeddings",
+    corpus: str = "embeddings",
+    cand: str = "",
+    head: str = "",
+) -> str:
+    """Full deterministic-IVF kNN replay (seed -> assign -> probe ->
+    score) returning (qid, cid, cos, rk). ``head`` defines extra CTEs the
+    ``fit``/``corpus`` names may refer to. One replay serves the fused
+    operator, the persisted index (hash-matching the same replay is the
+    proof the index layer is lossless), the batch and streamed appends,
+    the kNN graph, filtered search and streamed serving."""
+    return f"""
+    WITH {f"{head}," if head else ""}
+    {_sql_ivf_chain(cells, queries, fit, corpus)}
+    {_sql_ivf_topk(top_k, cand=cand)}
     """
 
 
-@register(
-    "llm_knn_ivf_det",
-    oracle=_ivf_det_oracle(),
-)
+@register("llm_knn_ivf_det", oracle=_ivf_knn_oracle(16, "q.vec_id < 5"))
 def llm_knn_ivf_det(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic-seed IVF top-10 (operators/similarity.knn_ivf_det;
     16 md5-sampled centroid cells, 4-cell probe): the reproducible,
@@ -3078,49 +3016,6 @@ def llm_knn_ivf_det(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = t(spark, sf_dir, "embeddings")
     qs = emb.filter(F.col("vec_id") < 5)
     return knn_ivf_det(qs, emb, "vec_id", "vec_id", "embedding", n_cells=16, n_probe=4, top_k=10)
-
-
-def _ivf_adaptive_oracle() -> str:
-    """Deterministic-IVF replay with the ADAPTIVE cell count
-    (greatest(16, N // 32)) — the persisted index's build formula.
-    Same seed -> assign -> probe -> score shape as _ivf_det_oracle."""
-    return f"""
-    WITH cent AS (
-        SELECT vec_id AS cell, embedding AS center
-        FROM embeddings
-        ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-        LIMIT (SELECT greatest(16, count(*) // 32) FROM embeddings)
-    ),
-    assign AS (
-        SELECT cid, cv, cell FROM (
-            SELECT c.vec_id AS cid, c.embedding AS cv, ct.cell,
-                   row_number() OVER (
-                       PARTITION BY c.vec_id
-                       ORDER BY {sql_cosine('c.embedding', 'ct.center')} DESC, ct.cell
-                   ) AS rn
-            FROM embeddings c CROSS JOIN cent ct
-        ) WHERE rn = 1
-    ),
-    probes AS (
-        SELECT qid, qv, cell FROM (
-            SELECT q.vec_id AS qid, q.embedding AS qv, ct.cell,
-                   row_number() OVER (
-                       PARTITION BY q.vec_id
-                       ORDER BY {sql_cosine('q.embedding', 'ct.center')} DESC, ct.cell
-                   ) AS rn
-            FROM embeddings q CROSS JOIN cent ct
-            WHERE q.vec_id < 5
-        ) WHERE rn <= 4
-    )
-    SELECT qid, cid, cos, rk FROM (
-        SELECT p.qid, a.cid, {sql_cosine('p.qv', 'a.cv')} AS cos,
-               row_number() OVER (
-                   PARTITION BY p.qid
-                   ORDER BY {sql_cosine('p.qv', 'a.cv')} DESC, a.cid) AS rk
-        FROM probes p JOIN assign a USING (cell)
-        WHERE p.qid <> a.cid
-    ) WHERE rk <= 10
-    """
 
 
 def _ivf_adaptive_index(sf_dir: str, emb: DataFrame) -> tuple:
@@ -3142,7 +3037,7 @@ def _ivf_adaptive_index(sf_dir: str, emb: DataFrame) -> tuple:
     )
 
 
-@register("llm_knn_ivf_persisted", oracle=_ivf_adaptive_oracle())
+@register("llm_knn_ivf_persisted", oracle=_ivf_knn_oracle(_CELLS_N32, "q.vec_id < 5"))
 def llm_knn_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted-index IVF ANN — the second half of VERDICT r8 order #2
     (which named BOTH PQ codebooks and IVF centroids/assignments):
@@ -3180,57 +3075,23 @@ def llm_knn_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ivf_append_oracle(base_where: str = "vec_id % 10 <> 9") -> str:
+def _ivf_append_oracle(base_where: str) -> str:
     """Replay of incremental IVF ingestion: centroids seeded from the
-    BASE ingest only (``base_where``; default = the batch-append query's
-    90% split), every row — base and the later batch(es) — assigned
-    against those frozen centroids, probes and scoring over the full
-    index. Cell count adapts to the base, matching ivf_build_index's
-    formula at build time. Parameterized (r10) so the STREAMING ingest
-    twin replays the same semantics over its own base split — append
-    order never matters because assignment is per-row against frozen
-    centroids, which is exactly the property the oracle proves."""
-    return f"""
-    WITH base AS (SELECT * FROM embeddings WHERE {base_where}),
-    cent AS (
-        SELECT vec_id AS cell, embedding AS center
-        FROM base
-        ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-        LIMIT (SELECT greatest(16, count(*) // 32) FROM base)
-    ),
-    assign AS (
-        SELECT cid, cv, cell FROM (
-            SELECT c.vec_id AS cid, c.embedding AS cv, ct.cell,
-                   row_number() OVER (
-                       PARTITION BY c.vec_id
-                       ORDER BY {sql_cosine('c.embedding', 'ct.center')} DESC, ct.cell
-                   ) AS rn
-            FROM embeddings c CROSS JOIN cent ct
-        ) WHERE rn = 1
-    ),
-    probes AS (
-        SELECT qid, qv, cell FROM (
-            SELECT q.vec_id AS qid, q.embedding AS qv, ct.cell,
-                   row_number() OVER (
-                       PARTITION BY q.vec_id
-                       ORDER BY {sql_cosine('q.embedding', 'ct.center')} DESC, ct.cell
-                   ) AS rn
-            FROM embeddings q CROSS JOIN cent ct
-            WHERE q.vec_id < 5
-        ) WHERE rn <= 4
+    BASE ingest only (``base_where``), every row — base and the later
+    batch(es) — assigned against those frozen centroids, probes and
+    scoring over the full index. Append order never matters because
+    assignment is per-row against frozen centroids, which is exactly
+    the property the oracle proves; the streaming ingest twin replays
+    the same over its own base split."""
+    return _ivf_knn_oracle(
+        _CELLS_N32,
+        "q.vec_id < 5",
+        fit="base",
+        head=f"base AS (SELECT * FROM embeddings WHERE {base_where})",
     )
-    SELECT qid, cid, cos, rk FROM (
-        SELECT p.qid, a.cid, {sql_cosine('p.qv', 'a.cv')} AS cos,
-               row_number() OVER (
-                   PARTITION BY p.qid
-                   ORDER BY {sql_cosine('p.qv', 'a.cv')} DESC, a.cid) AS rk
-        FROM probes p JOIN assign a USING (cell)
-        WHERE p.qid <> a.cid
-    ) WHERE rk <= 10
-    """
 
 
-@register("llm_knn_ivf_append", oracle=_ivf_append_oracle())
+@register("llm_knn_ivf_append", oracle=_ivf_append_oracle("vec_id % 10 <> 9"))
 def llm_knn_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental IVF index maintenance (VERDICT r9 #4 — the missing
     member of the incremental-ingestion family): the base ingest
@@ -3283,45 +3144,7 @@ def llm_knn_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "llm_knn_graph",
-    oracle=f"""
-    WITH cent AS (
-        SELECT vec_id AS cell, embedding AS center
-        FROM embeddings
-        ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-        LIMIT (SELECT greatest(64, CAST(floor(sqrt(4 * count(*))) AS BIGINT)) FROM embeddings)
-    ),
-    assign AS (
-        SELECT cid, cv, cell FROM (
-            SELECT c.vec_id AS cid, c.embedding AS cv, ct.cell,
-                   row_number() OVER (
-                       PARTITION BY c.vec_id
-                       ORDER BY {sql_cosine('c.embedding', 'ct.center')} DESC, ct.cell
-                   ) AS rn
-            FROM embeddings c CROSS JOIN cent ct
-        ) WHERE rn = 1
-    ),
-    probes AS (
-        SELECT qid, qv, cell FROM (
-            SELECT q.vec_id AS qid, q.embedding AS qv, ct.cell,
-                   row_number() OVER (
-                       PARTITION BY q.vec_id
-                       ORDER BY {sql_cosine('q.embedding', 'ct.center')} DESC, ct.cell
-                   ) AS rn
-            FROM embeddings q CROSS JOIN cent ct
-        ) WHERE rn <= 4
-    )
-    SELECT qid, cid, cos, rk FROM (
-        SELECT p.qid, a.cid, {sql_cosine('p.qv', 'a.cv')} AS cos,
-               row_number() OVER (
-                   PARTITION BY p.qid
-                   ORDER BY {sql_cosine('p.qv', 'a.cv')} DESC, a.cid) AS rk
-        FROM probes p JOIN assign a USING (cell)
-        WHERE p.qid <> a.cid
-    ) WHERE rk <= 5
-    """,
-)
+@register("llm_knn_graph", oracle=_ivf_knn_oracle(_CELLS_SQRT_4N, "", top_k=5))
 def llm_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate k-NN GRAPH: every vector gets its top-5 neighbors —
     the all-points primitive under semantic dedup (SemDeDup-style
@@ -3349,41 +3172,9 @@ def llm_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "llm_semantic_dedup",
     oracle=f"""
-    WITH RECURSIVE cent AS (
-        SELECT vec_id AS cell, embedding AS center
-        FROM embeddings
-        ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-        LIMIT (SELECT greatest(64, CAST(floor(sqrt(4 * count(*))) AS BIGINT)) FROM embeddings)
-    ),
-    assign AS (
-        SELECT cid, cv, cell FROM (
-            SELECT c.vec_id AS cid, c.embedding AS cv, ct.cell,
-                   row_number() OVER (
-                       PARTITION BY c.vec_id
-                       ORDER BY {sql_cosine('c.embedding', 'ct.center')} DESC, ct.cell
-                   ) AS rn
-            FROM embeddings c CROSS JOIN cent ct
-        ) WHERE rn = 1
-    ),
-    probes AS (
-        SELECT qid, qv, cell FROM (
-            SELECT q.vec_id AS qid, q.embedding AS qv, ct.cell,
-                   row_number() OVER (
-                       PARTITION BY q.vec_id
-                       ORDER BY {sql_cosine('q.embedding', 'ct.center')} DESC, ct.cell
-                   ) AS rn
-            FROM embeddings q CROSS JOIN cent ct
-        ) WHERE rn <= 4
-    ),
+    WITH RECURSIVE {_sql_ivf_chain(_CELLS_SQRT_4N)},
     graph AS (
-        SELECT qid, cid, cos FROM (
-            SELECT p.qid, a.cid, {sql_cosine('p.qv', 'a.cv')} AS cos,
-                   row_number() OVER (
-                       PARTITION BY p.qid
-                       ORDER BY {sql_cosine('p.qv', 'a.cv')} DESC, a.cid) AS rk
-            FROM probes p JOIN assign a USING (cell)
-            WHERE p.qid <> a.cid
-        ) WHERE rk <= 5
+        {_sql_ivf_topk(5, "qid, cid, cos")}
     ),
     edges AS (SELECT qid AS id_a, cid AS id_b FROM graph WHERE cos >= 0.35),
     und AS (
@@ -3444,31 +3235,7 @@ def llm_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                    i -> trunc(30000 * sin(2 * pi() * freq * i / 8000 + phase))
                         / 32768) AS s
         FROM seedp
-    ), feat AS (
-        SELECT doc_id,
-               list_reduce(list_transform(s, x -> x * x), (a, b) -> a + b) AS ss,
-               list_reduce(s, (a, b) -> a + b) AS sm,
-               list_reduce(list_transform(s, x -> abs(x)), (a, b) -> a + b) AS sa,
-               list_max(list_transform(s, x -> abs(x))) AS peak,
-               CAST(len(list_filter(generate_series(2, 512),
-                        i -> (s[i-1] < 0) <> (s[i] < 0))) AS DOUBLE) / 511 AS zcr,
-               list_reduce(list_transform(s[1:256], x -> x * x), (a, b) -> a + b) AS e1r,
-               list_reduce(list_transform(s[257:512], x -> x * x), (a, b) -> a + b) AS e2r
-        FROM smp
-    )
-    SELECT doc_id, 'audio' AS modality,
-           CAST(1068 AS BIGINT) AS n_bytes,
-           CAST(8000 AS BIGINT) AS sample_rate,
-           {sql_fround('CAST(512 AS DOUBLE) / 8000', 6)} AS f_dur,
-           {sql_fround('sqrt(ss / 512)', 6)} AS f_rms,
-           {sql_fround('peak', 6)} AS f_peak,
-           {sql_fround('zcr', 6)} AS f_zcr,
-           {sql_fround('sm / 512', 6)} AS f_mean,
-           {sql_fround('sa / 512', 6)} AS f_meanabs,
-           {sql_fround('(CASE WHEN e1r = 0 THEN 1e-30 ELSE e1r END) / '
-                       '(CASE WHEN e2r = 0 THEN 1e-30 ELSE e2r END)', 6)} AS f_eratio,
-           {sql_fround('zcr * 8000 / 2.0', 6)} AS f_centroid
-    FROM feat
+    ), {_sql_audio_features(512, 1068)}
     """,
 )
 def llm_multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3486,20 +3253,8 @@ def llm_multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = t(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
     out = extract_audio_features(attach_wav_payload(d, "doc_id", "text"), fake=False)
-    f = F.col("feature")
-    return out.select(
-        "doc_id",
-        "modality",
-        "n_bytes",
-        "sample_rate",
-        fround(f[0], 6).alias("f_dur"),
-        fround(f[1], 6).alias("f_rms"),
-        fround(f[2], 6).alias("f_peak"),
-        fround(f[3], 6).alias("f_zcr"),
-        fround(f[4], 6).alias("f_mean"),
-        fround(f[5], 6).alias("f_meanabs"),
-        fround(f[6], 6).alias("f_eratio"),
-        fround(f[7], 6).alias("f_centroid"),
+    return _feature_columns(
+        out, _AUDIO_FEATURES, "doc_id", "modality", "n_bytes", "sample_rate"
     )
 
 
@@ -3527,12 +3282,7 @@ def _sql_g711_a(b: str) -> str:
 @register(
     "llm_multimodal_audio_g711",
     oracle=f"""
-    WITH dig AS (
-        SELECT doc_id, doc_id % 2 = 0 AS is_mu,
-               list_transform(generate_series(0, 15),
-                   k -> CAST(('0x' || substr(md5(text), 2*k + 1, 2)) AS INT)) AS dg
-        FROM documents
-    ), smp AS (
+    WITH {_sql_digest("doc_id, doc_id % 2 = 0 AS is_mu")}, smp AS (
         SELECT doc_id,
                list_transform(generate_series(0, 127),
                    i -> (CASE WHEN is_mu
@@ -3540,31 +3290,7 @@ def _sql_g711_a(b: str) -> str:
                               ELSE {_sql_g711_a('dg[(i % 16) + 1]')}
                          END) / 32768.0) AS s
         FROM dig
-    ), feat AS (
-        SELECT doc_id,
-               list_reduce(list_transform(s, x -> x * x), (a, b) -> a + b) AS ss,
-               list_reduce(s, (a, b) -> a + b) AS sm,
-               list_reduce(list_transform(s, x -> abs(x)), (a, b) -> a + b) AS sa,
-               list_max(list_transform(s, x -> abs(x))) AS peak,
-               CAST(len(list_filter(generate_series(2, 128),
-                        i -> (s[i-1] < 0) <> (s[i] < 0))) AS DOUBLE) / 127 AS zcr,
-               list_reduce(list_transform(s[1:64], x -> x * x), (a, b) -> a + b) AS e1r,
-               list_reduce(list_transform(s[65:128], x -> x * x), (a, b) -> a + b) AS e2r
-        FROM smp
-    )
-    SELECT doc_id, 'audio' AS modality,
-           CAST(186 AS BIGINT) AS n_bytes,
-           CAST(8000 AS BIGINT) AS sample_rate,
-           {sql_fround('CAST(128 AS DOUBLE) / 8000', 6)} AS f_dur,
-           {sql_fround('sqrt(ss / 128)', 6)} AS f_rms,
-           {sql_fround('peak', 6)} AS f_peak,
-           {sql_fround('zcr', 6)} AS f_zcr,
-           {sql_fround('sm / 128', 6)} AS f_mean,
-           {sql_fround('sa / 128', 6)} AS f_meanabs,
-           {sql_fround('(CASE WHEN e1r = 0 THEN 1e-30 ELSE e1r END) / '
-                       '(CASE WHEN e2r = 0 THEN 1e-30 ELSE e2r END)', 6)} AS f_eratio,
-           {sql_fround('zcr * 8000 / 2.0', 6)} AS f_centroid
-    FROM feat
+    ), {_sql_audio_features(128, 186)}
     """,
 )
 def llm_multimodal_audio_g711(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3589,20 +3315,8 @@ def llm_multimodal_audio_g711(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = t(spark, sf_dir, "documents")
     out = extract_audio_features(attach_g711_payload(d, "doc_id", "text"), fake=False)
-    f = F.col("feature")
-    return out.select(
-        "doc_id",
-        "modality",
-        "n_bytes",
-        "sample_rate",
-        fround(f[0], 6).alias("f_dur"),
-        fround(f[1], 6).alias("f_rms"),
-        fround(f[2], 6).alias("f_peak"),
-        fround(f[3], 6).alias("f_zcr"),
-        fround(f[4], 6).alias("f_mean"),
-        fround(f[5], 6).alias("f_meanabs"),
-        fround(f[6], 6).alias("f_eratio"),
-        fround(f[7], 6).alias("f_centroid"),
+    return _feature_columns(
+        out, _AUDIO_FEATURES, "doc_id", "modality", "n_bytes", "sample_rate"
     )
 
 
@@ -3630,12 +3344,7 @@ _ADPCM_NEXT_PRED = """GREATEST(-32768, LEAST(32767, pred +
 @register(
     "llm_multimodal_audio_adpcm",
     oracle=f"""
-    WITH RECURSIVE dig AS (
-        SELECT doc_id,
-               list_transform(generate_series(0, 15),
-                   k -> CAST(('0x' || substr(md5(text), 2*k + 1, 2)) AS INT)) AS dg
-        FROM documents
-    ), seed AS (
+    WITH RECURSIVE {_sql_digest()}, seed AS (
         SELECT doc_id, dg,
                CASE WHEN dg[1] + 256 * dg[2] >= 32768
                     THEN dg[1] + 256 * dg[2] - 65536
@@ -3660,31 +3369,7 @@ _ADPCM_NEXT_PRED = """GREATEST(-32768, LEAST(32767, pred +
         )
     ), smp AS (
         SELECT doc_id, s FROM dec WHERE i = 128
-    ), feat AS (
-        SELECT doc_id,
-               list_reduce(list_transform(s, x -> x * x), (a, b) -> a + b) AS ss,
-               list_reduce(s, (a, b) -> a + b) AS sm,
-               list_reduce(list_transform(s, x -> abs(x)), (a, b) -> a + b) AS sa,
-               list_max(list_transform(s, x -> abs(x))) AS peak,
-               CAST(len(list_filter(generate_series(2, 129),
-                        i -> (s[i-1] < 0) <> (s[i] < 0))) AS DOUBLE) / 128 AS zcr,
-               list_reduce(list_transform(s[1:64], x -> x * x), (a, b) -> a + b) AS e1r,
-               list_reduce(list_transform(s[65:129], x -> x * x), (a, b) -> a + b) AS e2r
-        FROM smp
-    )
-    SELECT doc_id, 'audio' AS modality,
-           CAST(128 AS BIGINT) AS n_bytes,
-           CAST(8000 AS BIGINT) AS sample_rate,
-           {sql_fround('CAST(129 AS DOUBLE) / 8000', 6)} AS f_dur,
-           {sql_fround('sqrt(ss / 129)', 6)} AS f_rms,
-           {sql_fround('peak', 6)} AS f_peak,
-           {sql_fround('zcr', 6)} AS f_zcr,
-           {sql_fround('sm / 129', 6)} AS f_mean,
-           {sql_fround('sa / 129', 6)} AS f_meanabs,
-           {sql_fround('(CASE WHEN e1r = 0 THEN 1e-30 ELSE e1r END) / '
-                       '(CASE WHEN e2r = 0 THEN 1e-30 ELSE e2r END)', 6)} AS f_eratio,
-           {sql_fround('zcr * 8000 / 2.0', 6)} AS f_centroid
-    FROM feat
+    ), {_sql_audio_features(129, 128)}
     """,
 )
 def llm_multimodal_audio_adpcm(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3709,20 +3394,8 @@ def llm_multimodal_audio_adpcm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = t(spark, sf_dir, "documents")
     out = extract_audio_features(attach_adpcm_payload(d, "doc_id", "text"), fake=False)
-    f = F.col("feature")
-    return out.select(
-        "doc_id",
-        "modality",
-        "n_bytes",
-        "sample_rate",
-        fround(f[0], 6).alias("f_dur"),
-        fround(f[1], 6).alias("f_rms"),
-        fround(f[2], 6).alias("f_peak"),
-        fround(f[3], 6).alias("f_zcr"),
-        fround(f[4], 6).alias("f_mean"),
-        fround(f[5], 6).alias("f_meanabs"),
-        fround(f[6], 6).alias("f_eratio"),
-        fround(f[7], 6).alias("f_centroid"),
+    return _feature_columns(
+        out, _AUDIO_FEATURES, "doc_id", "modality", "n_bytes", "sample_rate"
     )
 
 
@@ -3771,19 +3444,8 @@ def llm_length_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _graph_rank_oracle(iters: int = 3, damping: float = 0.85) -> str:
-    jacc_edges = """
-    sh AS (
-        SELECT doc_id, unnest(list_distinct(list_transform(
-            generate_series(1, greatest(len(string_split(lower(text), ' ')) - 4, 1)),
-            i -> array_to_string(string_split(lower(text), ' ')[i:i+4], ' ')))) AS s
-        FROM documents
-    ), sizes AS (
-        SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id
-    ), inter AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_inter
-        FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ), edges AS (
+    jacc_edges = f"""
+    {_sql_jaccard_head()}, edges AS (
         SELECT id_a, id_b
         FROM inter
         JOIN sizes sa ON sa.doc_id = id_a
@@ -4063,6 +3725,19 @@ def llm_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
+#: Squared Euclidean distance from ``v.qx`` (integer-quantized
+#: coordinates) to the centroid ``c.carr`` as the engine's
+#: array-index-order left fold — the one distance of the k-means and PQ
+#: replays.
+_SQL_SQ_DIST = (
+    "list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
+    "list_transform(generate_series(1, len(v.qx)), "
+    "i -> (CAST(v.qx[i] AS DOUBLE) - c.carr[i]) * "
+    "(CAST(v.qx[i] AS DOUBLE) - c.carr[i]))), "
+    "(acc, x) -> acc + x)"
+)
+
+
 def _kmeans_oracle(
     k: int = 8,
     n_iter: int = 4,
@@ -4078,15 +3753,6 @@ def _kmeans_oracle(
     sums divided once as DOUBLE, so every iteration is bit-identical to
     operators/cluster.kmeans_lloyd_det."""
 
-    def dist(v: str, c: str) -> str:
-        return (
-            f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-            f"list_transform(generate_series(1, len({v}.qx)), "
-            f"i -> (CAST({v}.qx[i] AS DOUBLE) - {c}.carr[i]) * "
-            f"(CAST({v}.qx[i] AS DOUBLE) - {c}.carr[i]))), "
-            f"(acc, x) -> acc + x)"
-        )
-
     parts = [
         f"""v AS MATERIALIZED (
         SELECT vec_id AS vid,
@@ -4100,13 +3766,12 @@ def _kmeans_oracle(
     )"""
     ]
     for it in range(1, n_iter + 1):
-        d = dist("v", "c")
         parts.append(
             f"""asg{it} AS MATERIALIZED (
         SELECT vid, qx, cluster, dist FROM (
-            SELECT v.vid, v.qx, c.cluster, {d} AS dist,
+            SELECT v.vid, v.qx, c.cluster, {_SQL_SQ_DIST} AS dist,
                    row_number() OVER (
-                       PARTITION BY v.vid ORDER BY ({d}) ASC, c.cluster ASC
+                       PARTITION BY v.vid ORDER BY ({_SQL_SQ_DIST}) ASC, c.cluster ASC
                    ) AS rn
             FROM v CROSS JOIN cent{it - 1} c
         ) WHERE rn = 1
@@ -4158,19 +3823,8 @@ def llm_kmeans_det(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_split_leakage_safe",
-    oracle="""
-    WITH RECURSIVE sh AS (
-        SELECT doc_id, unnest(list_distinct(list_transform(
-            generate_series(1, greatest(len(string_split(lower(text), ' ')) - 4, 1)),
-            i -> array_to_string(string_split(lower(text), ' ')[i:i+4], ' ')))) AS s
-        FROM documents
-    ), sizes AS (
-        SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id
-    ), inter AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_inter
-        FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ), edges AS (
+    oracle=f"""
+    WITH RECURSIVE {_sql_jaccard_head()}, edges AS (
         SELECT id_a, id_b
         FROM inter
         JOIN sizes sa ON sa.doc_id = id_a
@@ -4344,7 +3998,7 @@ def llm_minhash_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t(spark, sf_dir, "documents")
     sh = (
         fan_out(d)
-        .select(F.col("doc_id"), shingles(F.col("text"), 5).alias("sh"))
+        .select(F.col("doc_id"), shingles(F.col("text"), 5).alias("sh", metadata={"k": 5}))
         .localCheckpoint()
     )
     true_pairs = ngram_jaccard_pairs(
@@ -4771,7 +4425,7 @@ def _pq_oracle(
     text (and llm_knn_pq_adc's recorded hash) is unchanged.
 
     ``n_probe`` (r11) composes the IVFPQ replay: when set, the coarse-
-    cell chain (_ivf_adaptive_oracle's cent/assign/probes shape, at the
+    cell chain (_sql_ivf_cent/_sql_nearest_cells, at the
     composite's greatest(16, floor(sqrt(N))) granularity — see
     _ivfpq_index for why the COMPRESSED index wants sqrt cells where
     the raw-vector IVF wants N/32) is emitted and the ADC scan is
@@ -4780,15 +4434,6 @@ def _pq_oracle(
     candidate set. The PQ fit chain is untouched (by_residual=false:
     shared codebooks, fit a pure function of the corpus), so the
     composite oracle is the two already-proven chains joined."""
-
-    def dist(v: str, c: str) -> str:
-        return (
-            f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-            f"list_transform(generate_series(1, len({v}.qx)), "
-            f"i -> (CAST({v}.qx[i] AS DOUBLE) - {c}.carr[i]) * "
-            f"(CAST({v}.qx[i] AS DOUBLE) - {c}.carr[i]))), "
-            f"(acc, x) -> acc + x)"
-        )
 
     fitted = fit_where.strip().upper() != "TRUE"
     parts = []
@@ -4816,13 +4461,12 @@ def _pq_oracle(
     )"""
             )
         for it in range(1, n_iter + 1):
-            d = dist("v", "c")
             parts.append(
                 f"""s{j}asg{it} AS MATERIALIZED (
         SELECT vid, qx, cluster FROM (
             SELECT v.vid, v.qx, c.cluster,
                    row_number() OVER (
-                       PARTITION BY v.vid ORDER BY ({d}) ASC, c.cluster ASC
+                       PARTITION BY v.vid ORDER BY ({_SQL_SQ_DIST}) ASC, c.cluster ASC
                    ) AS rn
             FROM s{j}v v CROSS JOIN s{j}cent{it - 1} c
         ) WHERE rn = 1
@@ -4846,13 +4490,12 @@ def _pq_oracle(
         if fitted:
             # final encode assignment over ALL rows against the frozen
             # base-fit centroids — the append path's semantics
-            d = dist("v", "c")
             parts.append(
                 f"""s{j}enc AS MATERIALIZED (
         SELECT vid, cluster FROM (
             SELECT v.vid, c.cluster,
                    row_number() OVER (
-                       PARTITION BY v.vid ORDER BY ({d}) ASC, c.cluster ASC
+                       PARTITION BY v.vid ORDER BY ({_SQL_SQ_DIST}) ASC, c.cluster ASC
                    ) AS rn
             FROM s{j}venc v CROSS JOIN s{j}cent{n_iter - 1} c
         ) WHERE rn = 1
@@ -4861,7 +4504,7 @@ def _pq_oracle(
         lut_src = f"s{j}venc" if fitted else f"s{j}v"
         parts.append(
             f"""s{j}lut AS MATERIALIZED (
-        SELECT v.vid AS qid, c.cluster AS code, {dist('v', 'c')} AS d
+        SELECT v.vid AS qid, c.cluster AS code, {_SQL_SQ_DIST} AS d
         FROM {lut_src} v CROSS JOIN s{j}cent{n_iter - 1} c
         WHERE v.vid < {n_queries}
     )"""
@@ -4879,36 +4522,12 @@ def _pq_oracle(
     )
     adc_sum = " + ".join(f"l{j}.d" for j in range(m))
     if n_probe is not None:
-        parts.append(
-            f"""pcent AS MATERIALIZED (
-        SELECT vec_id AS cell, embedding AS center
-        FROM embeddings
-        ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-        LIMIT (SELECT greatest(16, CAST(floor(sqrt(count(*))) AS BIGINT))
-               FROM embeddings)
-    ),
-    passign AS MATERIALIZED (
-        SELECT cid, cell FROM (
-            SELECT c.vec_id AS cid, ct.cell,
-                   row_number() OVER (
-                       PARTITION BY c.vec_id
-                       ORDER BY {sql_cosine('c.embedding', 'ct.center')} DESC, ct.cell
-                   ) AS rn
-            FROM embeddings c CROSS JOIN pcent ct
-        ) WHERE rn = 1
-    ),
-    pprobes AS MATERIALIZED (
-        SELECT qid, cell FROM (
-            SELECT q.vec_id AS qid, ct.cell,
-                   row_number() OVER (
-                       PARTITION BY q.vec_id
-                       ORDER BY {sql_cosine('q.embedding', 'ct.center')} DESC, ct.cell
-                   ) AS rn
-            FROM embeddings q CROSS JOIN pcent ct
-            WHERE q.vec_id < {n_queries}
-        ) WHERE rn <= {n_probe}
-    )"""
-        )
+        coarse = dict(vec=False, cent="pcent", materialized=True)
+        parts += [
+            _sql_ivf_cent(_CELLS_SQRT, name="pcent", materialized=True),
+            _sql_nearest_cells("passign", "c", 1, **coarse),
+            _sql_nearest_cells("pprobes", "q", n_probe, where=f"q.vec_id < {n_queries}", **coarse),
+        ]
     prune_joins = (
         " JOIN passign ia ON ia.cid = c.cid"
         " JOIN pprobes p ON p.cell = ia.cell AND p.qid = l0.qid"
@@ -6555,35 +6174,9 @@ def _bitext_oracle() -> str:
     left side probing top-2, candidates per shared cell, mutual-best
     with a top-2 difference margin."""
     return f"""
-    WITH cent AS (
-        SELECT vec_id AS cell, embedding AS center
-        FROM embeddings
-        ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-        LIMIT (SELECT greatest(16, CAST(floor(sqrt(count(*))) AS BIGINT))
-               FROM embeddings)
-    ),
-    ra AS (
-        SELECT rid, rv, cell FROM (
-            SELECT r.vec_id AS rid, r.embedding AS rv, ct.cell,
-                   row_number() OVER (
-                       PARTITION BY r.vec_id
-                       ORDER BY {sql_cosine('r.embedding', 'ct.center')} DESC, ct.cell
-                   ) AS rn
-            FROM embeddings r CROSS JOIN cent ct
-            WHERE r.vec_id % 2 = 1
-        ) WHERE rn = 1
-    ),
-    lp AS (
-        SELECT lid, lv, cell FROM (
-            SELECT l.vec_id AS lid, l.embedding AS lv, ct.cell,
-                   row_number() OVER (
-                       PARTITION BY l.vec_id
-                       ORDER BY {sql_cosine('l.embedding', 'ct.center')} DESC, ct.cell
-                   ) AS rn
-            FROM embeddings l CROSS JOIN cent ct
-            WHERE l.vec_id % 2 = 0
-        ) WHERE rn <= 2
-    ),
+    WITH {_sql_ivf_cent(_CELLS_SQRT)},
+    {_sql_nearest_cells("ra", "r", 1, where="r.vec_id % 2 = 1")},
+    {_sql_nearest_cells("lp", "l", 2, where="l.vec_id % 2 = 0")},
     cand AS (
         SELECT lp.lid, ra.rid, {sql_cosine('lp.lv', 'ra.rv')} AS cos
         FROM lp JOIN ra USING (cell)
@@ -6780,42 +6373,9 @@ def _ann_recall_oracle() -> str:
     replay (_pq_oracle with n_probe, 50 queries) as a CTE — the
     _pq_rerank_oracle nested-WITH pattern."""
     return f"""
-    WITH cent AS (
-        SELECT vec_id AS cell, embedding AS center
-        FROM embeddings
-        ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-        LIMIT (SELECT greatest(16, count(*) // 32) FROM embeddings)
-    ),
-    assign AS (
-        SELECT cid, cv, cell FROM (
-            SELECT c.vec_id AS cid, c.embedding AS cv, ct.cell,
-                   row_number() OVER (
-                       PARTITION BY c.vec_id
-                       ORDER BY {sql_cosine('c.embedding', 'ct.center')} DESC, ct.cell
-                   ) AS rn
-            FROM embeddings c CROSS JOIN cent ct
-        ) WHERE rn = 1
-    ),
-    probes AS (
-        SELECT qid, qv, cell FROM (
-            SELECT q.vec_id AS qid, q.embedding AS qv, ct.cell,
-                   row_number() OVER (
-                       PARTITION BY q.vec_id
-                       ORDER BY {sql_cosine('q.embedding', 'ct.center')} DESC, ct.cell
-                   ) AS rn
-            FROM embeddings q CROSS JOIN cent ct
-            WHERE q.vec_id < 50
-        ) WHERE rn <= 4
-    ),
+    WITH {_sql_ivf_chain(_CELLS_N32, "q.vec_id < 50")},
     approx AS (
-        SELECT qid, cid FROM (
-            SELECT p.qid, a.cid,
-                   row_number() OVER (
-                       PARTITION BY p.qid
-                       ORDER BY {sql_cosine('p.qv', 'a.cv')} DESC, a.cid) AS rk
-            FROM probes p JOIN assign a USING (cell)
-            WHERE p.qid <> a.cid
-        ) WHERE rk <= 10
+        {_sql_ivf_topk(10, "qid, cid")}
     ),
     approx_ivfpq AS (
         {_pq_oracle(n_queries=50, top_k=10, n_probe=4)}
@@ -7090,19 +6650,8 @@ def llm_corpus_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_cross_source_overlap",
-    oracle="""
-    WITH sh AS (
-        SELECT doc_id, unnest(list_distinct(list_transform(
-            generate_series(1, greatest(len(string_split(lower(text), ' ')) - 4, 1)),
-            i -> array_to_string(string_split(lower(text), ' ')[i:i+4], ' ')))) AS s
-        FROM documents
-    ), sizes AS (
-        SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id
-    ), inter AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_inter
-        FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ), pairs AS (
+    oracle=f"""
+    WITH {_sql_jaccard_head()}, pairs AS (
         SELECT id_a, id_b,
                CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter) AS jaccard
         FROM inter
@@ -7179,50 +6728,10 @@ def llm_cross_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ivf_filtered_oracle() -> str:
-    """Adaptive-cell IVF replay with a metadata predicate applied to
-    the CANDIDATE side before ranking (post-filter inside the probed
-    cells — top-k among survivors)."""
-    return f"""
-    WITH cent AS (
-        SELECT vec_id AS cell, embedding AS center
-        FROM embeddings
-        ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-        LIMIT (SELECT greatest(16, count(*) // 32) FROM embeddings)
-    ),
-    assign AS (
-        SELECT cid, cv, cell FROM (
-            SELECT c.vec_id AS cid, c.embedding AS cv, ct.cell,
-                   row_number() OVER (
-                       PARTITION BY c.vec_id
-                       ORDER BY {sql_cosine('c.embedding', 'ct.center')} DESC, ct.cell
-                   ) AS rn
-            FROM embeddings c CROSS JOIN cent ct
-        ) WHERE rn = 1
-    ),
-    probes AS (
-        SELECT qid, qv, cell FROM (
-            SELECT q.vec_id AS qid, q.embedding AS qv, ct.cell,
-                   row_number() OVER (
-                       PARTITION BY q.vec_id
-                       ORDER BY {sql_cosine('q.embedding', 'ct.center')} DESC, ct.cell
-                   ) AS rn
-            FROM embeddings q CROSS JOIN cent ct
-            WHERE q.vec_id < 5
-        ) WHERE rn <= 4
-    )
-    SELECT qid, cid, cos, rk FROM (
-        SELECT p.qid, a.cid, {sql_cosine('p.qv', 'a.cv')} AS cos,
-               row_number() OVER (
-                   PARTITION BY p.qid
-                   ORDER BY {sql_cosine('p.qv', 'a.cv')} DESC, a.cid) AS rk
-        FROM probes p JOIN assign a USING (cell)
-        WHERE p.qid <> a.cid AND a.cid % 3 = 0
-    ) WHERE rk <= 10
-    """
-
-
-@register("llm_knn_filtered", oracle=_ivf_filtered_oracle())
+@register(
+    "llm_knn_filtered",
+    oracle=_ivf_knn_oracle(_CELLS_N32, "q.vec_id < 5", cand="a.cid % 3 = 0"),
+)
 def llm_knn_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FILTERED vector search — the vector-store staple: top-k nearest
     AMONG corpus rows satisfying a metadata predicate (here cid % 3 == 0
@@ -7261,22 +6770,8 @@ def _ivf_stats_oracle() -> str:
     """Replay of the index balance report: adaptive-cell assignment
     counts rolled up to distribution stats."""
     return f"""
-    WITH cent AS (
-        SELECT vec_id AS cell, embedding AS center
-        FROM embeddings
-        ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-        LIMIT (SELECT greatest(16, count(*) // 32) FROM embeddings)
-    ),
-    assign AS (
-        SELECT cid, cell FROM (
-            SELECT c.vec_id AS cid, ct.cell,
-                   row_number() OVER (
-                       PARTITION BY c.vec_id
-                       ORDER BY {sql_cosine('c.embedding', 'ct.center')} DESC, ct.cell
-                   ) AS rn
-            FROM embeddings c CROSS JOIN cent ct
-        ) WHERE rn = 1
-    ),
+    WITH {_sql_ivf_cent(_CELLS_N32)},
+    {_sql_nearest_cells("assign", "c", 1, vec=False)},
     cc AS (SELECT cell, count(*) AS c FROM assign GROUP BY cell)
     SELECT CAST((SELECT count(*) FROM cent) AS BIGINT) AS n_cells,
            CAST(count(*) AS BIGINT) AS n_nonempty_cells,
@@ -7437,7 +6932,7 @@ def llm_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The oracle composes the two already-proven replay chains — the
     blocked deterministic PQ fit (_pq_oracle) and the adaptive coarse
-    assignment (_ivf_adaptive_oracle's shape) — joined on candidate
+    assignment (_sql_ivf_cent/_sql_nearest_cells) — joined on candidate
     cells, so the full composite is value-pinned, not just row-counted.
 
     Integrity: index keyed by all build params + source-parquet

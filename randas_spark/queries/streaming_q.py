@@ -912,46 +912,15 @@ def stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ann_serve_oracle() -> str:
-    from randas_spark.functions.vectors import sql_cosine
+    from randas_spark.queries.llm import _CELLS_N32, _ivf_knn_oracle
 
-    return f"""
-    WITH corpus AS (SELECT * FROM embeddings WHERE vec_id % 2 = 0),
-    cent AS (
-        SELECT vec_id AS cell, embedding AS center
-        FROM corpus
-        ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-        LIMIT (SELECT greatest(16, count(*) // 32) FROM corpus)
-    ),
-    assign AS (
-        SELECT cid, cv, cell FROM (
-            SELECT c.vec_id AS cid, c.embedding AS cv, ct.cell,
-                   row_number() OVER (
-                       PARTITION BY c.vec_id
-                       ORDER BY {sql_cosine('c.embedding', 'ct.center')} DESC, ct.cell
-                   ) AS rn
-            FROM corpus c CROSS JOIN cent ct
-        ) WHERE rn = 1
-    ),
-    probes AS (
-        SELECT qid, qv, cell FROM (
-            SELECT q.vec_id AS qid, q.embedding AS qv, ct.cell,
-                   row_number() OVER (
-                       PARTITION BY q.vec_id
-                       ORDER BY {sql_cosine('q.embedding', 'ct.center')} DESC, ct.cell
-                   ) AS rn
-            FROM embeddings q CROSS JOIN cent ct
-            WHERE q.vec_id % 2 = 1
-        ) WHERE rn <= 4
+    return _ivf_knn_oracle(
+        _CELLS_N32,
+        "q.vec_id % 2 = 1",
+        fit="corpus",
+        corpus="corpus",
+        head="corpus AS (SELECT * FROM embeddings WHERE vec_id % 2 = 0)",
     )
-    SELECT qid, cid, cos, rk FROM (
-        SELECT p.qid, a.cid, {sql_cosine('p.qv', 'a.cv')} AS cos,
-               row_number() OVER (
-                   PARTITION BY p.qid
-                   ORDER BY {sql_cosine('p.qv', 'a.cv')} DESC, a.cid) AS rk
-        FROM probes p JOIN assign a USING (cell)
-        WHERE p.qid <> a.cid
-    ) WHERE rk <= 10
-    """
 
 
 @register("stream_ann_enrich", oracle=_ann_serve_oracle())

@@ -803,6 +803,25 @@ def run_to_memory(stream_df: DataFrame, name: str, output_mode: str = "complete"
     return name
 
 
+def _drain_foreach_batch(
+    stream_df: DataFrame, sink, checkpoint: str, output_mode: str = "append"
+) -> None:
+    """Run ``stream_df`` through ``foreachBatch(sink)`` with its offsets
+    in ``checkpoint``, process everything available, then stop the
+    query (also when a batch fails) — shared by every durable
+    foreachBatch sink below."""
+    q = (
+        stream_df.writeStream.outputMode(output_mode)
+        .option("checkpointLocation", checkpoint)
+        .foreachBatch(sink)
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+
 def run_foreach_batch_to_parquet(
     stream_df: DataFrame,
     out_path: str,
@@ -824,16 +843,7 @@ def run_foreach_batch_to_parquet(
         out = transform(batch_df) if transform is not None else batch_df
         out.write.mode("append").parquet(os.path.join(out_path, f"batch={batch_id}"))
 
-    q = (
-        stream_df.writeStream.outputMode(output_mode)
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(sink)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain_foreach_batch(stream_df, sink, checkpoint, output_mode)
     return out_path
 
 
@@ -885,16 +895,7 @@ def dedup_ingest_stream(
             fresh = batch
         fresh.write.mode("append").parquet(store_path)
 
-    q = (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(sink)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain_foreach_batch(stream_df, sink, checkpoint)
     return store_path
 
 
@@ -921,16 +922,7 @@ def ivf_ingest_stream(
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         ivf_commit_stream_batch(batch_df, id_col, vec_col, index_dir, batch_id)
 
-    q = (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(sink)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain_foreach_batch(stream_df, sink, checkpoint)
     return index_dir
 
 
@@ -976,16 +968,7 @@ def ann_serve_stream(
         res.write.mode("overwrite").parquet(tmp)
         os.rename(tmp, target)
 
-    q = (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(sink)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain_foreach_batch(stream_df, sink, checkpoint)
     return out_path
 
 
@@ -1063,16 +1046,7 @@ def idempotent_batch_sink(
             fresh = out
         fresh.write.mode("append").partitionBy("batch_id").parquet(store_path)
 
-    q = (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(sink)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain_foreach_batch(stream_df, sink, checkpoint)
     return store_path, sink
 
 
@@ -1337,14 +1311,5 @@ def scd2_ingest_stream(
             batch_df, key, tracked, ts_col, dim_dir, batch_id, epoch=epoch
         )
 
-    q = (
-        updates_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(sink)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain_foreach_batch(updates_stream, sink, checkpoint)
     return dim_dir

@@ -118,18 +118,22 @@ def test_minhash_bucket_cap_bounds_candidates(boilerplate_corpus):
 
 def test_malformed_shingle_arrays_fail_fast_without_a_job(spark, docs):
     """Every operator accepting a caller-supplied shingle_arrays frame
-    raises ValueError when it lacks doc_id or when its sh column is not
-    array<string> — from the schema alone, before any Spark job."""
+    raises ValueError when it lacks doc_id, when its sh column is not
+    array<string>, or when sh's metadata lacks the operator's k or
+    records another — from the schema alone, before any Spark job."""
     from randas_spark.operators.dedup import (
         minhash_lsh_pairs_portable,
         ngram_jaccard_pairs,
         portable_banded_signatures,
     )
 
+    no_k = spark.createDataFrame([(1, ["a b c d e"])], "doc_id long, sh array<string>")
     bad = [
         (spark.createDataFrame([(1, ["a b c"])], "id long, sh array<string>"), "doc_id"),
         (spark.createDataFrame([(1, [7])], "doc_id long, sh array<bigint>"), "array<bigint>"),
         (spark.createDataFrame([(1, "a b c")], "doc_id long, text string"), "no sh column"),
+        (no_k, "no k metadata"),
+        (no_k.select("doc_id", F.col("sh").alias("sh", metadata={"k": 3})), "got k=3"),
     ]
     sc = spark.sparkContext
     sc.setJobGroup("shingle-arrays-check", "malformed shingle_arrays")
