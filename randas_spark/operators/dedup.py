@@ -306,6 +306,31 @@ def _check_shingle_arrays(sh: DataFrame, k: int) -> DataFrame:
     return sh
 
 
+def shingle_checkpoint(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    k: int,
+    shingle_arrays: DataFrame | None = None,
+) -> DataFrame:
+    """The one (doc_id, sh) frame every shingle consumer reads: the
+    caller's ``shingle_arrays`` as is (checked, see
+    _check_shingle_arrays), else ``shingles(text_col, k)`` per doc with
+    ``{"k": k}`` column metadata, local-checkpointed (memory-and-disk).
+
+    Every consumer references the arrays more than once (explode for a
+    join or a signature, size, a verification join), and Spark reuses
+    nothing across those references — shingle construction, the
+    dominant CPU, would run once per reference. One eager checkpoint
+    runs it once; the derivations over the stored arrays are cheap."""
+    if shingle_arrays is not None:
+        return _check_shingle_arrays(shingle_arrays, k)
+    return fan_out(df).select(
+        F.col(id_col).alias("doc_id"),
+        shingles(F.col(text_col), k).alias("sh", metadata={"k": k}),
+    ).localCheckpoint()
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -341,17 +366,8 @@ def ngram_jaccard_pairs(
     that is not array<string>, or whose ``sh`` metadata does not record
     this ``k`` raises ValueError (see _check_shingle_arrays).
     """
-    # MATERIALIZED once: the self-join's a/b sides plus the two size
-    # legs all derive from sh, and Spark reuses nothing across the four
-    # references — shingle construction (slice + concat_ws per position,
-    # the dominant cost) would run up to 4x. Downstream derivations
-    # (explode, size) are cheap over the checkpointed arrays.
-    if shingle_arrays is not None:
-        sh = _check_shingle_arrays(shingle_arrays, k)
-    else:
-        sh = fan_out(df).select(
-            F.col(id_col).alias("doc_id"), shingles(F.col(text_col), k).alias("sh")
-        ).localCheckpoint()
+    # the self-join's a/b sides plus the two size legs all read sh
+    sh = shingle_checkpoint(df, id_col, text_col, k, shingle_arrays)
     sizes = sh.select("doc_id", F.size("sh").alias("n_sh"))
     exploded = sh.select("doc_id", F.explode("sh").alias("s"))
     if max_shingle_freq is not None:
@@ -429,7 +445,7 @@ def ppjoin_pairs(
             f"ppjoin_pairs: threshold must be in (0, 1], got {threshold!r}"
         )
     sh, cand = _ppjoin_candidates(df, id_col, text_col, k, threshold)
-    return _ppjoin_verify(sh, cand, threshold)
+    return _jaccard_verify(sh, sh, cand, threshold)
 
 
 def _ppjoin_candidates(
@@ -439,9 +455,7 @@ def _ppjoin_candidates(
     frame, candidate (id_a, id_b) pairs). Split out so stage timing
     (tools/ppjoin_stages.py) can adjudicate the candidate-join vs
     verify-leg slopes independently without duplicating the plan."""
-    sh = fan_out(df).select(
-        F.col(id_col).alias("doc_id"), shingles(F.col(text_col), k).alias("sh")
-    ).localCheckpoint()
+    sh = shingle_checkpoint(df, id_col, text_col, k)
     ex = sh.select("doc_id", F.explode("sh").alias("s"))
     # per-doc shingles sorted by the global (freq, shingle) order. The
     # document frequency attaches via a WINDOW COUNT partitioned on the
@@ -506,16 +520,23 @@ def _ppjoin_candidates(
     return sh, cand
 
 
-def _ppjoin_verify(sh: DataFrame, cand: DataFrame, threshold: float) -> DataFrame:
-    """Verify half of :func:`ppjoin_pairs`: join candidates back to both
-    shingle arrays, intersect per pair, keep J >= threshold."""
-    verified = (
+def _jaccard_verify(
+    sh_a: DataFrame, sh_b: DataFrame, cand: DataFrame, threshold: float
+) -> DataFrame:
+    """Exact verification shared by every candidate generator
+    (ppjoin_pairs, minhash_lsh_pairs_portable, incremental_near_dedup):
+    join candidate (id_a, id_b) pairs to id_a's shingle array in
+    ``sh_a`` and id_b's in ``sh_b``, intersect per pair, keep
+    J = |a∩b| / (|a|+|b|-|a∩b|) >= threshold. shingles() is distinct
+    per doc, so these are the integers a join of exploded shingles
+    would count — the same doubles, never a second shingle pass."""
+    return (
         cand.join(
-            sh.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a")),
+            sh_a.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a")),
             "id_a",
         )
         .join(
-            sh.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b")),
+            sh_b.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b")),
             "id_b",
         )
         .select(
@@ -533,7 +554,6 @@ def _ppjoin_verify(sh: DataFrame, cand: DataFrame, threshold: float) -> DataFram
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    return verified
 
 
 def containment_pairs(
@@ -559,12 +579,7 @@ def containment_pairs(
     containment is directed; the output is still ≤2× the undirected pair
     count above the threshold.
     """
-    # MATERIALIZED once — same rationale as ngram_jaccard_pairs: the
-    # a/b join sides and the size leg would otherwise re-run shingle
-    # construction per reference.
-    sh = fan_out(df).select(
-        F.col(id_col).alias("doc_id"), shingles(F.col(text_col), k).alias("sh")
-    ).localCheckpoint()
+    sh = shingle_checkpoint(df, id_col, text_col, k)
     sizes = sh.select("doc_id", F.size("sh").alias("n_sh"))
     exploded = sh.select("doc_id", F.explode("sh").alias("s"))
     if max_shingle_freq is not None:
@@ -1196,10 +1211,15 @@ def incremental_near_dedup(
     (with its lowest-id verified match and that match's Jaccard) or
     ``kept``.
 
-    Plan: batch band keys equi-join the LEDGER's band keys (portable
-    MinHash — :func:`portable_banded_signatures`), then exact-Jaccard
-    verification shingles CANDIDATE docs only. Deterministic best match
-    = min ledger id among verified matches (no float tie ordering).
+    Plan: each side's shingle arrays are built once
+    (:func:`shingle_checkpoint`); batch band keys (portable MinHash —
+    :func:`portable_banded_signatures`, read from those arrays)
+    equi-join the LEDGER's band keys, and the lazy candidate pairs are
+    verified by :func:`_jaccard_verify` against the same two array
+    frames. This trades a candidate-only re-shingle for one array
+    checkpoint per side (memory-and-disk), as ngram_jaccard_pairs and
+    ppjoin_pairs do. Deterministic best match = min ledger id among
+    verified matches (no float tie ordering).
 
     Scale: lifetime cost stays linear — each batch joins the ledger on
     band keys, never re-pairing the whole corpus. In production the
@@ -1209,65 +1229,31 @@ def incremental_near_dedup(
     from ``ledger_docs`` for the self-contained form. Signatures are
     per-doc, so ledger signatures never go stale as the corpus grows.
     """
-    b_banded = portable_banded_signatures(batch, id_col, text_col, num_perm, bands, k)
+    sh_b = shingle_checkpoint(batch, id_col, text_col, k)
+    sh_l = shingle_checkpoint(ledger_docs, id_col, text_col, k)
+    b_banded = portable_banded_signatures(
+        batch, id_col, text_col, num_perm, bands, k, shingle_arrays=sh_b
+    )
     l_banded = portable_banded_signatures(
-        ledger_docs, id_col, text_col, num_perm, bands, k
+        ledger_docs, id_col, text_col, num_perm, bands, k, shingle_arrays=sh_l
     )
     cand = (
         b_banded.alias("a")
         .join(l_banded.alias("b"), ["band_id", "bk"])
-        .select(F.col("a.doc_id").alias("id_batch"), F.col("b.doc_id").alias("id_led"))
+        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
         .distinct()
-        .localCheckpoint()
     )
-
-    def cand_shingles(df: DataFrame, side: str) -> DataFrame:
-        ids = cand.select(F.col(side).alias(id_col)).distinct()
-        return (
-            fan_out(df)
-            .join(ids, id_col, "left_semi")
-            .select(
-                F.col(id_col).alias("doc_id"),
-                F.explode(shingles(F.col(text_col), k)).alias("s"),
-            )
-        )
-
-    # The two candidate-shingle materializations are independent (one
-    # reads the batch, one the ledger; both depend only on the already-
-    # checkpointed cand) — materialize the ledger side on a second
-    # driver thread so its scan+explode runs WHILE the batch side's job
-    # executes (guide §2.6 overlap).
-    sh_l, sh_b = overlap(
-        lambda: cand_shingles(ledger_docs, "id_led").localCheckpoint(),
-        lambda: cand_shingles(batch, "id_batch").localCheckpoint(),
-    )
-    sizes_b = sh_b.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_b"))
-    sizes_l = sh_l.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_l"))
-    inter = (
-        cand.join(sh_b.select(F.col("doc_id").alias("id_batch"), "s"), "id_batch")
-        .join(sh_l.select(F.col("doc_id").alias("id_led"), "s"), ["id_led", "s"])
-        .groupBy("id_batch", "id_led")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    jac = F.col("n_inter").cast("double") / (
-        F.col("n_b") + F.col("n_l") - F.col("n_inter")
-    )
-    verified = (
-        inter.join(sizes_b.select(F.col("doc_id").alias("id_batch"), "n_b"), "id_batch")
-        .join(sizes_l.select(F.col("doc_id").alias("id_led"), "n_l"), "id_led")
-        .filter(jac >= threshold)
-        .select("id_batch", "id_led", jac.alias("jaccard"))
-    )
-    best = verified.groupBy("id_batch").agg(F.min("id_led").alias("match_id"))
-    best = best.join(
-        verified.select(
-            F.col("id_batch"), F.col("id_led").alias("match_id"), "jaccard"
-        ),
-        ["id_batch", "match_id"],
+    # (id_a, id_b) is unique, so the struct min is the lowest ledger id
+    # together with its own Jaccard
+    best = (
+        _jaccard_verify(sh_b, sh_l, cand, threshold)
+        .groupBy(F.col("id_a").alias("doc_id"))
+        .agg(F.min(F.struct(F.col("id_b").alias("match_id"), "jaccard")).alias("m"))
+        .select("doc_id", "m.match_id", "m.jaccard")
     )
     return (
         batch.select(F.col(id_col).alias("doc_id"))
-        .join(best.withColumnRenamed("id_batch", "doc_id"), "doc_id", "left")
+        .join(best, "doc_id", "left")
         .select(
             "doc_id",
             "match_id",
@@ -1300,13 +1286,17 @@ def minhash_lsh_pairs_portable(
 
     bands × rows split of num_perm sets the S-curve: pair-candidate
     probability 1-(1-j^rows)^bands. Candidates come only from
-    band-bucket equi-joins — no O(n²) stage; verification joins shingle
-    sets for candidate docs only (semi-join pruning before the pair
-    join).
+    band-bucket equi-joins — no O(n²) stage; they stay lazy and are
+    verified by :func:`_jaccard_verify` against the same shingle-array
+    frame the signatures read.
 
     Cost note: one md5 + num_perm multiply-adds per shingle (the md5
     amortizes across all permutations), BIGINT signature mins instead of
-    hex-string mins.
+    hex-string mins. The corpus is shingled once, into one full-corpus
+    array checkpoint (memory-and-disk, :func:`shingle_checkpoint`) that
+    both the signatures and the verification read — the trade
+    ngram_jaccard_pairs and ppjoin_pairs make — instead of a second
+    shingle pass over candidate docs and a checkpoint of the candidates.
 
     ``max_bucket_size`` is the hot-bucket guard: any (band_id, bk)
     bucket larger than the cap — boilerplate text hashing identically
@@ -1320,19 +1310,19 @@ def minhash_lsh_pairs_portable(
     is shared with the self-join. Default None: no cap, no window.
 
     ``shingle_arrays`` (optional): a caller-materialized (doc_id, sh
-    array) frame equal to ``shingles(text_col, k)`` per doc. Both the
-    signature build AND the candidate-verification shingling then read
-    it instead of re-running the shingle construction scan — the
-    recall-audit composition (exact pairs + LSH pairs over ONE corpus)
-    shares a single shingle checkpoint across both operators
-    (guide §2.4). A frame without ``doc_id``, with an ``sh`` that is not
-    array<string>, or whose ``sh`` metadata does not record this ``k``
-    raises ValueError."""
-    # No banded checkpoint, by measurement: the band self-join exchanges
-    # both sides on the identical (band_id, bk) key, so exchange reuse
-    # already serves both from one signature build.
+    array) frame equal to ``shingles(text_col, k)`` per doc, used as is
+    in place of this operator's own checkpoint — the recall-audit
+    composition (exact pairs + LSH pairs over ONE corpus) shares a
+    single shingle checkpoint across both operators (guide §2.4). A
+    frame without ``doc_id``, with an ``sh`` that is not array<string>,
+    or whose ``sh`` metadata does not record this ``k`` raises
+    ValueError."""
+    sh = shingle_checkpoint(df, id_col, text_col, k, shingle_arrays)
+    # The band self-join exchanges both sides on the identical
+    # (band_id, bk) key, so exchange reuse serves both from one
+    # signature build: neither bands nor candidates are checkpointed.
     banded = portable_banded_signatures(
-        df, id_col, text_col, num_perm, bands, k, shingle_arrays=shingle_arrays
+        df, id_col, text_col, num_perm, bands, k, shingle_arrays=sh
     )
     if max_bucket_size is not None:
         banded = _cap_hot_keys(banded, ["band_id", "bk"], max_bucket_size)
@@ -1342,59 +1332,8 @@ def minhash_lsh_pairs_portable(
         .filter(F.col("a.doc_id") < F.col("b.doc_id"))
         .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
         .distinct()
-        # cand is referenced by cand_ids, inter, and the final emit; the
-        # EAGER local checkpoint pins the LSH-bounded pair set (a sliver
-        # of the corpus) so the signature pipeline — full-corpus md5 +
-        # banded self-join — executes exactly once instead of once per
-        # reference (eager: lazy checkpoints re-materialize under AQE
-        # stage re-execution)
-        .localCheckpoint()
     )
-    cand_ids = cand.select(F.col("id_a").alias("doc_id")).union(
-        cand.select(F.col("id_b").alias("doc_id"))
-    ).distinct()
-    # verification shingles ONLY candidate docs: the semi-join lands
-    # BELOW the explode (doc granularity), so the pass scans |candidates|
-    # docs instead of shingling the whole corpus and semi-joining the
-    # exploded rows — at 100 TB candidates are a sliver of the corpus.
-    # With a caller-shared shingle frame the explode reads the already-
-    # materialized arrays instead of re-shingling the candidate docs.
-    if shingle_arrays is not None:
-        sh_c_src = shingle_arrays.join(cand_ids, "doc_id", "left_semi").select(
-            "doc_id", F.explode("sh").alias("s")
-        )
-    else:
-        sh_c_src = (
-            fan_out(df)
-            .join(cand_ids.withColumnRenamed("doc_id", id_col), id_col, "left_semi")
-            .select(
-                F.col(id_col).alias("doc_id"),
-                F.explode(shingles(F.col(text_col), k)).alias("s"),
-            )
-        )
-    # referenced 3x (sizes + both sides of inter); candidates-only, so
-    # small enough to pin eagerly
-    sh_c = sh_c_src.localCheckpoint()
-    # sh_c holds the COMPLETE shingle set of every candidate doc, and only
-    # candidate ids reach the final joins — so sizes comes from sh_c, not
-    # from a third full-corpus shingling pass (shingles() is distinct per
-    # doc, so count(1) here equals the old whole-corpus count)
-    sizes = sh_c.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    inter = (
-        cand.join(sh_c.select(F.col("doc_id").alias("id_a"), "s"), "id_a")
-        .join(sh_c.select(F.col("doc_id").alias("id_b"), "s"), ["id_b", "s"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    jac = F.col("n_inter").cast("double") / (
-        F.col("na") + F.col("nb") - F.col("n_inter")
-    )
-    return (
-        inter.join(sizes.select(F.col("doc_id").alias("id_a"), F.col("n_sh").alias("na")), "id_a")
-        .join(sizes.select(F.col("doc_id").alias("id_b"), F.col("n_sh").alias("nb")), "id_b")
-        .filter(jac >= threshold)
-        .select("id_a", "id_b", jac.alias("jaccard"))
-    )
+    return _jaccard_verify(sh, sh, cand, threshold)
 
 
 def duplicated_spans(

@@ -3983,24 +3983,17 @@ def llm_minhash_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Composition of two oracle-backed primitives: the exact pair set
     (ngram_jaccard_pairs' shingle equi-join) left-joined with the
     verified LSH pair set (minhash_lsh_pairs_portable), grouped by band;
-    both reuse ONE shingle scan on the engine side (r14: literally —
-    one shared shingle-array checkpoint feeds the exact self-join, the
-    signature build, AND the LSH verification shingling; the previous
-    form ran the shingle construction scan twice over the full corpus
-    plus once over the candidates, guide §2.4)."""
+    both reuse ONE shingle scan on the engine side: one shared
+    shingle-array checkpoint feeds the exact self-join, the signature
+    build, AND the LSH verification (guide §2.4)."""
     from randas_spark.operators.dedup import (
-        fan_out,
         minhash_lsh_pairs_portable,
         ngram_jaccard_pairs,
-        shingles,
+        shingle_checkpoint,
     )
 
     d = t(spark, sf_dir, "documents")
-    sh = (
-        fan_out(d)
-        .select(F.col("doc_id"), shingles(F.col("text"), 5).alias("sh", metadata={"k": 5}))
-        .localCheckpoint()
-    )
+    sh = shingle_checkpoint(d, "doc_id", "text", 5)
     true_pairs = ngram_jaccard_pairs(
         d, "doc_id", "text", k=5, threshold=0.6, shingle_arrays=sh
     )
@@ -4173,10 +4166,10 @@ def llm_dedup_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t(spark, sf_dir, "documents")
     e = t(spark, sf_dir, "embeddings")
     # The two pair generators share NOTHING (different tables, different
-    # signals), but the text leg runs two eager materializations at
-    # construction time (its candidate + candidate-shingle checkpoints).
-    # Materialize the embedding leg on a second driver thread so its
-    # bucket window + cosine join executes WHILE the text leg's jobs run
+    # signals), but the text leg runs one eager materialization at
+    # construction time (its shingle-array checkpoint). Materialize the
+    # embedding leg on a second driver thread so its bucket window +
+    # cosine join executes WHILE the text leg's jobs run
     # (guide §2.6 "overlap independent jobs" — Spark's FIFO scheduler
     # back-fills the idle tail of each job with the other leg's tasks).
     # Same jobs either way — the union previously computed the emb leg
@@ -5853,15 +5846,10 @@ def llm_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle checkpoint lands at 1.21 s). Ties resolve to the minimum
     doc_id on both engines, so the metric is deterministic and fully
     value-hash checked; the oracle keeps the join-back SPEC shape."""
-    from randas_spark.functions.text import shingles
-    from randas_spark.operators.dedup import fan_out
+    from randas_spark.operators.dedup import shingle_checkpoint
 
-    # checkpoint: the shingle transform is the dominant CPU and BOTH
-    # branches (totals, explode) consume it — one materialization
-    # instead of two plan-side recomputations (the ppjoin discipline)
-    d = fan_out(t(spark, sf_dir, "documents")).select(
-        "doc_id", shingles(F.col("text"), 5).alias("sh")
-    ).localCheckpoint()
+    # both branches (totals, explode) read the one shingle checkpoint
+    d = shingle_checkpoint(t(spark, sf_dir, "documents"), "doc_id", "text", 5)
     totals = d.select("doc_id", F.size("sh").cast("long").alias("n_shingles"))
     firsts = (
         d.select("doc_id", F.explode("sh").alias("s"))

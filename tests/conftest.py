@@ -1,3 +1,4 @@
+import contextlib
 import os
 import sys
 
@@ -6,6 +7,20 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+@contextlib.contextmanager
+def started_jobs(spark, group):
+    """Collect the ids of the Spark jobs started inside the block."""
+    sc = spark.sparkContext
+    ids: list[int] = []
+    sc.setJobGroup(group, group)
+    try:
+        yield ids
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
 
 
 @pytest.fixture(scope="session")

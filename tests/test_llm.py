@@ -11,7 +11,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, started_jobs
 
 
 @pytest.fixture(scope="module")
@@ -135,17 +135,12 @@ def test_malformed_shingle_arrays_fail_fast_without_a_job(spark, docs):
         (no_k, "no k metadata"),
         (no_k.select("doc_id", F.col("sh").alias("sh", metadata={"k": 3})), "got k=3"),
     ]
-    sc = spark.sparkContext
-    sc.setJobGroup("shingle-arrays-check", "malformed shingle_arrays")
-    try:
+    with started_jobs(spark, "shingle-arrays-check") as jobs:
         for fn in (ngram_jaccard_pairs, portable_banded_signatures, minhash_lsh_pairs_portable):
             for frame, msg in bad:
                 with pytest.raises(ValueError, match=msg):
                     fn(docs, "doc_id", "text", shingle_arrays=frame)
-        assert sc.statusTracker().getJobIdsForGroup("shingle-arrays-check") == []
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+    assert jobs == []
 
 
 def test_overlap_surfaces_each_legs_failure():
@@ -1544,19 +1539,14 @@ def test_boilerplate_coverage_python_truth(spark, docs):
 
     texts = {r.doc_id: r.text for r in docs.collect()}
 
-    def sh(text: str) -> set[str]:
-        toks = text.lower().split(" ")
-        n = max(len(toks) - 4, 1)
-        return {" ".join(toks[i : i + 5]) for i in range(n)}
-
     dfreq = {}
-    for s_set in map(sh, texts.values()):
+    for s_set in map(_py_shingles, texts.values()):
         for s in s_set:
             dfreq[s] = dfreq.get(s, 0) + 1
     out = boilerplate_coverage(docs, "doc_id", "text", k=5, min_df=2).collect()
     assert len(out) == len(texts)
     for r in out:
-        mine = sh(texts[r.doc_id])
+        mine = _py_shingles(texts[r.doc_id])
         n_boiler = sum(1 for s in mine if dfreq[s] >= 2)
         assert (r.n_shingles, r.n_boiler) == (len(mine), n_boiler)
         assert r.drop == (n_boiler / len(mine) >= 0.5)
@@ -1598,12 +1588,7 @@ def test_minhash_portable_precision_recall_and_determinism(spark, docs):
 
     texts = {r.doc_id: r.text for r in docs.collect()}
 
-    def sh(text: str) -> set[str]:
-        toks = text.lower().split(" ")
-        n = max(len(toks) - 4, 1)
-        return {" ".join(toks[i : i + 5]) for i in range(n)}
-
-    sets = {i: sh(t) for i, t in texts.items()}
+    sets = {i: _py_shingles(t) for i, t in texts.items()}
     ids = sorted(sets)
     exact = {}
     for i_pos, a in enumerate(ids):
@@ -1627,6 +1612,161 @@ def test_minhash_portable_precision_recall_and_determinism(spark, docs):
         for r in minhash_lsh_pairs_portable(docs.repartition(13), "doc_id", "text").collect()
     }
     assert got2 == set(got)
+
+
+def _py_shingles(text, k=5):
+    """Pure-Python ``shingles()``: lowercased space tokens, distinct
+    k-grams, the whole doc as one shingle below k tokens, none for NULL."""
+    if text is None:
+        return set()
+    toks = text.lower().split(" ")
+    return {" ".join(toks[i : i + k]) for i in range(max(len(toks) - k + 1, 1))}
+
+
+def _py_jaccard(a, b):
+    inter = len(a & b)
+    return inter / (len(a) + len(b) - inter)
+
+
+#: (doc_id, text, side) — the adversarial corpus for the shared
+#: verifier; ``side`` is the ledger/batch split for the incremental form
+_ADVERSARIAL = (
+    # 30 verbatim copies of one text: 435 J=1 pairs through one bucket
+    [(i, "the quick brown fox jumps over the lazy dog again and again", i % 2) for i in range(30)]
+    + [
+        # one distinct shingle each ("a a a a a"): J=1 although the
+        # first doc has three k-gram positions
+        (100, "a a a a a a a", 0),
+        (101, "a a a a a", 1),
+        # shorter than k: the whole doc is the one shingle
+        (102, "x y", 0),
+        (103, "x y", 1),
+        # NULL and empty texts: no shingle a real doc can share
+        (104, None, 0),
+        (105, None, 1),
+        (106, "", 1),
+        # 4 shingles each, 3 shared: J = 3/5, exactly the threshold
+        (107, "p1 p2 p3 p4 p5 p6 p7 p8", 0),
+        (108, "p2 p3 p4 p5 p6 p7 p8 p9", 1),
+        # unrelated filler
+        (109, "one two three four five six seven eight nine", 0),
+        (110, "ten eleven twelve thirteen fourteen fifteen", 1),
+    ]
+)
+
+
+@pytest.fixture(scope="module")
+def adversarial(spark):
+    return spark.createDataFrame(
+        _ADVERSARIAL, "doc_id long, text string, side int"
+    ).cache()
+
+
+def test_jaccard_verifier_exact_on_adversarial_corpus(spark, adversarial):
+    """The one verifier behind ppjoin, MinHash-LSH and incremental
+    near-dedup, differentially against pure-Python shingle sets: every
+    emitted Jaccard equals the Python fraction with ``==``, the J = 3/5
+    pair passes a 0.6 threshold exactly, every J >= 0.9 pair is found,
+    no NULL or empty doc is ever paired, and both operators return the
+    same rows on 1 and on 7 input partitions."""
+    from randas_spark.operators.dedup import (
+        _jaccard_verify,
+        incremental_near_dedup,
+        minhash_lsh_pairs_portable,
+        shingle_checkpoint,
+    )
+
+    sets = {i: _py_shingles(t) for i, t, _ in _ADVERSARIAL}
+    side = {i: s for i, _, s in _ADVERSARIAL}
+    blank = {i for i, t, _ in _ADVERSARIAL if not t}
+    exact = {
+        (a, b): _py_jaccard(sets[a], sets[b])
+        for a in sets
+        for b in sets
+        if a < b and sets[a] and sets[b] and sets[a] & sets[b]
+    }
+    assert exact[(107, 108)] == 0.6 and exact[(100, 101)] == 1.0
+
+    # the verifier alone, fed every pair: its threshold cut is exact
+    sh = shingle_checkpoint(adversarial, "doc_id", "text", 5)
+    ids = sh.select("doc_id")
+    every = ids.alias("x").crossJoin(ids.alias("y")).select(
+        F.col("x.doc_id").alias("id_a"), F.col("y.doc_id").alias("id_b")
+    ).filter("id_a < id_b")
+    verified = {
+        (r.id_a, r.id_b): r.jaccard
+        for r in _jaccard_verify(sh, sh, every, 0.6).collect()
+    }
+    assert verified == {p: j for p, j in exact.items() if j >= 0.6}
+
+    def lsh(parts):
+        return sorted(
+            minhash_lsh_pairs_portable(
+                adversarial.repartition(parts), "doc_id", "text", threshold=0.6
+            ).collect()
+        )
+
+    pairs = lsh(1)
+    assert pairs == lsh(7)
+    got = {(r.id_a, r.id_b): r.jaccard for r in pairs}
+    for p, j in got.items():
+        assert j == exact[p], p
+    assert {p for p, j in exact.items() if j >= 0.9} <= set(got)
+    assert not blank & {i for p in got for i in p}
+
+    def incremental(parts):
+        return sorted(
+            incremental_near_dedup(
+                adversarial.filter("side = 1").repartition(parts),
+                adversarial.filter("side = 0").repartition(parts),
+                "doc_id",
+                "text",
+                threshold=0.6,
+            ).collect()
+        )
+
+    out = incremental(1)
+    assert out == incremental(7)
+    assert len(out) == sum(side.values())
+    for r in out:
+        near = [
+            led
+            for led in sets
+            if side[led] == 0 and sets[led] and sets[r.doc_id]
+            and _py_jaccard(sets[r.doc_id], sets[led]) >= 0.9
+        ]
+        if r.status == "near_dup_vs_ledger":
+            assert r.jaccard == _py_jaccard(sets[r.doc_id], sets[r.match_id])
+            assert r.jaccard >= 0.6 and side[r.match_id] == 0
+            assert r.match_id not in blank and r.doc_id not in blank
+            assert not near or r.match_id <= min(near)
+        else:
+            assert not near and r.match_id is None, r
+
+
+#: jobs started while each query is constructed (its plan built, before
+#: any action), measured at the suite's sf0.001 after one warm build —
+#: the eager checkpoints each dedup composition pays up front
+_CONSTRUCT_JOBS = {
+    "llm_dedup_minhash_det": 2,
+    "llm_minhash_recall_audit": 2,
+    "llm_dedup_incremental_near": 4,
+    "llm_dedup_minhash_clusters": 14,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_CONSTRUCT_JOBS))
+def test_dedup_construction_jobs_pinned(spark, name):
+    """Eager construction jobs are the largest construction cost in the
+    registry; a query growing one (a new checkpoint, a count, a collect
+    while building the plan) fails here instead of only in a bench."""
+    from randas_spark.queries import REGISTRY, load_all
+
+    load_all()
+    REGISTRY[name].fn(spark, SF_DIR)
+    with started_jobs(spark, f"construct-{name}") as jobs:
+        REGISTRY[name].fn(spark, SF_DIR)
+    assert len(jobs) == _CONSTRUCT_JOBS[name], (name, len(jobs))
 
 
 def test_embedding_quantize_bounds_and_fidelity(spark, emb):

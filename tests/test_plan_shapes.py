@@ -37,7 +37,14 @@ PINNED = {
     "q21_waiting_supplier": (4, 0, 5),
     "rel_join_orders_customer": (1, 0, 2),
     "llm_dedup_exact": (0, 0, 1),
-    "llm_dedup_minhash_det": (4, 0, 7),
+    # re-transcribed (4,0,7)->(3,0,5): the candidate-only re-shingle and
+    # its exploded sizes/inter joins are gone; lazy band candidates are
+    # verified by two broadcast joins onto the one shingle-array
+    # checkpoint. BENCH re-measurement (perfbench llm_curation, seed 1,
+    # traced): this op's exec.jobs 15 -> 6, construction jobs 9 -> 2,
+    # exec.cpu_s 1.61 -> 1.29 s; ten untraced pairs on a 4-core host:
+    # workload cpu_s median 6.16 -> 4.98 s, lower in 10 of 10
+    "llm_dedup_minhash_det": (3, 0, 5),
     # m=4 broadcast LUT joins + the codes-table scan: the persisted-ANN
     # steady-state plan — a 5th join or an SMJ here means the fit leaked
     # back into the query path

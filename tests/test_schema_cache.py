@@ -4,7 +4,6 @@ Spark job, and a changed, added or removed file is never served a cached
 schema."""
 
 import ast
-import contextlib
 import datetime as dt
 import os
 
@@ -12,23 +11,9 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, started_jobs
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-@contextlib.contextmanager
-def _jobs(spark, group):
-    """Collect the ids of the Spark jobs started inside the block."""
-    sc = spark.sparkContext
-    ids: list[int] = []
-    sc.setJobGroup(group, group)
-    try:
-        yield ids
-        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
 
 
 def _rows(df):
@@ -44,7 +29,7 @@ def test_rewritten_table_serves_new_schema_and_values(spark, tmp_path):
     path = str(tmp_path / "orders.parquet")
     pq.write_table(pa.table({"o_orderkey": [1, 2], "o_totalprice": [1.5, 2.5]}), path)
     assert _rows(t(spark, str(tmp_path), "orders")) == [(1, 1.5), (2, 2.5)]
-    with _jobs(spark, "schema-cache-hit") as jobs:
+    with started_jobs(spark, "schema-cache-hit") as jobs:
         df = t(spark, str(tmp_path), "orders")
     assert jobs == []
     assert df.columns == ["o_orderkey", "o_totalprice"]
@@ -110,7 +95,7 @@ def test_query_construction_starts_no_job(spark):
     for name in names:
         REGISTRY[name].fn(spark, SF_DIR)
     for name in names:
-        with _jobs(spark, f"construct-{name}") as jobs:
+        with started_jobs(spark, f"construct-{name}") as jobs:
             REGISTRY[name].fn(spark, SF_DIR)
         assert jobs == [], name
 

@@ -107,7 +107,7 @@ def main() -> None:
         dim=64, bucket_cap=4096, stats=cap_stats,
     )
     eb = e.select(
-        project_buckets(F.col("embedding"), 64, n_planes).alias("bucket")
+        project_buckets("embedding", 64, n_planes).alias("bucket")
     )
     out["emb_buckets"] = bucket_audit(eb, ["bucket"])
     out["emb_n_planes"] = n_planes

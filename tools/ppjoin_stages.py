@@ -39,7 +39,7 @@ def main() -> None:
     )
     threshold = float(args[1]) if len(args) > 1 else 0.5
 
-    from randas_spark.operators.dedup import _ppjoin_candidates, _ppjoin_verify
+    from randas_spark.operators.dedup import _jaccard_verify, _ppjoin_candidates
     from randas_spark.queries import t
     from randas_spark.session import get_spark
 
@@ -63,7 +63,7 @@ def main() -> None:
         tc = time.perf_counter() - t0
 
         t1 = time.perf_counter()
-        n_pairs = _ppjoin_verify(sh, cand, threshold).count()
+        n_pairs = _jaccard_verify(sh, sh, cand, threshold).count()
         tv = time.perf_counter() - t1
         if i > 0:
             t_cand.append(tc)
