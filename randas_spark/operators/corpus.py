@@ -546,7 +546,6 @@ def sequence_pack(
 
     if pack_len <= 0:
         raise ValueError(f"sequence_pack: pack_len must be positive, got {pack_len}")
-    L = F.lit(int(pack_len))
     base = df.select(
         F.col(id_col).alias("doc_id"),
         F.col(ntok_col).cast("long").alias("n_tok"),
@@ -563,32 +562,7 @@ def sequence_pack(
         started = started.withColumn(
             "doc_start", F.col("doc_start") + F.lit(int(base_offset))
         )
-    segs = started.select(
-        "doc_id",
-        "n_tok",
-        "doc_start",
-        F.explode(
-            F.sequence(
-                # integral DIV, not double '/': the double quotient is
-                # exact only up to 2^53, and for non-power-of-two L it
-                # can round across an integer near that edge — DIV is
-                # the int64 floordiv that matches the oracle's '//' for
-                # every (doc_start, pack_len)
-                F.expr(f"doc_start DIV {int(pack_len)}"),
-                F.expr(f"(doc_start + n_tok - 1) DIV {int(pack_len)}"),
-            )
-        ).alias("pack_id"),
-    )
-    g0 = F.greatest(F.col("doc_start"), F.col("pack_id") * L)
-    g1 = F.least(F.col("doc_start") + F.col("n_tok"), (F.col("pack_id") + 1) * L)
-    return segs.select(
-        "doc_id",
-        "pack_id",
-        "doc_start",
-        (g0 - F.col("doc_start")).alias("seg_start"),
-        (g1 - g0).alias("seg_len"),
-        (g0 - F.col("pack_id") * L).alias("pack_offset"),
-    )
+    return _chop_segments(started, pack_len)
 
 
 def sequence_pack_by_group(
@@ -623,7 +597,6 @@ def sequence_pack_by_group(
 
     if pack_len <= 0:
         raise ValueError(f"sequence_pack_by_group: pack_len must be positive, got {pack_len}")
-    L = F.lit(int(pack_len))
     # interleave=False must order NUMERICALLY by id (a string cast would
     # put "20" before "3"); a constant __ord__ defers entirely to the
     # numeric doc_id tiebreak in the prefix-sum order
@@ -656,15 +629,31 @@ def sequence_pack_by_group(
         "n_tok",
         (F.col("gprior") - F.col("goff")).cast("long").alias("doc_start"),
     )
+    return _chop_segments(started, pack_len, group_col)
+
+
+def _chop_segments(
+    started: DataFrame, pack_len: int, group_col: str | None = None
+) -> DataFrame:
+    """The chop shared by both packers: explode each doc of ``started``
+    (``[grp,] doc_id, n_tok, doc_start``) into the packs it spans and
+    cut its segment bounds g0/g1 by int64 modular arithmetic; ``grp``
+    leaves as ``group_col``. :func:`sql_sequence_pack` is the DuckDB
+    twin."""
+    L = F.lit(int(pack_len))
+    lead = [] if group_col is None else ["grp"]
     segs = started.select(
-        "grp",
+        *lead,
         "doc_id",
         "n_tok",
         "doc_start",
         F.explode(
             F.sequence(
-                # int64 floordiv (see sequence_pack): DIV == the
-                # oracle's '//' for all pack_len, unlike the double '/'
+                # integral DIV, not double '/': the double quotient is
+                # exact only up to 2^53, and for non-power-of-two L it
+                # can round across an integer near that edge — DIV is
+                # the int64 floordiv that matches the oracle's '//' for
+                # every (doc_start, pack_len)
                 F.expr(f"doc_start DIV {int(pack_len)}"),
                 F.expr(f"(doc_start + n_tok - 1) DIV {int(pack_len)}"),
             )
@@ -673,7 +662,7 @@ def sequence_pack_by_group(
     g0 = F.greatest(F.col("doc_start"), F.col("pack_id") * L)
     g1 = F.least(F.col("doc_start") + F.col("n_tok"), (F.col("pack_id") + 1) * L)
     return segs.select(
-        F.col("grp").alias(group_col),
+        *[F.col(c).alias(group_col) for c in lead],
         "doc_id",
         "pack_id",
         "doc_start",
@@ -681,3 +670,50 @@ def sequence_pack_by_group(
         (g1 - g0).alias("seg_len"),
         (g0 - F.col("pack_id") * L).alias("pack_offset"),
     )
+
+
+def sql_sequence_pack(
+    table: str,
+    id_col: str,
+    n_tok: str,
+    pack_len: int,
+    group_col: str | None = None,
+    batch: str | None = None,
+    base: str | None = None,
+) -> str:
+    """DuckDB twin of :func:`sequence_pack` / :func:`sequence_pack_by_group`
+    as CTEs for a caller's ``WITH``: ``d`` (``n_tok`` an SQL expression
+    over ``table``), ``nz`` (non-empty docs, narrowed by the ``batch``
+    predicate), ``st`` (each doc's exclusive prefix-sum ``doc_start``
+    under the md5 interleave, partitioned by ``group_col``, plus the
+    ``base`` column of the optional ``base`` CTE ``b``, which may read
+    ``d``) and ``segs`` (the Spark output's columns). The window is the
+    SPEC, not the Spark plan."""
+    lead = "" if group_col is None else f"{group_col}, "
+    part = "" if group_col is None else f"PARTITION BY {group_col} "
+    b_cte = "" if base is None else f"{base}, "
+    b_col = "" if base is None else "(SELECT base FROM b) + "
+    keep = "" if batch is None else f" AND {batch}"
+    L = int(pack_len)
+    return f"""d AS (
+        SELECT {lead}{id_col} AS doc_id, {n_tok} AS n_tok,
+               md5(CAST({id_col} AS VARCHAR)) AS ord
+        FROM {table}
+    ), {b_cte}nz AS (SELECT * FROM d WHERE n_tok > 0{keep}),
+    st AS (
+        SELECT {lead}doc_id, n_tok,
+               {b_col}CAST(coalesce(sum(n_tok) OVER (
+                   {part}ORDER BY ord, doc_id
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
+               ), 0) AS BIGINT) AS doc_start
+        FROM nz
+    ), segs AS (
+        SELECT {lead}doc_id, pack_id, doc_start,
+               greatest(doc_start, pack_id * {L}) - doc_start AS seg_start,
+               least(doc_start + n_tok, (pack_id + 1) * {L})
+                   - greatest(doc_start, pack_id * {L}) AS seg_len,
+               greatest(doc_start, pack_id * {L}) - pack_id * {L} AS pack_offset
+        FROM st, UNNEST(generate_series(
+                     doc_start // {L},
+                     (doc_start + n_tok - 1) // {L})) AS u(pack_id)
+    )"""

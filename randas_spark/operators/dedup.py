@@ -1586,63 +1586,3 @@ def simhash_portable_pairs(
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )
-
-
-def graph_pagerank(
-    nodes: DataFrame,
-    edges: DataFrame,
-    node_col: str = "node",
-    iters: int = 3,
-    damping: float = 0.85,
-) -> DataFrame:
-    """Fixed-iteration PageRank over an undirected pair graph (id_a,
-    id_b) — importance/centrality propagation on the near-dup or link
-    graph (pick-the-canonical-doc by authority rather than min-id;
-    graph-based quality propagation à la Harmonic/TrustRank).
-
-    A BOUNDED unroll (iters is small and fixed) builds one plan of
-    chained join+agg rounds — no driver-side loop state, so unlike
-    open-ended label propagation this is fully SQL-expressible and
-    carries a cross-engine oracle. Each round shuffles on the node
-    key (contribution sum) — the same partitioning every round, so AQE
-    reuses the exchange layout. Dangling nodes keep the (1−d)/N floor.
-
-    The EDGE LIST is materialized once up front: the unrolled plan
-    references it 2x per round (contribution join + degree) and round
-    k's ranks re-expand round k-1's whole subtree, so an expensive
-    producing plan (the near-dup pair join) would re-execute ~2·iters
-    times lazily (A/B at sf0.1: 2.79 s lazy vs 1.81 s checkpointed for
-    llm_graph_rank). Values are unchanged — the oracle stays the same
-    declarative round unroll.
-    """
-    edges = edges.localCheckpoint()
-    und = edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v")).union(
-        edges.select(F.col("id_b").alias("u"), F.col("id_a").alias("v"))
-    )
-    deg = und.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-    n_df = nodes.agg(F.count(F.lit(1)).alias("n"))
-    ranks = (
-        nodes.select(F.col(node_col).alias("node"))
-        .crossJoin(F.broadcast(n_df))
-        .select("node", "n", (F.lit(1.0) / F.col("n")).alias("r"))
-    )
-    for _ in range(iters):
-        contrib = (
-            und.join(ranks.select(F.col("node").alias("u"), "r"), "u")
-            .join(deg, "u")
-            .select(F.col("v").alias("node"), (F.col("r") / F.col("deg")).alias("c"))
-        )
-        summed = contrib.groupBy("node").agg(F.sum("c").alias("s"))
-        ranks = (
-            ranks.select("node", "n")
-            .join(summed, "node", "left")
-            .select(
-                "node",
-                "n",
-                (
-                    (1 - damping) / F.col("n")
-                    + damping * F.coalesce(F.col("s"), F.lit(0.0))
-                ).alias("r"),
-            )
-        )
-    return ranks.select("node", "r")

@@ -1,5 +1,7 @@
-"""Pattern-mining operators: market-basket association, triangle
-enumeration, k-core peeling, and Pareto skylines.
+"""Pattern-mining and graph operators: market-basket association,
+triangle enumeration, k-core peeling, Pareto skylines, multi-source BFS
+and PageRank (one round core for the exact int64 and the float
+arithmetic, with its DuckDB round unroll beside it).
 
 The reference (randas, dataframe.rs) has no co-occurrence or graph
 analytics at all — these are engine-scale additions in the spirit of
@@ -17,7 +19,7 @@ runs as windows over a bounded table.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -370,6 +372,48 @@ def bfs_hops(
     return visited
 
 
+def _pagerank_rounds(
+    ej: DataFrame,
+    r: DataFrame,
+    rounds: int,
+    contrib: Column,
+    finish: Column,
+    ckpt_every: int = 3,
+) -> DataFrame:
+    """The one power-iteration round core of both PageRank arithmetics.
+
+    ``ej`` is the edge list carrying out-degree ``(node, d, od)``; ``r``
+    holds ``(node, r)`` for every node of the universe, plus any carried
+    column (the float form's lazily counted ``n``), which rides along
+    as a group key for ``finish`` to read. Each round is ONE join of the
+    rank table onto ``ej`` + ONE map-side-combinable groupBy on the
+    node, with no per-round degree or node-table join: zero rows from
+    ``r`` union INTO the contribution aggregate, so a node with no
+    in-edges survives with ``tot`` = 0. ``contrib`` (over ``r``, ``od``)
+    and ``finish`` (over ``tot``) are the only arithmetic-specific parts.
+
+    The rank table is localCheckpoint-ed every ``ckpt_every`` rounds
+    (never after the last — the caller's action consumes it), bounding
+    lineage without an eager job per round. Cadence caveat: each
+    un-checkpointed round references r TWICE (edge join + zero rows),
+    so a segment's plan embeds ~2^ckpt_every copies of its head — keep
+    the cadence small (3 is fine; past ~6-8 Catalyst analysis time and
+    driver memory blow up)."""
+    carry = [c for c in r.columns if c not in ("node", "r")]
+    for i in range(rounds):
+        tot = (
+            r.join(ej, "node")
+            .select(F.col("d").alias("node"), *carry, contrib.alias("c"))
+            .unionAll(r.select("node", *carry, F.lit(0).alias("c")))
+            .groupBy("node", *carry)
+            .agg(F.sum("c").alias("tot"))
+        )
+        r = tot.select("node", *carry, finish.alias("r"))
+        if (i + 1) % ckpt_every == 0 and (i + 1) < rounds:
+            r = r.localCheckpoint()
+    return r
+
+
 def pagerank_int(
     edges: DataFrame,
     src: str = "src",
@@ -392,24 +436,12 @@ def pagerank_int(
     no dangling sources (symmetrize an undirected graph first — then
     every node has outdeg >= 1 and the damping-mass argument is exact).
 
-    Scale: each round is ONE join of the rank table onto the edge list
-    (shuffle on the join key) + ONE map-side-combinable groupBy(dst) —
-    the textbook distributed PageRank shape. The rank table is
-    localCheckpoint-ed every ``ckpt_every`` rounds (never after the
-    final one — the caller's single action consumes it directly), so
-    lineage stays BOUNDED across long runs (the k-core lesson) without
-    paying an eager barrier job per round: each checkpoint is a
-    synchronous materialization the scheduler cannot overlap, and at
-    rounds=3 the default cadence runs the whole tail as ONE lazy plan —
-    measured 3.03 -> 2.90 s median (every interleaved pass faster,
-    values bit-identical) on the co-purchase query. Driver state is a
-    single scalar (N). Cadence caveat (r13 ADVICE): each un-checkpointed
-    round references r TWICE (edge join + teleport unionAll), so a
-    segment's plan embeds ~2^ckpt_every copies of the segment-head
-    subtree — bounded but EXPONENTIAL in the cadence. The default 3
-    (8 copies) is fine; past ~6-8 Catalyst analysis time and driver
-    memory blow up, so keep ckpt_every small rather than "as large as
-    memory allows"."""
+    Scale: the rounds run on :func:`_pagerank_rounds` (one edge join +
+    one combinable groupBy per round, checkpointed every ``ckpt_every``
+    rounds); at rounds=3 the default cadence runs the whole tail as ONE
+    lazy plan — measured 3.03 -> 2.90 s median (every interleaved pass
+    faster, values bit-identical) on the co-purchase query. Driver state
+    is a single scalar (N)."""
     if rounds < 1:
         raise ValueError(f"pagerank_int: rounds must be >= 1, got {rounds}")
     # validate BEFORE any Spark action: a bad cadence must not first pay
@@ -436,29 +468,91 @@ def pagerank_int(
     if n == 0:
         raise ValueError("pagerank_int: empty edge list")
     base = (scale * (damp_den - damp_num)) // (damp_den * n)
-    r = nodes.select("node", F.lit(scale // n).cast("long").alias("r"))
-    for i in range(rounds):
-        # zero rows union INTO the contribution aggregate: every node
-        # gets one, so nodes with no in-edges survive with tot=0 — the
-        # same result as the retired nodes-left-join finisher, one join
-        # (and its exchanges) fewer per round. Derived from r (the rank
-        # table carries exactly the node universe whether or not this
-        # segment has checkpointed it yet), so no round re-runs the
-        # nodes distinct.
-        contrib = (
-            r.join(ej, "node")
-            .select(
-                F.col("d").alias("node"),
-                F.expr(f"(r * {damp_num}) div ({damp_den} * od)").alias("c"),
-            )
-            .unionAll(r.select("node", F.lit(0).cast("long").alias("c")))
-            .groupBy("node")
-            .agg(F.sum("c").alias("tot"))
+    return _pagerank_rounds(
+        ej,
+        nodes.select("node", F.lit(scale // n).cast("long").alias("r")),
+        rounds,
+        F.expr(f"(r * {damp_num}) div ({damp_den} * od)"),
+        (F.lit(base) + F.col("tot")).cast("long"),
+        ckpt_every,
+    )
+
+
+def graph_pagerank(
+    nodes: DataFrame,
+    edges: DataFrame,
+    node_col: str = "node",
+    iters: int = 3,
+    damping: float = 0.85,
+) -> DataFrame:
+    """Fixed-iteration float PageRank over an undirected pair graph
+    (id_a, id_b) — authority on the near-dup or link graph (canonical
+    doc by authority rather than min-id; graph quality propagation à la
+    Harmonic/TrustRank). Every row of ``nodes`` is a node; one with no
+    edge keeps the (1−d)/N floor.
+
+    Runs on :func:`_pagerank_rounds` with contribution ``r / od`` and
+    finish ``(1−d)/N + d·tot``. The edge list is checkpointed once (the
+    rounds all read it, and re-running the near-dup pair join per round
+    measured 2.79 s vs 1.81 s at sf0.1); out-degree is a lazy window on
+    it whose exchange every round reuses, and N is a broadcast count
+    carried in the rank table, so neither adds an eager job."""
+    edges = edges.localCheckpoint()
+    und = edges.select(F.col("id_a").alias("node"), F.col("id_b").alias("d")).unionAll(
+        edges.select(F.col("id_b").alias("node"), F.col("id_a").alias("d"))
+    )
+    ej = und.withColumn("od", F.count(F.lit(1)).over(Window.partitionBy("node")))
+    n_df = nodes.agg(F.count(F.lit(1)).alias("n"))
+    r = (
+        nodes.select(F.col(node_col).alias("node"))
+        .crossJoin(F.broadcast(n_df))
+        .select("node", "n", (F.lit(1.0) / F.col("n")).alias("r"))
+    )
+    return _pagerank_rounds(
+        ej,
+        r,
+        iters,
+        F.col("r") / F.col("od"),
+        (1 - damping) / F.col("n") + damping * F.col("tot"),
+    ).select("node", "r")
+
+
+def sql_pagerank(
+    graph: str,
+    nodes: str,
+    rounds: int,
+    r0: str,
+    contrib: str,
+    finish: str,
+) -> str:
+    """DuckDB twin of :func:`_pagerank_rounds`: each round is one CTE of
+    the same shape, AS MATERIALIZED (a round reads its predecessor
+    twice; an inlined chain re-evaluates exponentially). ``graph`` is a
+    CTE list defining directed edges ``ed(s, d)``; ``nodes`` selects the
+    universe as ``node`` (it may read ``deg``); ``r0``, ``contrib`` and
+    ``finish`` are the arithmetic over ``n``, ``p.r``/``deg.od`` and
+    ``tot``/``n``. Returns CTEs ending in ``ranks(node, r)``."""
+    ctes = [
+        graph,
+        "deg AS MATERIALIZED (SELECT s AS node, CAST(count(*) AS BIGINT) AS od"
+        " FROM ed GROUP BY s)",
+        f"universe AS MATERIALIZED ({nodes})",
+        "nn AS MATERIALIZED (SELECT CAST(count(*) AS BIGINT) AS n FROM universe)",
+        f"r0 AS MATERIALIZED (SELECT node, {r0} AS r FROM universe CROSS JOIN nn)",
+    ]
+    for i in range(1, rounds + 1):
+        ctes.append(
+            f"""r{i} AS MATERIALIZED (
+                SELECT node, {finish} AS r FROM (
+                    SELECT node, sum(c) AS tot FROM (
+                        SELECT ed.d AS node, {contrib} AS c
+                        FROM r{i - 1} p
+                        JOIN ed ON ed.s = p.node
+                        JOIN deg ON deg.node = p.node
+                        UNION ALL SELECT node, 0 FROM r{i - 1}
+                    ) GROUP BY node
+                ) CROSS JOIN nn
+            )"""
         )
-        r = contrib.select(
-            "node",
-            (F.lit(base) + F.col("tot")).cast("long").alias("r"),
-        )
-        if (i + 1) % ckpt_every == 0 and (i + 1) < rounds:
-            r = r.localCheckpoint()
-    return r
+    ctes.append(f"ranks AS (SELECT node, r FROM r{rounds})")
+    return ",\n".join(ctes)

@@ -428,8 +428,9 @@ def sql_logreg_newton(
     """DuckDB twin of :func:`logreg_newton`: the Newton loop macro-
     expands into one CTE pair (cells -> solve) per step, each carrying
     the previous step's coefficients via a 1-row CROSS JOIN — the
-    Cramer operation order of :func:`_cramer` over the Hessian cells,
-    the same int64 quantization."""
+    Hessian and gradient cells, cast to DOUBLE under :func:`_cramer`'s
+    argument names, solved by :data:`_SQL_CRAMER`; the same int64
+    quantization."""
     from randas_spark.queries import sql_fround
 
     base = f"""
@@ -440,25 +441,7 @@ def sql_logreg_newton(
         FROM {table_expr}
     ),
     it0 AS (SELECT 0.0 AS b0, 0.0 AS b1, 0.0 AS b2)"""
-    solve = """
-        CAST(h00 AS DOUBLE) * (CAST(h11 AS DOUBLE) * CAST(h22 AS DOUBLE) - CAST(h12 AS DOUBLE) * CAST(h12 AS DOUBLE))
-        - CAST(h01 AS DOUBLE) * (CAST(h01 AS DOUBLE) * CAST(h22 AS DOUBLE) - CAST(h12 AS DOUBLE) * CAST(h02 AS DOUBLE))
-        + CAST(h02 AS DOUBLE) * (CAST(h01 AS DOUBLE) * CAST(h12 AS DOUBLE) - CAST(h11 AS DOUBLE) * CAST(h02 AS DOUBLE))"""
-    d0 = """(
-        CAST(g0 AS DOUBLE) * (CAST(h11 AS DOUBLE) * CAST(h22 AS DOUBLE) - CAST(h12 AS DOUBLE) * CAST(h12 AS DOUBLE))
-        - CAST(h01 AS DOUBLE) * (CAST(g1 AS DOUBLE) * CAST(h22 AS DOUBLE) - CAST(h12 AS DOUBLE) * CAST(g2 AS DOUBLE))
-        + CAST(h02 AS DOUBLE) * (CAST(g1 AS DOUBLE) * CAST(h12 AS DOUBLE) - CAST(h11 AS DOUBLE) * CAST(g2 AS DOUBLE))
-    ) / det"""
-    d1 = """(
-        CAST(h00 AS DOUBLE) * (CAST(g1 AS DOUBLE) * CAST(h22 AS DOUBLE) - CAST(h12 AS DOUBLE) * CAST(g2 AS DOUBLE))
-        - CAST(g0 AS DOUBLE) * (CAST(h01 AS DOUBLE) * CAST(h22 AS DOUBLE) - CAST(h12 AS DOUBLE) * CAST(h02 AS DOUBLE))
-        + CAST(h02 AS DOUBLE) * (CAST(h01 AS DOUBLE) * CAST(g2 AS DOUBLE) - CAST(g1 AS DOUBLE) * CAST(h02 AS DOUBLE))
-    ) / det"""
-    d2 = """(
-        CAST(h00 AS DOUBLE) * (CAST(h11 AS DOUBLE) * CAST(g2 AS DOUBLE) - CAST(g1 AS DOUBLE) * CAST(h12 AS DOUBLE))
-        - CAST(h01 AS DOUBLE) * (CAST(h01 AS DOUBLE) * CAST(g2 AS DOUBLE) - CAST(g1 AS DOUBLE) * CAST(h02 AS DOUBLE))
-        + CAST(g0 AS DOUBLE) * (CAST(h01 AS DOUBLE) * CAST(h12 AS DOUBLE) - CAST(h11 AS DOUBLE) * CAST(h02 AS DOUBLE))
-    ) / det"""
+    det, d0, d1, d2 = _SQL_CRAMER
     ctes = [base]
     for i in range(1, n_iter + 1):
         prev = f"it{i - 1}"
@@ -480,7 +463,16 @@ def sql_logreg_newton(
                sum(sx2 * sx2 * w) AS h22
         FROM cells{i} GROUP BY b0, b1, b2
     ),
-    det{i} AS (SELECT *, ({solve}) AS det FROM sums{i}),
+    cramer{i} AS (
+        SELECT b0, b1, b2,
+               CAST(h00 AS DOUBLE) AS n, CAST(h01 AS DOUBLE) AS a1,
+               CAST(h02 AS DOUBLE) AS a2, CAST(g0 AS DOUBLE) AS ay,
+               CAST(h11 AS DOUBLE) AS a11, CAST(h12 AS DOUBLE) AS a12,
+               CAST(h22 AS DOUBLE) AS a22, CAST(g1 AS DOUBLE) AS a1y,
+               CAST(g2 AS DOUBLE) AS a2y
+        FROM sums{i}
+    ),
+    det{i} AS (SELECT *, {det} AS det FROM cramer{i}),
     it{i} AS (
         SELECT CASE WHEN det = 0 THEN b0 ELSE b0 + {d0} END AS b0,
                CASE WHEN det = 0 THEN b1 ELSE b1 + {d1} END AS b1,

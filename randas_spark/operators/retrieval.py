@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from randas_spark.functions.text import tokens
+from randas_spark.functions.text import sql_tokens, tokens
 from randas_spark.queries import fround
 
 
@@ -115,6 +115,48 @@ def bm25_topk(
     ).limit(top_k)
     w = Window.orderBy(F.desc("bm25"), F.col("doc_id"))
     return top.withColumn("rk", F.row_number().over(w))
+
+
+def sql_bm25_scored(
+    table: str,
+    id_col: str,
+    text_col: str,
+    query_terms: list[str],
+    k1: float = 1.2,
+    b: float = 0.75,
+) -> str:
+    """DuckDB twin of :func:`bm25_topk`'s scoring, as CTEs for a caller's
+    ``WITH``: ``toks`` (the non-empty tokens — the same ``term <> ''``
+    filter, so '' tokens from irregular whitespace count toward neither
+    dl nor avgdl), ``dl``, ``stats``, ``tf``, ``dfq`` and ``scored``
+    (``doc_id``, un-rounded ``raw`` score). Each caller keeps its own
+    rounding and ranking tail."""
+    terms = ", ".join(f"'{term}'" for term in query_terms)
+    return f"""toks AS (
+        SELECT doc_id, term FROM (
+            SELECT {id_col} AS doc_id, unnest({sql_tokens(text_col)}) AS term
+            FROM {table}
+        ) WHERE term <> ''
+    ), dl AS (
+        SELECT doc_id, count(*) AS dl FROM toks GROUP BY 1
+    ), stats AS (
+        SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dl
+    ), tf AS (
+        SELECT doc_id, term, count(*) AS tf FROM toks
+        WHERE term IN ({terms}) GROUP BY 1, 2
+    ), dfq AS (
+        SELECT term, count(DISTINCT doc_id) AS df FROM tf GROUP BY 1
+    ), scored AS (
+        SELECT tf.doc_id,
+               sum(ln(1 + (n_docs - df + 0.5) / (df + 0.5))
+                   * tf * ({k1} + 1) / (tf + {k1} * (1 - {b} + {b} * dl / avgdl))
+               ) AS raw
+        FROM tf
+        JOIN dfq USING (term)
+        JOIN dl ON dl.doc_id = tf.doc_id
+        CROSS JOIN stats
+        GROUP BY 1
+    )"""
 
 
 def rrf_fuse(

@@ -1310,31 +1310,16 @@ def llm_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.withColumn("postings", F.to_json("postings"))
 
 
+from randas_spark.operators.retrieval import sql_bm25_scored
+
+_BM25_TERMS = ["spark", "join", "window"]
+_BM25_SCORED = sql_bm25_scored("documents", "doc_id", "text", _BM25_TERMS)
+
+
 @register(
     "llm_bm25_topk",
     oracle=f"""
-    WITH toks AS (
-        SELECT doc_id, unnest({sql_tokens('text')}) AS term FROM documents
-    ), dl AS (
-        SELECT doc_id, count(*) AS dl FROM toks GROUP BY 1
-    ), stats AS (
-        SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dl
-    ), tf AS (
-        SELECT doc_id, term, count(*) AS tf FROM toks
-        WHERE term IN ('spark', 'join', 'window') GROUP BY 1, 2
-    ), dfq AS (
-        SELECT term, count(DISTINCT doc_id) AS df FROM tf GROUP BY 1
-    ), scored AS (
-        SELECT tf.doc_id,
-               sum(ln(1 + (n_docs - df + 0.5) / (df + 0.5))
-                   * tf * (1.2 + 1) / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))
-               ) AS raw
-        FROM tf
-        JOIN dfq USING (term)
-        JOIN dl ON dl.doc_id = tf.doc_id
-        CROSS JOIN stats
-        GROUP BY 1
-    ), rounded AS (
+    WITH {_BM25_SCORED}, rounded AS (
         SELECT doc_id, {sql_fround('raw', 6)} AS bm25 FROM scored
     )
     SELECT doc_id, bm25, rk FROM (
@@ -1353,7 +1338,7 @@ def llm_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return bm25_topk(
         t(spark, sf_dir, "documents"), "doc_id", "text",
-        ["spark", "join", "window"], k1=1.2, b=0.75, top_k=10,
+        _BM25_TERMS, k1=1.2, b=0.75, top_k=10,
     )
 
 
@@ -1452,31 +1437,10 @@ def llm_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     return llm_dedup_clusters(spark, sf_dir)
 
 
-_BM25_RANKED_CTE = f"""
-    toks AS (
-        SELECT doc_id, term FROM (
-            SELECT doc_id, unnest({sql_tokens('text')}) AS term FROM documents
-        ) WHERE term <> ''
-    ), dl AS (
-        SELECT doc_id, count(*) AS dl FROM toks GROUP BY 1
-    ), stats AS (
-        SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dl
-    ), tf AS (
-        SELECT doc_id, term, count(*) AS tf FROM toks
-        WHERE term IN ('spark', 'join', 'window') GROUP BY 1, 2
-    ), dfq AS (
-        SELECT term, count(DISTINCT doc_id) AS df FROM tf GROUP BY 1
-    ), sparse_scored AS (
-        SELECT tf.doc_id,
-               sum(ln(1 + (n_docs - df + 0.5) / (df + 0.5))
-                   * tf * (1.2 + 1) / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))
-               ) AS raw
-        FROM tf JOIN dfq USING (term) JOIN dl ON dl.doc_id = tf.doc_id
-        CROSS JOIN stats GROUP BY 1
-    ), sparse AS (
+_BM25_RANKED_CTE = f"""{_BM25_SCORED}, sparse AS (
         SELECT doc_id,
                row_number() OVER (ORDER BY {sql_fround('raw', 6)} DESC, doc_id) AS rk
-        FROM sparse_scored
+        FROM scored
     )"""
 
 _DENSE_RANKED_CTE = f"""
@@ -1523,7 +1487,7 @@ def llm_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from randas_spark.operators.retrieval import bm25_topk, rrf_fuse
 
     d = t(spark, sf_dir, "documents")
-    sparse = bm25_topk(d, "doc_id", "text", ["spark", "join", "window"], top_k=50)
+    sparse = bm25_topk(d, "doc_id", "text", _BM25_TERMS, top_k=50)
 
     emb = t(spark, sf_dir, "embeddings")
     qv = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
@@ -3444,55 +3408,46 @@ def llm_length_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _graph_rank_oracle(iters: int = 3, damping: float = 0.85) -> str:
-    jacc_edges = f"""
-    {_sql_jaccard_head()}, edges AS (
+    from randas_spark.operators.mining import sql_pagerank
+
+    graph = f"""{_sql_jaccard_head()}, edges AS (
         SELECT id_a, id_b
         FROM inter
         JOIN sizes sa ON sa.doc_id = id_a
         JOIN sizes sb ON sb.doc_id = id_b
         WHERE CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter) >= 0.3
-    ), und AS (
-        SELECT id_a AS u, id_b AS v FROM edges
+    ), ed AS (
+        SELECT id_a AS s, id_b AS d FROM edges
         UNION ALL
         SELECT id_b, id_a FROM edges
-    ), deg AS (
-        SELECT u, count(*) AS deg FROM und GROUP BY u
-    ), nn AS (SELECT count(*) AS n FROM documents),
-    r0 AS (
-        SELECT doc_id AS node, 1.0 / n AS r FROM documents CROSS JOIN nn
     )"""
-    body = jacc_edges
-    for i in range(iters):
-        body += f""",
-    r{i + 1} AS (
-        SELECT base.node,
-               (1 - {damping}) / nn.n
-               + {damping} * COALESCE(sm.s, 0.0) AS r
-        FROM (SELECT doc_id AS node FROM documents) base
-        CROSS JOIN nn
-        LEFT JOIN (
-            SELECT und.v AS node, sum(p.r / deg.deg) AS s
-            FROM und JOIN r{i} p ON p.node = und.u JOIN deg ON deg.u = und.u
-            GROUP BY und.v
-        ) sm ON sm.node = base.node
-    )"""
+    ranks = sql_pagerank(
+        graph,
+        "SELECT doc_id AS node FROM documents",
+        iters,
+        r0="1.0 / n",
+        contrib="p.r / deg.od",
+        finish=f"(1 - {damping}) / n + {damping} * tot",
+    )
     return f"""
-    WITH {body}
-    SELECT node AS doc_id, {sql_fround('r', 9)} AS rank FROM r{iters}
+    WITH {ranks}
+    SELECT node AS doc_id, {sql_fround('r', 9)} AS rank FROM ranks
     """
 
 
 @register("llm_graph_rank", oracle=_graph_rank_oracle())
 def llm_graph_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank (3 bounded iterations, d=0.85) over the 5-gram-Jaccard
-    near-dup graph (operators/dedup.graph_pagerank): authority-based
-    canonical-doc selection / graph quality propagation. The unroll is
-    a single lazy plan of chained join+agg rounds — each round shuffles
-    on the node key only — and the oracle replays the identical rounds
-    as chained CTEs, so the iterative algorithm itself is value-hash
-    checked (fround(9): float sum order may differ between engines by
-    ~1e-16 relative, far under the rounding)."""
-    from randas_spark.operators.dedup import graph_pagerank, ngram_jaccard_pairs
+    near-dup graph (operators/mining.graph_pagerank): authority-based
+    canonical-doc selection / graph quality propagation. The rounds are
+    a single lazy plan of join+agg rounds — each round shuffles on the
+    node key only — and the oracle replays the identical rounds as
+    chained CTEs (operators/mining.sql_pagerank), so the iterative
+    algorithm itself is value-hash checked (fround(9): float sum order
+    may differ between engines by ~1e-16 relative, far under the
+    rounding)."""
+    from randas_spark.operators.dedup import ngram_jaccard_pairs
+    from randas_spark.operators.mining import graph_pagerank
 
     d = t(spark, sf_dir, "documents")
     pairs = ngram_jaccard_pairs(d, "doc_id", "text", k=5, threshold=0.3)
@@ -5759,33 +5714,16 @@ def llm_pca_project2(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PACK_LEN = 512
 
 
+from randas_spark.operators.corpus import sql_sequence_pack
+
+_PACK_NTOK = sql_token_count_bpe_ish("text")
+
+
 @register(
     "llm_sequence_pack",
     oracle=f"""
-    WITH d AS (
-        SELECT doc_id, {sql_token_count_bpe_ish('text')} AS n_tok,
-               md5(CAST(doc_id AS VARCHAR)) AS ord
-        FROM documents
-    ), nz AS (SELECT * FROM d WHERE n_tok > 0),
-    st AS (
-        SELECT doc_id, n_tok,
-               CAST(coalesce(sum(n_tok) OVER (
-                   ORDER BY ord, doc_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-               ), 0) AS BIGINT) AS doc_start
-        FROM nz
-    )
-    SELECT doc_id,
-           pack_id,
-           doc_start,
-           greatest(doc_start, pack_id * {_PACK_LEN}) - doc_start AS seg_start,
-           least(doc_start + n_tok, (pack_id + 1) * {_PACK_LEN})
-               - greatest(doc_start, pack_id * {_PACK_LEN}) AS seg_len,
-           greatest(doc_start, pack_id * {_PACK_LEN})
-               - pack_id * {_PACK_LEN} AS pack_offset
-    FROM st, UNNEST(generate_series(
-                 doc_start // {_PACK_LEN},
-                 (doc_start + n_tok - 1) // {_PACK_LEN})) AS u(pack_id)
+    WITH {sql_sequence_pack("documents", "doc_id", _PACK_NTOK, _PACK_LEN)}
+    SELECT * FROM segs
     """,
 )
 def llm_sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5874,39 +5812,18 @@ def llm_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_PACK_BASE = """b AS (
+        SELECT CAST(coalesce(sum(n_tok), 0) AS BIGINT) AS base
+        FROM d WHERE doc_id % 2 = 0
+    )"""
+
+
 @register(
     "llm_sequence_pack_incremental",
     oracle=f"""
-    WITH d AS (
-        SELECT doc_id, {sql_token_count_bpe_ish('text')} AS n_tok,
-               md5(CAST(doc_id AS VARCHAR)) AS ord
-        FROM documents
-    ),
-    b AS (
-        SELECT CAST(coalesce(sum(n_tok), 0) AS BIGINT) AS base
-        FROM d WHERE doc_id % 2 = 0
-    ),
-    nz AS (SELECT * FROM d WHERE n_tok > 0 AND doc_id % 2 = 1),
-    st AS (
-        SELECT doc_id, n_tok,
-               (SELECT base FROM b)
-               + CAST(coalesce(sum(n_tok) OVER (
-                     ORDER BY ord, doc_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-                 ), 0) AS BIGINT) AS doc_start
-        FROM nz
-    )
-    SELECT doc_id,
-           pack_id,
-           doc_start,
-           greatest(doc_start, pack_id * {_PACK_LEN}) - doc_start AS seg_start,
-           least(doc_start + n_tok, (pack_id + 1) * {_PACK_LEN})
-               - greatest(doc_start, pack_id * {_PACK_LEN}) AS seg_len,
-           greatest(doc_start, pack_id * {_PACK_LEN})
-               - pack_id * {_PACK_LEN} AS pack_offset
-    FROM st, UNNEST(generate_series(
-                 doc_start // {_PACK_LEN},
-                 (doc_start + n_tok - 1) // {_PACK_LEN})) AS u(pack_id)
+    WITH {sql_sequence_pack("documents", "doc_id", _PACK_NTOK, _PACK_LEN,
+                            batch="doc_id % 2 = 1", base=_PACK_BASE)}
+    SELECT * FROM segs
     """,
 )
 def llm_sequence_pack_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6015,31 +5932,16 @@ def llm_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_PACK_BY_SOURCE = sql_sequence_pack(
+    "documents", "doc_id", _PACK_NTOK, _PACK_LEN, group_col="source"
+)
+
+
 @register(
     "llm_sequence_pack_by_source",
     oracle=f"""
-    WITH d AS (
-        SELECT source, doc_id, {sql_token_count_bpe_ish('text')} AS n_tok,
-               md5(CAST(doc_id AS VARCHAR)) AS ord
-        FROM documents
-    ), nz AS (SELECT * FROM d WHERE n_tok > 0),
-    st AS (
-        SELECT source, doc_id, n_tok,
-               CAST(coalesce(sum(n_tok) OVER (
-                   PARTITION BY source ORDER BY ord, doc_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-               ), 0) AS BIGINT) AS doc_start
-        FROM nz
-    )
-    SELECT source, doc_id, pack_id, doc_start,
-           greatest(doc_start, pack_id * {_PACK_LEN}) - doc_start AS seg_start,
-           least(doc_start + n_tok, (pack_id + 1) * {_PACK_LEN})
-               - greatest(doc_start, pack_id * {_PACK_LEN}) AS seg_len,
-           greatest(doc_start, pack_id * {_PACK_LEN})
-               - pack_id * {_PACK_LEN} AS pack_offset
-    FROM st, UNNEST(generate_series(
-                 doc_start // {_PACK_LEN},
-                 (doc_start + n_tok - 1) // {_PACK_LEN})) AS u(pack_id)
+    WITH {_PACK_BY_SOURCE}
+    SELECT * FROM segs
     """,
 )
 def llm_sequence_pack_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6065,28 +5967,7 @@ def llm_sequence_pack_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "llm_pack_efficiency",
     oracle=f"""
-    WITH d AS (
-        SELECT source, doc_id, {sql_token_count_bpe_ish('text')} AS n_tok,
-               md5(CAST(doc_id AS VARCHAR)) AS ord
-        FROM documents
-    ), nz AS (SELECT * FROM d WHERE n_tok > 0),
-    st AS (
-        SELECT source, doc_id, n_tok,
-               CAST(coalesce(sum(n_tok) OVER (
-                   PARTITION BY source ORDER BY ord, doc_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-               ), 0) AS BIGINT) AS doc_start
-        FROM nz
-    ),
-    segs AS (
-        SELECT source, doc_id, pack_id,
-               greatest(doc_start, pack_id * {_PACK_LEN}) - doc_start AS seg_start,
-               least(doc_start + n_tok, (pack_id + 1) * {_PACK_LEN})
-                   - greatest(doc_start, pack_id * {_PACK_LEN}) AS seg_len
-        FROM st, UNNEST(generate_series(
-                     doc_start // {_PACK_LEN},
-                     (doc_start + n_tok - 1) // {_PACK_LEN})) AS u(pack_id)
-    )
+    WITH {_PACK_BY_SOURCE}
     SELECT source,
            CAST(sum(CASE WHEN seg_start = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_docs,
            CAST(max(pack_id) + 1 AS BIGINT) AS n_packs,

@@ -2295,17 +2295,42 @@ def rel_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: The part co-purchase graph as CTEs for a caller's ``WITH``: ``items``
+#: the distinct (order, part) rows, ``pc`` every co-ordered part pair
+#: (pa < pb) with its basket count ``c``, and ``e`` the graph's edges —
+#: pairs co-ordered in >= 2 baskets. :func:`_copurchase_edges` is the
+#: Spark twin of ``e``. AS MATERIALIZED: several oracles read ``e`` more
+#: than once (SCALE.md, the lazy-CTE-chain lesson).
+_SQL_COPURCHASE = """items AS MATERIALIZED (
+        SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
+    ), pc AS MATERIALIZED (
+        SELECT a.pk AS pa, b.pk AS pb, count(*) AS c
+        FROM items a JOIN items b ON a.ok = b.ok AND a.pk < b.pk
+        GROUP BY a.pk, b.pk
+    ), e AS MATERIALIZED (SELECT pa, pb FROM pc WHERE c >= 2)"""
+
+
+def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The part co-purchase graph: one (pa, pb) row with pa < pb for
+    each pair of parts co-ordered in >= 2 baskets (the ``e`` of
+    :data:`_SQL_COPURCHASE`), via operators/mining.basket_pair_counts —
+    basket-keyed, never all-pairs across parts."""
+    from randas_spark.operators.mining import basket_pair_counts
+
+    return (
+        basket_pair_counts(t(spark, sf_dir, "lineitem"), "l_orderkey", "l_partkey")
+        .filter(F.col("pair_count") >= 2)
+        .select(F.col("item_a").alias("pa"), F.col("item_b").alias("pb"))
+    )
+
+
 @register(
     "rel_market_basket_lift",
     oracle=f"""
-    WITH items AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
+    WITH {_SQL_COPURCHASE},
     n AS (SELECT count(DISTINCT ok) AS n_baskets FROM items),
     cnt AS (SELECT pk, count(*) AS c FROM items GROUP BY pk),
-    pairs AS (
-        SELECT a.pk AS part_a, b.pk AS part_b, count(*) AS pair_count
-        FROM items a JOIN items b ON a.ok = b.ok AND a.pk < b.pk
-        GROUP BY a.pk, b.pk
-    )
+    pairs AS (SELECT pa AS part_a, pb AS part_b, c AS pair_count FROM pc)
     SELECT part_a, part_b, pair_count,
            {sql_fround('pair_count * 1.0 / n_baskets', 6)} AS support,
            {sql_fround('(pair_count * 1.0 * n_baskets) / (ca.c * 1.0 * cb.c)', 4)} AS lift
@@ -2350,14 +2375,8 @@ def rel_market_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "rel_triangle_count",
-    oracle="""
-    WITH items AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-    pc AS (
-        SELECT a.pk AS pa, b.pk AS pb, count(*) AS c
-        FROM items a JOIN items b ON a.ok = b.ok AND a.pk < b.pk
-        GROUP BY a.pk, b.pk
-    ),
-    e AS (SELECT pa, pb FROM pc WHERE c >= 2)
+    oracle=f"""
+    WITH {_SQL_COPURCHASE}
     SELECT e1.pa AS node_a, e1.pb AS node_b, e2.pb AS node_c
     FROM e e1
     JOIN e e2 ON e2.pa = e1.pb
@@ -2385,15 +2404,9 @@ def rel_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of re-deriving the basket self-join per reference — without
     it the logical plan re-scans lineitem 8× and AQE's ReusedExchange
     only recovers a fraction (measured 38 planned scans → 5)."""
-    from randas_spark.operators.mining import basket_pair_counts, triangle_enumerate
+    from randas_spark.operators.mining import triangle_enumerate
 
-    li = t(spark, sf_dir, "lineitem")
-    edges = (
-        basket_pair_counts(li, "l_orderkey", "l_partkey")
-        .filter(F.col("pair_count") >= 2)
-        .select(F.col("item_a").alias("pa"), F.col("item_b").alias("pb"))
-    )
-    return triangle_enumerate(edges, "pa", "pb")
+    return triangle_enumerate(_copurchase_edges(spark, sf_dir), "pa", "pb")
 
 
 @register(
@@ -2449,16 +2462,7 @@ def _sql_kcore_copurchase(k: int, rounds: int) -> str:
     co-purchase graph. AS MATERIALIZED per round — DuckDB inlines
     single-reference CTEs and a lazy chain re-evaluates exponentially
     (SCALE.md, BPE-oracle lesson)."""
-    ctes = [
-        "items AS MATERIALIZED (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem)",
-        """e0 AS MATERIALIZED (
-            SELECT pa, pb FROM (
-                SELECT a.pk AS pa, b.pk AS pb, count(*) AS c
-                FROM items a JOIN items b ON a.ok = b.ok AND a.pk < b.pk
-                GROUP BY a.pk, b.pk
-            ) WHERE c >= 2
-        )""",
-    ]
+    ctes = [_SQL_COPURCHASE, "e0 AS (SELECT pa, pb FROM e)"]
     for i in range(1, rounds + 1):
         ctes.append(
             f"""n{i} AS MATERIALIZED (
@@ -2488,41 +2492,26 @@ def _sql_kcore_copurchase(k: int, rounds: int) -> str:
 
 def _sql_pagerank_copurchase(rounds: int = 3, scale: int = 10**12) -> str:
     """Unrolled fixed-point PageRank oracle: ``rounds`` exact int64
-    power-iteration passes over the symmetrized co-purchase graph,
-    mirroring operators/mining.pagerank_int's integer recurrence
-    (DuckDB ``//`` == Spark ``div`` on non-negative int64). AS
-    MATERIALIZED per round (the k-core/BPE lazy-CTE-chain lesson)."""
-    ctes = [
-        "items AS MATERIALIZED (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem)",
-        """e0 AS MATERIALIZED (
-            SELECT pa, pb FROM (
-                SELECT a.pk AS pa, b.pk AS pb, count(*) AS c
-                FROM items a JOIN items b ON a.ok = b.ok AND a.pk < b.pk
-                GROUP BY a.pk, b.pk
-            ) WHERE c >= 2
-        )""",
-        "ed AS MATERIALIZED (SELECT pa AS s, pb AS d FROM e0 UNION ALL SELECT pb, pa FROM e0)",
-        "deg AS MATERIALIZED (SELECT s AS node, CAST(count(*) AS BIGINT) AS od FROM ed GROUP BY s)",
-        "nn AS MATERIALIZED (SELECT CAST(count(*) AS BIGINT) AS n FROM deg)",
-        f"r0 AS MATERIALIZED (SELECT node, CAST({scale} // (SELECT n FROM nn) AS BIGINT) AS r FROM deg)",
-    ]
-    for i in range(1, rounds + 1):
-        ctes.append(
-            f"""r{i} AS MATERIALIZED (
-                SELECT deg.node,
-                       CAST(({scale} * 15) // (100 * (SELECT n FROM nn))
-                            + coalesce(c.tot, 0) AS BIGINT) AS r
-                FROM deg LEFT JOIN (
-                    SELECT ed.d AS node,
-                           CAST(sum((p.r * 85) // (100 * dg.od)) AS BIGINT) AS tot
-                    FROM r{i - 1} p
-                    JOIN ed ON ed.s = p.node
-                    JOIN deg dg ON dg.node = p.node
-                    GROUP BY ed.d
-                ) c ON c.node = deg.node
-            )"""
-        )
-    return "WITH " + ",\n".join(ctes) + f"\nSELECT node, r AS pagerank FROM r{rounds}"
+    power-iteration passes over the symmetrized co-purchase graph
+    (operators/mining.sql_pagerank with pagerank_int's integer
+    recurrence; DuckDB ``//`` == Spark ``div`` on non-negative int64).
+    The node universe is every node with an out-edge, as in
+    pagerank_int."""
+    from randas_spark.operators.mining import sql_pagerank
+
+    graph = (
+        f"{_SQL_COPURCHASE},\n    ed AS MATERIALIZED "
+        "(SELECT pa AS s, pb AS d FROM e UNION ALL SELECT pb, pa FROM e)"
+    )
+    ranks = sql_pagerank(
+        graph,
+        "SELECT node FROM deg",
+        rounds,
+        r0=f"CAST({scale} // n AS BIGINT)",
+        contrib="(p.r * 85) // (100 * deg.od)",
+        finish=f"CAST(({scale} * 15) // (100 * n) + tot AS BIGINT)",
+    )
+    return f"WITH {ranks}\nSELECT node, r AS pagerank FROM ranks"
 
 
 @register("rel_pagerank", oracle=_sql_pagerank_copurchase(rounds=3))
@@ -2539,14 +2528,9 @@ def rel_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combinable groupBy; at 3 rounds the whole tail is one lazy
     plan (pagerank_int's ckpt_every cadence truncates lineage only on
     longer runs), so no per-round barrier job serializes the rounds."""
-    from randas_spark.operators.mining import basket_pair_counts, pagerank_int
+    from randas_spark.operators.mining import pagerank_int
 
-    li = t(spark, sf_dir, "lineitem")
-    und = (
-        basket_pair_counts(li, "l_orderkey", "l_partkey")
-        .filter(F.col("pair_count") >= 2)
-        .select(F.col("item_a").alias("pa"), F.col("item_b").alias("pb"))
-    )
+    und = _copurchase_edges(spark, sf_dir)
     edges = und.select(F.col("pa").alias("s"), F.col("pb").alias("d")).unionAll(
         und.select(F.col("pb").alias("s"), F.col("pa").alias("d"))
     )
@@ -2560,14 +2544,7 @@ def _sql_bfs_promo(rounds: int) -> str:
     over the co-purchase graph from the PROMO-part sources. AS
     MATERIALIZED per round (the k-core/BPE lazy-CTE-chain lesson)."""
     ctes = [
-        "items AS MATERIALIZED (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem)",
-        """e AS MATERIALIZED (
-            SELECT pa, pb FROM (
-                SELECT a.pk AS pa, b.pk AS pb, count(*) AS c
-                FROM items a JOIN items b ON a.ok = b.ok AND a.pk < b.pk
-                GROUP BY a.pk, b.pk
-            ) WHERE c >= 2
-        )""",
+        _SQL_COPURCHASE,
         "adj AS MATERIALIZED (SELECT pa AS a, pb AS b FROM e UNION SELECT pb, pa FROM e)",
         """v0 AS MATERIALIZED (
             SELECT DISTINCT p_partkey AS node, CAST(0 AS BIGINT) AS hops
@@ -2610,15 +2587,10 @@ def rel_graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines). Scale: the corpus-sized basket contraction runs once
     before the loop; each round shuffles only the shrinking frontier
     against the checkpointed adjacency list."""
-    from randas_spark.operators.mining import basket_pair_counts, bfs_hops
+    from randas_spark.operators.mining import bfs_hops
 
-    li = t(spark, sf_dir, "lineitem")
     p = t(spark, sf_dir, "part")
-    edges = (
-        basket_pair_counts(li, "l_orderkey", "l_partkey")
-        .filter(F.col("pair_count") >= 2)
-        .select(F.col("item_a").alias("pa"), F.col("item_b").alias("pb"))
-    )
+    edges = _copurchase_edges(spark, sf_dir)
     sources = p.filter(F.col("p_type").like("PROMO%")).select(
         F.col("p_partkey").alias("node")
     )
@@ -2641,15 +2613,9 @@ def rel_kcore_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     passes — equal by construction since a no-op pass is a no-op on both
     engines. Measured peel depth ≤5 at sf0.001-0.1; test pins that the
     budgeted result IS the fixpoint."""
-    from randas_spark.operators.mining import basket_pair_counts, k_core
+    from randas_spark.operators.mining import k_core
 
-    li = t(spark, sf_dir, "lineitem")
-    edges = (
-        basket_pair_counts(li, "l_orderkey", "l_partkey")
-        .filter(F.col("pair_count") >= 2)
-        .select(F.col("item_a").alias("pa"), F.col("item_b").alias("pb"))
-    )
-    return k_core(edges, k=2, rounds=6, src="pa", dst="pb")
+    return k_core(_copurchase_edges(spark, sf_dir), k=2, rounds=6, src="pa", dst="pb")
 
 
 @register(

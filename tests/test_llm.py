@@ -1032,6 +1032,45 @@ def test_bm25_matches_reference_formula(spark, docs):
         assert got[d] == pytest.approx(s, abs=1e-6)
 
 
+def test_bm25_oracle_matches_spark_on_irregular_whitespace(spark):
+    """Runs of spaces and leading/trailing spaces split into '' tokens;
+    bm25_topk drops them before dl/avgdl, and llm_bm25_topk's oracle
+    must drop them too — the registry corpus has none, so only this
+    fixture can tell the two apart."""
+    import duckdb
+
+    from randas_spark.operators.retrieval import bm25_topk
+    from randas_spark.queries import REGISTRY, load_all
+
+    rows = [
+        (1, "spark  join   window"),
+        (2, " spark join"),
+        (3, "window join  "),
+        (4, "  the spark is  a join of   joins "),
+        (5, "no match here"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = sorted(
+        tuple(r)
+        for r in bm25_topk(df, "doc_id", "text", ["spark", "join", "window"], top_k=10)
+        .select("doc_id", "bm25", "rk")
+        .collect()
+    )
+    load_all()
+    con = duckdb.connect()
+    vals = ", ".join(f"({i}, '{text}')" for i, text in rows)
+    con.execute(
+        f"CREATE TABLE documents AS SELECT * FROM (VALUES {vals}) v(doc_id, text)"
+    )
+    want = sorted(
+        con.execute(
+            f"SELECT doc_id, bm25, rk FROM ({REGISTRY['llm_bm25_topk'].oracle})"
+        ).fetchall()
+    )
+    assert len(got) == 4
+    assert got == want
+
+
 def test_dedup_clusters_match_union_find(spark, docs):
     """dedup_cluster_assignments (star CC over the doc universe) ==
     driver-side union-find on the same edges; keep flags select exactly
@@ -1746,12 +1785,19 @@ def test_jaccard_verifier_exact_on_adversarial_corpus(spark, adversarial):
 
 #: jobs started while each query is constructed (its plan built, before
 #: any action), measured at the suite's sf0.001 after one warm build —
-#: the eager checkpoints each dedup composition pays up front
+#: the eager checkpoints each dedup and graph composition pays up front
+#: (k-core and BFS counts follow the graph's peel and hop depth, so
+#: they differ per scale: 26 and 30 at sf0.01)
 _CONSTRUCT_JOBS = {
     "llm_dedup_minhash_det": 2,
     "llm_minhash_recall_audit": 2,
     "llm_dedup_incremental_near": 4,
     "llm_dedup_minhash_clusters": 14,
+    "llm_graph_rank": 6,
+    "rel_pagerank": 7,
+    "rel_triangle_count": 8,
+    "rel_kcore_copurchase": 11,
+    "rel_graph_bfs_hops": 23,
 }
 
 

@@ -1631,6 +1631,45 @@ def test_pagerank_ckpt_cadence_is_value_invariant(spark):
     assert run(100) == every_round
 
 
+def test_graph_pagerank_matches_python_float_replay(spark):
+    """graph_pagerank (the float arithmetic on pagerank_int's round core)
+    vs a pure-Python float replay on an undirected graph with a chain
+    (1-2-3-4), a second component (a triangle 5-6-7 with a pendant 8)
+    and two isolated nodes (9, 10) that keep the (1-d)/N floor; both
+    sides fround(9), as llm_graph_rank does."""
+    import math
+
+    from randas_spark.operators.mining import graph_pagerank
+    from randas_spark.queries import fround
+
+    und = [(1, 2), (2, 3), (3, 4), (5, 6), (6, 7), (5, 7), (7, 8)]
+    n_nodes, d = 10, 0.85
+    nodes = spark.createDataFrame([(v,) for v in range(1, n_nodes + 1)], "node long")
+    edges = spark.createDataFrame(und, "id_a long, id_b long")
+    got = {
+        r.node: r.r
+        for r in graph_pagerank(nodes, edges, "node", iters=3, damping=d)
+        .select("node", fround(F.col("r"), 9).alias("r"))
+        .collect()
+    }
+
+    adj = {v: [] for v in range(1, n_nodes + 1)}
+    for a, b in und:
+        adj[a].append(b)
+        adj[b].append(a)
+    r = {v: 1.0 / n_nodes for v in adj}
+    for _ in range(3):
+        nxt = {v: 0.0 for v in adj}
+        for u, nbrs in adj.items():
+            for v in nbrs:
+                nxt[v] += r[u] / len(nbrs)
+        r = {v: (1 - d) / n_nodes + d * nxt[v] for v in adj}
+    want = {v: math.floor(x * 1e9 + 0.5) / 1e9 for v, x in r.items()}
+    assert got == want
+    assert got[9] == got[10] == math.floor((1 - d) / n_nodes * 1e9 + 0.5) / 1e9
+    assert got[7] > got[5] > got[8]
+
+
 def test_join_skew_report_consistency(spark):
     """Skew metrics cohere: top-1 share times rows reproduces the max
     count, p99 never exceeds the max, and mean-normalized ratios are
