@@ -577,7 +577,7 @@ def encode_gif_animation(
 
 
 # --------------------------------------------------------------------------
-# JPEG — baseline sequential DCT (VERDICT r11 order #6)
+# JPEG — sequential and progressive DCT (VERDICT r11 order #6, r13)
 # --------------------------------------------------------------------------
 
 JPEG_MAGIC = b"\xff\xd8"
@@ -629,7 +629,6 @@ class _JpegBits:
         self.i = i
         self.buf = 0
         self.n = 0
-        self.marker_hit = False
 
     def _fill(self) -> bool:
         d = self.data
@@ -640,7 +639,6 @@ class _JpegBits:
             if self.i + 1 < len(d) and d[self.i + 1] == 0x00:
                 self.i += 2  # stuffed data 0xFF
             else:
-                self.marker_hit = True
                 return False  # real marker: RSTn / EOI / next segment
         else:
             self.i += 1
@@ -654,13 +652,15 @@ class _JpegBits:
         self.n -= 1
         return (self.buf >> self.n) & 1
 
-    def bits(self, k: int) -> int | None:
+    def take(self, k: int) -> int:
+        """The next ``k`` bits as an unsigned int; a stream that ends
+        first is truncated."""
         v = 0
         for _ in range(k):
-            b = self.bit()
-            if b is None:
-                return None
-            v = (v << 1) | b
+            if self.n == 0 and not self._fill():
+                raise ValueError("truncated JPEG entropy stream")
+            self.n -= 1
+            v = (v << 1) | ((self.buf >> self.n) & 1)
         return v
 
     def align_to_marker(self) -> int | None:
@@ -668,7 +668,6 @@ class _JpegBits:
         marker byte (e.g. 0xD0..0xD7 for RSTn)."""
         self.buf = 0
         self.n = 0
-        self.marker_hit = False
         d = self.data
         while self.i + 1 < len(d):
             if d[self.i] == 0xFF and d[self.i + 1] != 0x00:
@@ -739,18 +738,25 @@ def _jpeg_idct_block(coef: list[float]) -> bytearray:
 
 
 def decode_jpeg(data: bytes) -> tuple[int, int, int, bytes]:
-    """Baseline sequential JFIF decoder (stdlib only) — (width, height,
-    channels, pixels), channels 1 (grayscale) or 3 (RGB).
+    """JFIF decoder (stdlib only) — (width, height, channels, pixels),
+    channels 1 (grayscale) or 3 (RGB).
 
-    Profile: SOF0/SOF1, 8-bit precision, 1 or 3 components, arbitrary
-    h/v sampling factors 1-4 (4:4:4, 4:2:2, 4:2:0, ...), DRI/RSTn
-    restart intervals, 0xFF00 byte unstuffing. Chroma upsampling is
-    nearest-neighbor block replication (libjpeg's "fancy" triangular
-    filter is an encoder-visible choice, not part of T.81; goldens pin
-    ours). Progressive (SOF2) streams dispatch to
-    _decode_jpeg_progressive (r13); arithmetic coding, 12-bit precision
-    and hierarchical profiles raise ValueError — and lossy WebP/video
-    stay behind NotImplementedError in operators/multimodal.py.
+    Profile: baseline/extended sequential (SOF0/SOF1) and progressive
+    (SOF2, T.81 Annex G) DCT, 8-bit precision, 1 or 3 components,
+    arbitrary h/v sampling factors 1-4 (4:4:4, 4:2:2, 4:2:0, ...),
+    DRI/RSTn restart intervals, 0xFF00 byte unstuffing. Chroma
+    upsampling is nearest-neighbor block replication (libjpeg's "fancy"
+    triangular filter is an encoder-visible choice, not part of T.81;
+    goldens pin ours). Arithmetic coding, 12-bit precision and
+    hierarchical profiles raise ValueError — and lossy WebP/video stay
+    behind NotImplementedError in operators/multimodal.py.
+
+    One marker walk serves both processes. A sequential frame has
+    exactly one interleaved scan: each block is dequantized and IDCT'd
+    as it is decoded, and the walk stops after that scan. A progressive
+    frame accumulates zigzag-ordered coefficients across spectral-
+    selection / successive-approximation scans, resuming the walk after
+    each, then dequantizes + IDCTs once.
 
     Format reference: ITU-T T.81 (the public JPEG specification) and
     the JFIF 1.02 spec; same public-spec discipline as the BMP/GIF
@@ -762,9 +768,9 @@ def decode_jpeg(data: bytes) -> tuple[int, int, int, bytes]:
     huff_ac: dict[int, _JpegHuff] = {}
     comps: list[dict] = []
     width = height = 0
+    progressive = scanned = False
     restart_interval = 0
     i = 2
-    scan_at = None
     while i + 4 <= len(data):
         if data[i] != 0xFF:
             raise ValueError("desynced JPEG marker stream")
@@ -772,12 +778,13 @@ def decode_jpeg(data: bytes) -> tuple[int, int, int, bytes]:
         if m == 0xD8:  # stray SOI
             i += 2
             continue
-        if m == 0xD9:  # EOI before any scan
+        if m == 0xD9:  # EOI
             break
         seg_len = struct.unpack(">H", data[i + 2 : i + 4])[0]
         seg = data[i + 4 : i + 2 + seg_len]
         if len(seg) != seg_len - 2:
             raise ValueError("truncated JPEG segment")
+        i += 2 + seg_len
         if m == 0xDB:  # DQT
             j = 0
             while j < len(seg):
@@ -792,21 +799,9 @@ def decode_jpeg(data: bytes) -> tuple[int, int, int, bytes]:
                         for z in range(64)
                     ]
                     j += 128
-        elif m in (0xC0, 0xC1):  # SOF0 baseline / SOF1 extended sequential
-            if seg[0] != 8:
-                raise ValueError("only 8-bit JPEG precision is supported")
-            height, width = struct.unpack(">HH", seg[1:5])
-            n_comp = seg[5]
-            if n_comp not in (1, 3):
-                raise ValueError("only 1- or 3-component JPEG is supported")
-            for cix in range(n_comp):
-                cid, hv, tq = seg[6 + 3 * cix : 9 + 3 * cix]
-                comps.append(
-                    {"id": cid, "h": hv >> 4, "v": hv & 0x0F, "tq": tq}
-                )
-        elif m == 0xC2:
-            # progressive DCT: decoded by the dedicated multi-scan path
-            return _decode_jpeg_progressive(data)
+        elif m in (0xC0, 0xC1, 0xC2):  # SOF0/SOF1 sequential, SOF2 progressive
+            progressive = m == 0xC2
+            width, height, comps = _jpeg_frame(seg, progressive)
         elif m in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
             raise ValueError(
                 "unsupported JPEG coding process (baseline sequential and "
@@ -824,29 +819,68 @@ def decode_jpeg(data: bytes) -> tuple[int, int, int, bytes]:
         elif m == 0xDD:  # DRI
             restart_interval = struct.unpack(">H", seg[0:2])[0]
         elif m == 0xDA:  # SOS
-            ns = seg[0]
-            if ns != len(comps):
+            if not progressive and seg[0] != len(comps):
                 # Spec-legal but rare: baseline with non-interleaved
-                # scans (one SOS per component). The single-scan decoder
-                # below would leave dc/ac unset on unscanned components
-                # and die with KeyError — fail with a clear message.
+                # scans (one SOS per component). The single-scan
+                # sequential decode would leave dc/ac unset on unscanned
+                # components — fail with a clear message.
                 raise ValueError(
                     "multi-scan (non-interleaved) baseline JPEG is not supported"
                 )
-            scan = []
-            for s in range(ns):
-                cid, tt = seg[1 + 2 * s : 3 + 2 * s]
-                comp = next(c for c in comps if c["id"] == cid)
-                comp["dc"] = tt >> 4
-                comp["ac"] = tt & 0x0F
-                scan.append(comp)
-            scan_at = i + 2 + seg_len
-            break
+            if not comps or width == 0 or height == 0:
+                break  # no frame to decode into: reported below
+            bits = _jpeg_scan(
+                data, i, seg, comps, qt, huff_dc, huff_ac, restart_interval, progressive
+            )
+            scanned = True
+            if not progressive:
+                break  # the one sequential scan; trailing bytes are ignored
+            # resume the marker walk after the entropy-coded data
+            i = bits.i
+            while i + 1 < len(data):
+                if data[i] == 0xFF and data[i + 1] != 0x00:
+                    if 0xD0 <= data[i + 1] <= 0xD7:  # stray restart
+                        i += 2
+                        continue
+                    break
+                i += 1
         # APPn / COM / anything else: skip
-        i += 2 + seg_len
-    if scan_at is None or not comps or width == 0 or height == 0:
-        raise ValueError("JPEG has no baseline scan")
+    if not scanned or not comps or width == 0 or height == 0:
+        raise ValueError(
+            "progressive JPEG has no scan" if progressive else "JPEG has no baseline scan"
+        )
+    if progressive:
+        for c in comps:
+            q = qt[c["tq"]]
+            for bi, blk in enumerate(c["coef"]):
+                coef = [0.0] * 64
+                for k in range(64):
+                    if blk[k]:
+                        coef[_JPEG_ZIGZAG[k]] = float(blk[k] * q[k])
+                by, bx = divmod(bi, c["bw"])
+                _jpeg_blit(c, bx, by, _jpeg_idct_block(coef))
+    hmax = max(c["h"] for c in comps)
+    vmax = max(c["v"] for c in comps)
+    return _jpeg_to_pixels(comps, width, height, hmax, vmax)
 
+
+def _jpeg_frame(seg: bytes, progressive: bool) -> tuple[int, int, list[dict]]:
+    """Parse a SOF segment into (width, height, components). Each
+    component carries its sampling factors, its quantization table id,
+    its block-padded MCU raster (bw x bh blocks), its unpadded block
+    raster for non-interleaved scans (nbx x nby), its DC predictor, its
+    pixel plane and — progressive only — one zigzag coefficient block
+    per raster position."""
+    if seg[0] != 8:
+        raise ValueError("only 8-bit JPEG precision is supported")
+    height, width = struct.unpack(">HH", seg[1:5])
+    n_comp = seg[5]
+    if n_comp not in (1, 3):
+        raise ValueError("only 1- or 3-component JPEG is supported")
+    comps = []
+    for cix in range(n_comp):
+        cid, hv, tq = seg[6 + 3 * cix : 9 + 3 * cix]
+        comps.append({"id": cid, "h": hv >> 4, "v": hv & 0x0F, "tq": tq})
     hmax = max(c["h"] for c in comps)
     vmax = max(c["v"] for c in comps)
     mcux = (width + 8 * hmax - 1) // (8 * hmax)
@@ -854,71 +888,154 @@ def decode_jpeg(data: bytes) -> tuple[int, int, int, bytes]:
     for c in comps:
         c["bw"] = mcux * c["h"]  # blocks per line
         c["bh"] = mcuy * c["v"]
-        c["plane"] = bytearray(c["bw"] * 8 * c["bh"] * 8)
+        c["nbx"] = (-(-width * c["h"] // hmax) + 7) // 8
+        c["nby"] = (-(-height * c["v"] // vmax) + 7) // 8
         c["pred"] = 0
-        c["q"] = qt[c["tq"]]
+        c["plane"] = bytearray(c["bw"] * 8 * c["bh"] * 8)
+        if progressive:
+            c["coef"] = [[0] * 64 for _ in range(c["bw"] * c["bh"])]
+    return width, height, comps
 
-    bits = _JpegBits(data, scan_at)
-    n_mcu = mcux * mcuy
+
+def _jpeg_blit(c: dict, bx: int, by: int, px: bytearray) -> None:
+    """Copy one decoded 8x8 block into its component plane at block
+    column ``bx``, block row ``by``."""
+    pw = c["bw"] * 8
+    plane = c["plane"]
+    dst = by * 8 * pw + bx * 8
+    for r in range(8):
+        plane[dst : dst + 8] = px[r * 8 : r * 8 + 8]
+        dst += pw
+
+
+def _jpeg_scan(
+    data: bytes,
+    i: int,
+    seg: bytes,
+    comps: list[dict],
+    qt: dict[int, list[int]],
+    huff_dc: dict[int, _JpegHuff],
+    huff_ac: dict[int, _JpegHuff],
+    restart_interval: int,
+    progressive: bool,
+) -> _JpegBits:
+    """Decode the scan whose SOS segment ``seg`` ends at ``i``; returns
+    the bit reader, positioned after the entropy-coded data.
+
+    A sequential scan walks MCUs and dequantizes + IDCTs each block as
+    it decodes it. A progressive scan adds its bits to the components'
+    coefficient blocks: interleaved (ns > 1) DC scans walk MCUs,
+    single-component scans walk the component's unpadded block raster."""
+    ns = seg[0]
+    scan = []
+    for s in range(ns):
+        cid, tt = seg[1 + 2 * s : 3 + 2 * s]
+        comp = next(c for c in comps if c["id"] == cid)
+        comp["dc"] = tt >> 4
+        comp["ac"] = tt & 0x0F
+        comp["eob"] = 0
+        scan.append(comp)
+    bits = _JpegBits(data, i)
+    if not progressive:
+        # ns == len(comps) was checked by the caller; blocks go in frame
+        # component order
+        for c in comps:
+            c["q"] = qt[c["tq"]]
+
+        def block(c, bx, by):
+            _jpeg_seq_block(bits, c, bx, by, huff_dc[c["dc"]], huff_ac[c["ac"]])
+
+        _jpeg_mcu_walk(bits, comps, comps, True, restart_interval, block)
+        return bits
+    ss, se, a = seg[1 + 2 * ns : 4 + 2 * ns]
+    ah, al = a >> 4, a & 0x0F
+    if ss == 0 and se != 0:
+        raise ValueError("invalid progressive scan: DC and AC share a scan")
+    if ss > 0 and ns != 1:
+        raise ValueError("progressive AC scan must be single-component")
+    if ss == 0:
+
+        def block(c, bx, by):
+            blk = c["coef"][by * c["bw"] + bx]
+            _prog_dc_block(bits, huff_dc[c["dc"]], c, blk, ah, al)
+
+    else:
+        ac_pass = _prog_ac_first if ah == 0 else _prog_ac_refine
+
+        def block(c, bx, by):
+            blk = c["coef"][by * c["bw"] + bx]
+            c["eob"] = ac_pass(bits, huff_ac[c["ac"]], blk, ss, se, al, c["eob"])
+
+    _jpeg_mcu_walk(bits, comps, scan, ns > 1, restart_interval, block)
+    return bits
+
+
+def _jpeg_mcu_walk(bits, comps, scan, interleaved, restart_interval, block):
+    """Call ``block(c, bx, by)`` for every block of one scan in T.81
+    order. Interleaved: the frame's MCU raster, each MCU holding h x v
+    blocks per scanned component. Otherwise one block per unit, over
+    the component's unpadded raster. Every ``restart_interval`` units
+    an RSTn marker (n cycling 0-7) must follow; it resets every DC
+    predictor and end-of-band run."""
+    c0 = scan[0]
+    if interleaved:
+        ux, uy = c0["bw"] // c0["h"], c0["bh"] // c0["v"]
+    else:
+        ux, uy = c0["nbx"], c0["nby"]
     rst_n = 0
-    for mcu in range(n_mcu):
-        if restart_interval and mcu and mcu % restart_interval == 0:
-            mk = bits.align_to_marker()
-            if mk != 0xD0 + (rst_n & 7):
+    for u in range(ux * uy):
+        if restart_interval and u and u % restart_interval == 0:
+            if bits.align_to_marker() != 0xD0 + (rst_n & 7):
                 raise ValueError("missing JPEG restart marker")
             rst_n += 1
             for c in comps:
                 c["pred"] = 0
-        my, mx = divmod(mcu, mcux)
-        for c in comps:
-            q = c["q"]
-            for by in range(c["v"]):
-                for bx in range(c["h"]):
-                    coef = [0.0] * 64
-                    t = _jpeg_decode_huff(bits, huff_dc[c["dc"]])
-                    if t:
-                        v = bits.bits(t)
-                        if v is None:
-                            raise ValueError("truncated JPEG entropy stream")
-                        c["pred"] += _jpeg_extend(v, t)
-                    else:
-                        c["pred"] += 0
-                    coef[0] = float(c["pred"] * q[0])
-                    k = 1
-                    while k < 64:
-                        rs = _jpeg_decode_huff(bits, huff_ac[c["ac"]])
-                        r, s = rs >> 4, rs & 0x0F
-                        if s == 0:
-                            if r == 15:
-                                k += 16
-                                continue
-                            break  # EOB
-                        k += r
-                        if k > 63:
-                            raise ValueError("JPEG AC index out of range")
-                        v = bits.bits(s)
-                        if v is None:
-                            raise ValueError("truncated JPEG entropy stream")
-                        coef[_JPEG_ZIGZAG[k]] = float(_jpeg_extend(v, s) * q[k])
-                        k += 1
-                    px = _jpeg_idct_block(coef)
-                    # blit into the component plane
-                    pw = c["bw"] * 8
-                    ox = (mx * c["h"] + bx) * 8
-                    oy = (my * c["v"] + by) * 8
-                    for r_ in range(8):
-                        dst = (oy + r_) * pw + ox
-                        c["plane"][dst : dst + 8] = px[r_ * 8 : r_ * 8 + 8]
+                c["eob"] = 0
+        my, mx = divmod(u, ux)
+        for c in scan:
+            h, v = (c["h"], c["v"]) if interleaved else (1, 1)
+            for by in range(v):
+                for bx in range(h):
+                    block(c, mx * h + bx, my * v + by)
 
-    return _jpeg_to_pixels(comps, width, height, hmax, vmax)
+
+def _jpeg_dc_diff(bits: _JpegBits, table: _JpegHuff) -> int:
+    """One DPCM DC difference (T.81 F.2.2.1): size category, then that
+    many magnitude bits."""
+    t = _jpeg_decode_huff(bits, table)
+    return _jpeg_extend(bits.take(t), t) if t else 0
+
+
+def _jpeg_seq_block(bits, c, bx, by, dc_tab, ac_tab):
+    """One sequential block: DC difference, run/size AC symbols until
+    EOB (any ``s=0, r<15`` symbol ends the block), dequantize in place,
+    IDCT, blit."""
+    q = c["q"]
+    coef = [0.0] * 64
+    c["pred"] += _jpeg_dc_diff(bits, dc_tab)
+    coef[0] = float(c["pred"] * q[0])
+    k = 1
+    while k < 64:
+        rs = _jpeg_decode_huff(bits, ac_tab)
+        r, s = rs >> 4, rs & 0x0F
+        if s == 0:
+            if r == 15:
+                k += 16
+                continue
+            break  # EOB
+        k += r
+        if k > 63:
+            raise ValueError("JPEG AC index out of range")
+        coef[_JPEG_ZIGZAG[k]] = float(_jpeg_extend(bits.take(s), s) * q[k])
+        k += 1
+    _jpeg_blit(c, bx, by, _jpeg_idct_block(coef))
 
 
 def _jpeg_to_pixels(
     comps: list[dict], width: int, height: int, hmax: int, vmax: int
 ) -> tuple[int, int, int, bytes]:
-    """Shared tail of the baseline and progressive decoders: crop the
-    block-padded component planes, upsample chroma (nearest) and apply
-    the JFIF YCbCr->RGB conversion."""
+    """Crop the block-padded component planes, upsample chroma
+    (nearest) and apply the JFIF YCbCr->RGB conversion."""
     if len(comps) == 1:
         c = comps[0]
         pw = c["bw"] * 8
@@ -962,23 +1079,12 @@ def _prog_dc_block(bits, table, comp, blk, ah, al):
     """One block's DC pass (T.81 G.1.2.1): first scan is DPCM over the
     point-transformed values; a refinement appends bit ``al``."""
     if ah == 0:
-        t = _jpeg_decode_huff(bits, table)
-        diff = 0
-        if t:
-            v = bits.bits(t)
-            if v is None:
-                raise ValueError("truncated JPEG entropy stream")
-            diff = _jpeg_extend(v, t)
-        comp["pred"] += diff
+        comp["pred"] += _jpeg_dc_diff(bits, table)
         blk[0] = comp["pred"] << al
-    else:
-        b = bits.bit()
-        if b is None:
-            raise ValueError("truncated JPEG entropy stream")
-        if b:
-            # bits below `al` are zero in the stored two's-complement
-            # value, so |= appends the refinement bit for either sign
-            blk[0] |= 1 << al
+    elif bits.take(1):
+        # bits below `al` are zero in the stored two's-complement
+        # value, so |= appends the refinement bit for either sign
+        blk[0] |= 1 << al
 
 
 def _prog_ac_first(bits, table, blk, ss, se, al, eob_run):
@@ -992,22 +1098,13 @@ def _prog_ac_first(bits, table, blk, ss, se, al, eob_run):
         r, s = rs >> 4, rs & 0x0F
         if s == 0:
             if r < 15:
-                er = (1 << r) - 1
-                if r:
-                    got = bits.bits(r)
-                    if got is None:
-                        raise ValueError("truncated JPEG entropy stream")
-                    er += got
-                return er
+                return (1 << r) - 1 + bits.take(r)
             k += 16  # ZRL: sixteen zeros
         else:
             k += r
             if k > se:
                 raise ValueError("JPEG AC index out of spectral band")
-            v = bits.bits(s)
-            if v is None:
-                raise ValueError("truncated JPEG entropy stream")
-            blk[k] = _jpeg_extend(v, s) << al
+            blk[k] = _jpeg_extend(bits.take(s), s) << al
             k += 1
     return 0
 
@@ -1019,10 +1116,7 @@ def _prog_ac_refine(bits, table, blk, ss, se, al, eob_run):
     bit = 1 << al
 
     def correct(k: int) -> None:
-        b = bits.bit()
-        if b is None:
-            raise ValueError("truncated JPEG entropy stream")
-        if b and (blk[k] & bit) == 0:
+        if bits.take(1) and (blk[k] & bit) == 0:
             blk[k] += bit if blk[k] > 0 else -bit
 
     if eob_run > 0:
@@ -1037,20 +1131,12 @@ def _prog_ac_refine(bits, table, blk, ss, se, al, eob_run):
         val = 0
         if s == 0:
             if r < 15:
-                eob_run = (1 << r) - 1
-                if r:
-                    got = bits.bits(r)
-                    if got is None:
-                        raise ValueError("truncated JPEG entropy stream")
-                    eob_run += got
+                eob_run = (1 << r) - 1 + bits.take(r)
                 r = 64  # flush: refine the rest of the band, insert nothing
         else:
             if s != 1:
                 raise ValueError("invalid JPEG AC refinement magnitude")
-            b = bits.bit()
-            if b is None:
-                raise ValueError("truncated JPEG entropy stream")
-            val = bit if b else -bit
+            val = bit if bits.take(1) else -bit
         while k <= se:
             if blk[k] != 0:
                 correct(k)
@@ -1064,192 +1150,3 @@ def _prog_ac_refine(bits, table, blk, ss, se, al, eob_run):
                 r -= 1
                 k += 1
     return eob_run
-
-
-def _decode_jpeg_progressive(data: bytes) -> tuple[int, int, int, bytes]:
-    """Progressive JFIF decoder (SOF2, T.81 Annex G): accumulates
-    zigzag-ordered coefficients across spectral-selection / successive-
-    approximation scans, then dequantizes + IDCTs once. Shares the
-    Huffman/extend/IDCT/upsample machinery with the baseline decoder
-    above; interleaved (ns > 1) scans walk MCUs, non-interleaved scans
-    walk the component's own unpadded block raster. Restart intervals
-    reset both the DC predictors and the EOB run."""
-    if data[:2] != JPEG_MAGIC:
-        raise ValueError("not a JPEG stream")
-    qt: dict[int, list[int]] = {}
-    huff_dc: dict[int, _JpegHuff] = {}
-    huff_ac: dict[int, _JpegHuff] = {}
-    comps: list[dict] = []
-    width = height = 0
-    hmax = vmax = mcux = mcuy = 0
-    restart_interval = 0
-    i = 2
-    saw_scan = False
-    while i + 4 <= len(data):
-        if data[i] != 0xFF:
-            raise ValueError("desynced JPEG marker stream")
-        m = data[i + 1]
-        if m == 0xD8:
-            i += 2
-            continue
-        if m == 0xD9:
-            break
-        seg_len = struct.unpack(">H", data[i + 2 : i + 4])[0]
-        seg = data[i + 4 : i + 2 + seg_len]
-        if len(seg) != seg_len - 2:
-            raise ValueError("truncated JPEG segment")
-        if m == 0xDB:
-            j = 0
-            while j < len(seg):
-                pq, tq = seg[j] >> 4, seg[j] & 0x0F
-                j += 1
-                if pq == 0:
-                    qt[tq] = list(seg[j : j + 64])
-                    j += 64
-                else:
-                    qt[tq] = [
-                        struct.unpack(">H", seg[j + 2 * z : j + 2 * z + 2])[0]
-                        for z in range(64)
-                    ]
-                    j += 128
-        elif m == 0xC2:
-            if seg[0] != 8:
-                raise ValueError("only 8-bit JPEG precision is supported")
-            height, width = struct.unpack(">HH", seg[1:5])
-            n_comp = seg[5]
-            if n_comp not in (1, 3):
-                raise ValueError("only 1- or 3-component JPEG is supported")
-            for cix in range(n_comp):
-                cid, hv, tq = seg[6 + 3 * cix : 9 + 3 * cix]
-                comps.append(
-                    {"id": cid, "h": hv >> 4, "v": hv & 0x0F, "tq": tq}
-                )
-            hmax = max(c["h"] for c in comps)
-            vmax = max(c["v"] for c in comps)
-            mcux = (width + 8 * hmax - 1) // (8 * hmax)
-            mcuy = (height + 8 * vmax - 1) // (8 * vmax)
-            for c in comps:
-                c["bw"] = mcux * c["h"]
-                c["bh"] = mcuy * c["v"]
-                c["coef"] = [[0] * 64 for _ in range(c["bw"] * c["bh"])]
-                c["pred"] = 0
-                # unpadded block raster for non-interleaved scans
-                c["nbx"] = (-(-width * c["h"] // hmax) + 7) // 8
-                c["nby"] = (-(-height * c["v"] // vmax) + 7) // 8
-        elif m == 0xC4:
-            j = 0
-            while j < len(seg):
-                tc, th = seg[j] >> 4, seg[j] & 0x0F
-                counts = list(seg[j + 1 : j + 17])
-                n_sym = sum(counts)
-                symbols = seg[j + 17 : j + 17 + n_sym]
-                (huff_dc if tc == 0 else huff_ac)[th] = _JpegHuff(counts, symbols)
-                j += 17 + n_sym
-        elif m == 0xDD:
-            restart_interval = struct.unpack(">H", seg[0:2])[0]
-        elif m == 0xDA:
-            if not comps:
-                raise ValueError("JPEG scan before frame header")
-            ns = seg[0]
-            scan = []
-            for s_ in range(ns):
-                cid, tt = seg[1 + 2 * s_ : 3 + 2 * s_]
-                comp = next(c for c in comps if c["id"] == cid)
-                comp["dc"] = tt >> 4
-                comp["ac"] = tt & 0x0F
-                scan.append(comp)
-            ss, se, a = seg[1 + 2 * ns : 4 + 2 * ns]
-            ah, al = a >> 4, a & 0x0F
-            if ss == 0 and se != 0:
-                raise ValueError(
-                    "invalid progressive scan: DC and AC share a scan"
-                )
-            if ss > 0 and ns != 1:
-                raise ValueError("progressive AC scan must be single-component")
-            bits = _JpegBits(data, i + 2 + seg_len)
-            eob_run = 0
-            rst_n = 0
-            n_units = 0
-
-            def maybe_restart():
-                nonlocal eob_run, rst_n
-                mk = bits.align_to_marker()
-                if mk != 0xD0 + (rst_n & 7):
-                    raise ValueError("missing JPEG restart marker")
-                rst_n += 1
-                eob_run = 0
-                for c in comps:
-                    c["pred"] = 0
-
-            if ss == 0 and ns > 1:  # interleaved DC scan
-                for mcu in range(mcux * mcuy):
-                    if restart_interval and mcu and mcu % restart_interval == 0:
-                        maybe_restart()
-                    my, mx = divmod(mcu, mcux)
-                    for c in scan:
-                        for by in range(c["v"]):
-                            for bx in range(c["h"]):
-                                bi = (my * c["v"] + by) * c["bw"] + (
-                                    mx * c["h"] + bx
-                                )
-                                _prog_dc_block(
-                                    bits, huff_dc[c["dc"]], c, c["coef"][bi],
-                                    ah, al,
-                                )
-            else:  # non-interleaved: the component's own block raster
-                c = scan[0]
-                for by in range(c["nby"]):
-                    for bx in range(c["nbx"]):
-                        if (
-                            restart_interval
-                            and n_units
-                            and n_units % restart_interval == 0
-                        ):
-                            maybe_restart()
-                        n_units += 1
-                        blk = c["coef"][by * c["bw"] + bx]
-                        if ss == 0:
-                            _prog_dc_block(
-                                bits, huff_dc[c["dc"]], c, blk, ah, al
-                            )
-                        elif ah == 0:
-                            eob_run = _prog_ac_first(
-                                bits, huff_ac[c["ac"]], blk, ss, se, al,
-                                eob_run,
-                            )
-                        else:
-                            eob_run = _prog_ac_refine(
-                                bits, huff_ac[c["ac"]], blk, ss, se, al,
-                                eob_run,
-                            )
-            saw_scan = True
-            # resume the marker walk after the entropy-coded data
-            i = bits.i
-            while i + 1 < len(data):
-                if data[i] == 0xFF and data[i + 1] != 0x00:
-                    if 0xD0 <= data[i + 1] <= 0xD7:  # stray restart
-                        i += 2
-                        continue
-                    break
-                i += 1
-            continue
-        i += 2 + seg_len
-    if not saw_scan or not comps or width == 0 or height == 0:
-        raise ValueError("progressive JPEG has no scan")
-
-    for c in comps:
-        q = qt[c["tq"]]
-        c["plane"] = bytearray(c["bw"] * 8 * c["bh"] * 8)
-        pw = c["bw"] * 8
-        for bi, blk in enumerate(c["coef"]):
-            coef = [0.0] * 64
-            for k in range(64):
-                if blk[k]:
-                    coef[_JPEG_ZIGZAG[k]] = float(blk[k] * q[k])
-            px = _jpeg_idct_block(coef)
-            by, bx = divmod(bi, c["bw"])
-            ox, oy = bx * 8, by * 8
-            for r_ in range(8):
-                dst = (oy + r_) * pw + ox
-                c["plane"][dst : dst + 8] = px[r_ * 8 : r_ * 8 + 8]
-    return _jpeg_to_pixels(comps, width, height, hmax, vmax)

@@ -1,5 +1,5 @@
-"""Distributed PCA (top principal component) via exact integer Gram
-aggregation + deterministic power iteration — dimensionality reduction /
+"""Distributed PCA (top-k principal components) via exact integer Gram
+aggregation + deterministic power iteration and Hotelling deflation — dimensionality reduction /
 whitening for embedding pipelines (dedup preprocessing, ANN compression,
 drift monitoring all start with "project onto the top components").
 
@@ -27,9 +27,11 @@ Architecture (the closed-form-OLS law applied to eigen-decomposition):
    w = M v; v = w / ||w||, starting from v0 = 1/sqrt(d) per component
    (exactly representable for power-of-two d). O(d^2 * rounds) scalar
    ops — microseconds; the data-sized work was step 2's single scan.
-5. PROJECT (pca_project): each vector's PC1 score is the centered
-   projection ``sum_j double(n*q_j - s_j) * v_j`` — a codegen'd left
-   fold over the scan, no Python.
+   Component c > 1 runs the same iteration on M deflated by every
+   earlier (v, lambda) pair (``_components``).
+5. PROJECT (pca_project): each vector's score on component c is the
+   centered projection ``sum_j double(n*q_j - s_j) * v_c[j]`` — a
+   codegen'd left fold over the scan, no Python.
 
 Cross-engine exactness: steps 1-3 are exact integers on both engines
 (DuckDB sums to HUGEINT; Spark sums to DECIMAL(38,0); Python holds
@@ -39,7 +41,8 @@ index order with a 0.0 init (the functions/vectors.py convention:
 F.aggregate(…, lit(0.0)) == list_reduce(list_prepend(0.0, …))) — so
 loadings, eigenvalue, and projections are BIT-IDENTICAL, no rounding
 slack. The SQL twins macro-expand the iteration into one CTE pair per
-round (the sql_logreg_newton pattern).
+round (the sql_logreg_newton pattern), one block per component
+(``_sql_pca_chain``).
 
 Scale: the only data-sized stage is one embarrassingly-parallel scan
 emitting fixed-size cell batches; everything after is O(d^2) driver /
@@ -200,53 +203,25 @@ def _deflate(
     return [[m[i][j] - (lam * v[i]) * v[j] for j in range(d)] for i in range(d)]
 
 
-def pca_power(
-    df: DataFrame,
-    vec_col: str,
-    dim: int,
-    scale: int = 10_000,
-    rounds: int = 12,
-) -> DataFrame:
-    """Top principal component of the quantized vector corpus: one row
-    per dimension (dim_idx 1-based, loading, explained_ratio), where
-    explained_ratio = lambda_1 / trace(M) (the fraction of total variance
-    the component captures; trace is exact-int, double-divided)."""
-    spark = df.sparkSession
-    n, s, big = _collect_moments(df, vec_col, dim, scale)
-    m = _center(n, s, big)
-    v, lam = _power_iteration(m, rounds)
-    trace = float(sum(n * big[i][i] - s[i] * s[i] for i in range(dim)))
-    ratio = lam / trace
-    return spark.createDataFrame(
-        [(i + 1, v[i], ratio) for i in range(dim)],
-        "dim_idx long, loading double, explained_ratio double",
-    )
+def _check_k(caller: str, k: int, dim: int) -> None:
+    if not 1 <= k <= dim:
+        raise ValueError(f"{caller}: need 1 <= k <= dim, got k={k} dim={dim}")
 
 
-def pca_top2(
-    df: DataFrame,
-    vec_col: str,
-    dim: int,
-    scale: int = 10_000,
-    rounds: int = 12,
-) -> DataFrame:
-    """Top TWO principal components via Hotelling deflation: PC1 by
-    power iteration on the centered moment matrix, then PC2 by the same
-    iteration on M - lam1 * v1 v1^T. One data-sized scan total — the
-    deflation and second iteration are more O(d^2) driver arithmetic.
-    Output: (component, dim_idx, loading, explained_ratio)."""
-    spark = df.sparkSession
-    n, s, big = _collect_moments(df, vec_col, dim, scale)
-    m = _center(n, s, big)
-    trace = float(sum(n * big[i][i] - s[i] * s[i] for i in range(dim)))
-    v1, lam1 = _power_iteration(m, rounds)
-    v2, lam2 = _power_iteration(_deflate(m, v1, lam1), rounds)
-    rows = [(1, i + 1, v1[i], lam1 / trace) for i in range(dim)]
-    rows += [(2, i + 1, v2[i], lam2 / trace) for i in range(dim)]
-    return spark.createDataFrame(
-        rows,
-        "component long, dim_idx long, loading double, explained_ratio double",
-    )
+def _components(
+    m: list[list[float]], k: int, rounds: int
+) -> list[tuple[list[float], float]]:
+    """The top-k ``(v, lam)`` pairs of the centered matrix: component c
+    is the power-iteration eigenvector of
+    ``M - sum_{c'<c} lam_c' v_c' v_c'^T`` with its Rayleigh quotient —
+    O(k * rounds * d^2) driver arithmetic, op order mirrored by
+    :func:`_sql_pca_chain`."""
+    out = []
+    for c in range(k):
+        if c:
+            m = _deflate(m, *out[-1])
+        out.append(_power_iteration(m, rounds))
+    return out
 
 
 def pca_topk(
@@ -257,31 +232,29 @@ def pca_topk(
     scale: int = 10_000,
     rounds: int = 12,
 ) -> DataFrame:
-    """Top-K principal components via repeated Hotelling deflation —
-    the k-generalization of :func:`pca_top2` (VERDICT r7 item 7):
-    component c is the power-iteration eigenvector of
-    ``M - sum_{c'<c} lam_c' v_c' v_c'^T``, computed with the identical
-    per-step op order, so pca_topk(k=2) is value-identical to pca_top2.
+    """Top-K principal components via repeated Hotelling deflation
+    (:func:`_components`): PC1 by power iteration on the centered
+    moment matrix, each later component by the same iteration on the
+    matrix deflated by every earlier one.
 
     Scale story unchanged from the family: ONE data-sized mapInPandas
     scan produces the (dim+1)^2 integer Gram cells; all K deflation +
     iteration rounds are O(K * rounds * d^2) driver arithmetic on exact
     moments. k <= 8 covers what corpus triage uses (2-D maps, 4-8-D
     diversity stratification). Output: (component 1..k, dim_idx 1..dim,
-    loading, explained_ratio) with explained_ratio = lam_c / trace(M).
+    loading, explained_ratio) with explained_ratio = lam_c / trace(M)
+    (the fraction of total variance the component captures; trace is
+    exact-int, double-divided).
     """
-    if not 1 <= k <= dim:
-        raise ValueError(f"pca_topk: need 1 <= k <= dim, got k={k} dim={dim}")
+    _check_k("pca_topk", k, dim)
     spark = df.sparkSession
     n, s, big = _collect_moments(df, vec_col, dim, scale)
-    m = _center(n, s, big)
     trace = float(sum(n * big[i][i] - s[i] * s[i] for i in range(dim)))
-    rows = []
-    for c in range(1, k + 1):
-        v, lam = _power_iteration(m, rounds)
-        rows += [(c, i + 1, v[i], lam / trace) for i in range(dim)]
-        if c < k:
-            m = _deflate(m, v, lam)
+    rows = [
+        (c, i + 1, v[i], lam / trace)
+        for c, (v, lam) in enumerate(_components(_center(n, s, big), k, rounds), 1)
+        for i in range(dim)
+    ]
     return spark.createDataFrame(
         rows,
         "component long, dim_idx long, loading double, explained_ratio double",
@@ -293,52 +266,19 @@ def pca_project(
     id_col: str,
     vec_col: str,
     dim: int,
+    k: int = 1,
     scale: int = 10_000,
     rounds: int = 12,
 ) -> DataFrame:
-    """Per-vector PC1 score: p = fold_j double(n*q_j - s_j) * v_j over
-    the centered quantized vector — a codegen left fold on a second scan
-    (n, s, v enter as literals; no Python in the projection)."""
+    """Per-vector scores on the top ``k`` components, columns pc1..pck:
+    p_c = fold_j double(n*q_j - s_j) * v_c[j] over the centered
+    quantized vector — one codegen left fold per component on a second
+    scan (n, s, v enter as literals; no Python in the projection). k=2
+    is the 2-D embedding map corpus visualization, stratified diversity
+    sampling and cluster triage start from."""
+    _check_k("pca_project", k, dim)
     n, s, big = _collect_moments(df, vec_col, dim, scale)
     _check_projection_budget(n, s, big)
-    m = _center(n, s, big)
-    v, _ = _power_iteration(m, rounds)
-    s_arr = F.array(*[F.lit(x).cast("long") for x in s])
-    v_arr = F.array(*[F.lit(x) for x in v])
-    qv = F.transform(
-        F.col(vec_col),
-        lambda x: F.floor(x.cast("double") * scale + F.lit(0.5)).cast("long"),
-    )
-    proj = F.aggregate(
-        F.sequence(F.lit(1), F.lit(dim)),
-        F.lit(0.0),
-        lambda acc, i: acc
-        + (
-            (F.lit(n) * F.element_at(qv, i) - F.element_at(s_arr, i)).cast("double")
-            * F.element_at(v_arr, i)
-        ),
-    )
-    return df.select(F.col(id_col), proj.alias("pc1"))
-
-
-def pca_project2(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    scale: int = 10_000,
-    rounds: int = 12,
-) -> DataFrame:
-    """2-D embedding map: per-vector projections onto BOTH learned
-    components (pca_top2's v1, v2) — the coordinates corpus
-    visualization, stratified diversity sampling, and cluster triage
-    start from. Same single-moment-scan + codegen-fold design as
-    pca_project, with two folds in one projection pass."""
-    n, s, big = _collect_moments(df, vec_col, dim, scale)
-    _check_projection_budget(n, s, big)
-    m = _center(n, s, big)
-    v1, lam1 = _power_iteration(m, rounds)
-    v2, _ = _power_iteration(_deflate(m, v1, lam1), rounds)
     s_arr = F.array(*[F.lit(x).cast("long") for x in s])
     qv = F.transform(
         F.col(vec_col),
@@ -359,7 +299,11 @@ def pca_project2(
             ),
         )
 
-    return df.select(F.col(id_col), proj(v1).alias("pc1"), proj(v2).alias("pc2"))
+    comps = _components(_center(n, s, big), k, rounds)
+    return df.select(
+        F.col(id_col),
+        *[proj(v).alias(f"pc{c}") for c, (v, _) in enumerate(comps, 1)],
+    )
 
 
 # --------------------------------------------------------------------------
@@ -369,8 +313,8 @@ def pca_project2(
 
 def _sql_pca_base(table: str, vec_col: str, dim: int, scale: int) -> list[str]:
     """Shared CTE prefix: quantized vectors, n, column sums, second
-    moments, the centered double matrix as an ordered list-of-lists, and
-    v0. HUGEINT everywhere integers live (DuckDB's sum already promotes;
+    moments and the centered double matrix as an ordered list-of-lists.
+    HUGEINT everywhere integers live (DuckDB's sum already promotes;
     n*g and s*s products stay exact)."""
     return [
         f"""qt AS (
@@ -398,7 +342,6 @@ def _sql_pca_base(table: str, vec_col: str, dim: int, scale: int) -> list[str]:
             GROUP BY c.i
         )""",
         "cmat AS (SELECT list(mrow ORDER BY i) AS mat FROM mrows)",
-        _sql_v0(dim, "it0"),
     ]
 
 
@@ -428,9 +371,7 @@ _SQL_NORM = (
 )
 
 
-def _sql_pca_iter(
-    dim: int, rounds: int, mat_cte: str = "cmat", prefix: str = "it"
-) -> list[str]:
+def _sql_pca_iter(dim: int, rounds: int, mat_cte: str, prefix: str) -> list[str]:
     ctes = []
     for k in range(1, rounds + 1):
         ctes.append(
@@ -446,12 +387,13 @@ def _sql_pca_iter(
 
 
 def _sql_rayleigh(dim: int, mat_cte: str, v_cte: str, out: str) -> list[str]:
-    """(v, lam) CTE pair: u = M v, lam = fold v_i * u_i."""
+    """(v, lam) CTE pair, the second materialized: u = M v,
+    lam = fold v_i * u_i."""
     return [
         f"""{out}_fin AS (
             SELECT v, {_sql_matvec(dim)} AS w FROM {mat_cte}, {v_cte}
         )""",
-        f"""{out} AS (
+        f"""{out} AS MATERIALIZED (
             SELECT v,
                    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
                        list_transform(generate_series(1, {dim}), i -> v[i] * w[i])),
@@ -461,32 +403,6 @@ def _sql_rayleigh(dim: int, mat_cte: str, v_cte: str, out: str) -> list[str]:
     ]
 
 
-def sql_pca_power(
-    table: str,
-    vec_col: str,
-    dim: int,
-    scale: int = 10_000,
-    rounds: int = 12,
-    digits: int = 6,
-) -> str:
-    """DuckDB twin of :func:`pca_power`."""
-    from randas_spark.queries import sql_fround
-
-    ctes = _sql_pca_base(table, vec_col, dim, scale) + _sql_pca_iter(dim, rounds)
-    ctes += _sql_rayleigh(dim, "cmat", f"it{rounds}", "lamt")
-    ctes.append(_SQL_TRACE)
-    return (
-        "WITH "
-        + ",\n".join(ctes)
-        + f"""
-        SELECT gi.i AS dim_idx,
-               {sql_fround('v[gi.i]', digits)} AS loading,
-               {sql_fround('lam / tr', digits)} AS explained_ratio
-        FROM lamt, tracet, generate_series(1, {dim}) AS gi(i)
-        """
-    )
-
-
 _SQL_TRACE = """tracet AS (
             SELECT CAST(sum(st.n * c.g - si.s * si.s) AS DOUBLE) AS tr
             FROM cells c JOIN sj si ON si.j = c.i CROSS JOIN st
@@ -494,47 +410,38 @@ _SQL_TRACE = """tracet AS (
         )"""
 
 
-def sql_pca_top2(
-    table: str,
-    vec_col: str,
-    dim: int,
-    scale: int = 10_000,
-    rounds: int = 12,
-    digits: int = 6,
-) -> str:
-    """DuckDB twin of :func:`pca_top2`: PC1 chain, Hotelling deflation
-    with the identical ((lam * v_i) * v_j) op order, PC2 chain."""
-    from randas_spark.queries import sql_fround
+def _sql_pca_chain(
+    table: str, vec_col: str, dim: int, k: int, scale: int, rounds: int
+) -> list[str]:
+    """The k-component CTE chain, twin of :func:`_components`: the
+    shared base, then per component c a (deflate -> v0 -> iterate ->
+    Rayleigh) block macro-expanded with the identical
+    ``mat[i][j] - (lam * v[i]) * v[j]`` op order. Component c ends in
+    ``lam{c}t(v, lam)``.
 
-    ctes = _sql_pca_base(table, vec_col, dim, scale) + _sql_pca_iter(dim, rounds)
-    ctes += _sql_rayleigh(dim, "cmat", f"it{rounds}", "lamt")
-    ctes.append(
-        f"""cmat2 AS (
-            SELECT list_transform(generate_series(1, {dim}), i ->
-                       list_transform(generate_series(1, {dim}), j ->
-                           mat[i][j] - (lam * v[i]) * v[j])) AS mat
-            FROM cmat, lamt
-        )"""
-    )
-    ctes.append(_sql_v0(dim, "jt0"))
-    ctes += _sql_pca_iter(dim, rounds, mat_cte="cmat2", prefix="jt")
-    ctes += _sql_rayleigh(dim, "cmat2", f"jt{rounds}", "lamt2")
-    ctes.append(_SQL_TRACE)
-    return (
-        "WITH "
-        + ",\n".join(ctes)
-        + f"""
-        SELECT CAST(1 AS BIGINT) AS component, gi.i AS dim_idx,
-               {sql_fround('v[gi.i]', digits)} AS loading,
-               {sql_fround('lam / tr', digits)} AS explained_ratio
-        FROM lamt, tracet, generate_series(1, {dim}) AS gi(i)
-        UNION ALL
-        SELECT CAST(2 AS BIGINT), gi.i,
-               {sql_fround('v[gi.i]', digits)},
-               {sql_fround('lam / tr', digits)}
-        FROM lamt2, tracet, generate_series(1, {dim}) AS gi(i)
-        """
-    )
+    MATERIALIZED is load-bearing: every iteration CTE references its
+    matrix CTE, so an inlined (default) deflated matrix re-expands the
+    ENTIRE previous component's chain per round — exponential in k.
+    Materializing pins each deflation and each (v, lam) pair to one
+    evaluation (values identical; DuckDB-planner-only keyword)."""
+    ctes = _sql_pca_base(table, vec_col, dim, scale)
+    mat = "cmat"
+    for c in range(1, k + 1):
+        prefix = "it" if c == 1 else f"k{c}t"
+        if c > 1:
+            ctes.append(
+                f"""cmat{c} AS MATERIALIZED (
+                    SELECT list_transform(generate_series(1, {dim}), i ->
+                               list_transform(generate_series(1, {dim}), j ->
+                                   mat[i][j] - (lam * v[i]) * v[j])) AS mat
+                    FROM {mat}, lam{c - 1}t
+                )"""
+            )
+            mat = f"cmat{c}"
+        ctes.append(_sql_v0(dim, f"{prefix}0"))
+        ctes += _sql_pca_iter(dim, rounds, mat_cte=mat, prefix=prefix)
+        ctes += _sql_rayleigh(dim, mat, f"{prefix}{rounds}", f"lam{c}t")
+    return ctes
 
 
 def sql_pca_topk(
@@ -546,47 +453,19 @@ def sql_pca_topk(
     rounds: int = 12,
     digits: int = 6,
 ) -> str:
-    """DuckDB twin of :func:`pca_topk`: the PC1 chain from the shared
-    base, then per extra component a (deflate -> v0 -> iterate ->
-    Rayleigh) CTE block macro-expanded with the identical
-    ``mat[i][j] - (lam * v[i]) * v[j]`` op order. k=2 emits the same
-    values as :func:`sql_pca_top2`."""
+    """DuckDB twin of :func:`pca_topk`: the k-component chain, then one
+    (component, dim_idx, loading, explained_ratio) select per component."""
     from randas_spark.queries import sql_fround
 
-    if not 1 <= k <= dim:
-        raise ValueError(f"sql_pca_topk: need 1 <= k <= dim, got k={k} dim={dim}")
-    ctes = _sql_pca_base(table, vec_col, dim, scale)
-    mat = "cmat"
-    selects = []
-    for c in range(1, k + 1):
-        prefix = "it" if c == 1 else f"k{c}t"
-        if c > 1:
-            # MATERIALIZED is load-bearing: every iteration CTE references
-            # its matrix CTE, so an inlined (default) deflated matrix
-            # re-expands the ENTIRE previous component's chain per round —
-            # exponential in k. Materializing pins each deflation to one
-            # evaluation (values identical; DuckDB-planner-only keyword).
-            newmat = f"cmat{c}"
-            ctes.append(
-                f"""{newmat} AS MATERIALIZED (
-                    SELECT list_transform(generate_series(1, {dim}), i ->
-                               list_transform(generate_series(1, {dim}), j ->
-                                   mat[i][j] - (lam * v[i]) * v[j])) AS mat
-                    FROM {mat}, lam{c - 1}t
-                )"""
-            )
-            mat = newmat
-            ctes.append(_sql_v0(dim, f"{prefix}0"))
-        ctes += _sql_pca_iter(dim, rounds, mat_cte=mat, prefix=prefix)
-        ctes += _sql_rayleigh(dim, mat, f"{prefix}{rounds}", f"lam{c}t")
-        ctes[-1] = ctes[-1].replace(f"lam{c}t AS (", f"lam{c}t AS MATERIALIZED (", 1)
-        selects.append(
-            f"""SELECT CAST({c} AS BIGINT) AS component, gi.i AS dim_idx,
+    _check_k("sql_pca_topk", k, dim)
+    ctes = _sql_pca_chain(table, vec_col, dim, k, scale, rounds) + [_SQL_TRACE]
+    selects = [
+        f"""SELECT CAST({c} AS BIGINT) AS component, gi.i AS dim_idx,
                {sql_fround('v[gi.i]', digits)} AS loading,
                {sql_fround('lam / tr', digits)} AS explained_ratio
             FROM lam{c}t, tracet, generate_series(1, {dim}) AS gi(i)"""
-        )
-    ctes.append(_SQL_TRACE)
+        for c in range(1, k + 1)
+    ]
     return "WITH " + ",\n".join(ctes) + "\n" + "\nUNION ALL\n".join(selects)
 
 
@@ -595,68 +474,17 @@ def sql_pca_project(
     id_col: str,
     vec_col: str,
     dim: int,
+    k: int = 1,
     scale: int = 10_000,
     rounds: int = 12,
     digits: int = 6,
 ) -> str:
-    """DuckDB twin of :func:`pca_project`: re-derives v through the same
-    CTE chain, then projects every vector with the contract fold."""
+    """DuckDB twin of :func:`pca_project`: re-derives v_1..v_k through
+    the same chain, then projects every vector with the contract fold."""
     from randas_spark.queries import sql_fround
 
-    ctes = _sql_pca_base(table, vec_col, dim, scale) + _sql_pca_iter(dim, rounds)
-    proj = (
-        f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-        f"list_transform(generate_series(1, {dim}), "
-        f"j -> CAST(st.n * qv2.qv[j] - sjj.sv[j] AS DOUBLE) * v[j])), "
-        f"(acc, x) -> acc + x)"
-    )
-    ctes.append("svec AS (SELECT list(s ORDER BY j) AS sv FROM sj)")
-    ctes.append(
-        f"""qt2 AS (
-            SELECT {id_col} AS vid,
-                   list_transform({vec_col},
-                       x -> CAST(floor(CAST(x AS DOUBLE) * {scale} + 0.5) AS BIGINT)) AS qv
-            FROM {table}
-        )"""
-    )
-    return (
-        "WITH "
-        + ",\n".join(ctes)
-        + f"""
-        SELECT qv2.vid AS {id_col}, {sql_fround(proj, digits)} AS pc1
-        FROM qt2 qv2, it{rounds}, st, svec sjj
-        """
-    )
-
-
-def sql_pca_project2(
-    table: str,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    scale: int = 10_000,
-    rounds: int = 12,
-    digits: int = 6,
-) -> str:
-    """DuckDB twin of :func:`pca_project2`: the full top-2 chain
-    (PC1 iteration, Rayleigh, deflation, PC2 iteration), then both
-    contract-fold projections per vector."""
-    from randas_spark.queries import sql_fround
-
-    ctes = _sql_pca_base(table, vec_col, dim, scale) + _sql_pca_iter(dim, rounds)
-    ctes += _sql_rayleigh(dim, "cmat", f"it{rounds}", "lamt")
-    ctes.append(
-        f"""cmat2 AS (
-            SELECT list_transform(generate_series(1, {dim}), i ->
-                       list_transform(generate_series(1, {dim}), j ->
-                           mat[i][j] - (lam * v[i]) * v[j])) AS mat
-            FROM cmat, lamt
-        )"""
-    )
-    ctes.append(_sql_v0(dim, "jt0"))
-    ctes += _sql_pca_iter(dim, rounds, mat_cte="cmat2", prefix="jt")
-    ctes.append(f"v1t AS (SELECT v AS v1 FROM it{rounds})")
-    ctes.append(f"v2t AS (SELECT v AS v2 FROM jt{rounds})")
+    _check_k("sql_pca_project", k, dim)
+    ctes = _sql_pca_chain(table, vec_col, dim, k, scale, rounds)
     ctes.append("svec AS (SELECT list(s ORDER BY j) AS sv FROM sj)")
     ctes.append(
         f"""qt2 AS (
@@ -667,21 +495,21 @@ def sql_pca_project2(
         )"""
     )
 
-    def proj(vname: str) -> str:
+    def proj(c: int) -> str:
         return (
             f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
             f"list_transform(generate_series(1, {dim}), "
-            f"j -> CAST(st.n * qv2.qv[j] - sjj.sv[j] AS DOUBLE) * {vname}[j])), "
+            f"j -> CAST(st.n * qv2.qv[j] - sjj.sv[j] AS DOUBLE) * p{c}.v[j])), "
             f"(acc, x) -> acc + x)"
         )
 
+    comps = range(1, k + 1)
     return (
         "WITH "
         + ",\n".join(ctes)
         + f"""
         SELECT qv2.vid AS {id_col},
-               {sql_fround(proj('v1'), digits)} AS pc1,
-               {sql_fround(proj('v2'), digits)} AS pc2
-        FROM qt2 qv2, v1t, v2t, st, svec sjj
+               {", ".join(f"{sql_fround(proj(c), digits)} AS pc{c}" for c in comps)}
+        FROM qt2 qv2, st, svec sjj, {", ".join(f"lam{c}t p{c}" for c in comps)}
         """
     )

@@ -69,6 +69,25 @@ def _sql_jaccard_head(src: str = "documents", pair: str = "<") -> str:
     )"""
 
 
+#: exact shingle Jaccard of one ``inter`` row, read against the ``sa`` /
+#: ``sb`` sizes rows that :func:`_sql_jaccard_edges` joins in
+_SQL_JACCARD = "CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter)"
+
+
+def _sql_jaccard_edges(
+    threshold: float, inter: str = "inter", id_a: str = "id_a", id_b: str = "id_b"
+) -> str:
+    """The thresholded Jaccard edge tail every exact-pair oracle ends
+    in: ``inter`` (a CTE name or an aliased subquery) joined to both
+    sides' ``sizes`` and kept where :data:`_SQL_JACCARD` >= threshold.
+    The caller writes the SELECT list in front; it may read ``n_inter``,
+    ``sa``, ``sb`` and :data:`_SQL_JACCARD`."""
+    return f"""FROM {inter}
+    JOIN sizes sa ON sa.doc_id = {id_a}
+    JOIN sizes sb ON sb.doc_id = {id_b}
+    WHERE {_SQL_JACCARD} >= {threshold}"""
+
+
 @register(
     "llm_dedup_exact",
     oracle=f"""
@@ -220,12 +239,8 @@ def llm_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     "llm_dedup_ngram_jaccard",
     oracle=f"""
     WITH {_sql_jaccard_head()}
-    SELECT id_a, id_b,
-           CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter) AS jaccard
-    FROM inter
-    JOIN sizes sa ON sa.doc_id = id_a
-    JOIN sizes sb ON sb.doc_id = id_b
-    WHERE CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter) >= 0.6
+    SELECT id_a, id_b, {_SQL_JACCARD} AS jaccard
+    {_sql_jaccard_edges(0.6)}
     """,
 )
 def llm_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -242,12 +257,8 @@ def llm_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     "llm_dedup_ppjoin",
     oracle=f"""
     WITH {_sql_jaccard_head()}
-    SELECT id_a, id_b,
-           CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter) AS jaccard
-    FROM inter
-    JOIN sizes sa ON sa.doc_id = id_a
-    JOIN sizes sb ON sb.doc_id = id_b
-    WHERE CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter) >= 0.5
+    SELECT id_a, id_b, {_SQL_JACCARD} AS jaccard
+    {_sql_jaccard_edges(0.5)}
     """,
 )
 def llm_dedup_ppjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1120,10 +1131,7 @@ def llm_corpus_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT min(doc_id) AS doc_id FROM fps GROUP BY fp
     ), {_sql_jaccard_head("documents WHERE doc_id IN (SELECT doc_id FROM exact_survivors)")}, near_drop AS (
         SELECT DISTINCT id_b AS doc_id
-        FROM inter
-        JOIN sizes sa ON sa.doc_id = id_a
-        JOIN sizes sb ON sb.doc_id = id_b
-        WHERE CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter) >= 0.6
+        {_sql_jaccard_edges(0.6)}
     )
     SELECT doc_id FROM exact_survivors
     WHERE doc_id NOT IN (SELECT doc_id FROM near_drop)
@@ -1388,10 +1396,7 @@ def llm_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH RECURSIVE {_sql_jaccard_head()}, edges AS (
         SELECT id_a, id_b
-        FROM inter
-        JOIN sizes sa ON sa.doc_id = id_a
-        JOIN sizes sb ON sb.doc_id = id_b
-        WHERE CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter) >= 0.3
+        {_sql_jaccard_edges(0.3)}
     ), und AS (
         SELECT id_a AS u, id_b AS v FROM edges
         UNION
@@ -2413,12 +2418,8 @@ def _sql_minhash_lsh(
         JOIN sh b ON b.doc_id = c.id_b AND b.s = a.s
         GROUP BY 1, 2
     )
-    {final or f'''SELECT id_a, id_b,
-           {sql_fround('CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter)', 6)} AS jaccard
-    FROM inter
-    JOIN sizes sa ON sa.doc_id = id_a
-    JOIN sizes sb ON sb.doc_id = id_b
-    WHERE CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter) >= {threshold}'''}
+    {final or f'''SELECT id_a, id_b, {sql_fround(_SQL_JACCARD, 6)} AS jaccard
+    {_sql_jaccard_edges(threshold)}'''}
     """
 
 
@@ -2430,6 +2431,13 @@ def _sql_incremental_near(
     Signatures are per-doc, so computing them over ALL documents and
     splitting sides at the candidate join equals the Spark side's
     separate subset pipelines exactly."""
+    inter = """(
+            SELECT c.id_batch, c.id_led, count(*) AS n_inter
+            FROM cand c
+            JOIN sh a ON a.doc_id = c.id_batch
+            JOIN sh b ON b.doc_id = c.id_led AND b.s = a.s
+            GROUP BY 1, 2
+        ) i"""
     return f"""
     WITH {_sql_minhash_banded(num_perm, bands, k)},
     cand AS (
@@ -2441,18 +2449,8 @@ def _sql_incremental_near(
     ),
     sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
     verified AS (
-        SELECT i.id_batch, i.id_led,
-               CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter) AS jaccard
-        FROM (
-            SELECT c.id_batch, c.id_led, count(*) AS n_inter
-            FROM cand c
-            JOIN sh a ON a.doc_id = c.id_batch
-            JOIN sh b ON b.doc_id = c.id_led AND b.s = a.s
-            GROUP BY 1, 2
-        ) i
-        JOIN sizes sa ON sa.doc_id = i.id_batch
-        JOIN sizes sb ON sb.doc_id = i.id_led
-        WHERE CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter) >= {threshold}
+        SELECT i.id_batch, i.id_led, {_SQL_JACCARD} AS jaccard
+        {_sql_jaccard_edges(threshold, inter, "i.id_batch", "i.id_led")}
     ),
     best AS (
         SELECT id_batch, min(id_led) AS match_id FROM verified GROUP BY 1
@@ -3412,10 +3410,7 @@ def _graph_rank_oracle(iters: int = 3, damping: float = 0.85) -> str:
 
     graph = f"""{_sql_jaccard_head()}, edges AS (
         SELECT id_a, id_b
-        FROM inter
-        JOIN sizes sa ON sa.doc_id = id_a
-        JOIN sizes sb ON sb.doc_id = id_b
-        WHERE CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter) >= 0.3
+        {_sql_jaccard_edges(0.3)}
     ), ed AS (
         SELECT id_a AS s, id_b AS d FROM edges
         UNION ALL
@@ -3781,10 +3776,7 @@ def llm_kmeans_det(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH RECURSIVE {_sql_jaccard_head()}, edges AS (
         SELECT id_a, id_b
-        FROM inter
-        JOIN sizes sa ON sa.doc_id = id_a
-        JOIN sizes sb ON sb.doc_id = id_b
-        WHERE CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter) >= 0.3
+        {_sql_jaccard_edges(0.3)}
     ), und AS (
         SELECT id_a AS u, id_b AS v FROM edges
         UNION
@@ -5349,45 +5341,56 @@ def llm_multimodal_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def _pca_power_oracle() -> str:
-    from randas_spark.operators.pca import sql_pca_power
-
-    return sql_pca_power("embeddings", "embedding", dim=64)
-
-
-def _pca_project_oracle() -> str:
-    from randas_spark.operators.pca import sql_pca_project
-
-    return sql_pca_project("embeddings", "vec_id", "embedding", dim=64)
-
-
-@register("llm_pca_power", oracle=_pca_power_oracle())
-def llm_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top principal component of the embedding corpus
-    (operators/pca.pca_power): ONE mapInPandas scan computes the
-    quantized integer Gram matrix (numpy int64 matmul per Arrow batch,
-    DECIMAL(38,0) cell reduce — exact at any N), the driver centers it
-    in bigint arithmetic and runs 12 deterministic power-iteration
-    steps (O(d^2) state — the k-means-centroid discipline). Output: one
-    row per dimension with the PC1 loading and the explained-variance
-    ratio lambda_1 / trace. The oracle macro-expands the identical
-    iteration (left folds, ascending index, 0.0 init) over the same
-    exact integers, so loadings match bit-for-bit before fround."""
-    from randas_spark.operators.pca import pca_power
-
-    out = pca_power(t(spark, sf_dir, "embeddings"), "embedding", dim=64)
+def _pca_rounded(out: DataFrame, *keys: str) -> DataFrame:
+    """A PCA query's output: the key columns as they are, every other
+    column (loadings, ratios, scores) through fround(…, 6) — the oracle
+    side rounds the same columns with sql_fround."""
     return out.select(
-        "dim_idx",
-        fround(F.col("loading"), 6).alias("loading"),
-        fround(F.col("explained_ratio"), 6).alias("explained_ratio"),
+        *keys, *[fround(F.col(c), 6).alias(c) for c in out.columns if c not in keys]
     )
 
 
-@register("llm_pca_project", oracle=_pca_project_oracle())
+def _pca_topk_sql(k: int) -> str:
+    from randas_spark.operators.pca import sql_pca_topk
+
+    return sql_pca_topk("embeddings", "embedding", dim=64, k=k)
+
+
+def _pca_project_sql(k: int) -> str:
+    from randas_spark.operators.pca import sql_pca_project
+
+    return sql_pca_project("embeddings", "vec_id", "embedding", dim=64, k=k)
+
+
+@register(
+    "llm_pca_power",
+    oracle="SELECT dim_idx, loading, explained_ratio FROM ("
+    + _pca_topk_sql(1)
+    + ")",
+)
+def llm_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top principal component of the embedding corpus
+    (operators/pca.pca_topk at k=1, without the component column): ONE
+    mapInPandas scan computes the quantized integer Gram matrix (numpy
+    int64 matmul per Arrow batch, DECIMAL(38,0) cell reduce — exact at
+    any N), the driver centers it in bigint arithmetic and runs 12
+    deterministic power-iteration steps (O(d^2) state — the
+    k-means-centroid discipline). Output: one row per dimension with
+    the PC1 loading and the explained-variance ratio lambda_1 / trace.
+    The oracle macro-expands the identical iteration (left folds,
+    ascending index, 0.0 init) over the same exact integers, so
+    loadings match bit-for-bit before fround."""
+    from randas_spark.operators.pca import pca_topk
+
+    out = pca_topk(t(spark, sf_dir, "embeddings"), "embedding", dim=64, k=1)
+    return _pca_rounded(out.drop("component"), "dim_idx")
+
+
+@register("llm_pca_project", oracle=_pca_project_sql(1))
 def llm_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-vector projection onto the learned PC1
-    (operators/pca.pca_project): the component derivation is the
-    pca_power chain; the projection itself is a codegen'd left fold of
+    (operators/pca.pca_project, k=1): the component derivation is the
+    pca_topk chain; the projection itself is a codegen'd left fold of
     double(n*q_j - s_j) * v_j over a second scan — no Python in the
     data-sized stage, n/s/v enter as literals. The whitening/compression
     primitive embedding pipelines run before dedup thresholds and ANN
@@ -5395,7 +5398,7 @@ def llm_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     from randas_spark.operators.pca import pca_project
 
     out = pca_project(t(spark, sf_dir, "embeddings"), "vec_id", "embedding", dim=64)
-    return out.select("vec_id", fround(F.col("pc1"), 6).alias("pc1"))
+    return _pca_rounded(out, "vec_id")
 
 
 @register(
@@ -5510,55 +5513,34 @@ def llm_unigram_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     return unigram_segment(t(spark, sf_dir, "documents"), "text")
 
 
-def _pca_top2_oracle() -> str:
-    from randas_spark.operators.pca import sql_pca_top2
-
-    return sql_pca_top2("embeddings", "embedding", dim=64)
-
-
-@register("llm_pca_top2", oracle=_pca_top2_oracle())
+@register("llm_pca_top2", oracle=_pca_topk_sql(2))
 def llm_pca_top2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-2 principal components via Hotelling deflation
-    (operators/pca.pca_top2): PC1 from the centered moment matrix, then
-    PC2 from M - lam1*v1*v1^T with the identical fixed op order on both
-    engines — one data-sized scan total, both iterations are O(d^2)
-    driver arithmetic. The 2-D embedding map every corpus-visualization
-    and stratified-diversity workflow starts from."""
-    from randas_spark.operators.pca import pca_top2
+    (operators/pca.pca_topk, k=2): PC1 from the centered moment matrix,
+    then PC2 from M - lam1*v1*v1^T with the identical fixed op order on
+    both engines — one data-sized scan total, both iterations are
+    O(d^2) driver arithmetic. The 2-D embedding map every
+    corpus-visualization and stratified-diversity workflow starts
+    from."""
+    from randas_spark.operators.pca import pca_topk
 
-    out = pca_top2(t(spark, sf_dir, "embeddings"), "embedding", dim=64)
-    return out.select(
-        "component",
-        "dim_idx",
-        fround(F.col("loading"), 6).alias("loading"),
-        fround(F.col("explained_ratio"), 6).alias("explained_ratio"),
-    )
+    out = pca_topk(t(spark, sf_dir, "embeddings"), "embedding", dim=64, k=2)
+    return _pca_rounded(out, "component", "dim_idx")
 
 
-def _pca_topk_oracle() -> str:
-    from randas_spark.operators.pca import sql_pca_topk
-
-    return sql_pca_topk("embeddings", "embedding", dim=64, k=4)
-
-
-@register("llm_pca_topk", oracle=_pca_topk_oracle())
+@register("llm_pca_topk", oracle=_pca_topk_sql(4))
 def llm_pca_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-K principal components (operators/pca.pca_topk, VERDICT r7
-    item 7): the Hotelling-deflation loop generalized from top-2 to
-    k=4 — what 4-8-D corpus-triage stratification actually consumes.
-    Still ONE data-sized scan: all K deflations and power iterations
-    are O(K * rounds * d^2) driver arithmetic on the exact integer
-    moments; the SQL twin macro-expands one CTE block per component
-    with the identical op order."""
+    item 7): the Hotelling-deflation loop at k=4 — what 4-8-D
+    corpus-triage stratification actually consumes. Still ONE
+    data-sized scan: all K deflations and power iterations are
+    O(K * rounds * d^2) driver arithmetic on the exact integer moments;
+    the SQL twin macro-expands one CTE block per component with the
+    identical op order."""
     from randas_spark.operators.pca import pca_topk
 
     out = pca_topk(t(spark, sf_dir, "embeddings"), "embedding", dim=64, k=4)
-    return out.select(
-        "component",
-        "dim_idx",
-        fround(F.col("loading"), 6).alias("loading"),
-        fround(F.col("explained_ratio"), 6).alias("explained_ratio"),
-    )
+    return _pca_rounded(out, "component", "dim_idx")
 
 
 #: Blocklist for llm_blocklist_filter — tiny here; production lists are
@@ -5685,26 +5667,19 @@ def llm_unigram_doc_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     return unigram_doc_score(t(spark, sf_dir, "documents"), "doc_id", "text")
 
 
-def _pca_project2_oracle() -> str:
-    from randas_spark.operators.pca import sql_pca_project2
-
-    return sql_pca_project2("embeddings", "vec_id", "embedding", dim=64)
-
-
-@register("llm_pca_project2", oracle=_pca_project2_oracle())
+@register("llm_pca_project2", oracle=_pca_project_sql(2))
 def llm_pca_project2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """2-D embedding map (operators/pca.pca_project2): every vector's
-    coordinates on the top two principal components — one moment scan,
-    two codegen folds in one projection pass; the input to corpus
-    visualization, stratified diversity sampling, and cluster triage."""
-    from randas_spark.operators.pca import pca_project2
+    """2-D embedding map (operators/pca.pca_project, k=2): every
+    vector's coordinates on the top two principal components — one
+    moment scan, two codegen folds in one projection pass; the input to
+    corpus visualization, stratified diversity sampling, and cluster
+    triage."""
+    from randas_spark.operators.pca import pca_project
 
-    out = pca_project2(t(spark, sf_dir, "embeddings"), "vec_id", "embedding", dim=64)
-    return out.select(
-        "vec_id",
-        fround(F.col("pc1"), 6).alias("pc1"),
-        fround(F.col("pc2"), 6).alias("pc2"),
+    out = pca_project(
+        t(spark, sf_dir, "embeddings"), "vec_id", "embedding", dim=64, k=2
     )
+    return _pca_rounded(out, "vec_id")
 
 
 # --------------------------------------------------------------------------
@@ -6521,12 +6496,8 @@ def llm_corpus_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
     "llm_cross_source_overlap",
     oracle=f"""
     WITH {_sql_jaccard_head()}, pairs AS (
-        SELECT id_a, id_b,
-               CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter) AS jaccard
-        FROM inter
-        JOIN sizes sa ON sa.doc_id = id_a
-        JOIN sizes sb ON sb.doc_id = id_b
-        WHERE CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter) >= 0.6
+        SELECT id_a, id_b, {_SQL_JACCARD} AS jaccard
+        {_sql_jaccard_edges(0.6)}
     )
     SELECT least(da.source, db.source) AS src_a,
            greatest(da.source, db.source) AS src_b,

@@ -540,6 +540,54 @@ def segment_hourly_activity(
     )
 
 
+def _interval_pairs(
+    clicks: DataFrame,
+    purchases: DataFrame,
+    horizon: str,
+    how: str,
+    watermark: str | None = None,
+) -> DataFrame:
+    """The click x purchase interval join every attribution form runs:
+    clicks as (click_id, click_user, click_ts), purchases as
+    (purchase_id, purchase_user, purchase_ts), joined ``how`` on the
+    same user with click_ts <= purchase_ts < click_ts + ``horizon``.
+    ``watermark``, when given, is set on both event-time columns before
+    the join — the bound that lets a stream evict join state."""
+    c = clicks.select(
+        F.col("event_id").alias("click_id"),
+        F.col("user_id").alias("click_user"),
+        F.col("ts").alias("click_ts"),
+    )
+    p = purchases.select(
+        F.col("event_id").alias("purchase_id"),
+        F.col("user_id").alias("purchase_user"),
+        F.col("ts").alias("purchase_ts"),
+    )
+    if watermark:
+        c = c.withWatermark("click_ts", watermark)
+        p = p.withWatermark("purchase_ts", watermark)
+    cond = (
+        (F.col("click_user") == F.col("purchase_user"))
+        & (F.col("purchase_ts") >= F.col("click_ts"))
+        & (F.col("purchase_ts") < F.col("click_ts") + F.expr(f"INTERVAL {horizon}"))
+    )
+    return c.join(p, cond, how)
+
+
+def _pair_cols() -> list:
+    """(click_id, purchase_id, user_id, lag_us) over joined pairs. The
+    user_id coalesce is a no-op where the click side is present (inner,
+    leftOuter) and supplies the orphan-purchase id in fullOuter."""
+    return [
+        "click_id",
+        "purchase_id",
+        F.coalesce(F.col("click_user"), F.col("purchase_user")).alias("user_id"),
+        (F.unix_micros(F.col("purchase_ts")) - F.unix_micros(F.col("click_ts"))).alias(
+            "lag_us"
+        ),
+    ]
+
+
 def click_purchase_conversions(
     clicks: DataFrame,
     purchases: DataFrame,
@@ -576,33 +624,8 @@ def click_purchase_conversions(
     :func:`click_purchase_first_touch` — ≤ 1 matched row per click, so
     output is O(clicks + purchases) regardless of density.
     """
-    c = clicks.select(
-        F.col("event_id").alias("click_id"),
-        F.col("user_id").alias("click_user"),
-        F.col("ts").alias("click_ts"),
-    )
-    p = purchases.select(
-        F.col("event_id").alias("purchase_id"),
-        F.col("user_id").alias("purchase_user"),
-        F.col("ts").alias("purchase_ts"),
-    )
-    if watermark:
-        c = c.withWatermark("click_ts", watermark)
-        p = p.withWatermark("purchase_ts", watermark)
-    cond = (
-        (F.col("click_user") == F.col("purchase_user"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts") < F.col("click_ts") + F.expr(f"INTERVAL {horizon}"))
-    )
-    return c.join(p, cond, how).select(
-        "click_id",
-        "purchase_id",
-        # coalesce is a no-op for inner/leftOuter (click side present by
-        # construction) and supplies the orphan-purchase id in fullOuter
-        F.coalesce(F.col("click_user"), F.col("purchase_user")).alias("user_id"),
-        (F.unix_micros(F.col("purchase_ts")) - F.unix_micros(F.col("click_ts"))).alias(
-            "lag_us"
-        ),
+    return _interval_pairs(clicks, purchases, horizon, how, watermark).select(
+        *_pair_cols()
     )
 
 
@@ -649,22 +672,7 @@ def click_purchase_first_touch(
     a canonical winner — tolerates). This batch form is the exact,
     oracle-checkable twin that pins earliest-by-event-time semantics.
     """
-    c = clicks.select(
-        F.col("event_id").alias("click_id"),
-        F.col("user_id").alias("click_user"),
-        F.col("ts").alias("click_ts"),
-    )
-    p = purchases.select(
-        F.col("event_id").alias("purchase_id"),
-        F.col("user_id").alias("purchase_user"),
-        F.col("ts").alias("purchase_ts"),
-    )
-    cond = (
-        (F.col("click_user") == F.col("purchase_user"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts") < F.col("click_ts") + F.expr(f"INTERVAL {horizon}"))
-    )
-    j = c.join(p, cond, "fullOuter")
+    j = _interval_pairs(clicks, purchases, horizon, "fullOuter")
     part = F.struct(
         F.col("click_id").isNull().alias("is_orphan"),
         F.coalesce(F.col("click_id"), F.col("purchase_id")).alias("key_id"),
@@ -675,15 +683,7 @@ def click_purchase_first_touch(
     return (
         j.withColumn("__rn__", F.row_number().over(w))
         .filter(F.col("__rn__") == 1)
-        .select(
-            "click_id",
-            "purchase_id",
-            F.coalesce(F.col("click_user"), F.col("purchase_user")).alias("user_id"),
-            (
-                F.unix_micros(F.col("purchase_ts"))
-                - F.unix_micros(F.col("click_ts"))
-            ).alias("lag_us"),
-        )
+        .select(*_pair_cols())
     )
 
 
@@ -710,22 +710,9 @@ def first_touch_drop_audit(
     user_id), one first-touch window, one global aggregate — null rows
     never enter, so the audit costs strictly less than the uncapped
     join it accounts for."""
-    c = clicks.select(
-        F.col("event_id").alias("click_id"),
-        F.col("user_id").alias("click_user"),
-        F.col("ts").alias("click_ts"),
+    pairs = _interval_pairs(clicks, purchases, horizon, "inner").select(
+        "click_id", "purchase_id", "purchase_ts"
     )
-    p = purchases.select(
-        F.col("event_id").alias("purchase_id"),
-        F.col("user_id").alias("purchase_user"),
-        F.col("ts").alias("purchase_ts"),
-    )
-    cond = (
-        (F.col("click_user") == F.col("purchase_user"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts") < F.col("click_ts") + F.expr(f"INTERVAL {horizon}"))
-    )
-    pairs = c.join(p, cond, "inner").select("click_id", "purchase_id", "purchase_ts")
     w = Window.partitionBy("click_id").orderBy(
         F.col("purchase_ts").asc(), F.col("purchase_id").asc()
     )

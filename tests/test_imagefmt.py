@@ -657,6 +657,22 @@ def test_jpeg_multi_scan_baseline_rejected():
         decode_jpeg(patched)
 
 
+def test_jpeg_sequential_stops_after_its_scan():
+    """A sequential frame has exactly one scan, so decode_jpeg stops the
+    marker walk after it: bytes between the entropy-coded data and EOI
+    (here an unsupported SOF3 segment plus junk, which a resumed walk
+    would reject) leave the pixels unchanged."""
+    from randas_spark.operators.imagefmt import decode_jpeg
+
+    w = _JpegWriter(16, 8, [(1, 1, 1, 0)], {0: _q_flat(16)})
+    w.add_block(0, [4] + [0] * 63)
+    w.add_block(0, [-3] + [0] * 63)
+    data = w.tobytes()
+    assert data.endswith(b"\xff\xd9")
+    tail = b"\xff\xc3\x00\x04\x00\x00" + b"junk"
+    assert decode_jpeg(data[:-2] + tail + data[-2:]) == decode_jpeg(data)
+
+
 # -- JPEG: progressive (SOF2) fixtures --------------------------------------
 
 

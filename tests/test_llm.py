@@ -645,7 +645,7 @@ def test_pca_power_matches_numpy_eigvector(spark):
     rounds converge far past the tolerance."""
     import numpy as np
 
-    from randas_spark.operators.pca import pca_power, pca_project
+    from randas_spark.operators.pca import pca_project, pca_topk
 
     rng = np.random.RandomState(7)
     d, n = 16, 400
@@ -655,7 +655,7 @@ def test_pca_power_matches_numpy_eigvector(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
     out = {r.dim_idx: (r.loading, r.explained_ratio) for r in
-           pca_power(df, "embedding", dim=d).collect()}
+           pca_topk(df, "embedding", dim=d, k=1).collect()}
     v = np.array([out[i + 1][0] for i in range(d)])
     ratio = out[1][1]
 
@@ -681,8 +681,6 @@ def test_pca_power_matches_numpy_eigvector(spark):
     # deflation: PC2 aligns with numpy's second eigenvector and is
     # orthogonal to PC1 (a second dominant direction is planted so the
     # deflated iteration converges decisively)
-    from randas_spark.operators.pca import pca_top2
-
     rng2 = np.random.RandomState(11)
     b2 = rng2.randn(d); b2 -= b2 @ base * base; b2 /= np.linalg.norm(b2)
     x2 = x + (rng2.randn(n, 1) * 1.5) @ b2[None, :]
@@ -690,7 +688,7 @@ def test_pca_power_matches_numpy_eigvector(spark):
         [(i, [float(v_) for v_ in x2[i]]) for i in range(n)],
         "vec_id long, embedding array<float>",
     )
-    rows2 = pca_top2(df2, "embedding", dim=d).collect()
+    rows2 = pca_topk(df2, "embedding", dim=d, k=2).collect()
     vs = {c: np.array([r.loading for r in sorted(
         (r for r in rows2 if r.component == c), key=lambda r: r.dim_idx)])
         for c in (1, 2)}
@@ -701,18 +699,14 @@ def test_pca_power_matches_numpy_eigvector(spark):
     assert abs(abs(float(vs[2] @ ev2[:, -2])) - 1.0) < 1e-6
     assert abs(float(vs[1] @ vs[2])) < 1e-6  # orthogonal components
 
-    # top-k generalization: k=2 is value-IDENTICAL to top2 (same op
-    # sequence), and k=3's third component is orthogonal to both
-    from randas_spark.operators.pca import pca_topk
+    # 2-D projection: pc2 scores are n * (qc2 @ v2), the same centered
+    # fold as pc1 on the deflated component
+    proj2 = {r.vec_id: r.pc2 for r in
+             pca_project(df2, "vec_id", "embedding", dim=d, k=2).collect()}
+    got2 = np.array([proj2[i] for i in range(n)])
+    assert np.allclose(got2, n * (qc2 @ vs[2]), rtol=1e-12, atol=1e-6)
 
-    k2 = sorted(
-        pca_topk(df2, "embedding", dim=d, k=2).collect(),
-        key=lambda r: (r.component, r.dim_idx),
-    )
-    t2 = sorted(rows2, key=lambda r: (r.component, r.dim_idx))
-    assert [(r.component, r.dim_idx, r.loading, r.explained_ratio) for r in k2] == [
-        (r.component, r.dim_idx, r.loading, r.explained_ratio) for r in t2
-    ]
+    # top-k generalization: k=3's third component is orthogonal to both
     k3 = pca_topk(df2, "embedding", dim=d, k=3).collect()
     v3 = np.array([r.loading for r in sorted(
         (r for r in k3 if r.component == 3), key=lambda r: r.dim_idx)])
@@ -725,19 +719,18 @@ def test_pca_guards_fail_loudly(spark):
     (2) a zero-variance corpus raises instead of dividing by a zero norm;
     (3) the projection budget pre-flight rejects n*|q| bounds that would
     wrap int64 (Spark wraps silently with ANSI off; DuckDB errors — the
-    silent-divergence class); (4) pca_topk validates k."""
+    silent-divergence class); (4) pca_topk and pca_project validate k."""
     import pytest
 
     from randas_spark.operators.pca import (
         _check_projection_budget,
-        pca_power,
         pca_project,
         pca_topk,
     )
 
     empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
     with pytest.raises(ValueError, match="empty corpus"):
-        pca_power(empty, "embedding", dim=4)
+        pca_topk(empty, "embedding", dim=4, k=1)
 
     const = spark.createDataFrame(
         [(i, [1.0, 2.0, 3.0, 4.0]) for i in range(5)],
@@ -754,6 +747,8 @@ def test_pca_guards_fail_loudly(spark):
 
     with pytest.raises(ValueError, match="1 <= k <= dim"):
         pca_topk(const, "embedding", dim=4, k=5)
+    with pytest.raises(ValueError, match="1 <= k <= dim"):
+        pca_project(const, "vec_id", "embedding", dim=4, k=0)
 
 
 def test_cosine_matches_numpy(spark):
@@ -1785,10 +1780,18 @@ def test_jaccard_verifier_exact_on_adversarial_corpus(spark, adversarial):
 
 #: jobs started while each query is constructed (its plan built, before
 #: any action), measured at the suite's sf0.001 after one warm build —
-#: the eager checkpoints each dedup and graph composition pays up front
+#: the eager checkpoints each dedup and graph composition pays up front,
+#: the Gram-cell collect each PCA fit runs on the driver, and the
+#: packed-prefix total the incremental pack reads as its base offset
 #: (k-core and BFS counts follow the graph's peel and hop depth, so
 #: they differ per scale: 26 and 30 at sf0.01)
 _CONSTRUCT_JOBS = {
+    "llm_pca_power": 2,
+    "llm_pca_project": 2,
+    "llm_pca_project2": 2,
+    "llm_pca_top2": 2,
+    "llm_pca_topk": 2,
+    "llm_sequence_pack_incremental": 2,
     "llm_dedup_minhash_det": 2,
     "llm_minhash_recall_audit": 2,
     "llm_dedup_incremental_near": 4,

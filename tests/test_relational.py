@@ -1530,32 +1530,43 @@ def test_distributed_global_rank_equals_single_window(spark):
 
 
 def test_distributed_prefix_max_equals_single_window(spark):
-    """operators/rank.distributed_prefix_max must equal the bare
-    unpartitioned running-max window (the spec it replaces), including
-    NULL for the global first row, across partition boundaries, under
-    a non-monotonic value sequence."""
+    """operators/rank.distributed_prefix_max and distributed_prefix_sum
+    must equal the bare unpartitioned running window over strictly
+    earlier rows (the spec they replace), including the global first
+    row (NULL max, 0 sum), across partition boundaries, under a
+    non-monotonic value sequence — and with more range partitions
+    requested than there are rows."""
     from pyspark.sql import Window
 
-    from randas_spark.operators.rank import distributed_prefix_max
+    from randas_spark.operators.rank import (
+        distributed_prefix_max,
+        distributed_prefix_sum,
+    )
 
     rows = [(i, ((i * 193) % 101) - 50) for i in range(500)]
     df = spark.createDataFrame(rows, "id long, v long")
     order = [F.col("id")]
-    got = {
-        r.id: r.prior_max
-        for r in distributed_prefix_max(df, order, "v", n_parts=8).collect()
-    }
-    want = {
-        r.id: r.prior_max
-        for r in df.withColumn(
-            "prior_max",
-            F.max("v").over(
-                Window.orderBy(*order).rowsBetween(Window.unboundedPreceding, -1)
-            ),
-        ).collect()
-    }
-    assert got == want
-    assert got[0] is None
+    prior = Window.orderBy(*order).rowsBetween(Window.unboundedPreceding, -1)
+    cases = [
+        (distributed_prefix_max, "prior_max", F.max("v").over(prior), None),
+        (
+            distributed_prefix_sum,
+            "prior_sum",
+            F.coalesce(F.sum("v").over(prior), F.lit(0)).cast("long"),
+            0,
+        ),
+    ]
+    for scan, out_col, bare, first in cases:
+        want = {
+            r.id: r[out_col] for r in df.withColumn(out_col, bare).collect()
+        }
+        for n_parts in (8, 600):
+            got = {
+                r.id: r[out_col]
+                for r in scan(df, order, "v", n_parts=n_parts).collect()
+            }
+            assert got == want, (out_col, n_parts)
+            assert got[0] == first
 
 
 def test_pagerank_int_matches_python_replay(spark):
