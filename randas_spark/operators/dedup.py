@@ -1410,61 +1410,14 @@ def duplicated_spans(
 _HEX_DIGITS = "0123456789abcdef"
 
 
-def simhash_portable_fp(text_col, n_bits: int = 16):
-    """Engine-portable SimHash fingerprint: over the doc's DISTINCT
-    tokens, bit b's weight is Σ_tok (2·bit_b(md5(tok)) − 1) with
-    bit_b read from the hex digits of md5 (instr-based digit value —
-    the same primitive the Count-Min buckets use), and the fingerprint
-    sets bit b iff the weight is >= 0. Integer arithmetic end-to-end →
-    bit-identical on Spark / DuckDB / Python.
-
-    n_bits=16 (4 hex digits) keeps the expression tree sane; hamming
-    banding below needs only short fingerprints anyway.
-    """
-    # ONE aggregate pass threading an array-of-weights accumulator: each
-    # token is md5-hashed exactly once, and every fingerprint bit's ±1
-    # contribution is read off that one hash. The previous form ran
-    # n_bits separate aggregate() calls over the same token-hash array —
-    # higher-order functions sit outside codegen subexpression
-    # elimination, so each re-evaluated every md5 (n_bits× the hashing;
-    # measured 8.1 s → ~1 s at sf0.1 for the 32-bit registry query).
-    hashes = F.transform(
-        F.array_distinct(F.split(F.lower(text_col), " ")),
-        lambda t: F.md5(t.cast("binary")),
-    )
-    idx = F.sequence(F.lit(0), F.lit(n_bits - 1))
-    pow2 = F.array(*[F.lit(1 << s) for s in range(4)])  # 2^shift lookup
-
-    def pm1(h, b):
-        # ±1 for bit b of the hash: hex digit b//4 (1-based substr),
-        # bit 3-(b%4) within the digit — same layout as the SQL twin
-        digit = F.conv(h.substr((b / 4).cast("int") + 1, F.lit(1)), 16, 10).cast("int")
-        shift = F.lit(3) - (b % 4).cast("int")
-        return ((digit / F.element_at(pow2, shift + 1)).cast("int") % 2) * 2 - 1
-
-    # finish= binds the final accumulator as a LAMBDA VARIABLE, so the
-    # fingerprint assembly reads the weights array without re-evaluating
-    # the aggregate (an outer-expression reference inside another HOF's
-    # lambda would be re-evaluated per element)
-    return F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(0), n_bits),
-        lambda acc, h: F.transform(idx, lambda b: F.element_at(acc, b.cast("int") + 1) + pm1(h, b)),
-        lambda acc: F.aggregate(
-            idx,
-            F.lit(0).cast("long"),
-            lambda f, b: f
-            + F.when(
-                F.element_at(acc, b.cast("int") + 1) >= 0,
-                F.pow(F.lit(2.0), b.cast("double")).cast("long"),
-            ).otherwise(F.lit(0).cast("long")),
-        ),
-    )
-
-
 def sql_simhash_portable_fp(n_bits: int = 16) -> str:
-    """DuckDB twin of :func:`simhash_portable_fp` — same digit/shift
-    arithmetic, generated from the same constants."""
+    """DuckDB twin of :func:`simhash_portable_fps` — the engine-portable
+    SimHash fingerprint: over the doc's DISTINCT tokens, bit b's weight
+    is Σ_tok (2·bit_b(md5(tok)) − 1) with bit_b read from the hex
+    digits of md5, and the fingerprint sets bit b iff the weight is
+    >= 0 — the same digit/shift arithmetic, generated from the same
+    constants. Integer arithmetic end-to-end, so it is bit-identical on
+    Spark, DuckDB and Python."""
     # Two-part contract: callers materialize sql_simhash_hashes(text) AS
     # hs in a CTE (md5 once per token), then this expression reads every
     # bit off the cached `hs` column.
@@ -1491,10 +1444,9 @@ def simhash_portable_fps(
     """(doc_id, fp) portable-SimHash fingerprints, the distributed shape:
     explode distinct tokens, md5 each token ONCE as a plain column, then
     n_bits integer bit-sums as grouped aggregates. Every stage is
-    whole-stage-codegen arithmetic with map-side partial aggregation —
-    unlike the Column form (:func:`simhash_portable_fp`, kept for
-    expression contexts), whose interpreted array-accumulator pays
-    O(tokens × n_bits) array rebuilds per row. Bit values are identical.
+    whole-stage-codegen arithmetic with map-side partial aggregation
+    (an array-accumulator Column form paid O(tokens × n_bits) interpreted
+    array rebuilds per row). Bit values match :func:`sql_simhash_portable_fp`.
     """
     toks = df.select(
         F.col(id_col).alias("doc_id"),

@@ -1,9 +1,11 @@
 """Similarity search over embedding columns: brute-force cosine top-k
-(exact baseline) and random-hyperplane LSH bucketing (the scale path).
+(exact baseline), random-hyperplane LSH bucketing, IVF (fused and
+persisted), PQ and their composites.
 
-Embeddings are plain array<float> columns; all scoring is the codegen'd
-cosine from functions/vectors.py (no UDF). The LSH variant trades recall
-for turning the n×m score matrix into same-bucket pairs only.
+Embeddings are plain array<float> columns. Every raw-vector k-NN path
+only generates candidate pairs — all pairs, same LSH bucket, probed IVF
+cells, a PQ shortlist — and scores them with one exact-cosine top-k
+(:func:`_cosine_topk`, the dot fold from functions/vectors.py, no UDF).
 """
 
 from __future__ import annotations
@@ -15,8 +17,52 @@ import struct
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from randas_spark.functions.vectors import cosine, dot, norm
+from randas_spark.functions.vectors import dot, norm
 from randas_spark.session import read_parquet
+
+
+def _vec_side(
+    df: DataFrame, id_col: str, vec_col: str, side: str, *extra: Column
+) -> DataFrame:
+    """The staged side of a raw-vector k-NN pair: ``(qid, qv, qn)`` for
+    ``side="q"``, ``(cid, cv, cn)`` for ``side="c"`` — id, vector and
+    its norm, plus any ``extra`` columns (knn_lsh's bucket). Norms are
+    staged per side (one fold per VECTOR): an inline cosine re-evaluates
+    both norm folds per scored PAIR (no CSE inside lambda folds), and
+    :func:`_cosine_topk` then pays a single dot fold per pair.
+    Bit-identical either way."""
+    return df.select(
+        F.col(id_col).alias(f"{side}id"),
+        F.col(vec_col).alias(f"{side}v"),
+        norm(F.col(vec_col)).alias(f"{side}n"),
+        *extra,
+    )
+
+
+def _rank_by_cos(scored: DataFrame, top_k: int) -> DataFrame:
+    """Per-query top-k of a scored ``(qid, cid, cos)`` frame under THE
+    (cos DESC, cid ASC) total order — the one tie-break of every
+    exact-cosine k-NN result, as (qid, cid, cos, rk)."""
+    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("cid"))
+    return (
+        scored.withColumn("rk", F.row_number().over(w).cast("long"))
+        .filter(F.col("rk") <= top_k)
+        .select("qid", "cid", "cos", "rk")
+    )
+
+
+def _cosine_topk(pairs: DataFrame, top_k: int) -> DataFrame:
+    """Exact-cosine top-k over candidate pairs that carry both staged
+    sides (:func:`_vec_side`): one dot fold per pair over the staged
+    norms, then :func:`_rank_by_cos`. Every raw-vector k-NN path ends
+    here — brute force, LSH, the IVF search and the PQ reranks — and
+    only generates its candidates (self-matches are dropped there)."""
+    return _rank_by_cos(
+        pairs.withColumn(
+            "cos", dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))
+        ),
+        top_k,
+    )
 
 
 def knn_bruteforce(
@@ -38,39 +84,16 @@ def knn_bruteforce(
     """
     from randas_spark.operators.dedup import fan_out
 
-    q = queries.select(
-        F.col(query_id).alias("qid"),
-        F.col(vec_col).alias("qv"),
-        norm(F.col(vec_col)).alias("qn"),
-    )
+    q = _vec_side(queries, query_id, vec_col, "q")
     # fan_out: a single-split corpus otherwise scores every
     # |corpus| x |queries| pair in ONE task (interpreted HOF folds, no
     # codegen — measured 1.0-1.8 s single-task jobs at sf0.1 inside the
     # recall audit); a no-op whenever the corpus already arrives in
     # >= defaultParallelism splits (cluster scale). Row order feeding
     # the rank window is irrelevant: (cos DESC, cid) is a total order.
-    c = fan_out(
-        corpus.select(
-            F.col(corpus_id).alias("cid"),
-            F.col(vec_col).alias("cv"),
-            norm(F.col(vec_col)).alias("cn"),
-        )
-    )
-    # norms staged per side (one fold per vector); the pair stage pays a
-    # single dot fold — the inline cosine form re-evaluated both norm
-    # folds per scored pair (no CSE inside lambda folds). Bit-identical.
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("qid") != F.col("cid"))
-        .withColumn(
-            "cos", dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))
-        )
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("cid"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= top_k)
-        .select("qid", "cid", "cos", "rk")
+    c = fan_out(_vec_side(corpus, corpus_id, vec_col, "c"))
+    return _cosine_topk(
+        c.crossJoin(F.broadcast(q)).filter(F.col("qid") != F.col("cid")), top_k
     )
 
 
@@ -151,31 +174,16 @@ def knn_lsh(
     Scale: bucketing is a pure map; the join is an equi-join on bucket id
     → shuffle partitioned by bucket, never all-pairs.
     """
-    q = queries.select(
-        F.col(query_id).alias("qid"),
-        F.col(vec_col).alias("qv"),
-        norm(F.col(vec_col)).alias("qn"),
+    q = _vec_side(
+        queries, query_id, vec_col, "q",
         project_buckets(vec_col, dim, n_planes).alias("bucket"),
     )
-    c = corpus.select(
-        F.col(corpus_id).alias("cid"),
-        F.col(vec_col).alias("cv"),
-        norm(F.col(vec_col)).alias("cn"),
+    c = _vec_side(
+        corpus, corpus_id, vec_col, "c",
         project_buckets(vec_col, dim, n_planes).alias("bucket"),
     )
-    # staged norms — see knn_bruteforce; bit-identical scores
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("qid") != F.col("cid"))
-        .withColumn(
-            "cos", dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))
-        )
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("cid"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= top_k)
-        .select("qid", "cid", "cos", "rk")
+    return _cosine_topk(
+        c.join(F.broadcast(q), "bucket").filter(F.col("qid") != F.col("cid")), top_k
     )
 
 
@@ -285,86 +293,33 @@ def knn_ivf_det(
     k-means seeding without the Lloyd iterations), so the whole index —
     cells, assignments, probes, ranking — is a pure function of the
     data and carries a cross-engine oracle (a k-means fit's centroids
-    would depend on the fit).
+    would depend on the fit). n_probe == n_cells degrades to exact
+    search. Lloyd refinement improves cell balance, never correctness —
+    the deterministic index is what a resumable/auditable 100 TB build
+    ships, re-clustering offline when drift warrants.
 
-    Three stages: seed centroids (TakeOrdered on the md5 order — no
-    global sort), assign every corpus vector to its max-cosine cell,
-    probe the n_probe nearest cells per query, score candidates only.
-    n_probe == n_cells degrades to exact search. Lloyd refinement
-    improves cell balance, never correctness — the deterministic index
-    is what a resumable/auditable 100 TB build ships, re-clustering
-    offline when drift warrants.
+    It is the persisted search run over an index held in memory:
+    :func:`_md5_centroids`, :func:`_ivf_assign`, then :func:`_ivf_search`
+    — the steps ivf_build_index persists and knn_ivf_query serves, so
+    the two are bit-identical by construction.
 
-    EAGER: building the plan runs one job — the n_cells centroid rows
-    are collect()ed to the driver (one TakeOrdered job, shared by the
-    assignment and probe kernel calls), so the centroid panel must fit
-    in driver memory (n_cells × dim doubles) and the call costs that
-    job even if the returned frame is never executed.
-
-    Both rankings run through the shared assign_topk_cells Arrow kernel
-    (bit-exact with a crossJoin + row_number ranking — see its
-    docstring), the same ranking ivf_build_index persists, so
-    knn_ivf_query is bit-identical to this fused form. Vectors and
-    norms are re-attached to the kernel's survivors by one narrow
-    equi-join.
+    EAGER: building the plan runs one job — the md5 TakeOrdered whose
+    n_cells centroid rows are collect()ed to the driver and held as a
+    local relation (built from Arrow, so collecting it again starts no
+    job) that the assignment kernel and the probe broadcast both read.
+    The panel must fit in driver memory (n_cells × dim doubles), and
+    the call costs that job even if the frame is never executed.
     """
-    # norms staged everywhere (vectors once, centers once): an inline
-    # cosine would re-evaluate both norm folds per candidate pair in the
-    # final scoring. Bit-identical (see knn_graph_ivf).
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     cent = _md5_centroids(corpus, corpus_id, vec_col, n_cells)
-    # ONE TakeOrdered job serves both kernel calls (assignment + probes)
-    cent_rows = cent.collect()
-    c = corpus.select(
-        F.col(corpus_id).alias("cid"),
-        F.col(vec_col).alias("cv"),
-        norm(F.col(vec_col)).alias("cn"),
+    panel = pa.Table.from_pylist(
+        [r.asDict() for r in cent.collect()], schema=to_arrow_schema(cent.schema)
     )
-    assign = (
-        assign_topk_cells(
-            corpus, corpus_id, vec_col, cent, n_probe=1, cent_rows=cent_rows
-        )
-        .select(F.col("vid").alias("cid"), "cell")
-        .join(c, "cid")
-        .select("cid", "cv", "cn", "cell")
-    )
-    q = queries.select(
-        F.col(query_id).alias("qid"),
-        F.col(vec_col).alias("qv"),
-        norm(F.col(vec_col)).alias("qn"),
-    )
-    probes = (
-        assign_topk_cells(
-            queries,
-            query_id,
-            vec_col,
-            cent,
-            n_probe=n_probe,
-            cent_rows=cent_rows,
-            # panel-bounded input: don't pay a 33-task fan-out job to
-            # rank ~50 query vectors (see assign_topk_cells)
-            fan=False,
-        )
-        .select(F.col("vid").alias("qid"), "cell")
-        .join(q, "qid")
-        .select("qid", "qv", "qn", "cell")
-    )
-    wk = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("cid"))
-    return (
-        # probes is panel-bounded (|queries| x n_probe rows) at ANY
-        # corpus size — broadcast explicitly (as knn_ivf_query does)
-        # so a wider panel can't flip the stats-driven plan to an SMJ
-        # that shuffles the corpus-sized assignment table (seen r11:
-        # the 50-query recall panel crossed the threshold)
-        F.broadcast(probes)
-        .join(assign, "cell")
-        .filter(F.col("qid") != F.col("cid"))
-        .withColumn(
-            "cos", dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))
-        )
-        .withColumn("rk", F.row_number().over(wk).cast("long"))
-        .filter(F.col("rk") <= top_k)
-        .select("qid", "cid", "cos", "rk")
-    )
+    cent = corpus.sparkSession.createDataFrame(panel, cent.schema)
+    assign = _ivf_assign(corpus, corpus_id, vec_col, cent)
+    return _ivf_search(queries, query_id, vec_col, cent, assign, n_probe, top_k)
 
 
 def knn_graph_ivf(
@@ -420,7 +375,7 @@ def knn_graph_ivf(
     lexsort ranks NaN last) and the declarative twin (Spark treats NaN
     as greater than any double → survives ``cos >= min_cos`` and sorts
     FIRST under cos DESC) — pinned by a zero-vector fixture in
-    tests/test_similarity.py.
+    tests/test_llm.py.
     """
     corpus = corpus.filter(norm(F.col(vec_col)) > F.lit(0.0))
     cent = _md5_centroids(corpus, id_col, vec_col, n_cells)
@@ -450,7 +405,6 @@ def knn_graph_ivf(
     probes = ranked.select(
         F.col("vid").alias("qid"), F.col("vv").alias("qv"), F.col("vn").alias("qn"), "cell"
     )
-    wk = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("cid"))
     # Candidate scoring is the second Arrow kernel (same r12 profile:
     # the n_probe*N*cell_size pair folds — 185M at sf10 — were the other
     # interpreted-lambda stage). A COGROUP on the cell id keeps the plan
@@ -506,11 +460,7 @@ def knn_graph_ivf(
     scored = probes.groupBy("cell").cogroup(assign.groupBy("cell")).applyInPandas(
         _score_cells, schema="qid long, cid long, cos double"
     )
-    return (
-        scored.withColumn("rk", F.row_number().over(wk).cast("long"))
-        .filter(F.col("rk") <= top_k)
-        .select("qid", "cid", "cos", "rk")
-    )
+    return _rank_by_cos(scored, top_k)
 
 
 def _pq_quantize(emb: DataFrame, id_col: str, vec_col: str, scale: float) -> DataFrame:
@@ -877,8 +827,9 @@ def _open_index(
     every index operation makes, so all of a call's layout state comes
     from one snapshot. Raises ValueError when there is no committed
     marker (or, with ``kind``, a marker of another kind); when a
-    ``params`` value contradicts a recorded build param (a scale
-    mismatch would otherwise return silently wrong distances); and,
+    ``params`` value is not the recorded build param — a param the
+    marker does not record included (a scale mismatch would otherwise
+    return silently wrong distances); and,
     when the caller passes the current corpus ``fingerprint``, when the
     index was built from a different corpus (stale)."""
     marker = read_index_marker(index_dir)
@@ -887,10 +838,10 @@ def _open_index(
         raise ValueError(f"{caller}: no committed {what} at {index_dir}")
     built = marker.get("params") or {}
     for name, want in (params or {}).items():
-        if name in built and built[name] != want:
+        if name not in built or built[name] != want:
             raise ValueError(
                 f"{caller}: param mismatch at {index_dir} — index built "
-                f"with {name}={built[name]}, query passed {name}={want}"
+                f"with {name}={built.get(name)}, query passed {name}={want}"
             )
     if fingerprint is not None and marker.get("fingerprint") != fingerprint:
         raise ValueError(
@@ -907,22 +858,14 @@ def index_ready(
     params: dict | None = None,
     fingerprint: str | None = None,
 ) -> bool:
-    """Build-if-absent predicate with integrity: True only when a
-    committed marker exists AND (when given) the kind, every build
-    param, and the corpus fingerprint all match — so a regenerated
-    corpus or changed build params read as "no index here", triggering
-    a rebuild instead of silently serving stale codes."""
-    m = read_index_marker(out_dir)
-    if m is None:
-        return False
-    if kind is not None and m.get("kind") != kind:
-        return False
-    if params:
-        have = m.get("params") or {}
-        for k, v in params.items():
-            if have.get(k) != v:
-                return False
-    if fingerprint is not None and m.get("fingerprint") != fingerprint:
+    """Build-if-absent predicate with integrity: True exactly when
+    :func:`_open_index` accepts the same arguments — a committed marker
+    whose kind, every build param and corpus fingerprint match — so a
+    regenerated corpus or changed build params read as "no index here",
+    triggering a rebuild instead of silently serving stale codes."""
+    try:
+        _open_index(out_dir, "index_ready", kind, params, fingerprint)
+    except ValueError:
         return False
     return True
 
@@ -1050,8 +993,6 @@ def assign_topk_cells(
     vec_col: str,
     cent: DataFrame,
     n_probe: int = 1,
-    cent_rows: list | None = None,
-    fan: bool = True,
 ) -> DataFrame:
     """Top-``n_probe`` max-cosine cell assignment against a centroid
     frame, as a VECTORIZED Arrow kernel — THE shared assignment of the
@@ -1081,12 +1022,10 @@ def assign_topk_cells(
     (exactly equal ccos for every query) make boundary ties routine
     and the tie-break must match the window ordering.
 
-    ``cent_rows`` (optional) is the already-collected centroid panel —
-    callers that run the kernel twice against the SAME panel (e.g.
-    knn_ivf_det: corpus assignment + query probes) pass it so the
-    TakeOrdered centroid job runs once, not once per kernel call."""
-    if cent_rows is None:
-        cent_rows = cent.collect()  # n_cells rows: bounded model state
+    The kernel ranks CORPUS-sized inputs only; a query panel is ranked
+    by :func:`_ivf_probes` (the same order — pinned by a differential
+    test in tests/test_llm.py)."""
+    cent_rows = cent.collect()  # n_cells rows: bounded model state
     if not cent_rows:
         # Empty centroid panel (empty corpus): degrade to an empty
         # typed frame instead of np.stack dying on "need at least one
@@ -1137,17 +1076,12 @@ def assign_topk_cells(
     # round-robin repartition so the kernel saturates the cores even
     # when the input arrives in a handful of parquet splits — one
     # narrow shuffle of (vid, vv), ~0.1% of the exchange the retired
-    # window shape paid. ``fan=False`` skips it for PANEL-BOUNDED
-    # inputs (e.g. knn_ivf_det's 50-query probe ranking): fanning ~50
-    # rows into defaultParallelism kernel tasks costs a full
-    # 33-task job (~0.5 s at sf0.1) to parallelize microseconds of
-    # numpy — the kmeans fan-out lesson (OPTIMIZATION_r13).
-    narrow = rows.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vv"))
-    if fan:
-        narrow = narrow.repartition(
-            rows.sparkSession.sparkContext.defaultParallelism
-        )
-    return narrow.mapInPandas(_assign_batches, schema="vid long, cell long, rn int")
+    # window shape paid
+    return (
+        rows.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vv"))
+        .repartition(rows.sparkSession.sparkContext.defaultParallelism)
+        .mapInPandas(_assign_batches, schema="vid long, cell long, rn int")
+    )
 
 
 def _ivf_assign(
@@ -1159,11 +1093,7 @@ def _ivf_assign(
     would put it in. The ranking runs in the assign_topk_cells Arrow
     kernel (see its docstring); the vectors and norms are re-attached
     by one narrow equi-join."""
-    r = rows.select(
-        F.col(id_col).alias("cid"),
-        F.col(vec_col).alias("cv"),
-        norm(F.col(vec_col)).alias("cn"),
-    )
+    r = _vec_side(rows, id_col, vec_col, "c")
     top1 = assign_topk_cells(rows, id_col, vec_col, cent, n_probe=1).select(
         F.col("vid").alias("cid"), "cell"
     )
@@ -1174,15 +1104,12 @@ def _ivf_probes(
     queries: DataFrame, id_col: str, vec_col: str, cent: DataFrame, n_probe: int
 ) -> DataFrame:
     """The ``n_probe`` max-cosine cells per query against the broadcast
-    persisted centroid table, as (qid, qv, qn, cell) under the
-    (ccos DESC, cell) tiebreak — the probe step of knn_ivf_query and
+    centroid table, as (qid, qv, qn, cell) under the (ccos DESC, cell)
+    tiebreak — THE query-panel ranker: the probe step of
+    :func:`_ivf_search` (knn_ivf_query, knn_ivf_det) and
     knn_ivfpq_query. Raw-vector math runs on queries x n_cells only,
-    never on the corpus."""
-    q = queries.select(
-        F.col(id_col).alias("qid"),
-        F.col(vec_col).alias("qv"),
-        norm(F.col(vec_col)).alias("qn"),
-    )
+    never on the corpus; it ranks exactly as assign_topk_cells does."""
+    q = _vec_side(queries, id_col, vec_col, "q")
     wp = Window.partitionBy("qid").orderBy(F.col("ccos").desc(), F.col("cell"))
     return (
         q.crossJoin(F.broadcast(cent))
@@ -1193,6 +1120,42 @@ def _ivf_probes(
         .withColumn("rn", F.row_number().over(wp))
         .filter(F.col("rn") <= n_probe)
         .select("qid", "qv", "qn", "cell")
+    )
+
+
+def _ivf_search(
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    cent: DataFrame,
+    assign: DataFrame,
+    n_probe: int,
+    top_k: int,
+    candidate_filter: Column | None = None,
+) -> DataFrame:
+    """THE IVF search over an index (centroids ``cent``, cell-assigned
+    ``assign`` rows (cid, cv, cn, cell)), persisted (knn_ivf_query) or
+    held in memory (knn_ivf_det): the :func:`_ivf_probes` panel,
+    broadcast-joined on cell to the assignments, then
+    :func:`_cosine_topk`. The probes are panel-bounded (|queries| x
+    n_probe rows) at ANY corpus size — broadcast explicitly so a wider
+    panel can't flip the stats-driven plan to an SMJ that shuffles the
+    corpus-sized assignment side (seen r11: the 50-query recall panel
+    crossed the threshold); on a cell-partitioned scan that broadcast
+    is also what prunes the scan to the probed cells.
+
+    ``candidate_filter`` (FILTERED search, a metadata predicate) is
+    applied to the candidate rows BEFORE ranking, so it lands on the
+    assignments scan (column-pruned, pushed down) — top-k among
+    survivors. A highly selective filter can return < k rows from the
+    probed cells; callers widen n_probe or brute-force the filtered
+    subset (the recall-audit trade)."""
+    probes = _ivf_probes(queries, id_col, vec_col, cent, n_probe)
+    if candidate_filter is not None:
+        assign = assign.filter(candidate_filter)
+    return _cosine_topk(
+        F.broadcast(probes).join(assign, "cell").filter(F.col("qid") != F.col("cid")),
+        top_k,
     )
 
 
@@ -1307,9 +1270,10 @@ def knn_ivf_query(
     centroid table, then score ONLY the probed cells' assignment
     partitions. No seeding scan, no corpus-wide assignment at query
     time; the assignment scan is bounded by the probed partitions
-    (partition-pruned layout from ivf_build_index). Bit-identical to
-    knn_ivf_det at the same params — the persisted norms guarantee the
-    same fold inputs.
+    (partition-pruned layout from ivf_build_index). Both this and
+    knn_ivf_det end in :func:`_ivf_search`, and the persisted norms
+    are the same fold inputs, so the two are bit-identical at the same
+    params.
 
     Integrity: :func:`_open_index` with ``fingerprint`` (n_probe/top_k
     are query-time knobs, valid against any build, so there are no
@@ -1321,26 +1285,8 @@ def knn_ivf_query(
     marker = _open_index(index_dir, "knn_ivf_query", fingerprint=fingerprint)
     cent = read_parquet(spark, os.path.join(index_dir, "centroids.parquet"))
     assign = _ivf_served(spark, index_dir, marker, ("cid", "cv", "cn"))
-    probes = _ivf_probes(queries, id_col, vec_col, cent, n_probe)
-    if candidate_filter is not None:
-        # FILTERED search (metadata predicate): applied to the candidate
-        # rows BEFORE ranking, so it lands on the partition-pruned
-        # assignments scan (column-pruned, pushed down) — top-k among
-        # survivors. A highly selective filter can return < k rows from
-        # the probed cells; callers widen n_probe or brute-force the
-        # filtered subset (the recall-audit trade).
-        assign = assign.filter(candidate_filter)
-    wk = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("cid"))
-    return (
-        F.broadcast(probes)
-        .join(assign, "cell")
-        .filter(F.col("qid") != F.col("cid"))
-        .withColumn(
-            "cos", dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))
-        )
-        .withColumn("rk", F.row_number().over(wk).cast("long"))
-        .filter(F.col("rk") <= top_k)
-        .select("qid", "cid", "cos", "rk")
+    return _ivf_search(
+        queries, id_col, vec_col, cent, assign, n_probe, top_k, candidate_filter
     )
 
 

@@ -63,10 +63,17 @@ def _sql_jaccard_head(src: str = "documents", pair: str = "<") -> str:
     ), sizes AS (
         SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id
     ), inter AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_inter
-        FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id {pair} b.doc_id
-        GROUP BY 1, 2
+        {_sql_shingle_inter(pair)}
     )"""
+
+
+def _sql_shingle_inter(pair: str = "<") -> str:
+    """The shared-shingle count ``(id_a, id_b, n_inter)`` of every ``sh``
+    pair with ``a.doc_id {pair} b.doc_id`` — the body of
+    :func:`_sql_jaccard_head`'s ``inter``."""
+    return f"""SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_inter
+        FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id {pair} b.doc_id
+        GROUP BY 1, 2"""
 
 
 #: exact shingle Jaccard of one ``inter`` row, read against the ``sa`` /
@@ -3900,22 +3907,19 @@ def llm_cluster_diverse_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         + """ AS recall
     FROM (
         SELECT ei.id_a, ei.id_b,
-               CAST(floor(CAST(ei.n_inter AS DOUBLE)
-                    / (sa.n_sh + sb.n_sh - ei.n_inter) * 10) AS BIGINT) AS band
-        FROM (
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_inter
-            FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-            GROUP BY 1, 2
-        ) ei
-        JOIN sizes sa ON sa.doc_id = ei.id_a
-        JOIN sizes sb ON sb.doc_id = ei.id_b
-        WHERE CAST(ei.n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - ei.n_inter) >= 0.6
+               CAST(floor("""
+        + _SQL_JACCARD
+        + """ * 10) AS BIGINT) AS band
+        """
+        + _sql_jaccard_edges(
+            0.6, f"({_sql_shingle_inter()}) ei", "ei.id_a", "ei.id_b"
+        )
+        + """
     ) tp
     LEFT JOIN (
-        SELECT i.id_a, i.id_b FROM inter i
-        JOIN sizes sa ON sa.doc_id = i.id_a
-        JOIN sizes sb ON sb.doc_id = i.id_b
-        WHERE CAST(i.n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - i.n_inter) >= 0.6
+        SELECT i.id_a, i.id_b """
+        + _sql_jaccard_edges(0.6, "inter i", "i.id_a", "i.id_b")
+        + """
     ) f ON f.id_a = tp.id_a AND f.id_b = tp.id_b
     GROUP BY band"""
     ),
@@ -4059,10 +4063,7 @@ def _hybrid_dedup_final(tail: str | None = None) -> str:
           ON a.bucket = b.bucket AND a.vec_id < b.vec_id
         WHERE ({sql_cosine('a.embedding', 'b.embedding')}) >= 0.35
     ), text_pairs AS (
-        SELECT i.id_a, i.id_b FROM inter i
-        JOIN sizes sa ON sa.doc_id = i.id_a
-        JOIN sizes sb ON sb.doc_id = i.id_b
-        WHERE CAST(i.n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - i.n_inter) >= 0.6
+        SELECT i.id_a, i.id_b {_sql_jaccard_edges(0.6, "inter i", "i.id_a", "i.id_b")}
     ), all_edges AS (
         SELECT id_a, id_b FROM text_pairs UNION SELECT id_a, id_b FROM emb_pairs
     ), und AS (
@@ -4148,11 +4149,8 @@ def llm_dedup_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     "llm_dedup_minhash_clusters",
     oracle=_sql_minhash_lsh(
         recursive=True,
-        final=""", text_pairs AS (
-        SELECT i.id_a, i.id_b FROM inter i
-        JOIN sizes sa ON sa.doc_id = i.id_a
-        JOIN sizes sb ON sb.doc_id = i.id_b
-        WHERE CAST(i.n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - i.n_inter) >= 0.6
+        final=f""", text_pairs AS (
+        SELECT i.id_a, i.id_b {_sql_jaccard_edges(0.6, "inter i", "i.id_a", "i.id_b")}
     ), und AS (
         SELECT id_a AS u, id_b AS v FROM text_pairs
         UNION SELECT id_b, id_a FROM text_pairs
@@ -6364,7 +6362,7 @@ def llm_knn_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     (llm_ann_recall_audit) would otherwise charge to the index. The
     oracle replays shortlist AND rerank, so the full two-stage
     composition is value-pinned."""
-    from randas_spark.operators.similarity import dot, knn_pq_query, norm
+    from randas_spark.operators.similarity import _cosine_topk, _vec_side, knn_pq_query
 
     emb = t(spark, sf_dir, "embeddings")
     index_dir, fp = _pq_index(sf_dir, emb)
@@ -6376,30 +6374,16 @@ def llm_knn_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         top_k=50,
         fingerprint=fp,
     ).select("qid", "cid")
-    qv = emb.select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qv"),
-        norm(F.col("embedding")).alias("qn"),
-    )
-    cv = emb.select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("cv"),
-        norm(F.col("embedding")).alias("cn"),
-    )
-    wk = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("cid"))
-    return (
-        # the shortlist is BOUNDED (top_k x |queries| ids) — broadcast it
-        # onto the corpus-sized raw-vector side explicitly, so the exact
-        # leg is one corpus scan + hash probe at any scale, never a
-        # corpus shuffle on cid
+    qv = _vec_side(emb, "vec_id", "embedding", "q")
+    cv = _vec_side(emb, "vec_id", "embedding", "c")
+    # the shortlist is BOUNDED (top_k x |queries| ids) — broadcast it
+    # onto the corpus-sized raw-vector side explicitly, so the exact
+    # leg is one corpus scan + hash probe at any scale, never a corpus
+    # shuffle on cid; it already excludes self-matches
+    return _cosine_topk(
         F.broadcast(shortlist.join(F.broadcast(qv.filter(F.col("qid") < 5)), "qid"))
-        .join(cv, "cid")
-        .withColumn(
-            "cos", dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))
-        )
-        .withColumn("rk", F.row_number().over(wk).cast("long"))
-        .filter(F.col("rk") <= 10)
-        .select("qid", "cid", "cos", "rk")
+        .join(cv, "cid"),
+        10,
     )
 
 
@@ -6833,7 +6817,7 @@ def llm_knn_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     the panel. Completes the two-stage family next to llm_knn_pq_rerank
     (flat scan + rerank) — the delta between their stage-1 costs is the
     pruning win, measured on the same corpus."""
-    from randas_spark.operators.similarity import dot, knn_ivfpq_query, norm
+    from randas_spark.operators.similarity import _cosine_topk, _vec_side, knn_ivfpq_query
 
     emb = t(spark, sf_dir, "embeddings")
     index_dir, fp = _ivfpq_index(spark, sf_dir)
@@ -6844,23 +6828,8 @@ def llm_knn_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # query-side raw vectors come from the PANEL frame itself (qs), not
     # a second pass through the shortlist — reusing `short` twice would
     # duplicate the whole stage-1 subplan (codes scan included)
-    qv = qs.select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qv"),
-        norm(F.col("embedding")).alias("qn"),
-    )
-    cv = emb.select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("cv"),
-        norm(F.col("embedding")).alias("cn"),
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("cid"))
-    return (
-        F.broadcast(short)
-        .join(cv, "cid")
-        .join(F.broadcast(qv), "qid")
-        .withColumn("cos", dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")))
-        .withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= 10)
-        .select("qid", "cid", "cos", "rk")
+    qv = _vec_side(qs, "vec_id", "embedding", "q")
+    cv = _vec_side(emb, "vec_id", "embedding", "c")
+    return _cosine_topk(
+        F.broadcast(short).join(cv, "cid").join(F.broadcast(qv), "qid"), 10
     )

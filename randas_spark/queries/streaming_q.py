@@ -488,6 +488,7 @@ def _countmin_cells_oracle() -> str:
 
     unions = "\n        UNION ALL ".join(
         f"SELECT {d} AS d, {_bucket_sql('user_id', d, False)} AS bucket FROM events"
+        " WHERE user_id IS NOT NULL"
         for d in range(4)
     )
     return f"""
@@ -531,14 +532,16 @@ def stream_quantile_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("stream_countmin_cells", oracle=_countmin_cells_oracle())
 def stream_countmin_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incrementally-maintained Count-Min sketch cells
-    (engine.countmin_stream_cells): a streaming aggregation whose state
-    is the depth×256-cell sketch itself — constant memory however long
-    the stream runs, and bit-identical to a batch rebuild (and to this
-    DuckDB oracle) because the buckets are md5-derived. pytest replays
-    the same builder over readStream and asserts cell-level equality."""
-    from randas_spark.streaming.engine import countmin_stream_cells
+    (operators/sketches.countmin_cells, unsharded): a streaming
+    aggregation whose state is the depth×256-cell sketch itself —
+    constant memory however long the stream runs, and bit-identical to
+    a batch rebuild (and to this DuckDB oracle) because the buckets are
+    md5-derived. NULL keys are dropped, as in every Count-Min build.
+    pytest replays the same builder over readStream and asserts
+    cell-level equality."""
+    from randas_spark.operators.sketches import countmin_cells
 
-    return countmin_stream_cells(t(spark, sf_dir, "events"), "user_id", depth=4)
+    return countmin_cells(t(spark, sf_dir, "events"), "user_id", None, depth=4)
 
 
 @register(
@@ -556,15 +559,16 @@ def stream_countmin_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_hll_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incrementally-maintained HyperLogLog registers
-    (engine.hll_stream_registers): per-bucket MAX is a streaming
-    aggregation with 256-row state, so the live distinct-user sketch is
-    always current and bit-identical to a batch rebuild (and to this
-    DuckDB oracle). pytest replays the builder over readStream and
-    asserts register-level equality; the batch twin's estimate path is
-    rel_hll_portable / rel_hll_intersection."""
-    from randas_spark.streaming.engine import hll_stream_registers
+    (operators/sketches.hll_registers): per-bucket MAX is a streaming
+    aggregation with 256-row state (max is order-insensitive, so the
+    batch builder is streaming-legal as-is), so the live distinct-user
+    sketch is always current and bit-identical to a batch rebuild (and
+    to this DuckDB oracle). pytest replays the builder over readStream
+    and asserts register-level equality; the batch twin's estimate path
+    is rel_hll_portable / rel_hll_intersection."""
+    from randas_spark.operators.sketches import hll_registers
 
-    return hll_stream_registers(t(spark, sf_dir, "events"), "user_id")
+    return hll_registers(t(spark, sf_dir, "events"), "user_id")
 
 
 @register(

@@ -959,37 +959,6 @@ def ann_serve_stream(
     return out_path
 
 
-def countmin_stream_cells(df: DataFrame, key_col: str = "user_id", depth: int = 4) -> DataFrame:
-    """Streaming Count-Min maintenance: the sketch IS a streaming
-    aggregation — cells (d, bucket, cnt) update incrementally per
-    micro-batch (map-side partial agg inside each batch; state bounded
-    at depth × 256 rows regardless of stream length), so complete/update
-    mode always holds the current sketch of everything seen. The same
-    md5-derived buckets as operators/sketches.countmin_cells, so a
-    batch rebuild — or a DuckDB audit — reproduces the streamed sketch
-    bit-for-bit. Works identically on batch and streaming frames.
-    """
-    from randas_spark.operators.sketches import _bucket_sql
-
-    rows = df.select(
-        *[F.expr(_bucket_sql(key_col, d, True)).alias(f"b{d}") for d in range(depth)]
-    )
-    return (
-        rows.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(F.lit(d).alias("d"), F.col(f"b{d}").alias("bucket"))
-                        for d in range(depth)
-                    ]
-                )
-            ).alias("x")
-        )
-        .groupBy(F.col("x.d").alias("d"), F.col("x.bucket").alias("bucket"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-
-
 def idempotent_batch_sink(
     stream_df: DataFrame,
     store_path: str,
@@ -1035,23 +1004,6 @@ def idempotent_batch_sink(
 
     _drain_foreach_batch(stream_df, sink, checkpoint)
     return store_path, sink
-
-
-def hll_stream_registers(df: DataFrame, key_col: str = "user_id") -> DataFrame:
-    """Streaming HyperLogLog maintenance: the register table (bucket,
-    rho) IS a streaming aggregation — per-bucket MAX updates
-    incrementally each micro-batch, state bounded at 256 rows however
-    long the stream runs, so complete/update mode always holds the
-    current distinct-count sketch of everything seen. Same md5-derived
-    buckets/ranks as operators/sketches.hll_registers (this is that
-    builder — max is order-insensitive, so the plan is streaming-legal
-    as-is), so a batch rebuild or DuckDB audit reproduces the streamed
-    registers bit-for-bit, and hll_estimate answers the live query.
-    Completes the streaming sketch triple next to countmin_stream_cells
-    (frequencies) and quantile_sketch_bins (quantiles)."""
-    from randas_spark.operators.sketches import hll_registers
-
-    return hll_registers(df, key_col)
 
 
 _CUSUM_STATE_SCHEMA = "cur_hour_us long, hour_sum double, cp double, cn double"

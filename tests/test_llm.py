@@ -401,10 +401,10 @@ def test_incremental_near_dedup_consistent_with_full_corpus_pairs(spark, docs):
 
 
 def test_simhash_deterministic_and_symmetric(spark, docs):
-    """Identical text → identical portable fingerprint, and the
-    distributed shape (simhash_portable_fps) equals the Column form
-    (simhash_portable_fp) bit for bit over the corpus."""
-    from randas_spark.operators.dedup import simhash_portable_fp, simhash_portable_fps
+    """Identical text → identical portable fingerprint (bit-exactness
+    against a hashlib recomputation is
+    test_simhash_portable_matches_python_and_is_complete)."""
+    from randas_spark.operators.dedup import simhash_portable_fps
 
     df = spark.createDataFrame(
         [(1, "the quick brown fox"), (2, "the quick brown fox"), (3, "entirely different words here")],
@@ -413,14 +413,6 @@ def test_simhash_deterministic_and_symmetric(spark, docs):
     rows = {r.doc_id: r.fp for r in simhash_portable_fps(df, "doc_id", "text", 32).collect()}
     assert rows[1] == rows[2]
     assert rows[3] != rows[1]
-    col = {
-        r.doc_id: r.fp
-        for r in docs.select(
-            "doc_id", simhash_portable_fp(F.col("text"), 32).alias("fp")
-        ).collect()
-    }
-    dist = {r.doc_id: r.fp for r in simhash_portable_fps(docs, "doc_id", "text", 32).collect()}
-    assert dist == col
 
 
 def test_simhash_banding_is_exhaustive(spark):
@@ -1782,9 +1774,11 @@ def test_jaccard_verifier_exact_on_adversarial_corpus(spark, adversarial):
 #: any action), measured at the suite's sf0.001 after one warm build —
 #: the eager checkpoints each dedup and graph composition pays up front,
 #: the Gram-cell collect each PCA fit runs on the driver, and the
-#: packed-prefix total the incremental pack reads as its base offset
-#: (k-core and BFS counts follow the graph's peel and hop depth, so
-#: they differ per scale: 26 and 30 at sf0.01)
+#: packed-prefix total the incremental pack reads as its base offset,
+#: the md5 centroid collect of the in-memory IVF search, the index
+#: builds and appends the persisted k-NN queries start, and 0 for the
+#: lazy k-NN and sketch plans (k-core and BFS counts follow the graph's
+#: peel and hop depth, so they differ per scale: 26 and 30 at sf0.01)
 _CONSTRUCT_JOBS = {
     "llm_pca_power": 2,
     "llm_pca_project": 2,
@@ -1801,6 +1795,20 @@ _CONSTRUCT_JOBS = {
     "rel_triangle_count": 8,
     "rel_kcore_copurchase": 11,
     "rel_graph_bfs_hops": 23,
+    "llm_knn_bruteforce": 0,
+    "llm_knn_lsh": 0,
+    "llm_knn_ivf_det": 1,
+    "llm_knn_ivf_persisted": 0,
+    "llm_knn_ivf_append": 2,
+    "llm_knn_filtered": 0,
+    "llm_knn_graph": 4,
+    "llm_ann_recall_audit": 5,
+    "llm_knn_pq_rerank": 0,
+    "llm_knn_ivfpq_rerank": 0,
+    "stream_ivf_ingest": 2,
+    "stream_ann_enrich": 2,
+    "stream_countmin_cells": 0,
+    "stream_hll_cells": 0,
 }
 
 
@@ -1918,7 +1926,7 @@ def test_simhash_portable_matches_python_and_is_complete(spark, docs):
     hamming <= 3 (pigeonhole blocking loses nothing below bands)."""
     import hashlib
 
-    from randas_spark.operators.dedup import simhash_portable_fp, simhash_portable_pairs
+    from randas_spark.operators.dedup import simhash_portable_fps, simhash_portable_pairs
 
     def py_fp(text: str, n_bits: int = 32) -> int:
         toks = list(dict.fromkeys(text.lower().split(" ")))
@@ -1931,13 +1939,14 @@ def test_simhash_portable_matches_python_and_is_complete(spark, docs):
                 fp |= 1 << b
         return fp
 
-    rows = docs.select(
-        "doc_id", "text", simhash_portable_fp(F.col("text"), 32).alias("fp")
-    ).collect()
-    fps = {}
-    for r in rows:
-        assert r.fp == py_fp(r.text), r.doc_id
-        fps[r.doc_id] = r.fp
+    texts = {r.doc_id: r.text for r in docs.select("doc_id", "text").collect()}
+    fps = {
+        r.doc_id: r.fp
+        for r in simhash_portable_fps(docs, "doc_id", "text", 32).collect()
+    }
+    assert set(fps) == set(texts)  # every doc fingerprinted
+    for doc_id, fp in fps.items():
+        assert fp == py_fp(texts[doc_id]), doc_id
 
     ids = sorted(fps)
     expected = {
@@ -3838,6 +3847,66 @@ def test_assign_topk_cells_empty_centroid_frame(spark, emb):
     out = assign_topk_cells(emb.limit(5), "vec_id", "embedding", cent, 2)
     assert [f.name for f in out.schema.fields] == ["vid", "cell", "rn"]
     assert out.count() == 0
+
+
+def test_panel_and_corpus_cell_rankers_agree(spark, emb):
+    """The two IVF cell rankers — assign_topk_cells (the Arrow kernel,
+    corpus-sized inputs) and _ivf_probes (the window, query panels) —
+    give the same (vid, cell, rn) as a pure-Python (ccos DESC, cell ASC)
+    replay. Twin centroids (one vector under two cell ids) tie exactly
+    for every row, so the cell tie-break decides at every twin pair;
+    n_probe >= n_cells ranks every cell."""
+    import math
+
+    from randas_spark.functions.vectors import norm
+    from randas_spark.operators.similarity import _ivf_probes, assign_topk_cells
+
+    seeds = emb.filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("cell"),
+        F.col("embedding").alias("center"),
+        norm(F.col("embedding")).alias("center_nrm"),
+    )
+    cent = seeds.unionByName(seeds.withColumn("cell", F.col("cell") + 1000))
+    cent_rows = cent.collect()
+    n_cells = len(cent_rows)
+    rows = emb.filter(F.col("vec_id") < 40)
+
+    def fold(a, b):  # the zip_with/aggregate left fold, in doubles
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc = acc + float(x) * float(y)
+        return acc
+
+    expect = set()
+    for r in rows.collect():
+        qn = math.sqrt(fold(r.embedding, r.embedding))
+        ranked = sorted(
+            cent_rows,
+            key=lambda c: (-(fold(r.embedding, c.center) / (qn * c.center_nrm)), c.cell),
+        )
+        expect |= {(r.vec_id, c.cell, rn) for rn, c in enumerate(ranked, 1)}
+    assert len(expect) == 40 * n_cells
+
+    kernel = assign_topk_cells(rows, "vec_id", "embedding", cent, n_cells + 2)
+    assert {(r.vid, r.cell, r.rn) for r in kernel.collect()} == expect
+
+    # _ivf_probes emits the probed cells, not their rank: the rank-r
+    # cell is the one that probing r cells adds to probing r - 1
+    def probed(n_probe):
+        out = {}
+        for r in _ivf_probes(rows, "vec_id", "embedding", cent, n_probe).collect():
+            out.setdefault(r.qid, set()).add(r.cell)
+        return out
+
+    window, prev = set(), {}
+    for n_probe in range(1, n_cells + 1):
+        cur = probed(n_probe)
+        for qid, cells in cur.items():
+            (added,) = cells - prev.get(qid, set())
+            window.add((qid, added, n_probe))
+        prev = cur
+    assert window == expect
+    assert probed(n_cells + 2) == prev
 
 
 def test_sniff_audio_meta_headers_only():

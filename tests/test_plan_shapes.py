@@ -97,11 +97,17 @@ PINNED = {
     "llm_knn_ivfpq": (5, 0, 10),
     # recall panel (2 methods): brute-force truth ONCE (r14: checkpointed
     # — the r13 plan inlined the whole truth subtree per method leg),
-    # IVF det leg through the assign_topk_cells kernel (+2 narrow
-    # re-attach BHJs, -3 Exchange from the retired crossJoin+window
-    # assignment), IVFPQ leg, two broadcast stitch joins — panel-bounded
-    # sides all hinted, so SMJ stays 0 at the 50-query panel width
-    "llm_ann_recall_audit": (10, 0, 19),
+    # IVF det leg = the shared IVF search over an in-memory index (corpus
+    # assignment through the assign_topk_cells kernel + its narrow
+    # re-attach BHJ; query probes through the _ivf_probes window: -1 BHJ
+    # for the retired probe re-attach, +1 Exchange for the probe window;
+    # re-transcribed (10,0,19)->(9,0,20)), IVFPQ leg, two broadcast
+    # stitch joins — panel-bounded sides all hinted, so SMJ stays 0 at
+    # the 50-query panel width. BENCH re-measurement
+    # (tools/bench_isolated.py, sf0.1, 6 alternating parent/change runs,
+    # 4 cores): median 4.32 s (quartiles 4.04-4.62) -> 4.05 s
+    # (3.70-4.40); llm_knn_ivf_det 1.53 s (1.46-1.67) -> 1.47 s (1.33-1.73)
+    "llm_ann_recall_audit": (9, 0, 20),
     # IVFPQ + exact rerank (IndexIVFPQR shape): stage-1 composite (5 BHJ)
     # + bounded shortlist/query-vector broadcasts; the shortlist subplan
     # appears ONCE (a second occurrence means the stage-1 codes scan got

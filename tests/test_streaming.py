@@ -30,8 +30,11 @@ def batch_events(spark):
     return t(spark, SF_DIR, "events").cache()
 
 
-def _run_stream(spark, builder, name, output_mode="complete", copies=1, files_per_trigger=10):
-    """Stage the events file (optionally duplicated), run builder over
+def _run_stream(
+    spark, builder, name, output_mode="complete", copies=1, files_per_trigger=10, extra=None
+):
+    """Stage the events file (optionally duplicated, plus an ``extra``
+    pyarrow table of events rows as one more file), run builder over
     readStream to completion, return the memory-sink table."""
     from randas_spark.streaming.engine import events_stream, run_to_memory
 
@@ -42,6 +45,10 @@ def _run_stream(spark, builder, name, output_mode="complete", copies=1, files_pe
                 os.path.join(SF_DIR, "events.parquet"),
                 os.path.join(stage, f"copy{i}.parquet"),
             )
+        if extra is not None:
+            import pyarrow.parquet as papq
+
+            papq.write_table(extra, os.path.join(stage, "extra.parquet"))
         run_to_memory(builder(stream), name, output_mode=output_mode)
         return spark.table(name).cache()
     finally:
@@ -1196,17 +1203,32 @@ def test_incremental_dedup_ingest_matches_batch(spark, tmp_path):
 def test_countmin_stream_matches_batch_sketch(spark, batch_events):
     """The streamed sketch (incremental per-micro-batch updates in
     complete mode) must equal the batch-built sketch cell-for-cell —
-    the mergeability guarantee, exercised through readStream."""
-    from randas_spark.streaming.engine import countmin_stream_cells
+    the mergeability guarantee, exercised through readStream. One
+    NULL-key event rides along on both sides: countmin_cells drops it,
+    so it adds no cell and no count."""
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+    from pyspark.sql import functions as F
 
-    batch = countmin_stream_cells(batch_events, "user_id", depth=4)
+    from randas_spark.operators.sketches import countmin_cells
+
+    raw = papq.read_table(os.path.join(SF_DIR, "events.parquet")).slice(0, 1)
+    i = raw.schema.get_field_index("user_id")
+    null_key = raw.set_column(i, raw.schema.field(i), pa.nulls(1, raw.schema.field(i).type))
+    null_row = batch_events.limit(1).withColumn(
+        "user_id", F.lit(None).cast(batch_events.schema["user_id"].dataType)
+    )
+    batch = countmin_cells(batch_events.unionByName(null_row), "user_id", None, depth=4)
     streamed = _run_stream(
         spark,
-        lambda s: countmin_stream_cells(s, "user_id", depth=4),
+        lambda s: countmin_cells(s, "user_id", None, depth=4),
         "t_countmin",
         files_per_trigger=1,
+        extra=null_key,
     )
-    assert _collect_sorted(streamed) == _collect_sorted(batch)
+    got = _collect_sorted(streamed)
+    assert got == _collect_sorted(batch)
+    assert sum(r[1] for r in got) == 4 * batch_events.count()  # (bucket, cnt, d)
 
 
 def test_quantile_sketch_stream_matches_batch_bins(spark, batch_events):
@@ -1314,16 +1336,16 @@ def test_hll_stream_matches_batch_registers(spark, batch_events):
     """The streamed HLL register table (per-bucket MAX as streaming
     state) must equal the batch-built registers cell-for-cell through
     readStream — the mergeability guarantee for live distinct counts."""
-    from randas_spark.streaming.engine import hll_stream_registers
+    from randas_spark.operators.sketches import hll_registers
 
-    batch = hll_stream_registers(batch_events, "user_id")
+    batch = hll_registers(batch_events, "user_id")
     # copies=2 with one file per trigger => at least two micro-batches,
     # so the cross-trigger state merge (per-bucket MAX restore) is
     # actually exercised, not just the single-batch path; duplicate
     # events are a no-op for MAX so the batch twin is unchanged
     streamed = _run_stream(
         spark,
-        lambda s: hll_stream_registers(s, "user_id"),
+        lambda s: hll_registers(s, "user_id"),
         "t_hll",
         copies=2,
         files_per_trigger=1,
