@@ -452,9 +452,10 @@ def _ppjoin_candidates(
     df: DataFrame, id_col: str, text_col: str, k: int, threshold: float
 ):
     """Candidate half of :func:`ppjoin_pairs`: (checkpointed shingle
-    frame, candidate (id_a, id_b) pairs). Split out so stage timing
-    (tools/ppjoin_stages.py) can adjudicate the candidate-join vs
-    verify-leg slopes independently without duplicating the plan."""
+    frame, candidate (id_a, id_b) pairs). Its distinct candidate count
+    and the verify join's output rows are separate plan nodes in
+    ``tools/profile.py``'s record, so the candidate-join and verify-leg
+    slopes are read without duplicating the plan."""
     sh = shingle_checkpoint(df, id_col, text_col, k)
     ex = sh.select("doc_id", F.explode("sh").alias("s"))
     # per-doc shingles sorted by the global (freq, shingle) order. The

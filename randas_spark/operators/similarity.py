@@ -115,7 +115,8 @@ def adaptive_plane_count(
     """Hyperplane count whose 2^P buckets hold ~``target`` vectors each:
     P = clamp(ceil(log2(n / target)), lo, hi).
 
-    The r11 100x audit (tools/hybrid_stages.py) showed WHY this must be
+    The r11 100x audit of per-stage pair counts (``tools/profile.py``
+    now records every plan node's output rows) showed WHY this must be
     adaptive: a FIXED plane count makes the bucket population N/2^P, so
     the in-bucket candidate volume sum C(n_b, 2) is quadratic in N by
     construction — 12.8M scored pairs at 20k vectors, 1.25e9 at 200k.

@@ -4,6 +4,12 @@ Usage: python tools/dump_plans.py <suffix> query [query ...]
 Writes plans/$SPARK_GRAFT_PLANS_ROUND/<query>_<suffix>.txt (default r14)
 for each query, at $SPARK_GRAFT_SF_DIR (default sf0.1) — the bench
 scale, so the committed plan matches the claims in OPTIMIZATION_rNN.md.
+
+Compare two dumps only when each came from a fresh session that built
+the same query list in the same order. Formatted plans carry
+expression ids, and some operators order by them: an Expand lists its
+``count_distinct`` groups in expression-id order, so the same code
+prints a different plan after other queries have run in the session.
 """
 
 from __future__ import annotations
