@@ -176,7 +176,8 @@ HEADLINE = [
 # Most-recent ISOLATED sf0.1 row per headline query. PROTOCOL TAG
 # (round 10, VERDICT r9 order #1): each row is the MEDIAN of isolated
 # medians across >= 3 independent passes (warm median-of-3 with clean
-# unpersist, the protocol tools/profile.py runs per named query; 2026-08-16), replacing r9's MIN-of-passes rows.
+# unpersist, the protocol tools/query_profile.py runs per named query;
+# 2026-08-16), replacing r9's MIN-of-passes rows.
 # Rationale: the min is the luckiest scheduling window ever observed, and
 # on sub-second fixed-overhead-dominated queries a normal-day measurement
 # sits 1.5-2.3x above it WITH NO PLAN CHANGE (r9 adjudication:
@@ -625,7 +626,7 @@ def main() -> None:
     # calm, and zero median-gate breaches — so the interleaved gate
     # fires at 2.0x (a floor DOUBLING even under interleave is a real
     # plan-regression signal). The tight 1.3x default remains for
-    # isolated re-measurement contexts (tools/profile.py named-query
+    # isolated re-measurement contexts (tools/query_profile.py named-query
     # adjudications) and the unit test.
     drift = flag_floor_drift(floors, ratio_gate=2.0)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]

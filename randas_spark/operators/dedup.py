@@ -454,8 +454,8 @@ def _ppjoin_candidates(
     """Candidate half of :func:`ppjoin_pairs`: (checkpointed shingle
     frame, candidate (id_a, id_b) pairs). Its distinct candidate count
     and the verify join's output rows are separate plan nodes in
-    ``tools/profile.py``'s record, so the candidate-join and verify-leg
-    slopes are read without duplicating the plan."""
+    ``tools/query_profile.py``'s record, so the candidate-join and
+    verify-leg slopes are read without duplicating the plan."""
     sh = shingle_checkpoint(df, id_col, text_col, k)
     ex = sh.select("doc_id", F.explode("sh").alias("s"))
     # per-doc shingles sorted by the global (freq, shingle) order. The

@@ -115,7 +115,7 @@ def adaptive_plane_count(
     """Hyperplane count whose 2^P buckets hold ~``target`` vectors each:
     P = clamp(ceil(log2(n / target)), lo, hi).
 
-    The r11 100x audit of per-stage pair counts (``tools/profile.py``
+    The r11 100x audit of per-stage pair counts (``tools/query_profile.py``
     now records every plan node's output rows) showed WHY this must be
     adaptive: a FIXED plane count makes the bucket population N/2^P, so
     the in-bucket candidate volume sum C(n_b, 2) is quadratic in N by

@@ -1,13 +1,14 @@
 """Where did a registry query's time, rows and bytes go?
 
-Usage: python tools/profile.py [sf_dir] (query [query ...] | --all) [--out FILE]
+Usage: python tools/query_profile.py [sf_dir] (query [query ...] | --all) > FILE
 
 ``sf_dir`` defaults to ``$SPARK_GRAFT_SF_DIR``. Queries run on the
 normal ``get_spark`` session plus the Spark event log (in a temporary
 directory). Named queries run once to warm, then three times, and the
 record is the median-wall run; ``--all`` runs every registry query once
-to warm and once timed. Output (stdout, or FILE) is one JSON document
-with one record per query, built by perfbench's tracer:
+to warm and once timed. Stdout is one JSON document with one record
+per query, built by perfbench's tracer; progress and Spark's logs go
+to stderr:
 
 - every ``perfbench.tracing.OP_LAYERS`` key, ``layers_s`` and
   ``residual_s`` (wall time the layers do not explain); the ``construct``
@@ -18,8 +19,12 @@ with one record per query, built by perfbench's tracer:
   shuffle_mb]``; ``execution`` is the SQL execution's ordinal within its
   phase, ``position`` the node's id in that execution's plan graph, and
   shuffle sizes are as Spark formats them (three significant digits);
-- ``host``: the host's CPU steal and busy fractions (``/proc/stat``)
-  over the timed runs, so a slow record can be told from a contended one;
+- ``host``: over the record's own run, the shares of the host's CPU
+  ticks (``/proc/stat``) that were stolen by the hypervisor, busy, and
+  busy outside this process tree (the JVM and its Python workers
+  included), so a slow record can be told from a contended one; the
+  document's ``contended`` lists the queries that lost at least one
+  core's worth to steal and other processes;
 - ``samples_s`` (every timed wall) and ``error`` (None when it ran).
 
 Jobs and node rows come from the session's job and SQL status stores,
@@ -30,38 +35,26 @@ the phase its start time falls in.
 
 from __future__ import annotations
 
-import contextlib
-import importlib.util
 import json
 import os
 import shlex
 import shutil
 import sys
-import sysconfig
 import tempfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-if __name__ == "profile":
-    # A script run from tools/ has this directory first on sys.path, so
-    # the standard library's ``profile`` (pyspark imports it through
-    # cProfile) resolves to this file: put the real module in its place.
-    spec = importlib.util.spec_from_file_location(
-        "profile", os.path.join(sysconfig.get_path("stdlib"), "profile.py")
-    )
-    sys.modules["profile"] = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(sys.modules["profile"])
-else:
-    sys.path.insert(0, ROOT)
-    from perfbench.procfs import host_cpu_ticks
-    from perfbench.run import run_op
-    from perfbench.tracing import Py4jCounter, read_event_log, summarise
-    from perfbench.workloads import Op
+sys.path.insert(0, ROOT)
+
+from perfbench.procfs import _stat, host_cpu_ticks, tree
+from perfbench.run import run_op
+from perfbench.tracing import Py4jCounter, read_event_log, summarise
+from perfbench.workloads import Op
 
 PREFIX = "profile"
 ROWS, SHUFFLE = "number of output rows", "shuffle bytes written"
 SIZE_UNITS = {"B": 0, "KiB": 1, "MiB": 2, "GiB": 3, "TiB": 4}
 SEP = "\u0001"
-USAGE = "usage: profile.py [sf_dir] (query [query ...] | --all) [--out FILE]"
+USAGE = "usage: query_profile.py [sf_dir] (query [query ...] | --all) > FILE"
 
 
 def enable_event_log(log_dir: str) -> None:
@@ -92,7 +85,9 @@ class Status:
         self.sql = spark._jsparkSession.sharedState().statusStore()
 
     def mark(self) -> tuple[int, int]:
-        """(next job id, next SQL execution id)."""
+        """(next job id, next SQL execution id), once the listener bus
+        has filed every event so far."""
+        self.jsc.listenerBus().waitUntilEmpty()
         n = self.sql.executionsCount()
         last = self.sql.executionsList(n - 1, 1).head().executionId() if n else -1
         return self.jsc.dagScheduler().numTotalJobs(), last + 1
@@ -100,7 +95,6 @@ class Status:
     def read(self, record: dict, first: tuple[int, int]) -> tuple[list, list]:
         """(job rows, node rows) of the run ``record``, started after ``first``."""
         end = self.mark()
-        self.jsc.listenerBus().waitUntilEmpty()
         member = {
             jid: phase
             for phase in record["phases"]
@@ -147,6 +141,26 @@ class Status:
         return jobs, nodes
 
 
+def own_ticks() -> dict[int, int]:
+    """utime + stime ticks of each live process in this one's tree."""
+    stats = {pid: _stat(pid) for pid, _, _ in tree(os.getpid())}
+    return {pid: int(st[13]) + int(st[14]) for pid, st in stats.items() if st}
+
+
+def host_window(a: tuple[dict, dict], b: tuple[dict, dict]) -> dict:
+    """Shares of the host's CPU ticks between samples ``a`` and ``b`` of
+    ``(host_cpu_ticks(), own_ticks())``. A process of the tree that
+    exited in between loses its ticks from ``own``, so ``other_frac``
+    errs high, never low."""
+    (h0, own0), (h1, own1) = a, b
+    total = max(1, h1["total"] - h0["total"])
+    steal = h1["steal"] - h0["steal"]
+    busy = total - (h1["idle"] - h0["idle"]) - steal
+    own = sum(t - own0.get(pid, 0) for pid, t in own1.items())
+    shares = {"steal_frac": steal, "busy_frac": busy, "other_frac": max(0, busy - own)}
+    return {k: v / total for k, v in shares.items()}
+
+
 def query_op(spark, name: str, fn, sf_dir: str) -> Op:
     def run(timer):
         try:
@@ -166,41 +180,26 @@ def query_op(spark, name: str, fn, sf_dir: str) -> Op:
 
 def profile(spark, tracer, status, name, fn, sf_dir, timed: int) -> dict:
     """Warm once, run ``timed`` times; ``run_op``'s record of the
-    median-wall run, with its job and node rows, the timed walls and
-    the host window under ``extra``."""
+    median-wall run, with its job and node rows and host window, and
+    every timed wall, under ``extra``."""
     op = query_op(spark, name, fn, sf_dir)
     run_op(spark, PREFIX, op, 0, tracer)
     runs = []
-    ticks0 = host_cpu_ticks()
     for n in range(1, timed + 1):
-        first = status.mark()
+        first, before = status.mark(), (host_cpu_ticks(), own_ticks())
         record, _ = run_op(spark, PREFIX, op, n, tracer)
-        runs.append((record, *status.read(record, first)))
-    ticks1 = host_cpu_ticks()
-    dt = max(1, ticks1["total"] - ticks0["total"])
-    record, jobs, nodes = sorted(runs, key=lambda r: r[0]["wall_s"])[len(runs) // 2]
+        host = host_window(before, (host_cpu_ticks(), own_ticks()))
+        runs.append((record, host, *status.read(record, first)))
+    record, host, jobs, nodes = sorted(runs, key=lambda r: r[0]["wall_s"])[len(runs) // 2]
     print(f"{record['wall_s']:9.3f}s  {name}  {record['error'] or ''}", file=sys.stderr)
-    record["extra"] = {
-        "error": record["error"],
-        "samples_s": [r[0]["wall_s"] for r in runs],
-        "host": {
-            "steal_frac": (ticks1["steal"] - ticks0["steal"]) / dt,
-            "busy_frac": 1 - (ticks1["idle"] - ticks0["idle"]) / dt,
-        },
-        "jobs": jobs,
-        "nodes": nodes,
-    }
+    samples = [r[0]["wall_s"] for r in runs]
+    record["extra"] = dict(error=record["error"], samples_s=samples, host=host, jobs=jobs, nodes=nodes)
     return record
 
 
 def main(argv: list[str]) -> int:
-    args, out = list(argv), None
-    if "--out" in args[:-1]:
-        i = args.index("--out")
-        out = args.pop(i + 1)
-        del args[i]
-    every = "--all" in args
-    args = [a for a in args if a != "--all"]
+    every = "--all" in argv
+    args = [a for a in argv if a != "--all"]
     sf_dir = args.pop(0) if args and os.path.isdir(args[0]) else os.environ.get("SPARK_GRAFT_SF_DIR")
     # exactly one of --all and query names
     if not sf_dir or every == bool(args) or any(a.startswith("--") for a in args):
@@ -242,12 +241,15 @@ def main(argv: list[str]) -> int:
         "cpus": cpus,
         "runs": f"warm 1, timed {timed}, median-wall run",
         "errors": sum(r["error"] is not None for r in records),
+        # lost at least one of the host's cores to steal and other processes
+        "contended": [
+            r["op"] for r in records
+            if (r["host"]["steal_frac"] + r["host"]["other_frac"]) * os.cpu_count() >= 1
+        ],
     }
     # one record per line, so two profiles diff query by query
     body = ",\n".join(json.dumps(r) for r in records)
-    text = f'{json.dumps(head)[:-1]}, "records": [\n{body}\n]}}'
-    with open(out, "w") if out else contextlib.nullcontext(sys.stdout) as fh:
-        fh.write(text + "\n")
+    print(f'{json.dumps(head)[:-1]}, "records": [\n{body}\n]}}')
     return 0
 
 
