@@ -1,56 +1,52 @@
-"""Benchmark harness — prints ONE JSON line with per-query wall-clock.
+"""Benchmark harness: prints ONE JSON line with per-query wall-clock.
 
-Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]. Each query is executed
-once to warm (JVM/codegen/file-cache) and then timed as the median of 3
-runs, collecting results fully (the driver-visible cost).
+Usage: python bench.py
+
+Runs the HEADLINE queries at $SPARK_GRAFT_SF_DIR (default: the sf0.1
+test data) on the ``get_spark`` session. Each query runs once
+to warm (JVM, codegen, file cache), then three interleaved rounds are
+timed, each collecting its result fully (the driver-visible cost); a
+slot's number is the median of its three kept walls. Cached tables and
+checkpointed RDDs are unpersisted after every run.
+
+Contention is judged from each timed run's own host window
+(``tools/query_profile.py``'s ``host_window``, sampled just outside the
+timed interval): the shares of the host's CPU ticks stolen by the
+hypervisor and spent by processes outside this one's tree. After the
+three rounds, every run that lost at least one core to them is re-taken
+once, and of the two the run from the calmer window (lower
+``steal_frac + other_frac``) is kept. The window sees CPU only: a run
+slowed by another process's disk or memory-bandwidth use is not caught.
+
+The last stdout line (< 2000 B, so a capture of stdout's tail holds it) has
+``metric``, ``value`` (sum of medians), ``unit``, ``queries`` (medians,
+2 decimals, HEADLINE order), ``sf`` and ``contended_n`` (slots whose
+median run still lost a core after the retake). ``BENCH_DETAIL.json``
+holds the full-precision medians and, per slot, the three kept runs:
+wall, host shares, and whether the run was re-taken (then ``first`` is
+the first take).
 """
 
 from __future__ import annotations
 
 import json
 import os
-import statistics
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
 
-# Headline set: representative of each operator family; kept in sync with
-# the registry as families land.
-#
-# SAMPLE-ROTATION POLICY (round 10, VERDICT r9 order #5): the headline is
-# a PERMANENT core (one slot per operator family, stable round-over-round
-# so BENCH_r{N} deltas are comparable) plus a ROTATION block at the end
-# that changes every round. Rotation slots exist to refresh driver-side
-# evidence for registry rows whose last green CORRECTNESS entry is >=2
-# rounds old; each round the stalest block rotates in and the previous
-# round's rotation slots rotate out (their BASELINE_ROWS stay, so the
-# yardstick survives the rotation). Rotation history: r9 = ref_describe +
-# rel_asof_join (all 20 ref_* re-greened that round); r10 = the TPC-H head
-# q02/q04/q07 (q01/q03/q05/q06 are permanent-core) and the r5-era rel_
-# block (rel_sessionize, rel_merge_upsert, rel_window_range_frame), whose
-# last driver rows date to r8 and r5 respectively, plus the round's new
-# registration llm_knn_ivf_append; r11 = the TPC-H MID block q08/q13/
-# q17 (last driver rows r8), an aging ref_* row (ref_json_flatten), and
-# the round's new registrations llm_knn_ivfpq + stream_scd2_apply;
-# r12 = the never-benched TPC-H tail q10/q14/q15/q16/q19/q20/q22 +
-# ref_query_int_literal_quirk (VERDICT r11 order #5 — judge-verified
-# value-exact in r11, zero BENCH evidence ever); r13 = the never-benched
-# TPC-H heads q02/q04/q07/q11 + the r11-rotated-out block re-entering +
-# llm_bitext_mine's union-prune re-entry, with q03/q06/q12 trimmed from
-# the over-represented TPC-H core (named reason at the slot). Budget
-# discipline: the compact JSON line must stay under ~2000 B (driver
-# tail-capture window), which caps the headline near ~62 slots —
-# rotation REPLACES, never accumulates.
+from perfbench.procfs import host_cpu_ticks
+from perfbench.run import drop_persisted
+from tools.query_profile import host_window, lost_a_core, own_ticks
+
+ROUNDS = 3  # odd, so the median is one kept run
+
+# One slot per operator family, plus slots that refresh driver-side
+# evidence for aging registry rows; the line budget caps it near 62.
 HEADLINE = [
     "q01_pricing_summary",
-    # r13 core trim (named reason per VERDICT r12 order #6's "retire
-    # nothing without a named reason"): TPC-H held 8 of the permanent
-    # core's slots — q03/q06/q12 leave the core (rows retained; the
-    # family keeps q01/q05/q09/q18/q21 plus this round's rotating
-    # heads), making room for the r13 rotation block without breaching
-    # the ~2000 B line cap.
     "q05_local_supplier_volume",
     "q09_product_profit",
     "q18_large_orders",
@@ -59,10 +55,7 @@ HEADLINE = [
     "rel_window_topk_per_group",
     "rel_cube_agg",
     "llm_dedup_exact",
-    # md5-keyed MinHash-LSH, the engine's one MinHash implementation:
-    # fully oracle-backed, so the headline number is a verified
-    # computation (round-2 verdict prescription)
-    "llm_dedup_minhash_det",
+    "llm_dedup_minhash_det",  # the one MinHash-LSH, fully oracle-backed
     "llm_text_quality",
     "llm_knn_bruteforce",
     "stream_tumbling_window",
@@ -70,96 +63,41 @@ HEADLINE = [
     "rel_gap_fill_ffill",
     "llm_bm25_topk",
     "llm_chunk_documents",
-    # round-2 additions (one per new family; BASELINE.md has their rows)
     "llm_knn_quantized",
     "rel_countmin_sketch",
     "llm_substring_dedup",
     "llm_quality_classifier",
-    # round-5 additions: the Arrow/pandas_udf path (NFC normalize) and the
-    # PAA-pruned series search; isolated baseline rows in BASELINE.md r5
-    "llm_text_normalize",
+    "llm_text_normalize",  # the Arrow pandas_udf path
     "rel_ts_similarity_paa",
-    # round-5 second-pass representatives: the all-points ANN primitive
-    # (adaptive-cell IVF self-join), the binned interval join, the
-    # mergeable quantile sketch, and directed containment dedup
-    "llm_knn_graph",
+    "llm_knn_graph",  # all-points ANN: adaptive-cell IVF self-join
     "rel_interval_join_binned",
     "rel_quantile_sketch_mergeable",
     "llm_dedup_containment",
-    # round-6 additions: the costliest registry op after its rework
-    # (SemDeDup composition), BPE tokenizer training, and the
-    # pre-content-dedup URL stage; isolated rows in BASELINE.md r6
-    "llm_semantic_dedup",
+    "llm_semantic_dedup",  # the costliest dedup composition
     "llm_bpe_learn",
     "llm_bpe_apply",
     "llm_url_dedup",
-    # round-6 continuation: deterministic distributed k-means (the one
-    # iterative numeric fixpoint with a cross-engine oracle) and the
-    # hybrid text+embedding dedup composition; isolated rows + scale
-    # points in BASELINE.md r6
-    "llm_kmeans_det",
+    "llm_kmeans_det",  # the iterative numeric fixpoint with an oracle
     "llm_dedup_hybrid",
-    # round-6 sixth pass: the pattern-mining family's two heavy
-    # representatives (basket-keyed co-occurrence self-join; degree-
-    # ordered triangle enumeration); BASELINE.md r6 rows + 10x slopes
     "rel_market_basket_lift",
     "rel_triangle_count",
-    # round-6 seventh pass slot RETIRED in r12 (VERDICT r11 order #4):
-    # llm_knn_pq_adc (9.53 s, the heaviest headline slot) measured the
-    # fused refit+full-scan plan the IVFPQ composite retired in design;
-    # the family's headline evidence is llm_knn_pq_persisted (the
-    # fit/scan split, permanent core below) — the fused form stays a
-    # green registry row with its BASELINE_ROWS yardstick retained.
-    # round-6 continuation-2 representatives: closed-form model fitting
-    # (Gram-sum OLS) and the token-pair PMI join; BASELINE.md rows + 10x
-    # slopes in the continuation-2 table
-    "rel_ols_grouped",
+    "rel_ols_grouped",  # closed-form Gram-sum model fitting
     "llm_pmi_collocations",
-    # continuation-2 later batch: the iterative Newton optimizer (flat
-    # at 10x) and the NB classifier train/score/eval plan
     "rel_logreg_newton",
     "llm_nb_lang_confusion",
-    # round-7: the three streaming queries the driver's 50-query sample
-    # had never drawn (VERDICT r6 item 7) — keeping them in the headline
-    # keeps a recorded, current number next to their canon evidence
     "stream_pattern_funnel",
     "stream_hll_cells",
-    # round-7 new families: exact-integer PCA (one-scan Gram + driver
-    # iteration; llm_pca_topk below is the family's headline slot since
-    # r10 — same Gram-scan plan, strictly more work) and the unigram-LM
-    # tokenizer (hard-EM Viterbi); isolated rows + 10x slopes in r7
     "llm_unigram_lm",
-    # r8 additions: the r6-red-then-fixed session window (kept in headline
-    # so every driver round re-measures it), the top-K PCA generalization,
-    # and the density-capped FULL OUTER interval join
     "stream_session_window",
-    "llm_pca_topk",
+    "llm_pca_topk",  # one Gram scan, then driver iteration
     "stream_stream_full_outer_capped",
-    # r9 additions: the persisted-PQ query-only plan (VERDICT r8 #2 — its
-    # row IS the fit/query-split payoff vs llm_knn_pq_adc), the cap's loss
-    # audit, sequence packing on the distributed prefix sum, and
-    # fixed-point PageRank
-    "llm_knn_pq_persisted",
+    "llm_knn_pq_persisted",  # the fit/query split of product quantization
     "stream_capped_drop_audit",
     "llm_sequence_pack",
     "rel_pagerank",
-    # r9 second batch: the partition-pruned persisted IVF and the
-    # heaviest new text op (shingle-novelty join)
     "llm_knn_ivf_persisted",
     "llm_ngram_novelty",
-    # --- ROTATION block (r14; see policy comment above). The r13 block
-    # (q02/q04/q07/q11/q08/q13/q17/ref_json_flatten/llm_knn_ivfpq/
-    # stream_scd2_apply/llm_bitext_mine, fresh BENCH_r13 evidence)
-    # rotated out with rows retained. In (VERDICT r13 order #8 — the
-    # stalest green rows): the r9 rotation pair (ref_describe,
-    # rel_asof_join — last driver rows BENCH_r09), the r10 block
-    # (rel_sessionize, rel_merge_upsert, rel_window_range_frame,
-    # llm_knn_ivf_append — last rows BENCH_r10), three never-benched
-    # r10-era rows (llm_pca_power, stream_rollup_states, llm_zipf_fit),
-    # and the round's two optimization showcases: llm_ann_recall_audit
-    # (plan changed this round — kernel IVF ranking + single truth leg;
-    # re-rowed) and llm_dedup_ppjoin (window-count frequency attach;
-    # FIRST row+floor). Slot count stays 62 under the ~2000 B line cap.
+    # rotation: the registry rows with the oldest bench evidence
     "ref_describe",
     "rel_asof_join",
     "rel_sessionize",
@@ -173,507 +111,86 @@ HEADLINE = [
     "llm_dedup_ppjoin",
 ]
 
-# Most-recent ISOLATED sf0.1 row per headline query. PROTOCOL TAG
-# (round 10, VERDICT r9 order #1): each row is the MEDIAN of isolated
-# medians across >= 3 independent passes (warm median-of-3 with clean
-# unpersist, the protocol tools/query_profile.py runs per named query;
-# 2026-08-16), replacing r9's MIN-of-passes rows.
-# Rationale: the min is the luckiest scheduling window ever observed, and
-# on sub-second fixed-overhead-dominated queries a normal-day measurement
-# sits 1.5-2.3x above it WITH NO PLAN CHANGE (r9 adjudication:
-# q06_forecast_revenue 0.54 s vs its 0.26 min-row and
-# stream_capped_drop_audit 0.86 s vs 0.43 both breached 2x in BENCH_r09
-# AND in two isolated re-runs while their plans stayed pinned by
-# test_plan_shapes — the yardstick over-fired, not the code). The
-# median-of-passes row is the number a clean re-measurement actually
-# reproduces; the MIN is kept per query in ROW_FLOORS below as the floor
-# witness (a floor that MOVES between rounds is a plan regression; a
-# median that moves over a steady floor is scheduling noise).
-# First-position caveat: the first query measured in a fresh session
-# absorbs whole-stage-codegen/JIT warmup that the single warm run does
-# not fully discharge (measured: q01 first-in-session 0.74-0.93 vs 0.44-
-# 0.54 after ANY other query has run; q12 shows the same when it goes
-# first). The recal passes share one fixed order, so only the first name
-# was biased; q01's row below is the median of 3 warm-POSITION passes.
-# ROW CLASSIFICATION (r13, VERDICT r12 order #8): every row below is
-# ROTATION-ELIGIBLE — a green registry query that may re-enter the
-# HEADLINE in a future rotation, with this row as its standing yardstick
-# — EXCEPT the entries marked RETIRED inline. A RETIRED row belongs to a
-# slot whose measured PLAN was deliberately retired from the serving
-# design (not merely rotated out); it can never re-enter the headline
-# under the retirement note, and floor audits must not chase it. Only
-# one row is currently retired: llm_knn_pq_adc (the fused refit +
-# full-codes-scan plan the r11 IVFPQ composite replaced — kept per the
-# retained-yardstick policy so the historical BENCH rows stay
-# interpretable). Rows for slots currently IN the headline are simply
-# the active gate.
-BASELINE_ROWS = {
-    "q01_pricing_summary": 0.51,
-    "q03_shipping_priority": 0.78,
-    "q05_local_supplier_volume": 0.91,
-    "q06_forecast_revenue": 0.24,
-    "q09_product_profit": 0.79,
-    "q12_shipmode_priority": 0.46,
-    "q18_large_orders": 1.06,
-    "q21_waiting_supplier": 1.17,
-    "rel_join_orders_customer": 0.5,
-    "rel_window_topk_per_group": 0.22,
-    "rel_cube_agg": 0.25,
-    "llm_dedup_exact": 0.29,
-    "llm_dedup_minhash_det": 2.15,
-    "llm_text_quality": 0.41,
-    "llm_knn_bruteforce": 0.42,
-    "stream_tumbling_window": 0.27,
-    "stream_stream_join_conversions": 0.3,
-    "rel_gap_fill_ffill": 0.41,
-    "llm_bm25_topk": 0.56,
-    "llm_chunk_documents": 0.45,
-    "llm_knn_quantized": 1.22,
-    "rel_countmin_sketch": 0.98,
-    "llm_substring_dedup": 1.02,
-    "llm_quality_classifier": 0.41,
-    "llm_text_normalize": 0.41,
-    "rel_ts_similarity_paa": 0.92,
-    "llm_knn_graph": 1.84,  # r12 re-row: Arrow-kernel graph legs (plan changed)
-    "rel_interval_join_binned": 0.75,  # r13 re-witness (VERDICT r12 order #2): median of 4 rotated-start pass medians {0.82, 0.89, 0.67, 0.64}; reproducible across 8 sessions, no plan change found — the r10 row was a calmer-regime number
-    "rel_quantile_sketch_mergeable": 1.7,
-    "llm_dedup_containment": 0.95,
-    "llm_semantic_dedup": 2.78,  # r12 re-row: Arrow-kernel graph legs (plan changed)
-    "llm_bpe_learn": 2.25,
-    "llm_bpe_apply": 2.89,
-    "llm_url_dedup": 0.4,
-    "llm_kmeans_det": 3.35,
-    "llm_dedup_hybrid": 6.05,  # r12 re-row: adaptive-plane emb LSH + cap window + count job (plan changed; buys the 1062->363 s sf10 cell)
-    "rel_market_basket_lift": 1.66,
-    "rel_triangle_count": 1.85,
-    "llm_knn_pq_adc": 5.36,  # RETIRED (r12): measures the fused refit+scan plan the IVFPQ composite replaced; never rotation-eligible
-    "rel_ols_grouped": 1.03,
-    "llm_pmi_collocations": 0.82,
-    "rel_logreg_newton": 2.08,
-    "llm_nb_lang_confusion": 0.92,
-    "stream_pattern_funnel": 0.48,
-    "stream_hll_cells": 0.31,
-    "llm_unigram_lm": 1.11,
-    "stream_session_window": 1.15,
-    "llm_pca_topk": 0.71,
-    "stream_stream_full_outer_capped": 0.65,
-    "llm_knn_pq_persisted": 1.95,
-    "stream_capped_drop_audit": 0.44,
-    "llm_sequence_pack": 0.89,
-    "rel_pagerank": 3.18,  # r13 re-witness (VERDICT r12 order #2): median of 4 rotated-start pass medians {3.25, 2.85, 3.11, 3.25}; plan audited unchanged (one edge join + combinable agg per round, flat lineage)
-    "llm_knn_ivf_persisted": 0.83,
-    "llm_ngram_novelty": 0.82,
-    "q02_min_acctbal_supplier": 1.13,  # r13 re-row on rotation-in (3 rotated passes {1.20, 0.88, 1.13}; old 0.77 was the calmer regime — same adjudication class as order #2)
-    "q04_order_priority": 0.89,  # r13 re-row on rotation-in ({1.04, 0.89, 0.81})
-    "q07_nation_volume": 1.05,  # r13 re-row on rotation-in ({1.05, 0.83, 1.13})
-    "q11_important_stock": 0.77,  # r13 FIRST row (3 rotated passes {0.75, 0.77, 0.91})
-    "rel_sessionize": 1.29,
-    "rel_merge_upsert": 0.33,
-    "rel_window_range_frame": 0.84,
-    "llm_knn_ivf_append": 0.81,
-    "ref_describe": 0.78,
-    "rel_asof_join": 0.44,
-    "llm_pca_power": 0.71,
-    "stream_rollup_states": 0.17,
-    "llm_zipf_fit": 0.31,
-    "rel_interval_coalesce": 0.73,
-    "llm_sequence_pack_incremental": 0.73,
-    "llm_sequence_pack_by_source": 0.84,
-    "llm_knn_pq_append": 1.89,
-    "llm_pack_efficiency": 0.88,
-    "llm_ann_recall_audit": 6.26,  # r14 re-row on rotation-in: PLAN CHANGED (kernel IVF ranking, single truth leg); 3 rotated-start passes {7.35, 35.79, 5.17}, the 35.79 pass discarded as a witnessed host-contention window (box witness log, OPTIMIZATION_r14.md) — row = median of the two clean passes. The r12 row 5.39 measured the retired plan on a calmer box; this box's clean-window profiles put the new plan's job walls at 4.4-6.9 s vs the old plan's 7.9-8.5 s in the SAME windows
-    "llm_knn_pq_rerank": 2.06,
-    "stream_ivf_ingest": 1.22,
-    "llm_bitext_mine": 2.50,  # r13 re-row AFTER the per-cell union-prune kernel replaced the candidate SMJ + full-set mutual-rank sorts (plan changed; median of 3 isolated pass medians {2.50, 2.49, 2.97}; sf10 decade cell 7.38 s vs r11's 56.5 — see BASELINE.md r13)
-    "rel_kanonymity": 0.43,
-    # r10 late additions (median of 3 warm-position passes 2026-08-16)
-    "stream_ann_enrich": 1.70,
-    "llm_corpus_scorecard": 0.82,
-    "rel_join_skew_report": 1.52,
-    "llm_cross_source_overlap": 1.41,
-    "llm_knn_filtered": 1.44,
-    "llm_ann_index_stats": 0.63,
-    "llm_dedup_survivorship": 0.54,
-    # r11 rotation/new slots (median of 5 rotated-start isolated passes,
-    # 2026-08-16; one fully contaminated pass discarded by the median —
-    # see BASELINE.md r11). llm_ann_recall_audit re-measured: the query
-    # GREW a second method leg (ivfpq) this round, so its r10 row (1.84)
-    # is retired with the old definition.
-    "q08_market_share": 1.14,  # r13 re-row on rotation-in ({0.94, 1.36, 1.14})
-    "q13_customer_distribution": 0.48,
-    "q17_small_quantity": 0.59,
-    "ref_json_flatten": 0.80,
-    "stream_scd2_apply": 1.61,
-    "llm_knn_ivfpq": 3.01,
-    "llm_knn_ivfpq_rerank": 3.60,
-    # r12 rotation slots (median of isolated pass medians across 4
-    # rotated-start passes, 2026-08-16; pass-3 contention burst on its
-    # first two slots discarded by the median — BASELINE.md r12)
-    # r14 rotation slot (FIRST row: median of 3 rotated-start passes
-    # {3.40, 3.47, 3.54} — unusually stable across today's contention
-    # windows; measured AFTER the window-count frequency change)
-    "llm_dedup_ppjoin": 3.47,
-    "q10_returned_items": 0.83,
-    "q14_promo_revenue": 0.44,
-    "q15_top_supplier": 0.75,
-    "q16_supplier_count": 1.37,
-    "q19_disjunctive_revenue": 0.54,
-    "q20_excess_shippers": 0.88,
-    "q22_idle_customers": 0.52,
-    "ref_query_int_literal_quirk": 0.10,
-}
 
-# Floor witness per row (round-10 policy): the MIN of isolated medians
-# ever observed under the clean protocol for the CURRENT plan. The gate
-# compares medians against BASELINE_ROWS; floors exist for adjudication
-# only — a floor that moves between rounds is a plan regression, a
-# median that moves over a steady floor is scheduling noise. Seeded from
-# the r9 min-of-passes table (those rows WERE the floors); refined by
-# the r10 recalibration sweep.
-ROW_FLOORS = {
-    "q01_pricing_summary": 0.39,
-    "q03_shipping_priority": 0.75,
-    "q05_local_supplier_volume": 0.86,
-    "q06_forecast_revenue": 0.24,
-    "q09_product_profit": 0.79,
-    "q12_shipmode_priority": 0.43,
-    "q18_large_orders": 1.03,
-    "q21_waiting_supplier": 1.13,
-    "rel_join_orders_customer": 0.47,
-    "rel_window_topk_per_group": 0.21,
-    "rel_cube_agg": 0.24,
-    "llm_dedup_exact": 0.25,
-    "llm_dedup_minhash_det": 1.92,
-    "llm_text_quality": 0.36,
-    "llm_knn_bruteforce": 0.41,
-    "stream_tumbling_window": 0.26,
-    "stream_stream_join_conversions": 0.28,
-    "rel_gap_fill_ffill": 0.36,
-    "llm_bm25_topk": 0.55,
-    "llm_chunk_documents": 0.41,
-    "llm_knn_quantized": 0.93,
-    "rel_countmin_sketch": 0.94,
-    "llm_substring_dedup": 0.85,
-    "llm_quality_classifier": 0.31,
-    "llm_text_normalize": 0.32,
-    "rel_ts_similarity_paa": 0.88,
-    "llm_knn_graph": 1.50,  # r12 re-seed: plan changed (Arrow kernels)
-    "rel_interval_join_binned": 0.64,  # r13 re-floor (order #2 re-witness)
-    "rel_quantile_sketch_mergeable": 1.45,
-    "llm_dedup_containment": 0.89,
-    "llm_semantic_dedup": 2.32,  # r12 re-seed: plan changed (Arrow kernels)
-    "llm_bpe_learn": 1.97,
-    "llm_bpe_apply": 2.76,
-    "llm_url_dedup": 0.35,
-    "llm_kmeans_det": 3.19,
-    "llm_dedup_hybrid": 5.42,  # r12 re-seed UP: plan changed (adaptive planes + cap) — the sf0.1 constant bought the linear sf10 slope
-    "rel_market_basket_lift": 1.63,
-    "rel_triangle_count": 1.84,
-    "llm_knn_pq_adc": 5.05,  # RETIRED (see BASELINE_ROWS note)
-    "rel_ols_grouped": 0.95,
-    "llm_pmi_collocations": 0.8,
-    "rel_logreg_newton": 2.04,
-    "llm_nb_lang_confusion": 0.76,
-    "stream_pattern_funnel": 0.38,
-    "stream_hll_cells": 0.27,
-    "llm_unigram_lm": 1.06,
-    "stream_session_window": 1.13,
-    "llm_pca_topk": 0.69,
-    "stream_stream_full_outer_capped": 0.64,
-    "llm_knn_pq_persisted": 1.68,
-    "stream_capped_drop_audit": 0.43,
-    "llm_sequence_pack": 0.83,
-    "rel_pagerank": 2.85,  # r13 re-floor (order #2 re-witness)
-    "llm_knn_ivf_persisted": 0.8,
-    "llm_ngram_novelty": 0.79,
-    "q02_min_acctbal_supplier": 0.7,
-    "q04_order_priority": 0.58,
-    "q07_nation_volume": 0.69,
-    "q11_important_stock": 0.75,  # r13 first floor
-    "rel_sessionize": 1.12,
-    "rel_merge_upsert": 0.32,
-    "rel_window_range_frame": 0.83,
-    "llm_knn_ivf_append": 0.8,
-    "ref_describe": 0.76,
-    "rel_asof_join": 0.44,
-    "llm_pca_power": 0.67,
-    "stream_rollup_states": 0.17,
-    "llm_zipf_fit": 0.3,
-    "rel_interval_coalesce": 0.72,
-    "llm_sequence_pack_incremental": 0.67,
-    "llm_sequence_pack_by_source": 0.81,
-    "llm_knn_pq_append": 1.78,
-    "llm_pack_efficiency": 0.86,
-    "llm_ann_recall_audit": 4.81,  # r11 floor retained (r14 rotated-pass min 5.17 on a contended box did not beat it; a lower clean floor re-seeds in r15)
-    "llm_knn_pq_rerank": 1.99,
-    "stream_ivf_ingest": 1.18,
-    "llm_bitext_mine": 2.49,  # r13 re-floor: plan changed (union-prune kernel)
-    "rel_kanonymity": 0.41,
-    "stream_ann_enrich": 1.61,
-    "llm_corpus_scorecard": 0.74,
-    "rel_join_skew_report": 1.29,
-    "llm_cross_source_overlap": 1.21,
-    "llm_knn_filtered": 1.36,
-    "llm_ann_index_stats": 0.56,
-    "llm_dedup_survivorship": 0.50,
-    # r11 slots (min of the same rotated-start passes as the rows above)
-    "q08_market_share": 0.71,
-    "q13_customer_distribution": 0.37,
-    "q17_small_quantity": 0.47,
-    "ref_json_flatten": 0.74,
-    "stream_scd2_apply": 1.21,
-    "llm_knn_ivfpq": 2.70,
-    "llm_knn_ivfpq_rerank": 3.38,
-    # r14 rotation slot (min of the same rotated-start passes)
-    "llm_dedup_ppjoin": 3.40,
-    # r12 slots (min of the same rotated-start passes as the rows above)
-    "q10_returned_items": 0.62,
-    "q14_promo_revenue": 0.39,
-    "q15_top_supplier": 0.34,
-    "q16_supplier_count": 0.89,
-    "q19_disjunctive_revenue": 0.41,
-    "q20_excess_shippers": 0.76,
-    "q22_idle_customers": 0.42,
-    "ref_query_int_literal_quirk": 0.07,
-}
+def timed(spark, fn, sf_dir: str) -> dict:
+    """Wall of one full collect, and the host shares over its window."""
+    before = (host_cpu_ticks(), own_ticks())
+    t0 = time.perf_counter()
+    fn(spark, sf_dir).collect()
+    wall = time.perf_counter() - t0
+    host = host_window(before, (host_cpu_ticks(), own_ticks()))
+    drop_persisted(spark)
+    return {"wall_s": wall, **host}
 
 
-def flag_floor_drift(
-    measured_floors: dict[str, float],
-    row_floors: dict[str, float] = None,
-    ratio_gate: float = 1.3,
-    abs_gap: float = 0.2,
-) -> dict[str, dict]:
-    """Floor-drift gate (round 11, VERDICT r10 order #3) — the
-    enforcement of the r10 policy line "a floor that MOVES between
-    rounds is a plan regression; a median that moves over a steady
-    floor is scheduling noise". Compares this run's min-of-passes floor
-    per query against the committed ROW_FLOORS witness: a measured
-    floor > ratio_gate x its witness AND more than abs_gap seconds above
-    it (the absolute guard keeps fixed-overhead jitter on sub-second
-    slots from firing the gate) is flagged as ``floor_drift`` — a
-    DISTINCT adjudication from the 2x median gate, because a drifted
-    floor cannot be explained by contention (contention inflates
-    medians over a steady floor; only a changed plan, changed data, or
-    sustained environment change moves the floor itself). Flagged slots
-    demand a plan re-read (test_plan_shapes pins) before the round's
-    numbers are trusted."""
-    if row_floors is None:
-        row_floors = ROW_FLOORS
-    flagged: dict[str, dict] = {}
-    for name, measured in measured_floors.items():
-        witness = row_floors.get(name)
-        if witness is None:
-            continue
-        if measured > ratio_gate * witness and measured - witness > abs_gap:
-            flagged[name] = {
-                "measured_floor": round(measured, 4),
-                "row_floor": witness,
-                "ratio": round(measured / witness, 2),
-            }
-    return flagged
+def calmer(first: dict, retake: dict) -> dict:
+    """Of a run and its retake, the run from the calmer host window
+    (the first on a tie), marked as re-taken."""
+    kept = min(first, retake, key=lambda r: r["steal_frac"] + r["other_frac"])
+    return {**kept, "retaken": True, "first": first}
+
+
+def settle(runs: dict[str, list[dict]], retake) -> dict[str, list[dict]]:
+    """Re-take once, with ``retake(name)``, every run that lost a core,
+    and keep the calmer of the two."""
+    return {
+        name: [calmer(r, retake(name)) if lost_a_core(r) else {**r, "retaken": False} for r in rs]
+        for name, rs in runs.items()
+    }
+
+
+def lines(kept: dict[str, list[dict]], sf_dir: str) -> tuple[dict, dict]:
+    """(compact stdout line, BENCH_DETAIL.json document) of the kept runs."""
+    median_runs = {n: sorted(rs, key=lambda r: r["wall_s"])[len(rs) // 2] for n, rs in kept.items()}
+    medians = {n: round(r["wall_s"], 4) for n, r in median_runs.items()}
+    contended = [n for n, r in median_runs.items() if lost_a_core(r)]
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    compact = {
+        "metric": "headline_queries_total_wall",
+        "value": round(sum(medians.values()), 4),
+        "unit": "sec",
+        "queries": {n: round(v, 2) for n, v in medians.items()},
+        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "contended_n": len(contended),
+    }
+    detail = {**compact, "queries": medians, "cpus": os.cpu_count(), "contended": contended, "runs": kept}
+    return compact, json.loads(json.dumps(detail), parse_float=lambda f: round(float(f), 4))
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    import __spark_entry__ as e
+    import __spark_entry__ as entry
     from randas_spark.session import get_spark
 
+    qs = entry.queries()
+    unknown = [n for n in HEADLINE if n not in qs]
+    repeated = sorted({n for n in HEADLINE if HEADLINE.count(n) > 1})
+    if unknown or repeated:
+        raise SystemExit(f"HEADLINE: unknown {unknown}, repeated {repeated}")
+
     spark = get_spark("bench")
-    qs = e.queries()
-    names = [n for n in HEADLINE if n in qs] or list(qs)[:8]
-
-    # Warm pass (JVM/codegen/file cache), then 3 interleaved timing rounds,
-    # reported as MEDIAN-of-3 — the BASELINE.md protocol stat. Interleaving
-    # defends against the box's intermittent external contention (measured:
-    # multi-second windows that inflate whichever query is running 5-10x) —
-    # back-to-back repeats of one query can land entirely inside such a
-    # window; spread rounds make that improbable, and the median discards
-    # a single contaminated round entirely.
-    def drop_persisted() -> None:
-        # clearCache() misses localCheckpoint RDDs, which pin executor
-        # storage for the session's lifetime — consecutive measurements
-        # of checkpoint-heavy queries (the shingle-dedup family)
-        # accumulate pinned blocks and inflate later samples (diagnosed
-        # r8). Unpersist every persistent RDD between measurements.
-        spark.catalog.clearCache()
-        it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-        while it.hasNext():
-            it.next()._2().unpersist(True)
-
-    samples: dict[str, list[float]] = {n: [] for n in names}
-    for name in names:
+    for name in HEADLINE:
         qs[name](spark, sf_dir).collect()
-        drop_persisted()
+        drop_persisted(spark)
+    # interleaved rounds: a burst of contention lands in one round of a
+    # slot, not in all three
+    runs: dict[str, list[dict]] = {n: [] for n in HEADLINE}
+    for _ in range(ROUNDS):
+        for name in HEADLINE:
+            runs[name].append(timed(spark, qs[name], sf_dir))
+    kept = settle(runs, lambda name: timed(spark, qs[name], sf_dir))
 
-    def calib() -> float:
-        # Fixed-size JVM workload (constant work, no I/O): its wall time
-        # moves ONLY with external box contention, so each round's number
-        # is a contamination witness recorded alongside the results — a
-        # round with calib 2-10x its floor means the query numbers of
-        # that round carry the same inflation.
-        t0 = time.perf_counter()
-        spark.range(200_000_000).selectExpr("sum(id * 3 + 1)").collect()
-        return time.perf_counter() - t0
-
-    def timed(name: str) -> float:
-        t0 = time.perf_counter()
-        qs[name](spark, sf_dir).collect()
-        dt = time.perf_counter() - t0
-        # drop caches operators pin (minhash signatures, q15 revenue)
-        # AND checkpointed RDDs, so storage pressure doesn't accumulate
-        drop_persisted()
-        return dt
-
-    calibs: list[float] = []
-    for _ in range(3):
-        calibs.append(round(calib(), 4))
-        for name in names:
-            samples[name].append(timed(name))
-    results = {n: round(statistics.median(ts), 4) for n, ts in samples.items()}
-    # Auxiliary floor stat: min-of-3 per query. NOT the protocol number
-    # (BASELINE.md's stat is the median) — recorded because the box's
-    # multi-minute external-contention windows can cover the same phase
-    # of all three rounds; the floor plus calib_rounds_sec lets a reader
-    # separate plan regressions (floor moves) from contention (floor
-    # steady, median inflated).
-    floors = {n: round(min(ts), 4) for n, ts in samples.items()}
-
-    # Contention retry (round-7 protocol, tightened from r6's 3x after
-    # rel_quantile_sketch_mergeable shipped a 4.81 s median over a 1.97 s
-    # floor at 2.4x): a median > 2x its own floor means a contamination
-    # window covered >=2 of that query's 3 samples — the recorded number
-    # would be the box's noise, not the plan. The calib-elevated gate is
-    # gone too (r6's miss happened with calm calib rounds: the windows
-    # fell between calib probes), replaced by an absolute-gap guard so
-    # fixed-overhead jitter on sub-second queries can't spuriously fire.
-    # Re-run that query's three rounds ONCE and keep the cleaner
-    # (lower-median) set, so the committed artifact reflects the plan.
-    # Floors/calib of both passes land in the detail sidecar for audit.
-    retried: dict[str, dict] = {}
-    for name in names:
-        if results[name] > 2.0 * floors[name] and results[name] - floors[name] > 0.5:
-            recal = round(calib(), 4)
-            rerun = [timed(name) for _ in range(3)]
-            med2 = round(statistics.median(rerun), 4)
-            retried[name] = {
-                "first_median": results[name],
-                "rerun_median": med2,
-                "rerun_floor": round(min(rerun), 4),
-                "rerun_calib": recal,
-            }
-            if med2 < results[name]:
-                results[name] = med2
-                floors[name] = min(floors[name], round(min(rerun), 4))
-
-    # Baseline-row retry (round-8 protocol, VERDICT r7 item 1): the floor
-    # gate above only sees SAME-RUN samples, so a contamination window that
-    # covers all three of a query's rounds sails through (happened three
-    # rounds running). Gate 2 compares the committed median against the
-    # query's recorded calm-box BASELINE row: > 2x the row (with the same
-    # absolute-gap guard against sub-second jitter) triggers up to two
-    # bounded re-runs, keeping the best median. If the number still
-    # exceeds 2x the row after retries, an adjudication note lands in the
-    # detail sidecar — either the plan genuinely regressed (the floors
-    # will agree) or the box never calmed down (calib witnesses show it).
-    baseline_retried: dict[str, dict] = {}
-    for name in names:
-        row = BASELINE_ROWS.get(name)
-        if row is None:
-            continue
-        attempts = []
-        while (
-            results[name] > 2.0 * row
-            and results[name] - row > 0.5
-            and len(attempts) < 2
-        ):
-            recal = round(calib(), 4)
-            rerun = [timed(name) for _ in range(3)]
-            med2 = round(statistics.median(rerun), 4)
-            attempts.append(
-                {
-                    "median_before": results[name],
-                    "rerun_median": med2,
-                    "rerun_floor": round(min(rerun), 4),
-                    "rerun_calib": recal,
-                }
-            )
-            if med2 < results[name]:
-                results[name] = med2
-                floors[name] = min(floors[name], round(min(rerun), 4))
-        if attempts:
-            baseline_retried[name] = {
-                "baseline_row": row,
-                "attempts": attempts,
-                "final_median": results[name],
-                "final_vs_baseline": round(results[name] / row, 2),
-                "adjudication": (
-                    "within 2x of BASELINE row after retry"
-                    if results[name] <= 2.0 * row or results[name] - row <= 0.5
-                    else "still >2x BASELINE row after 2 retries: either a "
-                    "plan regression (check floors vs BASELINE.md) or "
-                    "sustained box contention (check calib witnesses)"
-                ),
-            }
-
-    total = round(sum(results.values()), 4)
-    # Floor-drift adjudications (r11 gate). CONTEXT CALIBRATION: the
-    # committed ROW_FLOORS witnesses are ISOLATED-session minima, while
-    # this run's floors are INTERLEAVED (61 queries sharing one heap);
-    # measured base rate r11: interleaved floors sit 1.3-1.8x above
-    # isolated witnesses on 38/61 slots WITH every plan pinned, calib
-    # calm, and zero median-gate breaches — so the interleaved gate
-    # fires at 2.0x (a floor DOUBLING even under interleave is a real
-    # plan-regression signal). The tight 1.3x default remains for
-    # isolated re-measurement contexts (tools/query_profile.py named-query
-    # adjudications) and the unit test.
-    drift = flag_floor_drift(floors, ratio_gate=2.0)
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    # compact line carries at most the 3 worst drift ratios + the count;
-    # the full per-slot evidence lives in the detail sidecar (the r11
-    # first run proved an uncapped dict can blow the 2 KB tail budget)
-    worst = sorted(drift.items(), key=lambda kv: -kv[1]["ratio"])[:3]
-    compact = {
-        "metric": "headline_queries_total_wall",
-        "value": total,
-        "unit": "sec",
-        # 2-decimal in the COMPACT line only (10 ms resolution — plenty
-        # for the 2x gates; buys ~60 B of headroom for drift entries
-        # under the driver's ~2 KB tail-capture budget; the detail
-        # sidecar keeps the full-precision medians)
-        "queries": {n: round(v, 2) for n, v in results.items()},
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "floor_drift": {n: d["ratio"] for n, d in worst},
-        "floor_drift_n": len(drift),
-    }
-    detail = {
-        **compact,
-        "queries": results,
-        "queries_floor_min3": floors,
-        "calib_rounds_sec": calibs,
-        "contention_retries": retried,
-        "baseline_row_retries": baseline_retried,
-        "floor_drift": drift,
-    }
-    # The compact machine line is the ONLY stdout line, stays well under
-    # 2 KB, and is the LAST thing emitted — BENCH_r05's parsed:null was
-    # the driver's TAIL capture (the recorded tail begins mid-JSON)
-    # chopping a floors+calib payload that had outgrown the window, so
-    # the parse target must sit fully inside the stream's final ~2 KB.
-    # Floors, calib witnesses, and the retry audit go to stderr (before
-    # the compact line) and the BENCH_DETAIL.json sidecar.
+    compact, detail = lines(kept, sf_dir)
     try:
-        with open(
-            os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"),
-            "w",
-        ) as f:
+        with open(os.path.join(ROOT, "BENCH_DETAIL.json"), "w") as f:
             json.dump(detail, f, indent=1)
     except OSError:
         pass
     print(json.dumps(detail), file=sys.stderr, flush=True)
     line = json.dumps(compact)
     assert len(line) < 2000, f"compact bench line grew to {len(line)}B; trim HEADLINE"
+    # the compact line is the last thing on stdout: readers parse its tail
     print(line, flush=True)
 
 

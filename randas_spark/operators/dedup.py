@@ -65,8 +65,12 @@ def overlap(side, main):
     with the other's tasks — same jobs, no longer serialized. Always
     waits for BOTH legs. If either raises, the first failure to happen
     is re-raised; a failure of the other leg is attached to it as a note,
-    never dropped."""
+    never dropped. The side leg runs with the caller's Spark local
+    properties, so its jobs join the caller's job group."""
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+    from pyspark.sql import SparkSession
 
     failures: list[Exception] = []  # in the order the legs failed
 
@@ -77,8 +81,14 @@ def overlap(side, main):
             failures.append(exc)
             raise
 
+    def side_leg():
+        return recorded(side)
+
+    session = SparkSession.getActiveSession()
+    if session is not None:  # without a session the legs start no job
+        side_leg = inheritable_thread_target(session)(side_leg)
     with ThreadPoolExecutor(max_workers=1) as pool:
-        side_fut = pool.submit(recorded, side)
+        side_fut = pool.submit(side_leg)
         try:
             main_result = recorded(main)
         except Exception:

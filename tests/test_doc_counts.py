@@ -40,22 +40,6 @@ def test_coverage_query_count_matches_registry():
     assert _doc_count("COVERAGE.md", r"Totals: (\d+) registry queries") == n
 
 
-def test_every_headline_query_has_a_baseline_row():
-    """bench.py's gate-2 contention retry (round-8 protocol) compares each
-    committed median against the query's recorded calm-box BASELINE row;
-    a headline slot without a row silently skips the gate, re-opening the
-    hole the r7 verdict ordered closed. Adding a headline query now
-    requires transcribing its isolated BASELINE.md row into
-    bench.BASELINE_ROWS in the same change."""
-    import bench
-
-    missing = [n for n in bench.HEADLINE if n not in bench.BASELINE_ROWS]
-    assert not missing, missing
-    # and every row must be a sane positive wall-clock figure
-    bad = {n: v for n, v in bench.BASELINE_ROWS.items() if not (0 < v < 60)}
-    assert not bad, bad
-
-
 def test_every_query_has_an_oracle_or_documented_reason():
     """oracle_sql() keys must be exactly queries() keys — the driver
     records a weaker rows-only check for any gap, and today the repo's
@@ -91,24 +75,3 @@ def test_latest_selfcheck_artifact_covers_the_full_registry():
         or rec.get("rows_match") is False or rec.get("schema_match") is False
     }
     assert not bad, bad
-
-
-def test_floor_drift_gate_fires_on_ratio_and_abs_gap_together():
-    """VERDICT r10 order #3: the floor-drift gate flags a measured floor
-    only when it exceeds BOTH the 1.3x ratio gate and the absolute gap
-    (sub-second jitter can't fire it), reports the witness and ratio,
-    and ignores queries without a committed witness row."""
-    import bench
-
-    rows = {"big": 4.0, "small": 0.2, "edge": 1.0}
-    flagged = bench.flag_floor_drift(
-        {
-            "big": 5.6,      # 1.4x, +1.6s  -> flagged
-            "small": 0.38,   # 1.9x, +0.18s -> abs guard holds it back
-            "edge": 1.25,    # 1.25x        -> under the ratio gate
-            "unknown": 99.0, # no witness   -> ignored
-        },
-        row_floors=rows,
-    )
-    assert set(flagged) == {"big"}
-    assert flagged["big"] == {"measured_floor": 5.6, "row_floor": 4.0, "ratio": 1.4}

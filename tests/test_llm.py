@@ -1778,7 +1778,9 @@ def test_jaccard_verifier_exact_on_adversarial_corpus(spark, adversarial):
 #: the md5 centroid collect of the in-memory IVF search, the index
 #: builds and appends the persisted k-NN queries start, and 0 for the
 #: lazy k-NN and sketch plans (k-core and BFS counts follow the graph's
-#: peel and hop depth, so they differ per scale: 26 and 30 at sf0.01)
+#: peel and hop depth, so they differ per scale: 26 and 30 at sf0.01).
+#: The hybrid dedup's embedding leg runs on ``overlap``'s second driver
+#: thread; its jobs count only if that thread joins the caller's group.
 _CONSTRUCT_JOBS = {
     "llm_pca_power": 2,
     "llm_pca_project": 2,
@@ -1790,6 +1792,8 @@ _CONSTRUCT_JOBS = {
     "llm_minhash_recall_audit": 2,
     "llm_dedup_incremental_near": 4,
     "llm_dedup_minhash_clusters": 14,
+    "llm_dedup_hybrid": 18,
+    "llm_dedup_rate_report": 18,
     "llm_graph_rank": 6,
     "rel_pagerank": 7,
     "rel_triangle_count": 8,
@@ -1820,6 +1824,9 @@ def test_dedup_construction_jobs_pinned(spark, name):
     from randas_spark.queries import REGISTRY, load_all
 
     load_all()
+    # a cached input (this module's ``emb`` fixture) changes the plan:
+    # the hybrid dedup's embedding leg starts 2 more jobs over it
+    spark.catalog.clearCache()
     REGISTRY[name].fn(spark, SF_DIR)
     with started_jobs(spark, f"construct-{name}") as jobs:
         REGISTRY[name].fn(spark, SF_DIR)

@@ -161,6 +161,12 @@ def host_window(a: tuple[dict, dict], b: tuple[dict, dict]) -> dict:
     return {k: v / total for k, v in shares.items()}
 
 
+def lost_a_core(host: dict, cpus: int = os.cpu_count()) -> bool:
+    """Whether, over a ``host_window``, steal and other processes took at
+    least one of the host's ``cpus`` cores."""
+    return (host["steal_frac"] + host["other_frac"]) * cpus >= 1
+
+
 def query_op(spark, name: str, fn, sf_dir: str) -> Op:
     def run(timer):
         try:
@@ -241,11 +247,7 @@ def main(argv: list[str]) -> int:
         "cpus": cpus,
         "runs": f"warm 1, timed {timed}, median-wall run",
         "errors": sum(r["error"] is not None for r in records),
-        # lost at least one of the host's cores to steal and other processes
-        "contended": [
-            r["op"] for r in records
-            if (r["host"]["steal_frac"] + r["host"]["other_frac"]) * os.cpu_count() >= 1
-        ],
+        "contended": [r["op"] for r in records if lost_a_core(r["host"])],
     }
     # one record per line, so two profiles diff query by query
     body = ",\n".join(json.dumps(r) for r in records)
